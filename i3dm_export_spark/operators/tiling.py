@@ -138,15 +138,27 @@ def build_tile_tree(
             tree = _build_tile_tree_at(instances, bounds, opts, deep_level)
             if deep_level >= opts.max_level:
                 return tree
-            overflow = tree.tiles.filter(
-                (F.col("level") == deep_level)
-                & F.col("content_available")
-                & (F.col("n_instances") > opts.max_features_per_tile)
-            )
-            if overflow.limit(1).count() == 0:
+            if not _has_overfull_leaf(tree, deep_level,
+                                      opts.max_features_per_tile):
                 return tree
             deep_level = min(deep_level + 4, opts.max_level)
     return _build_tile_tree_at(instances, bounds, opts, deep_level)
+
+
+def _has_overfull_leaf(tree: TileTree, level: int, max_features: int) -> bool:
+    """Whether ``level`` holds a forced content leaf over the feature cap
+    (the build must retry deeper) — read off the driver-resident tile
+    table when the build made one, else one short Spark job."""
+    t = tree.tiles_pdf
+    if t is not None:
+        return bool(((t["level"] == level) & t["content_available"]
+                     & (t["n_instances"] > max_features)).any())
+    overflow = tree.tiles.filter(
+        (F.col("level") == level)
+        & F.col("content_available")
+        & (F.col("n_instances") > max_features)
+    )
+    return overflow.limit(1).count() > 0
 
 
 def descend_counts_pandas(
@@ -246,17 +258,23 @@ def tree_from_counts(
     driver-fast-path/distributed twin split as the instance path (the
     driver twin is parity-tested in tests/test_tiling.py).
 
-    ``n_cells_hint``: a known UPPER BOUND on the cell count (e.g. base
-    checkpoint rows + batch rows) — skips the count() job when it already
-    proves the driver fast path applies."""
+    The counts are collected once, capped at ``driver_threshold + 1``
+    rows. If at most the threshold came back, the driver descends over
+    exactly those rows; one row more means the table is too big for the
+    driver, and the distributed descent recomputes it.
+
+    ``n_cells_hint``: a cell count the caller already knows (e.g. the base
+    checkpoint's rows, which a merge can only grow). Above the threshold
+    it sends the build straight to the distributed descent, skipping the
+    capped collect; both descents give the same tiles, so the hint only
+    picks the cheaper path."""
     spark = deep_df.sparkSession
 
-    floor_level = min(opts.max_level, deep_level)
-    n_cells = n_cells_hint if n_cells_hint is not None else deep_df.count()
-    if n_cells <= driver_threshold:
-        # fast path: ONE Spark job (the groupBy); descent on the driver
-        pdf = deep_df.toPandas()
-        return tree_from_counts_pandas(spark, pdf, bounds, opts, deep_level)
+    if n_cells_hint is None or n_cells_hint <= driver_threshold:
+        pdf = deep_df.limit(driver_threshold + 1).toPandas()
+        if len(pdf) <= driver_threshold:
+            return tree_from_counts_pandas(spark, pdf, bounds, opts,
+                                           deep_level)
     return _descend_distributed(deep_df, bounds, opts, deep_level)
 
 

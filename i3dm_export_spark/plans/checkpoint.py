@@ -1,31 +1,45 @@
-"""Stage checkpointing with per-partition lineage + metrics, and resume.
+"""Stage checkpointing with per-part-file lineage + metrics, and resume.
 
 north_rule: every tile-generation stage checkpoints with per-partition
 lineage and row-count/byte metrics so a killed job resumes without
 recomputing completed tiles.
 
-Local/sandbox format is parquet; on a cluster the same code targets Iceberg
-by setting ``table_format='iceberg'`` and a catalog-qualified location
-(Iceberg gives snapshot ids for input pinning; parquet fallback pins a
-content fingerprint instead). The lineage sidecar is itself a table:
+A stage is a parquet directory written by Spark. Its lineage is read back
+from the part files' parquet footers on the driver (pyarrow) and written
+as a one-file pyarrow table, so the bookkeeping after the stage write
+launches no Spark job:
 
-    _lineage/<stage>:  stage, partition_id, n_rows, n_bytes, wall_ms,
-                       finished_at (monotonic counter), input_fingerprint
+    _lineage/<stage>:  partition_id, n_rows, stage, wall_ms,
+                       input_fingerprint, n_bytes
+
+One row per part file. ``partition_id`` is the partition of the write
+task that produced the file (the ``NNNNN`` of ``part-NNNNN``), ``n_rows``
+its footer row count and ``n_bytes`` its size on disk. The done marker
+``_lineage/<stage>.done.json`` records their sums. Reads of a stage pass
+the schema Spark stored in a part file's footer, so they launch no
+schema-inference job either.
+
+Checkpoints are parquet only. Input pinning uses a content fingerprint
+of the input files (:func:`input_fingerprint`); the Iceberg table-format
+seam (snapshot-id pinning, catalog-qualified locations) is deferred, and
+any other ``table_format`` raises.
 
 Resume contract: :meth:`CheckpointManager.run_stage` skips a stage entirely
-when its checkpoint exists and is complete (all partitions present in the
-lineage table), otherwise recomputes it; per-tile incremental resume is
-provided by :func:`anti_join_pending` (drop work keyed by (level,x,y) that
-already reached the sink).
+when its done marker exists, otherwise recomputes it; per-tile incremental
+resume is provided by :func:`anti_join_pending` (drop work keyed by
+(level,x,y) that already reached the sink).
 """
 
 from __future__ import annotations
 
 import json
 import os
+import re
+import shutil
 import time
+from typing import NamedTuple
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession
 
 
 class StaleCheckpointError(RuntimeError):
@@ -59,31 +73,86 @@ def input_fingerprint(df: DataFrame) -> str:
     return h.hexdigest()
 
 
-def parquet_rows(path: str) -> int:
-    """Row count of a parquet directory straight from the file footers
-    (pyarrow) — metadata-only, no Spark job. A Spark ``count()`` over the
-    same files is footer-only too but still pays a full job's scheduler
-    latency, and the append/sink paths run several of these on tiny
-    frames. ``path`` is a driver-visible local directory (``file:``
-    prefix tolerated); callers with non-local storage fall back to the
-    engine."""
+class PartFile(NamedTuple):
+    path: str
+    partition_id: int  # write task's partition; -1 when the name has none
+    n_rows: int        # footer num_rows
+    n_bytes: int       # file size
+
+
+_PART_ID = re.compile(r"part-(\d+)")
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def _parquet_paths(path: str):
+    """Data files of a local parquet directory in sorted order, skipping
+    the ``_``/``.`` names Spark's reader skips (``_SUCCESS``, ``.crc``,
+    ``_temporary`` residue). Raises FileNotFoundError when ``path`` is not
+    a driver-visible directory (``file:`` prefix tolerated)."""
+    root = path.removeprefix("file:")
+    if not os.path.isdir(root):
+        raise FileNotFoundError(f"parquet directory not found: {path}")
+    for dirpath, dirs, files in os.walk(root):
+        dirs[:] = sorted(d for d in dirs if not d.startswith(("_", ".")))
+        for fn in sorted(files):
+            if fn.endswith(".parquet") and not fn.startswith(("_", ".")):
+                yield os.path.join(dirpath, fn)
+
+
+def part_files(path: str) -> list[PartFile]:
+    """Per-file footer facts of a parquet directory — metadata-only, no
+    Spark job. A Spark ``count()`` over the same files is footer-only too
+    but still pays a full job's scheduler latency. Raises
+    FileNotFoundError on a missing or non-local directory: a caller that
+    can legitimately see one checks ``os.path.isdir`` first."""
     import pyarrow.parquet as pq
 
-    total = 0
-    for root, _dirs, files in os.walk(path.removeprefix("file:")):
-        for fn in files:
-            if fn.endswith(".parquet"):
-                total += pq.ParquetFile(
-                    os.path.join(root, fn)
-                ).metadata.num_rows
-    return total
+    out = []
+    for fp in _parquet_paths(path):
+        m = _PART_ID.search(os.path.basename(fp))
+        out.append(PartFile(fp, int(m.group(1)) if m else -1,
+                            pq.read_metadata(fp).num_rows,
+                            os.path.getsize(fp)))
+    return out
+
+
+def _footer_schema(path: str):
+    """The Spark schema stored in the first data file's footer, or None
+    when that file carries none (pyarrow-written tables) or the
+    directory is empty; the reader then infers the schema."""
+    import pyarrow.parquet as pq
+    from pyspark.sql.types import StructType
+
+    for fp in _parquet_paths(path):
+        meta = pq.read_schema(fp).metadata or {}
+        if _SPARK_SCHEMA_KEY not in meta:
+            return None
+        return StructType.fromJson(json.loads(meta[_SPARK_SCHEMA_KEY]))
+    return None
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` without the schema-inference job: the
+    schema comes from the footer (:func:`_footer_schema`). Spark reads
+    every file-source column as nullable either way, so the frame's schema
+    equals the inferred one."""
+    reader = spark.read
+    schema = _footer_schema(path)
+    if schema is not None:
+        reader = reader.schema(schema)
+    return reader.parquet(path)
 
 
 class CheckpointManager:
     def __init__(self, spark: SparkSession, root: str, table_format: str = "parquet"):
+        if table_format != "parquet":
+            raise ValueError(
+                f"table_format={table_format!r} is not supported: checkpoints "
+                f"are parquet directories. The Iceberg table-format seam is "
+                f"deferred."
+            )
         self.spark = spark
         self.root = root
-        self.fmt = table_format
         os.makedirs(root, exist_ok=True)
 
     # -- paths ------------------------------------------------------------
@@ -100,8 +169,13 @@ class CheckpointManager:
     def is_complete(self, stage: str) -> bool:
         return os.path.exists(self._done_marker(stage))
 
+    def done(self, stage: str) -> dict:
+        """The stage's done marker (n_rows, n_bytes, wall_ms, ...)."""
+        with open(self._done_marker(stage)) as f:
+            return json.load(f)
+
     def read(self, stage: str) -> DataFrame:
-        return self.spark.read.format(self.fmt).load(self._stage_path(stage))
+        return read_parquet(self.spark, self._stage_path(stage))
 
     def run_stage(
         self,
@@ -111,8 +185,9 @@ class CheckpointManager:
         input_fingerprint: str = "",
     ) -> DataFrame:
         """Build-or-reload a stage. ``builder() -> DataFrame`` runs only when
-        the checkpoint is absent/incomplete; per-partition lineage rows are
-        written alongside the data.
+        the checkpoint is absent/incomplete; the write is the stage's only
+        Spark job here — lineage, marker and the returned read come from
+        the part files' footers.
 
         When both the caller and the completed checkpoint carry a non-empty
         ``input_fingerprint`` and they differ, the input mutated since the
@@ -120,8 +195,7 @@ class CheckpointManager:
         of silently reusing stale stage output."""
         if self.is_complete(stage):
             if input_fingerprint:
-                with open(self._done_marker(stage)) as f:
-                    recorded = json.load(f).get("input_fingerprint", "")
+                recorded = self.done(stage).get("input_fingerprint", "")
                 if recorded and recorded != input_fingerprint:
                     raise StaleCheckpointError(
                         f"checkpoint stage '{stage}' at "
@@ -135,38 +209,49 @@ class CheckpointManager:
 
         t0 = time.monotonic()
         df = builder()
-        writer = df.write.mode("overwrite").format(self.fmt)
+        writer = df.write.mode("overwrite").format("parquet")
         if partition_cols:
             writer = writer.partitionBy(*partition_cols)
         writer.save(self._stage_path(stage))
         wall_ms = int((time.monotonic() - t0) * 1000)
 
         out = self.read(stage)
-        lineage = (
-            out.withColumn("partition_id", F.spark_partition_id())
-            .groupBy("partition_id")
-            .agg(F.count(F.lit(1)).alias("n_rows"))
-            .withColumn("stage", F.lit(stage))
-            .withColumn("wall_ms", F.lit(wall_ms))
-            .withColumn("input_fingerprint", F.lit(input_fingerprint))
-        )
-        lineage.write.mode("overwrite").format(self.fmt).save(self._lineage_path(stage))
-
-        n_rows = out.count()
-        size = _dir_bytes(self._stage_path(stage))
-        os.makedirs(os.path.dirname(self._done_marker(stage)), exist_ok=True)
-        with open(self._done_marker(stage), "w") as f:
-            json.dump(
-                {
-                    "stage": stage,
-                    "n_rows": n_rows,
-                    "n_bytes": size,
-                    "wall_ms": wall_ms,
-                    "input_fingerprint": input_fingerprint,
-                },
-                f,
-            )
+        self.mark_done(stage, input_fingerprint, wall_ms=wall_ms)
         return out
+
+    def mark_done(self, stage: str, input_fingerprint: str = "",
+                  wall_ms: int | None = None, **extra) -> None:
+        """Write the stage's footer-derived lineage table and its done
+        marker (``extra`` keys go into the marker)."""
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        files = part_files(self._stage_path(stage))
+        n = len(files)
+        lineage = pa.table({
+            "partition_id": pa.array([f.partition_id for f in files],
+                                     pa.int32()),
+            "n_rows": pa.array([f.n_rows for f in files], pa.int64()),
+            "stage": pa.array([stage] * n, pa.string()),
+            "wall_ms": pa.array([wall_ms] * n, pa.int64()),
+            "input_fingerprint": pa.array([input_fingerprint] * n,
+                                          pa.string()),
+            "n_bytes": pa.array([f.n_bytes for f in files], pa.int64()),
+        })
+        lineage_dir = self._lineage_path(stage)
+        shutil.rmtree(lineage_dir, ignore_errors=True)
+        os.makedirs(lineage_dir)
+        pq.write_table(lineage, os.path.join(lineage_dir, "part-00000.parquet"))
+
+        with open(self._done_marker(stage), "w") as fh:
+            json.dump({
+                "stage": stage,
+                "n_rows": sum(f.n_rows for f in files),
+                "n_bytes": sum(f.n_bytes for f in files),
+                "wall_ms": wall_ms,
+                "input_fingerprint": input_fingerprint,
+                **extra,
+            }, fh)
 
     def metrics(self) -> list[dict]:
         out = []
@@ -216,8 +301,6 @@ def vacuum(root: str, dry_run: bool = False) -> dict:
     ``{"removed": [paths], "reclaimed_bytes": N, "kept_stages": [names]}``;
     with ``dry_run=True`` it only reports.
     """
-    import shutil
-
     removed: list[str] = []
     reclaimed = 0
     kept: list[str] = []

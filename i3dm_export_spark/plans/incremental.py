@@ -74,6 +74,7 @@ import dataclasses
 import json
 import os
 
+import numpy as np
 from pyspark.sql import DataFrame, functions as F
 
 from ..config import Bounds, ExportOptions
@@ -81,8 +82,7 @@ from ..operators import encode as enc
 from ..operators import subtree, tiling
 from ..operators.skew import cluster_tiles_salted
 from . import sinks
-from .checkpoint import CheckpointManager
-from .checkpoint import parquet_rows as checkpoint_parquet_rows
+from .checkpoint import CheckpointManager, part_files, read_parquet
 from .pipeline import stage0_instances
 
 TILE_KEY = ["level", "x", "y"]
@@ -365,7 +365,7 @@ def incremental_append(
     # the tmp and write only the batch beside them — O(batch) bytes
     # instead of an O(corpus) rewrite (the parquet-fallback analogue of an
     # Iceberg fast-append snapshot: new data files + manifest re-list).
-    if ckpt.is_complete("stage0_instances") and ckpt.fmt == "parquet":
+    if ckpt.is_complete("stage0_instances"):
         tmp0 = _stage0_additive_tmp(ckpt, new_inst.select(*old_inst.columns))
     else:
         union_inst = old_inst.unionByName(new_inst.select(*old_inst.columns))
@@ -378,8 +378,8 @@ def incremental_append(
     # content tiles, and refresh stage-3 by hard-linking every file the
     # dirty region provably does not touch (parquet footer box stats).
     # Falls back to the legacy full union rebuild when preconditions fail
-    # (pre-r5 base export, non-parquet checkpoints, counts overflow that
-    # would deepen the tree, near-rebuild-sized flipped set).
+    # (pre-r5 base export, counts overflow that would deepen the tree,
+    # near-rebuild-sized flipped set).
     n_part = max(int(spark.conf.get("spark.sql.shuffle.partitions")), 1)
     delta = _delta_refresh(spark, ckpt, new_inst, list(old_inst.columns),
                            bounds, opts, n_part)
@@ -389,7 +389,7 @@ def incremental_append(
         tiles = delta["tiles"]
         tmp2, tmp3 = delta["tmp2"], delta["tmp3"]
         tmp_counts = delta["tmp_counts"]
-        new_assigned = spark.read.format(ckpt.fmt).load(tmp3)
+        new_assigned = read_parquet(spark, tmp3)
         for k, v in delta.get("walls", {}).items():
             walls[f"delta.{k}"] = v
         _mark("tree_and_assignment")
@@ -397,16 +397,16 @@ def incremental_append(
         n_dirty = len(delta["dirty_keys"])  # already collected — no job
         _mark("dirty_diff")
     else:
-        union = spark.read.format(ckpt.fmt).load(tmp0)
+        union = read_parquet(spark, tmp0)
         tree = tiling.build_tile_tree(union, bounds, opts)
         new_assigned = tiling.assign_to_content_tiles(union, tree, opts)
         tmp3 = _stage_to_tmp(
             ckpt, "stage3_assigned",
             new_assigned.repartitionByRange(n_part, *TILE_KEY),
         )
-        new_assigned = spark.read.format(ckpt.fmt).load(tmp3)
+        new_assigned = read_parquet(spark, tmp3)
         tmp2 = _stage_to_tmp(ckpt, "stage2_tiles", tree.tiles)
-        tiles = spark.read.format(ckpt.fmt).load(tmp2)
+        tiles = read_parquet(spark, tmp2)
         if tree.deep_counts_df is not None:
             # upgrade the base in passing: the NEXT append goes delta
             tmp_counts = _stage_to_tmp(
@@ -601,7 +601,7 @@ def incremental_append(
     # subtree file is ever deleted; the manifest is merged like content.
     n_old_tiles = (
         _parquet_rows(ckpt._stage_path("stage2_tiles"))
-        if tiles_pdf is not None and ckpt.fmt == "parquet"
+        if tiles_pdf is not None
         else _MAX_DRIVER_TILES + 1
     )
     if tiles_pdf is not None and n_old_tiles <= _MAX_DRIVER_TILES:
@@ -610,7 +610,6 @@ def incremental_append(
         # + distinct + localCheckpoint job chain over a few hundred rows
         # (same decision table as _changed_tile_keys /
         # affected_subtree_roots; distributed twin below, parity-tested)
-        import numpy as np
         import pandas as pd
 
         old_p = pd.read_parquet(
@@ -731,8 +730,9 @@ def incremental_append(
     # distinct root level whenever one exists.
     if tiles_pdf is not None:
         # O(tiles) aggregates straight off the driver frame — no jobs
-        occ = tiles_pdf.loc[tiles_pdf["n_instances"] > 0, "level"]
-        rls = sorted({int(v) - int(v) % subtree_levels for v in occ})[:2]
+        lv = tiles_pdf.loc[tiles_pdf["n_instances"] > 0, "level"].to_numpy(
+            np.int64)
+        rls = np.unique(lv - lv % subtree_levels)[:2]
         inferred_subtree_levels = int(rls[1]) if len(rls) > 1 else 2
         avail_levels = int(tiles_pdf["level"].max()) + 1
     else:
@@ -781,11 +781,7 @@ def incremental_append(
         "phase_walls": walls,
         # union_inst's lineage read the PRE-swap checkpoint files; count
         # from the refreshed checkpoint instead
-        "n_instances": (
-            _parquet_rows(ckpt._stage_path("stage0_instances"))
-            if ckpt.fmt == "parquet"
-            else ckpt.read("stage0_instances").count()
-        ),
+        "n_instances": ckpt.done("stage0_instances")["n_rows"],
         "n_new_instances": new_inst.count(),
         "n_dirty_tiles": n_dirty,
         "n_rewritten_files": n_written,
@@ -1021,11 +1017,11 @@ def _delta_refresh(
     n_part: int,
 ) -> dict | None:
     """Sub-linear tree + assignment refresh (VERDICT r4 #1). Returns None
-    when preconditions fail (old export without the counts checkpoint,
-    non-parquet checkpoints, a cells table too large for the driver-side
-    merge, deep-cell overflow that would deepen the tree, or a
-    near-rebuild-sized flipped set) — the caller then falls back to the
-    legacy full union build, which is always correct.
+    when preconditions fail (old export without the counts checkpoint, a
+    cells table too large for the driver-side merge, deep-cell overflow
+    that would deepen the tree, or a near-rebuild-sized flipped set) — the
+    caller then falls back to the legacy full union build, which is always
+    correct.
 
     Cost model at 10^12 rows: batch groupBy O(batch), counts merge
     O(cells), descent O(tiles), covered scan O(files intersecting the
@@ -1057,7 +1053,7 @@ def _delta_refresh(
         dwalls[sub] = round(dwalls.get(sub, 0.0) + (now - _dt0), 3)
         _dt0 = now
 
-    if ckpt.fmt != "parquet" or not ckpt.is_complete("stage2_cellcounts"):
+    if not ckpt.is_complete("stage2_cellcounts"):
         return None
     counts_dir = ckpt._stage_path("stage2_cellcounts")
     n_base_cells = _parquet_rows(counts_dir)
@@ -1116,7 +1112,8 @@ def _delta_refresh(
         ):
             return None
         tree = tree_from_counts(merged_df, bounds, opts, deep_level,
-                                driver_threshold=_MAX_DRIVER_CELLS)
+                                driver_threshold=_MAX_DRIVER_CELLS,
+                                n_cells_hint=n_base_cells)
 
     _dmark("counts_and_tree")
     # stage-2 refresh writes: tiles and cell counts are O(tiles)/O(cells)
@@ -1141,7 +1138,7 @@ def _delta_refresh(
                 "deep_level", F.lit(deep_level).cast("int")
             ),
         )
-    tiles = spark.read.format(ckpt.fmt).load(tmp2)
+    tiles = read_parquet(spark, tmp2)
     _dmark("write_stage2")
 
     # flipped content keys (tiles granularity): pandas symmetric diff on
@@ -1374,12 +1371,14 @@ def _stage_to_tmp(ckpt: CheckpointManager, stage: str, df: DataFrame) -> str:
     lineage may read the CURRENT checkpoint files — they must survive
     until every refreshed stage is written)."""
     tmp = ckpt._stage_path(stage) + "._incr"
-    df.write.mode("overwrite").format(ckpt.fmt).save(tmp)
+    df.write.mode("overwrite").parquet(tmp)
     return tmp
 
 
-# row count from parquet footers, no Spark job — shared with the sinks
-_parquet_rows = checkpoint_parquet_rows
+def _parquet_rows(path: str) -> int:
+    """Row count of a local parquet directory from its footers (no Spark
+    job); raises FileNotFoundError when the directory is absent."""
+    return sum(f.n_rows for f in part_files(path))
 
 
 def _swap_in(ckpt: CheckpointManager, stage: str, tmp: str,
@@ -1398,14 +1397,8 @@ def _swap_in(ckpt: CheckpointManager, stage: str, tmp: str,
     final = ckpt._stage_path(stage)
     shutil.rmtree(final, ignore_errors=True)
     os.replace(tmp, final)
-    # footer-metadata row count, no Spark job (parquet fallback only;
-    # other formats go through the engine)
-    n = (_parquet_rows(final) if ckpt.fmt == "parquet"
-         else ckpt.read(stage).count())
-    os.makedirs(os.path.dirname(ckpt._done_marker(stage)), exist_ok=True)
-    with open(ckpt._done_marker(stage), "w") as f:
-        json.dump({"stage": stage, "n_rows": n, "incremental": True,
-                   "input_fingerprint": input_fingerprint}, f)
+    # footer-derived lineage + marker, no Spark job
+    ckpt.mark_done(stage, input_fingerprint, incremental=True)
 
 
 def _drop_stage(ckpt: CheckpointManager, stage: str) -> None:

@@ -10,8 +10,11 @@
                 tileset.json
 
 Every stage checkpoints through plans/checkpoint.CheckpointManager with
-per-partition lineage; a killed export rerun with the same output dir skips
-completed stages (resume test in tests/test_pipeline.py).
+per-part-file lineage read from parquet footers; a killed export rerun with
+the same output dir skips completed stages (resume test in
+tests/test_pipeline.py). Facts the driver already holds — the stage done
+markers' row counts, the driver-built tile table — answer the summary and
+the tree's row estimate instead of extra Spark jobs.
 
 Heavy payload columns (html) are projected away in stage 0 and never enter
 a shuffle (SURVEY.md §7 hazard 8); the byte-identical-text-per-url
@@ -234,9 +237,12 @@ def run_export(
     # already materialized inside the build — writing them re-runs no
     # instance pass.
     _built: dict = {}
+    # the tree's row estimate: the stage-0 marker's footer count (a
+    # preprojected source has no stage-0 checkpoint; the build counts it)
+    n_inst = None if _preprojected else ckpt.done("stage0_instances")["n_rows"]
 
     def _stage2():
-        t = tiling.build_tile_tree(encoded, bounds, opts)
+        t = tiling.build_tile_tree(encoded, bounds, opts, n_estimate=n_inst)
         _built["tree"] = t
         return t.tiles
 
@@ -248,19 +254,27 @@ def run_export(
         if t is None:
             # resume of an export predating the counts checkpoint: rebuild
             # once (deterministic — same input, same estimate) to upgrade
-            t = tiling.build_tile_tree(encoded, bounds, opts)
+            t = tiling.build_tile_tree(encoded, bounds, opts,
+                                       n_estimate=n_inst)
         return t.deep_counts_df.withColumn(
             "deep_level", F.lit(t.deep_level).cast("int")
         )
 
     ckpt.run_stage("stage2_cellcounts", _stage2_counts,
                    input_fingerprint=in_fp)
+    # a tree built in this run carries its tile facts on the driver: the
+    # assignment and the tileset read them instead of running jobs over
+    # the stage-2 checkpoint (None when stage 2 resumed)
+    built = _built.get("tree")
     tree = tiling.TileTree(
         tiles=tree_df, deep_level=opts.max_level,
         bounds=bounds,
         max_content_level=(
-            tree_df.filter("content_available").agg(F.max("level")).collect()[0][0] or 0
+            built.max_content_level if built is not None
+            else tree_df.filter("content_available")
+            .agg(F.max("level")).collect()[0][0] or 0
         ),
+        tiles_pdf=built.tiles_pdf if built is not None else None,
     )
 
     # stage 3: assignment, range-partitioned by tile key (Morton-ordered
@@ -382,9 +396,13 @@ def run_export(
     inferred_subtree_levels = (
         first_roots[1]["root_level"] if len(first_roots) > 1 else 2
     )
-    avail_levels = (
-        tree.tiles.agg((F.max("level") + F.lit(1)).alias("al")).collect()[0]["al"]
-    )
+    if tree.tiles_pdf is not None:
+        avail_levels = int(tree.tiles_pdf["level"].max()) + 1
+    else:
+        avail_levels = (
+            tree.tiles.agg((F.max("level") + F.lit(1)).alias("al"))
+            .collect()[0]["al"]
+        )
     region = bounds.to_region(radians=not opts.keep_projection)
     ts_json = enc.tileset_json(
         region, opts.geometric_error, avail_levels, inferred_subtree_levels,
@@ -432,8 +450,9 @@ def run_export(
                 n_broken = _full_join_count()
 
     return {
-        "n_instances": inst.count(),
-        "n_tiles_recorded": tree.tiles.count(),
+        "n_instances": (inst.count() if _preprojected
+                        else ckpt.done("stage0_instances")["n_rows"]),
+        "n_tiles_recorded": ckpt.done("stage2_tiles")["n_rows"],
         "n_content_tiles": n_content,
         "n_subtree_files": n_subtree_files,
         "available_levels": avail_levels,

@@ -33,6 +33,8 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from .checkpoint import read_parquet
+
 
 class ServingStateMissing(RuntimeError):
     """The artifact a serving query answers from (export meta, sink
@@ -95,7 +97,7 @@ def tiles_in_bbox(
             "ran with write_content=False, or its manifests were removed — "
             "tiles_in_bbox answers from manifests only"
         )
-    manifest = spark.read.parquet(manifest_dir)
+    manifest = read_parquet(spark, manifest_dir)
     tiles = manifest.select(
         F.regexp_extract("relpath", r"^(\d+)_(\d+)_(\d+)\.", 1)
         .cast("int").alias("level"),
@@ -143,7 +145,7 @@ def instances_in_bbox(
             "from the assignment checkpoint only — re-run the export or "
             "pass the correct checkpoint_dir"
         )
-    assigned = spark.read.parquet(stage3)
+    assigned = read_parquet(spark, stage3)
     qx0, qy0, qx1, qy1 = (float(v) for v in bbox)
     return (
         assigned

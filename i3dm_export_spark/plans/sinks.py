@@ -90,9 +90,9 @@ def write_binary_files(
         # row count straight off the written footers (pyarrow) — a Spark
         # re-read pays a second full job's latency for metadata; non-local
         # manifest roots (hdfs://, s3a://) keep the engine count
-        from .checkpoint import parquet_rows
+        from .checkpoint import part_files
 
         if os.path.isdir(manifest_path.removeprefix("file:")):
-            return parquet_rows(manifest_path)
+            return sum(f.n_rows for f in part_files(manifest_path))
         return files.sparkSession.read.parquet(manifest_path).count()
     return manifest.count()

@@ -1,0 +1,147 @@
+"""Checkpoint bookkeeping contract: footer-derived lineage and Spark job
+counts.
+
+After a stage write, ``CheckpointManager.run_stage`` derives the lineage
+table, the done marker and the returned frame's schema from the part
+files' parquet footers, so its only Spark job is the write itself. These
+tests pin that, plus the total job count of a small export, so the
+per-stage bookkeeping jobs cannot come back unnoticed.
+"""
+
+import json
+import os
+import uuid
+
+import duckdb
+import pyarrow.parquet as pq
+import pytest
+
+from i3dm_export_spark.config import ExportOptions
+from i3dm_export_spark.plans import pipeline
+from i3dm_export_spark.plans.checkpoint import (
+    CheckpointManager,
+    part_files,
+)
+from i3dm_export_spark.sources.pages import pages_df
+
+#: Spark jobs of the 500-row scenario-A export below: its data passes
+#: only (stage writes, extent, the tree's counts collect, both sinks, the
+#: subtree-level peek and the text-invariant fingerprints)
+EXPORT_JOBS_PINNED = 23
+
+
+def _count_jobs(spark, fn):
+    """Run ``fn`` under a fresh job group; return (result, n_jobs)."""
+    sc = spark.sparkContext
+    group = f"jobcount-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    # job-start events reach the status store through the async listener
+    # bus; drain it so no job of ``fn`` goes uncounted
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.fixture(scope="module")
+def small_export(spark, tmp_path_factory):
+    out = str(tmp_path_factory.mktemp("ckpt_export"))
+    pages = pages_df(spark, 500, scenario="A")
+    opts = ExportOptions(max_features_per_tile=100, max_level=10)
+    summary, n_jobs = _count_jobs(
+        spark, lambda: pipeline.run_export(pages, opts, out))
+    return out, summary, n_jobs
+
+
+class TestJobCounts:
+    def test_post_write_bookkeeping_launches_no_jobs(self, spark, tmp_path):
+        def frame():
+            return spark.range(0, 1000, numPartitions=4).selectExpr(
+                "id", "cast(id % 7 as int) as k")
+
+        # the same write outside run_stage: its job count is the budget
+        _, n_write = _count_jobs(
+            spark,
+            lambda: frame().write.mode("overwrite").parquet(
+                str(tmp_path / "plain")))
+        ckpt = CheckpointManager(spark, str(tmp_path / "ck"))
+        out, n_stage = _count_jobs(
+            spark, lambda: ckpt.run_stage("s", frame))
+        assert n_write >= 1
+        assert n_stage == n_write  # lineage, marker, read: 0 jobs
+        # the footer schema is the one Spark would infer
+        assert out.schema == spark.read.parquet(ckpt._stage_path("s")).schema
+
+    def test_resumed_stage_launches_no_jobs(self, spark, tmp_path):
+        ckpt = CheckpointManager(spark, str(tmp_path / "ck"))
+        first = ckpt.run_stage(
+            "s", lambda: spark.range(0, 100, numPartitions=2))
+
+        def never():
+            raise AssertionError("builder ran on a complete stage")
+
+        again, n = _count_jobs(spark, lambda: ckpt.run_stage("s", never))
+        assert n == 0
+        assert again.schema == first.schema
+        assert again.count() == 100
+
+    def test_small_export_total_is_pinned(self, small_export):
+        _out, summary, n_jobs = small_export
+        assert summary["n_instances"] == 500
+        assert n_jobs <= EXPORT_JOBS_PINNED, (
+            f"export ran {n_jobs} Spark jobs, pinned at "
+            f"{EXPORT_JOBS_PINNED}: a new per-stage job crept in")
+
+
+class TestLineageContract:
+    def test_one_row_per_part_file(self, small_export):
+        out, summary, _ = small_export
+        root = os.path.join(out, "_checkpoints")
+        stages = [m["stage"] for m in summary["stage_metrics"]]
+        assert {"stage0_instances", "stage2_tiles", "stage2_cellcounts",
+                "stage3_assigned", "stage4_payloads",
+                "stage5_subtrees"} <= set(stages)
+        for stage in stages:
+            stage_dir = os.path.join(root, stage)
+            lineage = pq.read_table(
+                os.path.join(root, "_lineage", stage)).to_pandas()
+            with open(os.path.join(root, "_lineage",
+                                   stage + ".done.json")) as f:
+                marker = json.load(f)
+            # lineage rows follow the sorted part-file names
+            names = sorted(fn for fn in os.listdir(stage_dir)
+                           if fn.startswith("part-"))
+            assert len(lineage) == len(names), stage
+            assert list(lineage["partition_id"]) == [
+                int(fn.split("-")[1]) for fn in names], stage
+            assert list(lineage["n_bytes"]) == [
+                os.path.getsize(os.path.join(stage_dir, fn)) for fn in names
+            ], stage
+            n_duck = duckdb.sql(
+                f"select count(*) from parquet_scan('{stage_dir}/*.parquet')"
+            ).fetchone()[0]
+            assert int(lineage["n_rows"].sum()) == marker["n_rows"] == n_duck
+            assert int(lineage["n_bytes"].sum()) == marker["n_bytes"]
+            assert set(lineage["stage"]) == {stage}
+
+    def test_footer_helper_matches_files(self, small_export):
+        out, _, _ = small_export
+        stage_dir = os.path.join(out, "_checkpoints", "stage3_assigned")
+        for f in part_files(stage_dir):
+            assert os.path.getsize(f.path) == f.n_bytes
+            assert pq.read_metadata(f.path).num_rows == f.n_rows
+            assert os.path.basename(f.path).startswith(
+                f"part-{f.partition_id:05d}")
+
+
+class TestFooterHelper:
+    def test_missing_directory_raises(self, tmp_path):
+        with pytest.raises(FileNotFoundError):
+            part_files(str(tmp_path / "absent"))
+
+    def test_non_parquet_format_raises(self, spark, tmp_path):
+        with pytest.raises(ValueError, match="Iceberg"):
+            CheckpointManager(spark, str(tmp_path), table_format="iceberg")
