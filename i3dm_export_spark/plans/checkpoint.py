@@ -116,6 +116,14 @@ def part_files(path: str) -> list[PartFile]:
     return out
 
 
+#: largest tiles/manifest table handled on the driver (pandas/pyarrow/
+#: numpy), judged by its footer row count (:func:`part_files`). Tile and
+#: manifest rows are O(tiles), 3 orders below instances; above the budget
+#: the append's tile-granularity bookkeeping steps and the serving tile
+#: lookup take their distributed Spark twins. Read at call time.
+_MAX_DRIVER_TILES = 4_000_000
+
+
 def _footer_schema(path: str):
     """The Spark schema stored in the first data file's footer, or None
     when that file carries none (pyarrow-written tables) or the

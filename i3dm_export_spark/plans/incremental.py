@@ -81,8 +81,10 @@ from ..config import Bounds, ExportOptions
 from ..operators import encode as enc
 from ..operators import subtree, tiling
 from ..operators.skew import cluster_tiles_salted
-from . import sinks
-from .checkpoint import CheckpointManager, part_files, read_parquet
+from . import checkpoint, sinks
+from .checkpoint import (
+    _SPARK_SCHEMA_KEY, CheckpointManager, part_files, read_parquet,
+)
 from .pipeline import stage0_instances
 
 TILE_KEY = ["level", "x", "y"]
@@ -505,11 +507,12 @@ def incremental_append(
     n_old_manifest = (
         _parquet_rows(manifest_dir) if tiles_pdf is not None else None
     )
-    if tiles_pdf is not None and n_old_manifest <= _MAX_DRIVER_TILES:
+    if (tiles_pdf is not None
+            and n_old_manifest <= checkpoint._MAX_DRIVER_TILES):
         # driver fast path: the manifest is O(tiles) — merge it in pandas
         # and write with pyarrow instead of paying ~4 Spark jobs' latency
         # for a few hundred rows (distributed twin below for bigger trees;
-        # parity-tested via a monkeypatched _MAX_DRIVER_TILES)
+        # parity-tested via a monkeypatched checkpoint._MAX_DRIVER_TILES)
         import pandas as pd
 
         cc = tiles_pdf.loc[tiles_pdf["content_available"]]
@@ -602,9 +605,9 @@ def incremental_append(
     n_old_tiles = (
         _parquet_rows(ckpt._stage_path("stage2_tiles"))
         if tiles_pdf is not None
-        else _MAX_DRIVER_TILES + 1
+        else checkpoint._MAX_DRIVER_TILES + 1
     )
-    if tiles_pdf is not None and n_old_tiles <= _MAX_DRIVER_TILES:
+    if tiles_pdf is not None and n_old_tiles <= checkpoint._MAX_DRIVER_TILES:
         # driver fast path: the bit-relevant diff and the root projection
         # are O(tiles) — numpy on the driver instead of a full-outer join
         # + distinct + localCheckpoint job chain over a few hundred rows
@@ -695,7 +698,7 @@ def incremental_append(
     _mark("subtrees.assemble_write")
     if (
         tiles_pdf is not None
-        and _parquet_rows(sub_manifest_dir) <= _MAX_DRIVER_TILES
+        and _parquet_rows(sub_manifest_dir) <= checkpoint._MAX_DRIVER_TILES
     ):
         # driver fast path (O(subtree files) — strictly below O(tiles);
         # tiles_pdf gates the footer walk itself off the big-corpus path):
@@ -948,11 +951,6 @@ _MAX_FLIPPED_FOR_DELTA = 200_000
 #: largest cell table merged in pandas on the driver (above it the delta
 #: path switches to the distributed cells-granularity twin)
 _MAX_DRIVER_CELLS = 4_000_000
-#: largest tiles/manifest table handled in pandas on the driver (tile and
-#: manifest rows are O(tiles), 3 orders below instances; above it the
-#: append falls back to the distributed Spark twins for the tile-
-#: granularity bookkeeping steps — same pattern as _MAX_DRIVER_CELLS)
-_MAX_DRIVER_TILES = 4_000_000
 #: largest removed-file set unlinked from the driver (thread pool);
 #: beyond it deletions run distributed on the executors (VERDICT r4 #8)
 _MAX_DRIVER_UNLINKS = 100_000
@@ -971,18 +969,23 @@ def _write_parquet_driver(path: str, pdf, ddl: list[tuple[str, str]]) -> None:
     """Driver-side parquet write of a small pandas frame with an EXPLICIT
     arrow schema matching what the Spark writer would produce, so every
     downstream reader (Spark, pandas, the footer-stats scans) sees the
-    same column types as a Spark-written checkpoint/manifest. Overwrite
-    semantics like ``df.write.mode("overwrite")`` — used by the append's
-    driver fast paths for tile-granularity bookkeeping, where a full
-    Spark job's scheduler latency dwarfs the data."""
+    same column types as a Spark-written checkpoint/manifest. The footer
+    also carries the Spark schema under the key Spark's writer uses, so
+    ``read_parquet`` of the result launches no schema-inference job.
+    Overwrite semantics like ``df.write.mode("overwrite")`` — used by the
+    append's driver fast paths for tile-granularity bookkeeping, where a
+    full Spark job's scheduler latency dwarfs the data."""
     import shutil
 
     import pyarrow as pa
     import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import from_arrow_schema
 
     schema = pa.schema(
         [(name, getattr(pa, _ARROW_TYPES[t])()) for name, t in ddl]
     )
+    schema = schema.with_metadata(
+        {_SPARK_SCHEMA_KEY: from_arrow_schema(schema).json()})
     cols = [name for name, _t in ddl]
     table = pa.Table.from_pandas(
         pdf[cols], schema=schema, preserve_index=False

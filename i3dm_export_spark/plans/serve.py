@@ -6,16 +6,25 @@ runbook) asks two questions the engine itself never needed until now:
 Both answer from artifacts the pipeline already maintains — no re-tiling,
 no full-data scan:
 
-* :func:`tiles_in_bbox` — the sink manifest (one tiny row per tile) joined
-  against the closed-form per-level tile-index ranges of the bbox. The
-  range table has one row per level (`<= max_level+1`), broadcast; tile
-  keys parse from the ``{level}_{x}_{y}.{ext}`` relpath with JVM regexes.
-  Cost is a manifest scan — O(tiles), never O(instances).
+* tiles — the content sink manifest (one tiny row per tile) filtered by
+  the closed-form per-level tile-index ranges of the bbox
+  (:func:`bbox_tile_range`); tile keys parse from the
+  ``{level}_{x}_{y}.{ext}`` relpath. The cost is driver under the tile
+  budget, manifest scan beyond it: :func:`query_bbox_summary` reads the
+  manifest with pyarrow and masks it in numpy while its footer row count
+  is within ``checkpoint._MAX_DRIVER_TILES``, because a Spark plan over a
+  few thousand rows costs its fixed per-query overhead (plan building,
+  broadcast exchange, codegen), not data. Beyond the budget it scans the
+  manifest with :func:`tiles_in_bbox`, a broadcast join against the range
+  table (one row per level, ``<= max_level+1``) — O(tiles), never
+  O(instances). :func:`tiles_in_bbox` is also the DataFrame API for
+  callers that want a frame.
 * :func:`instances_in_bbox` — the stage-3 assignment checkpoint filtered
   on lon/lat. The checkpoint is written Morton-range-partitioned
   (plans/pipeline stage 3), so the lon/lat predicates push down to parquet
   row-group stats that are spatially coherent — at cluster scale a small
   bbox reads a small fraction of files (PushedFilters gated in tests).
+  Its count is the floor of a query: two Spark jobs.
 
 The bbox convention matches the tiling kernel (functions/cells.tile_xy):
 root bounds from ``_export_meta.json``, y grows north from YMin, edge
@@ -33,7 +42,8 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from .checkpoint import read_parquet
+from . import checkpoint
+from .checkpoint import _parquet_paths, part_files, read_parquet
 
 
 class ServingStateMissing(RuntimeError):
@@ -54,6 +64,18 @@ def _load_meta(out_dir: str, checkpoint_dir: str | None) -> dict:
         )
     with open(path) as f:
         return json.load(f)
+
+
+def _content_manifest(out_dir: str, checkpoint_dir: str | None) -> str:
+    root = checkpoint_dir or os.path.join(out_dir, "_checkpoints")
+    manifest_dir = os.path.join(root, "_sink_manifests", "content")
+    if not os.path.isdir(manifest_dir):
+        raise ServingStateMissing(
+            f"no content sink manifest under {manifest_dir}: the export "
+            "ran with write_content=False, or its manifests were removed — "
+            "tile queries answer from manifests only"
+        )
+    return manifest_dir
 
 
 def bbox_tile_range(bounds, bbox, level: int):
@@ -89,15 +111,7 @@ def tiles_in_bbox(
     meta = _load_meta(out_dir, checkpoint_dir)
     bounds = meta["bounds"]
     max_level = int(meta["opts"]["max_level"])
-    root = checkpoint_dir or os.path.join(out_dir, "_checkpoints")
-    manifest_dir = os.path.join(root, "_sink_manifests", "content")
-    if not os.path.isdir(manifest_dir):
-        raise ServingStateMissing(
-            f"no content sink manifest under {manifest_dir}: the export "
-            "ran with write_content=False, or its manifests were removed — "
-            "tiles_in_bbox answers from manifests only"
-        )
-    manifest = read_parquet(spark, manifest_dir)
+    manifest = read_parquet(spark, _content_manifest(out_dir, checkpoint_dir))
     tiles = manifest.select(
         F.regexp_extract("relpath", r"^(\d+)_(\d+)_(\d+)\.", 1)
         .cast("int").alias("level"),
@@ -120,6 +134,48 @@ def tiles_in_bbox(
         .filter("x >= x0 and x <= x1 and y >= y0 and y <= y1")
         .select("level", "x", "y", "relpath", "n_bytes")
     )
+
+
+_TILE_KEY = r"^(?P<level>\d+)_(?P<x>\d+)_(?P<y>\d+)\."
+
+
+def _tiles_in_bbox_driver(manifest_dir: str, bounds, max_level: int, bbox):
+    """:func:`tiles_in_bbox` on the driver, as a pyarrow table ordered by
+    ``(level, x, y)``: the manifest's ``relpath, n_bytes`` read with
+    pyarrow, tile keys parsed once with one regex, and the per-level
+    ranges looked up in a numpy array indexed by level. Relpaths that do
+    not parse, and levels above ``max_level``, drop out as they do in the
+    Spark join."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    manifest = pa.concat_tables(
+        pq.read_table(fp, columns=["relpath", "n_bytes"])
+        for fp in _parquet_paths(manifest_dir)
+    )
+    keys = pc.extract_regex(manifest["relpath"], _TILE_KEY)
+    parsed = pc.is_valid(keys)
+    manifest, keys = manifest.filter(parsed), keys.filter(parsed)
+    level, x, y = (
+        pc.cast(pc.struct_field(keys, k), pa.int64()).to_numpy()
+        for k in ("level", "x", "y")
+    )
+    ranges = np.array(
+        [bbox_tile_range(bounds, bbox, lv) for lv in range(max_level + 1)],
+        dtype=np.int64,
+    )
+    known = level <= max_level
+    x0, x1, y0, y1 = ranges[np.where(known, level, 0)].T
+    hit = np.flatnonzero(known & (x >= x0) & (x <= x1) & (y >= y0) & (y <= y1))
+    hit = hit[np.lexsort((y[hit], x[hit], level[hit]))]
+    return pa.table({
+        "level": pa.array(level[hit], pa.int32()),
+        "x": x[hit], "y": y[hit],
+        "relpath": manifest["relpath"].take(hit),
+        "n_bytes": manifest["n_bytes"].take(hit),
+    })
 
 
 def instances_in_bbox(
@@ -164,17 +220,30 @@ def query_bbox_summary(
     checkpoint_dir: str | None = None,
     max_listed: int = 100,
 ) -> dict:
-    """CLI-facing one-shot: tile + instance counts and a bounded file
-    sample for a bbox."""
-    tiles = tiles_in_bbox(spark, out_dir, bbox, checkpoint_dir).cache()
-    try:
-        n_tiles = tiles.count()
-        sample = [
-            r["relpath"] for r in
-            tiles.orderBy("level", "x", "y").limit(max_listed).collect()
-        ]
-    finally:
-        tiles.unpersist()
+    """CLI-facing one-shot: tile + instance counts and the first
+    ``max_listed`` tile relpaths in ``(level, x, y)`` order for a bbox.
+    The tiles are found on the driver while the manifest's footer row
+    count is within ``checkpoint._MAX_DRIVER_TILES``, by the
+    :func:`tiles_in_bbox` manifest scan beyond it."""
+    meta = _load_meta(out_dir, checkpoint_dir)
+    manifest_dir = _content_manifest(out_dir, checkpoint_dir)
+    n_manifest = sum(f.n_rows for f in part_files(manifest_dir))
+    if n_manifest <= checkpoint._MAX_DRIVER_TILES:
+        tiles = _tiles_in_bbox_driver(
+            manifest_dir, meta["bounds"], int(meta["opts"]["max_level"]),
+            bbox)
+        n_tiles = tiles.num_rows
+        sample = tiles["relpath"].slice(0, max_listed).to_pylist()
+    else:
+        tiles = tiles_in_bbox(spark, out_dir, bbox, checkpoint_dir).cache()
+        try:
+            n_tiles = tiles.count()
+            sample = [
+                r["relpath"] for r in
+                tiles.orderBy("level", "x", "y").limit(max_listed).collect()
+            ]
+        finally:
+            tiles.unpersist()
     n_instances = instances_in_bbox(
         spark, out_dir, bbox, checkpoint_dir
     ).count()

@@ -565,9 +565,10 @@ class TestDeltaPath:
         steps through the twins — bytes must still match a full rebuild.
         (The pyarrow stage-2 writes key on the CELL budget and are
         exercised by test_distributed_twin_byte_parity instead.)"""
+        from i3dm_export_spark.plans import checkpoint
         from i3dm_export_spark.plans import incremental as incr
 
-        monkeypatch.setattr(incr, "_MAX_DRIVER_TILES", 0)
+        monkeypatch.setattr(checkpoint, "_MAX_DRIVER_TILES", 0)
         monkeypatch.setattr(incr, "_MAX_DRIVER_UNLINKS", 0)
         base, batch, full = _split(spark, 900, 750)
         out_full = str(tmp_path / "full")

@@ -4,24 +4,34 @@ Correctness model: brute force over the same artifacts — a tile belongs in
 the answer iff its cell rectangle intersects the bbox; an instance iff its
 lon/lat is inside. The operators must agree with the model exactly, answer
 from manifests/checkpoints only (no re-tiling), and the instance path must
-push its lon/lat predicates into the parquet scan.
+push its lon/lat predicates into the parquet scan. ``query_bbox_summary``
+finds tiles on the driver under the tile budget; with the budget at 0 it
+takes the Spark ``tiles_in_bbox`` twin, and both must answer identically.
 """
 from __future__ import annotations
 
 import json
 import os
+import shutil
 
 import pytest
 
 from i3dm_export_spark.config import Bounds, ExportOptions
+from i3dm_export_spark.plans import checkpoint
+from i3dm_export_spark.plans.checkpoint import read_parquet
+from i3dm_export_spark.plans.incremental import incremental_append
 from i3dm_export_spark.plans.pipeline import run_export
 from i3dm_export_spark.plans.serve import (
+    ServingStateMissing,
     bbox_tile_range,
     instances_in_bbox,
     query_bbox_summary,
     tiles_in_bbox,
 )
 from i3dm_export_spark.sources.pages import DOCS_BBOX, pages_df
+
+from .test_checkpoint import _count_jobs
+from .test_incremental import _split
 
 BB = Bounds(*DOCS_BBOX)
 BOX = (BB.xmin, BB.ymin, BB.xmax, BB.ymax)
@@ -39,6 +49,20 @@ def export_dir(spark, tmp_path_factory):
     out = str(tmp_path_factory.mktemp("serve") / "out")
     run_export(pages_df(spark, 900), OPTS, out, bounds=BB)
     return out
+
+
+@pytest.fixture(scope="module")
+def appended_dir(spark, tmp_path_factory):
+    """An export whose content manifest the append rewrote on the driver."""
+    out = str(tmp_path_factory.mktemp("serve_append") / "out")
+    base, batch, _full = _split(spark, 900, 750)
+    run_export(base, OPTS, out, bounds=BB)
+    assert incremental_append(batch, out)["delta_path"] is True
+    return out
+
+
+def _content_manifest(out_dir):
+    return os.path.join(out_dir, "_checkpoints", "_sink_manifests", "content")
 
 
 def _cell_rect(bounds, level, x, y):
@@ -163,3 +187,64 @@ class TestServeRobustness:
             assert got == want
         # a level with no tiles answers empty, not an error
         assert tiles_in_bbox(spark, export_dir, QBOX, level=0).count() in (0, 1)
+
+
+#: (bbox, max_listed): a sub-box, the whole extent, a box outside it, and
+#: a listing cut below the box's tile count
+PARITY_CASES = [
+    (QBOX, 100),
+    (BOX, 100),
+    ((0.0, 0.0, 1.0, 1.0), 100),
+    (BOX, 3),
+]
+
+
+class TestServeDriverTiles:
+    """``query_bbox_summary``'s driver tile lookup against its Spark twin
+    (``tiles_in_bbox``, taken when the manifest is over the tile budget)."""
+
+    @pytest.mark.parametrize("which", ["export", "append"])
+    def test_driver_matches_spark_twin(self, spark, export_dir,
+                                       appended_dir, monkeypatch, which):
+        out = export_dir if which == "export" else appended_dir
+        driver = [query_bbox_summary(spark, out, bbox, max_listed=k)
+                  for bbox, k in PARITY_CASES]
+        monkeypatch.setattr(checkpoint, "_MAX_DRIVER_TILES", 0)
+        twin = [query_bbox_summary(spark, out, bbox, max_listed=k)
+                for bbox, k in PARITY_CASES]
+        assert driver == twin
+        qbox, full, outside, cut = driver
+        assert 0 < qbox["n_tiles"] < full["n_tiles"]
+        assert full["n_tiles"] == len(os.listdir(os.path.join(out, "content")))
+        assert outside["n_instances"] == 0
+        assert cut["tiles"] == full["tiles"][:3] and cut["n_tiles"] > 3
+
+    def test_under_budget_launches_only_the_instance_count(self, spark,
+                                                           appended_dir):
+        query_bbox_summary(spark, appended_dir, QBOX)  # warm
+        rep, n_jobs = _count_jobs(
+            spark, lambda: query_bbox_summary(spark, appended_dir, QBOX))
+        assert rep["n_tiles"] > 0
+        assert n_jobs <= 2
+
+    def test_driver_written_manifest_reads_without_jobs(self, spark,
+                                                        appended_dir):
+        manifest = _content_manifest(appended_dir)
+        df, n_jobs = _count_jobs(spark, lambda: read_parquet(spark, manifest))
+        assert n_jobs == 0
+        # the stored schema is the one Spark would infer
+        assert df.schema == spark.read.parquet(manifest).schema
+
+    def test_missing_meta_raises(self, spark, export_dir, tmp_path):
+        clone = str(tmp_path / "clone")
+        shutil.copytree(export_dir, clone)
+        os.remove(os.path.join(clone, "_checkpoints", "_export_meta.json"))
+        with pytest.raises(ServingStateMissing, match="_export_meta"):
+            query_bbox_summary(spark, clone, QBOX)
+
+    def test_missing_manifest_raises(self, spark, export_dir, tmp_path):
+        clone = str(tmp_path / "clone")
+        shutil.copytree(export_dir, clone)
+        shutil.rmtree(_content_manifest(clone))
+        with pytest.raises(ServingStateMissing, match="content sink manifest"):
+            query_bbox_summary(spark, clone, QBOX)
