@@ -23,8 +23,9 @@ Availability rule (spec-monotone, derived from the tiles table):
 
 The tiles table is tiny relative to instances (README.md:179: 372 subtree
 files for 588k instances), so assembly runs either on the driver
-(:func:`build_subtrees_pandas`) or distributed as one ``groupBy(root)``
-``applyInPandas`` over tile rows (:func:`build_subtrees_spark`).
+(:func:`build_subtrees_pandas_for_roots`, one sort of (root, tile) pairs;
+:func:`build_subtrees_pandas` is the per-root reference) or distributed
+as one tile-row shuffle by root (:func:`build_subtrees_spark`).
 """
 
 from __future__ import annotations
@@ -205,34 +206,98 @@ def build_subtrees_pandas(tiles_pdf: pd.DataFrame, subtree_levels: int = 2):
     return out
 
 
-def build_subtrees_pandas_for_roots(tiles_pdf, roots, subtree_levels: int = 2):
-    """Driver twin of ``build_subtrees_spark(roots=...)``: assemble ONLY
-    the requested subtree roots from a collected tiles frame — same row
-    selection (absolute levels [root, root+s] under the root's prefix),
-    same existence rule (any interior row with content, the
-    ``_assemble_root_group`` / :func:`build_subtrees_pandas` rule), same
-    serialized bytes (shared bitstring builders). Returns
-    ``[(root_level, root_x, root_y, payload)]`` in sorted root order.
-    Used by the incremental append's driver fast path for localized
-    batches, where a tile-row shuffle costs more than the payloads."""
+def n_subtree_roots(tiles_pdf, subtree_levels: int) -> int:
+    """Number of subtree files a tiles frame yields: distinct roots of the
+    tiles holding content (the existence rule of every assembler)."""
+    hc = tiles_pdf["n_instances"].to_numpy(np.int64) > 0
+    rl, rx, ry = subtree_roots(
+        tiles_pdf["level"].to_numpy(np.int64)[hc],
+        tiles_pdf["x"].to_numpy(np.int64)[hc],
+        tiles_pdf["y"].to_numpy(np.int64)[hc], subtree_levels,
+    )
+    if not len(rl):
+        return 0
+    return len(np.unique(np.stack([rl, rx, ry], axis=1), axis=0))
+
+
+def build_subtrees_pandas_for_roots(tiles_pdf, roots=None,
+                                    subtree_levels: int = 2):
+    """Driver twin of ``build_subtrees_spark(roots=...)``: assemble the
+    requested subtree roots (every root when ``roots`` is None) from a
+    collected tiles frame. Returns ``[(root_level, root_x, root_y,
+    payload)]`` in sorted root order, byte-identical to
+    :func:`build_subtrees_pandas` and :func:`build_subtrees_spark`
+    (parity-tested); requested roots recording no content are skipped —
+    the same existence rule (any interior row with content).
+
+    One pass, no per-root frame masks: the (root, tile) pairs of
+    :func:`subtree_tile_pairs` (each tile's own root, plus the parent
+    root for boundary tiles) are sorted once by root, and every pair
+    sets its bit in a (roots x binary-buffer) byte matrix; a payload is
+    the shared header plus its matrix row. Full quadtrees at
+    ``subtree_levels=2`` on a 4-core host: 4,369 roots over 5,461 tiles
+    in 0.005 s (the earlier per-root frame-mask loop: 2.8 s), 69,905
+    roots over 87,381 tiles in 0.09 s (128 s)."""
     s = subtree_levels
     levels = tiles_pdf["level"].to_numpy(np.int64)
     xs = tiles_pdf["x"].to_numpy(np.int64)
     ys = tiles_pdf["y"].to_numpy(np.int64)
+    content = tiles_pdf["content_available"].to_numpy(bool)
     hc = tiles_pdf["n_instances"].to_numpy(np.int64) > 0
-    out = []
-    for rl, rx, ry in sorted(roots):
-        ll = levels - rl
-        sel = (ll >= 0) & (ll <= s)
-        sel &= (xs >> np.maximum(ll, 0)) == rx
-        sel &= (ys >> np.maximum(ll, 0)) == ry
-        if not bool((sel & (ll < s) & hc).any()):
-            continue
-        bits = subtree_bitstrings(
-            tiles_pdf[sel], int(rl), int(rx), int(ry), s
+
+    # (root, tile) pairs: own root (interior), parent root (boundary)
+    own_l, own_x, own_y = subtree_roots(levels, xs, ys, s)
+    b = np.flatnonzero((levels % s == 0) & (levels > 0))
+    tile = np.concatenate([np.arange(len(levels)), b])
+    prl = np.concatenate([own_l, levels[b] - s])
+    prx = np.concatenate([own_x, xs[b] >> s])
+    pry = np.concatenate([own_y, ys[b] >> s])
+    order = np.lexsort((pry, prx, prl))
+    tile, prl, prx, pry = tile[order], prl[order], prx[order], pry[order]
+    if not len(tile):
+        return []
+    first = np.ones(len(tile), bool)
+    first[1:] = ((prl[1:] != prl[:-1]) | (prx[1:] != prx[:-1])
+                 | (pry[1:] != pry[:-1]))
+    gid = np.cumsum(first) - 1
+    g_l, g_x, g_y = prl[first], prx[first], pry[first]
+
+    ll = levels[tile] - prl
+    interior = ll < s
+    keep = np.zeros(len(g_l), bool)
+    keep[gid[interior & hc[tile]]] = True
+    if roots is not None:
+        want = {(int(a), int(c), int(d)) for a, c, d in roots}
+        keep &= np.fromiter(
+            (k in want for k in zip(g_l.tolist(), g_x.tolist(),
+                                    g_y.tolist())),
+            bool, len(g_l))
+    row = np.cumsum(keep) - 1
+    sel = keep[gid]
+    tile, ll, interior, gid = tile[sel], ll[sel], interior[sel], gid[sel]
+    bit = _local_bit_index(ll, xs[tile] - (prx[sel] << ll),
+                           ys[tile] - (pry[sel] << ll))
+
+    n_interior = (4**s - 1) // 3
+    prefix, padded = _header_for_lengths(n_interior, n_interior, 4**s)
+    starts = np.cumsum([0] + [n + p for n, p in padded])
+    buf = np.zeros((int(keep.sum()), int(starts[-1])), np.uint8)
+    for start, on, pos in (
+        (starts[0], interior & hc[tile], bit),  # tileAvailability
+        (starts[1], interior & content[tile], bit),  # contentAvailability
+        # boundary tiles: local level s starts right after the interior
+        (starts[2], ~interior & hc[tile], bit - n_interior),  # child
+    ):
+        p = pos[on]
+        np.bitwise_or.at(
+            buf, (row[gid[on]], start + (p >> 3)),
+            np.left_shift(1, p & 7).astype(np.uint8),
         )
-        out.append((int(rl), int(rx), int(ry), serialize_subtree(*bits)))
-    return out
+    return [
+        (rl, rx, ry, prefix + buf[i].tobytes())
+        for i, (rl, rx, ry) in enumerate(zip(
+            g_l[keep].tolist(), g_x[keep].tolist(), g_y[keep].tolist()))
+    ]
 
 
 def subtree_tile_pairs(tiles, subtree_levels: int):

@@ -119,9 +119,48 @@ def part_files(path: str) -> list[PartFile]:
 #: largest tiles/manifest table handled on the driver (pandas/pyarrow/
 #: numpy), judged by its footer row count (:func:`part_files`). Tile and
 #: manifest rows are O(tiles), 3 orders below instances; above the budget
-#: the append's tile-granularity bookkeeping steps and the serving tile
-#: lookup take their distributed Spark twins. Read at call time.
+#: the append's tile-granularity bookkeeping steps, the serving tile
+#: lookup and a resumed export's subtree assembly take their distributed
+#: Spark twins. Read at call time.
 _MAX_DRIVER_TILES = 4_000_000
+
+
+def read_driver_table(path: str):
+    """A tile/manifest table read onto the driver with pyarrow, as pandas,
+    while its footer row count is within ``_MAX_DRIVER_TILES``; None when
+    it is bigger or not a driver-visible directory."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    if not os.path.isdir(path.removeprefix("file:")):
+        return None
+    files = part_files(path)
+    if sum(f.n_rows for f in files) > _MAX_DRIVER_TILES:
+        return None
+    tables = [pq.read_table(f.path) for f in files]
+    if not tables:
+        return None
+    return pa.concat_tables(tables).to_pandas()
+
+
+def write_driver_table(path: str, table) -> None:
+    """Write a small pyarrow table from the driver as a one-file parquet
+    directory, overwrite semantics like ``df.write.mode("overwrite")``.
+    The footer carries Spark's schema under the key Spark's writer uses,
+    so ``read_parquet`` of the result launches no schema-inference job."""
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import from_arrow_schema
+
+    table = table.replace_schema_metadata({
+        **(table.schema.metadata or {}),
+        _SPARK_SCHEMA_KEY: from_arrow_schema(table.schema).json(),
+    })
+    tmp = path + ".tmpwrite"
+    shutil.rmtree(tmp, ignore_errors=True)
+    os.makedirs(tmp)
+    pq.write_table(table, os.path.join(tmp, "part-00000.parquet"))
+    shutil.rmtree(path, ignore_errors=True)
+    os.replace(tmp, path)
 
 
 def _footer_schema(path: str):

@@ -83,7 +83,7 @@ from ..operators import subtree, tiling
 from ..operators.skew import cluster_tiles_salted
 from . import checkpoint, sinks
 from .checkpoint import (
-    _SPARK_SCHEMA_KEY, CheckpointManager, part_files, read_parquet,
+    CheckpointManager, part_files, read_parquet,
 )
 from .pipeline import stage0_instances
 
@@ -668,15 +668,18 @@ def incremental_append(
     sub_incr_dir = os.path.join(ckpt_root, "_sink_manifests", "_subtrees_incr")
     # roots_set non-None implies tiles_pdf non-None (set only by the
     # driver changed-roots branch above)
-    if roots_set is not None and n_affected_roots <= _MAX_DRIVER_SUBTREE_WRITES:
+    if roots_set is not None and sinks.subtree_tiles_on_driver(
+        tiles_pdf, subtree_levels, roots=roots_set
+    ) is not None:
         # driver fast path: a localized append touches a handful of
         # subtrees — assemble their (bounded) bitstreams from the driver
         # tiles frame and write the files with a thread pool instead of
         # paying a tile-row shuffle + mapInPandas job; the distributed
         # assembly below handles big affected sets (byte-parity-tested
-        # via a monkeypatched _MAX_DRIVER_SUBTREE_WRITES)
-        _assemble_subtrees_driver(
-            tiles_pdf, roots_set, subtree_levels, subtrees_dir, sub_incr_dir
+        # via a monkeypatched sinks._MAX_DRIVER_SUBTREE_WRITES)
+        sinks.write_subtrees_driver(
+            tiles_pdf, subtree_levels, subtrees_dir, sub_incr_dir,
+            roots=roots_set,
         )
     else:
         if affected_roots is None:
@@ -954,11 +957,6 @@ _MAX_DRIVER_CELLS = 4_000_000
 #: largest removed-file set unlinked from the driver (thread pool);
 #: beyond it deletions run distributed on the executors (VERDICT r4 #8)
 _MAX_DRIVER_UNLINKS = 100_000
-#: largest affected-subtree set assembled + written from the driver; a
-#: localized append touches a handful of subtrees, for which a tile-row
-#: shuffle + mapInPandas job costs more than the payloads themselves.
-#: Beyond it assembly runs via build_subtrees_spark (executor writes).
-_MAX_DRIVER_SUBTREE_WRITES = 10_000
 
 _ARROW_TYPES = {
     "int32": "int32", "int64": "int64", "bool": "bool_", "string": "string",
@@ -969,33 +967,20 @@ def _write_parquet_driver(path: str, pdf, ddl: list[tuple[str, str]]) -> None:
     """Driver-side parquet write of a small pandas frame with an EXPLICIT
     arrow schema matching what the Spark writer would produce, so every
     downstream reader (Spark, pandas, the footer-stats scans) sees the
-    same column types as a Spark-written checkpoint/manifest. The footer
-    also carries the Spark schema under the key Spark's writer uses, so
-    ``read_parquet`` of the result launches no schema-inference job.
-    Overwrite semantics like ``df.write.mode("overwrite")`` — used by the
-    append's driver fast paths for tile-granularity bookkeeping, where a
-    full Spark job's scheduler latency dwarfs the data."""
-    import shutil
-
+    same column types as a Spark-written checkpoint/manifest
+    (:func:`checkpoint.write_driver_table`: Spark's schema in the footer,
+    overwrite semantics) — used by the append's driver fast paths for
+    tile-granularity bookkeeping, where a full Spark job's scheduler
+    latency dwarfs the data."""
     import pyarrow as pa
-    import pyarrow.parquet as pq
-    from pyspark.sql.pandas.types import from_arrow_schema
 
     schema = pa.schema(
         [(name, getattr(pa, _ARROW_TYPES[t])()) for name, t in ddl]
     )
-    schema = schema.with_metadata(
-        {_SPARK_SCHEMA_KEY: from_arrow_schema(schema).json()})
     cols = [name for name, _t in ddl]
-    table = pa.Table.from_pandas(
+    checkpoint.write_driver_table(path, pa.Table.from_pandas(
         pdf[cols], schema=schema, preserve_index=False
-    )
-    tmp = path + ".tmpwrite"
-    shutil.rmtree(tmp, ignore_errors=True)
-    os.makedirs(tmp)
-    pq.write_table(table, os.path.join(tmp, "part-00000.parquet"))
-    shutil.rmtree(path, ignore_errors=True)
-    os.replace(tmp, path)
+    ))
 
 
 #: column DDLs for the driver-written twins (types pinned to what the
@@ -1280,62 +1265,6 @@ def _delta_refresh(
         "n_rewritten_source_files": len(dirty_files),
         "walls": dwalls,
     }
-
-
-def _assemble_subtrees_driver(
-    tiles_pdf, roots: set, subtree_levels: int,
-    subtrees_dir: str, manifest_dir: str,
-) -> None:
-    """Driver twin of ``build_subtrees_spark(roots=...)`` + the executor
-    sink, for small affected-root sets: same per-root row selection, same
-    existence rule (any interior row with content), same serialized bytes
-    (the bitstring builders are shared), same atomic-replace write with
-    content-compare fast path, same (relpath, n_bytes, content_md5)
-    manifest parquet."""
-    import hashlib
-    import uuid
-    from concurrent.futures import ThreadPoolExecutor
-
-    import pandas as pd
-
-    from ..operators.subtree import build_subtrees_pandas_for_roots
-
-    payloads = [
-        (f"{rl}_{rx}_{ry}.subtree", payload)
-        for rl, rx, ry, payload in build_subtrees_pandas_for_roots(
-            tiles_pdf, roots, subtree_levels
-        )
-    ]
-
-    os.makedirs(subtrees_dir, exist_ok=True)
-
-    def _write(item: tuple[str, bytes]) -> tuple[str, int, str]:
-        rel, b = item
-        final = os.path.join(subtrees_dir, rel)
-        current = False
-        try:
-            if os.path.getsize(final) == len(b):
-                with open(final, "rb") as f:
-                    current = f.read() == b
-        except OSError:
-            pass
-        if not current:
-            tmp = f"{final}.tmp.{uuid.uuid4().hex}"
-            with open(tmp, "wb") as f:
-                f.write(b)
-            os.replace(tmp, final)
-        return rel, len(b), hashlib.md5(b).hexdigest()
-
-    if payloads:
-        with ThreadPoolExecutor(max_workers=32) as pool:
-            rows = list(pool.map(_write, payloads))
-    else:
-        rows = []
-    _write_parquet_driver(
-        manifest_dir,
-        pd.DataFrame(rows, columns=["relpath", "n_bytes", "content_md5"]),
-        _MANIFEST_DDL,
-    )
 
 
 def _stage0_additive_tmp(ckpt: CheckpointManager, new_inst: DataFrame) -> str:

@@ -5,16 +5,26 @@
       -> stage1_encoded     ECEF + S2 cell keys (vectorized pandas UDF)
       -> stage2 tile tree   (operators/tiling.build_tile_tree — one shuffle)
       -> stage3_assigned    leaf assignment (+ salt-aware repartition)
-      -> stage4 cluster+encode payloads (applyInPandas per tile)
-      -> sinks: content/{z}_{x}_{y}.cmpt|i3dm, subtrees/*.subtree,
-                tileset.json
+      -> stage4_reduced     k-means LOD reduce (clustering only)
+      -> content sink       encode (applyInPandas per tile) piped straight
+                            into the executor writer:
+                            content/{z}_{x}_{y}.cmpt|i3dm + its manifest
+      -> subtree sink       subtrees/*.subtree + its manifest: assembled
+                            and written on the driver from the driver-held
+                            tile table under the budgets
+                            (sinks.subtree_tiles_on_driver), else a tile-row
+                            shuffle piped into the executor writer
+      -> tileset.json
 
-Every stage checkpoints through plans/checkpoint.CheckpointManager with
+Stages 0-4 checkpoint through plans/checkpoint.CheckpointManager with
 per-part-file lineage read from parquet footers; a killed export rerun with
 the same output dir skips completed stages (resume test in
-tests/test_pipeline.py). Facts the driver already holds — the stage done
-markers' row counts, the driver-built tile table — answer the summary and
-the tree's row estimate instead of extra Spark jobs.
+tests/test_pipeline.py). Payloads are not checkpointed: the sink
+manifests are the durable output of the tail, and a rerun re-encodes
+while the sinks' content-compare fast path leaves current files
+untouched. Facts the driver already holds — the stage done markers' row
+counts, the driver-built tile table — answer the summary and the tree's
+row estimate instead of extra Spark jobs.
 
 Heavy payload columns (html) are projected away in stage 0 and never enter
 a shuffle (SURVEY.md §7 hazard 8); the byte-identical-text-per-url
@@ -26,6 +36,7 @@ from __future__ import annotations
 
 import os
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F, types as T
 
@@ -343,16 +354,13 @@ def run_export(
             model_glbs, opts, output_dir=content_dir
         )
 
-    payloads = ckpt.run_stage(
-        "stage4_payloads",
-        lambda: enc.encode_tiles(reduced, opts, model_glbs=prepared_models),
-        input_fingerprint=in_fp,
-    )
-
-    # ---- sinks (K1/K3/K4): executor-side, nothing funnels through the
-    # driver (the K1 scale contract — SURVEY §2.1; plan-gated in
-    # tests/test_plan_quality.py) --------------------------------------------
-
+    # stage 4 encode, straight into the content sink: the payloads are
+    # written once, by the executors (K1 — SURVEY §2.1; gated by
+    # test_export_never_materializes_on_driver). The content manifest is
+    # the stage's durable output; a rerun re-encodes from stage 3 /
+    # stage4_reduced and the sink's content-compare fast path leaves
+    # current files untouched.
+    payloads = enc.encode_tiles(reduced, opts, model_glbs=prepared_models)
     ext = opts.content_extension
     if write_content:
         content_files = payloads.select(
@@ -366,38 +374,48 @@ def run_export(
     else:
         n_content = payloads.count()
 
-    # T4 distributed: subtree files assembled in executors (one tile-row
-    # shuffle, groups bounded by subtree geometry), then the same
-    # executor-side binary sink
-    subs_df = ckpt.run_stage(
-        "stage5_subtrees",
-        lambda: subtree.build_subtrees_spark(tree.tiles, subtree_levels),
-        input_fingerprint=in_fp,
+    # T4 subtree files, decided once (sinks.subtree_tiles_on_driver): from
+    # the driver-held tile table while it and its root set fit the
+    # budgets, else assembled in executors (one tile-row shuffle) and piped
+    # into the executor sink. Either way subtreeLevels (reference
+    # src/Program.cs:151: level of the 2nd subtree file in sorted key
+    # order, else 2) comes from the subtree set just written: the level-0
+    # root is unique, so that is its 2nd distinct root level.
+    sub_manifest = os.path.join(ckpt.root, "_sink_manifests", "subtrees")
+    tiles_pdf = sinks.subtree_tiles_on_driver(
+        tree.tiles_pdf, subtree_levels,
+        stage_dir=ckpt._stage_path("stage2_tiles"),
     )
-    sub_files = subs_df.select(
-        F.format_string("%d_%d_%d.subtree", "root_level", "root_x", "root_y")
-        .alias("relpath"),
-        "payload",
-    )
-    n_subtree_files = sinks.write_binary_files(
-        sub_files, subtrees_dir,
-        manifest_path=os.path.join(ckpt.root, "_sink_manifests", "subtrees"),
-    )
+    if tiles_pdf is not None:
+        root_levels = sinks.write_subtrees_driver(
+            tiles_pdf, subtree_levels, subtrees_dir, sub_manifest
+        )
+        n_subtree_files = len(root_levels)
+    else:
+        import pyarrow as pa
+        import pyarrow.compute as pc
+        import pyarrow.parquet as pq
 
-    # tileset.json (K4); subtreeLevels inference per reference
-    # src/Program.cs:151: Z of the 2nd subtree file else 2 — the sorted-key
-    # peek is a 2-row limit, not a collect of the tile table
-    first_roots = (
-        subs_df.select("root_level", "root_x", "root_y")
-        .orderBy("root_level", "root_x", "root_y")
-        .limit(2)
-        .collect()
-    )
-    inferred_subtree_levels = (
-        first_roots[1]["root_level"] if len(first_roots) > 1 else 2
-    )
-    if tree.tiles_pdf is not None:
-        avail_levels = int(tree.tiles_pdf["level"].max()) + 1
+        sub_files = subtree.build_subtrees_spark(
+            tree.tiles, subtree_levels
+        ).select(
+            F.format_string("%d_%d_%d.subtree", "root_level", "root_x",
+                            "root_y").alias("relpath"),
+            "payload",
+        )
+        n_subtree_files = sinks.write_binary_files(
+            sub_files, subtrees_dir, manifest_path=sub_manifest,
+        )
+        relpaths = pq.read_table(sub_manifest, columns=["relpath"])["relpath"]
+        root_levels = pc.list_element(
+            pc.split_pattern(relpaths, "_", max_splits=1), 0
+        ).cast(pa.int64()).to_numpy()
+    rls = np.unique(np.asarray(root_levels, np.int64))[:2]
+    inferred_subtree_levels = int(rls[1]) if len(rls) > 1 else 2
+    if tiles_pdf is None:
+        tiles_pdf = tree.tiles_pdf
+    if tiles_pdf is not None:
+        avail_levels = int(tiles_pdf["level"].max()) + 1
     else:
         avail_levels = (
             tree.tiles.agg((F.max("level") + F.lit(1)).alias("al"))

@@ -25,9 +25,14 @@ from i3dm_export_spark.plans.checkpoint import (
 from i3dm_export_spark.sources.pages import pages_df
 
 #: Spark jobs of the 500-row scenario-A export below: its data passes
-#: only (stage writes, extent, the tree's counts collect, both sinks, the
-#: subtree-level peek and the text-invariant fingerprints)
-EXPORT_JOBS_PINNED = 23
+#: only (stage writes, extent, the tree's counts collect, the encode-into-
+#: content-sink pass and the text-invariant fingerprints; its subtree files
+#: are written from the driver-held tile table)
+EXPORT_JOBS_PINNED = 18
+#: Spark jobs of a rerun of that complete export: every stage reloads, the
+#: content sink re-encodes (its content-compare fast path leaves the files
+#: untouched) and the text-invariant fingerprints run again
+EXPORT_RERUN_JOBS_PINNED = 11
 
 
 def _count_jobs(spark, fn):
@@ -46,13 +51,16 @@ def _count_jobs(spark, fn):
     return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
+def _small_export(spark, out):
+    pages = pages_df(spark, 500, scenario="A")
+    opts = ExportOptions(max_features_per_tile=100, max_level=10)
+    return _count_jobs(spark, lambda: pipeline.run_export(pages, opts, out))
+
+
 @pytest.fixture(scope="module")
 def small_export(spark, tmp_path_factory):
     out = str(tmp_path_factory.mktemp("ckpt_export"))
-    pages = pages_df(spark, 500, scenario="A")
-    opts = ExportOptions(max_features_per_tile=100, max_level=10)
-    summary, n_jobs = _count_jobs(
-        spark, lambda: pipeline.run_export(pages, opts, out))
+    summary, n_jobs = _small_export(spark, out)
     return out, summary, n_jobs
 
 
@@ -95,6 +103,16 @@ class TestJobCounts:
             f"export ran {n_jobs} Spark jobs, pinned at "
             f"{EXPORT_JOBS_PINNED}: a new per-stage job crept in")
 
+    def test_rerun_of_complete_export_is_pinned(self, spark, tmp_path):
+        out = str(tmp_path / "exp")
+        first, _ = _small_export(spark, out)
+        again, n_jobs = _small_export(spark, out)
+        assert again["n_content_tiles"] == first["n_content_tiles"]
+        assert again["n_subtree_files"] == first["n_subtree_files"]
+        assert n_jobs <= EXPORT_RERUN_JOBS_PINNED, (
+            f"rerun ran {n_jobs} Spark jobs, pinned at "
+            f"{EXPORT_RERUN_JOBS_PINNED}")
+
 
 class TestLineageContract:
     def test_one_row_per_part_file(self, small_export):
@@ -102,8 +120,7 @@ class TestLineageContract:
         root = os.path.join(out, "_checkpoints")
         stages = [m["stage"] for m in summary["stage_metrics"]]
         assert {"stage0_instances", "stage2_tiles", "stage2_cellcounts",
-                "stage3_assigned", "stage4_payloads",
-                "stage5_subtrees"} <= set(stages)
+                "stage3_assigned"} <= set(stages)
         for stage in stages:
             stage_dir = os.path.join(root, stage)
             lineage = pq.read_table(

@@ -586,9 +586,9 @@ class TestDeltaPath:
         0: affected roots flow into build_subtrees_spark via
         createDataFrame and files are written by the executor sink —
         bytes must match a full rebuild."""
-        from i3dm_export_spark.plans import incremental as incr
+        from i3dm_export_spark.plans import sinks
 
-        monkeypatch.setattr(incr, "_MAX_DRIVER_SUBTREE_WRITES", 0)
+        monkeypatch.setattr(sinks, "_MAX_DRIVER_SUBTREE_WRITES", 0)
         base, batch, full = _split(spark, 900, 750)
         out_full = str(tmp_path / "full")
         run_export(full, OPTS, out_full, bounds=BB)

@@ -11,6 +11,10 @@ from i3dm_export_spark.plans import pipeline
 from i3dm_export_spark.sources.pages import pages_df
 
 
+def _dir_bytes(path) -> dict:
+    return {fn: (path / fn).read_bytes() for fn in sorted(os.listdir(path))}
+
+
 @pytest.fixture(scope="module")
 def export_result(spark, tmp_path_factory):
     out = tmp_path_factory.mktemp("export")
@@ -96,8 +100,7 @@ class TestResume:
         s = pipeline.run_export(pages, opts, str(tmp_path / "exp2"))
         stages = {m["stage"] for m in s["stage_metrics"]}
         assert {"stage0_instances", "stage2_tiles",
-                "stage3_assigned", "stage4_payloads",
-                "stage5_subtrees"} <= stages
+                "stage3_assigned"} <= stages
         # stage 1 is opt-in (fused default computes ECEF in the encoder)
         assert "stage1_encoded" not in stages
         for m in s["stage_metrics"]:
@@ -112,11 +115,13 @@ class TestClusteredExport:
             max_features_per_tile=100, max_level=12, use_clustering=True
         )
         s = pipeline.run_export(pages, opts, str(tmp_path / "exp3"), write_content=False)
-        ckpt = os.path.join(tmp_path / "exp3", "_checkpoints", "stage4_payloads")
+        ckpt = os.path.join(tmp_path / "exp3", "_checkpoints", "stage4_reduced")
         import duckdb
 
+        # the encoder writes every reduced row of a tile into its payload
         mx = duckdb.sql(
-            f"select max(n_instances) from parquet_scan('{ckpt}/*.parquet')"
+            f"select max(n) from (select count(*) n from parquet_scan("
+            f"'{ckpt}/*.parquet') group by level, x, y)"
         ).fetchone()[0]
         assert mx <= 100
         # clustering doubles up: interior over-full tiles also carry content
@@ -272,22 +277,16 @@ class TestFusedVsPrecomputedEcef:
         """precompute_ecef=True (stage-1 checkpoint) and the fused default
         must write byte-identical tile payloads — same ECEF float64 kernel
         either way, including the clustering metric."""
-        import duckdb
-
         pages = pages_df(spark, 1500, scenario="A")
         for name, pre in (("fused", False), ("pre", True)):
             opts = ExportOptions(
                 max_features_per_tile=100, max_level=10, use_i3dm=True,
                 use_clustering=True, precompute_ecef=pre,
             )
-            pipeline.run_export(
-                pages, opts, str(tmp_path / name), write_content=False
-            )
-        q = ("select level, x, y, md5(base64(payload)) h from parquet_scan('{}/"
-             "_checkpoints/stage4_payloads/*.parquet') order by 1,2,3")
-        a = duckdb.sql(q.format(tmp_path / "fused")).df()
-        b = duckdb.sql(q.format(tmp_path / "pre")).df()
-        assert a.equals(b)
+            pipeline.run_export(pages, opts, str(tmp_path / name))
+        a = _dir_bytes(tmp_path / "fused" / "content")
+        b = _dir_bytes(tmp_path / "pre" / "content")
+        assert a == b
         assert len(a) > 0
 
 
@@ -314,3 +313,72 @@ class TestPartialSinkResume:
         assert os.path.exists(content / victim)
         for f, t in mtimes.items():
             assert os.path.getmtime(content / f) == t, f
+
+
+def _subtree_outputs(out) -> tuple:
+    """subtrees/ bytes, subtree manifest rows (sorted) and tileset.json."""
+    import pyarrow.parquet as pq
+
+    manifest = pq.read_table(
+        os.path.join(out, "_checkpoints", "_sink_manifests", "subtrees"))
+    rows = sorted(zip(*(manifest[c].to_pylist()
+                        for c in ("relpath", "n_bytes", "content_md5"))))
+    return (_dir_bytes(out / "subtrees"), rows,
+            (out / "tileset.json").read_bytes())
+
+
+def _forbid(monkeypatch, module, name):
+    def _boom(*a, **k):
+        raise AssertionError(f"{name} ran on the other subtree path")
+
+    monkeypatch.setattr(module, name, _boom)
+
+
+class TestDriverSubtreeParity:
+    """Subtree files of the driver-held tile table (assembled and written
+    on the driver) against the Spark twin forced by a subtree-write budget
+    of 0: identical files, manifest rows and tileset.json."""
+
+    def _pair(self, tmp_path, pages, opts):
+        from i3dm_export_spark.operators import subtree
+        from i3dm_export_spark.plans import sinks
+
+        drv, twin = tmp_path / "driver", tmp_path / "twin"
+        with pytest.MonkeyPatch.context() as mp:
+            _forbid(mp, subtree, "build_subtrees_spark")
+            s_drv = pipeline.run_export(pages, opts, str(drv))
+        with pytest.MonkeyPatch.context() as mp:
+            mp.setattr(sinks, "_MAX_DRIVER_SUBTREE_WRITES", 0)
+            _forbid(mp, subtree, "build_subtrees_pandas_for_roots")
+            s_twin = pipeline.run_export(pages, opts, str(twin))
+        assert s_drv["n_subtree_files"] == s_twin["n_subtree_files"] > 1
+        assert s_drv["subtree_levels"] == s_twin["subtree_levels"]
+        assert _subtree_outputs(drv) == _subtree_outputs(twin)
+        return drv, twin
+
+    def test_clustered_gpu(self, spark, tmp_path):
+        self._pair(tmp_path, pages_df(spark, 1500, scenario="S"),
+                   ExportOptions(max_features_per_tile=100, max_level=8,
+                                 use_clustering=True,
+                                 use_gpu_instancing=True))
+
+    def test_scenario_a_i3dm_fresh_and_resumed(self, spark, tmp_path,
+                                               monkeypatch):
+        """Also a rerun that lost the subtree tail: it reloads stage 2, so
+        its tile table comes from the footer-gated pyarrow read of the
+        checkpoint; it must still take the driver path and restore the
+        tail byte for byte."""
+        import shutil
+
+        from i3dm_export_spark.operators import subtree
+
+        pages = pages_df(spark, 2500, scenario="A")
+        opts = ExportOptions(max_features_per_tile=100, max_level=12,
+                             use_i3dm=True)
+        drv, twin = self._pair(tmp_path, pages, opts)
+        shutil.rmtree(drv / "subtrees")
+        shutil.rmtree(drv / "_checkpoints" / "_sink_manifests" / "subtrees")
+        (drv / "tileset.json").unlink()
+        _forbid(monkeypatch, subtree, "build_subtrees_spark")
+        pipeline.run_export(pages, opts, str(drv))
+        assert _subtree_outputs(drv) == _subtree_outputs(twin)

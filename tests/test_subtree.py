@@ -276,3 +276,45 @@ class TestDeepSubtreeLevels:
         }
         assert subs_s == {k: (v[0], v[1], v[2], v[3]) for k, v in subs_p.items()}
         assert len(subs_s) >= 1
+
+
+class TestDriverKernelAtScale:
+    def test_thousand_roots_parity(self, spark):
+        """The one-sort driver kernel against the per-root reference
+        (build_subtrees_pandas) and the Spark twin on a tree of > 1,000
+        subtree roots, with empty tiles and content-less interiors mixed
+        in, at two subtree depths."""
+        rng = np.random.default_rng(7)
+        parts = []
+        for lvl, n in ((0, 1), (1, 4), (2, 16), (3, 64), (4, 256),
+                       (5, 1024), (6, 1500)):
+            side = 1 << lvl
+            idx = rng.choice(side * side, n, replace=False)
+            parts.append(pd.DataFrame({
+                "level": np.full(n, lvl, np.int32),
+                "x": (idx % side).astype(np.int64),
+                "y": (idx // side).astype(np.int64),
+                "available": True,
+                "content_available": rng.random(n) < 0.6,
+                "n_instances": np.where(rng.random(n) < 0.85,
+                                        rng.integers(1, 500, n), 0),
+            }))
+        tiles_pdf = pd.concat(parts, ignore_index=True)
+        tiles = spark.createDataFrame(tiles_pdf)
+        for s in (2, 3):
+            got = subtree.build_subtrees_pandas_for_roots(
+                tiles_pdf, None, subtree_levels=s)
+            ref = subtree.build_subtrees_pandas(tiles_pdf, subtree_levels=s)
+            spk = {
+                (r.root_level, r.root_x, r.root_y): bytes(r.payload)
+                for r in subtree.build_subtrees_spark(
+                    tiles, subtree_levels=s).collect()
+            }
+            keys = [(rl, rx, ry) for rl, rx, ry, _p in got]
+            assert keys == sorted(ref) == sorted(spk)
+            assert len(keys) == subtree.n_subtree_roots(tiles_pdf, s)
+            for rl, rx, ry, payload in got:
+                assert payload == ref[(rl, rx, ry)][3]
+                assert payload == spk[(rl, rx, ry)]
+        assert len(subtree.build_subtrees_pandas_for_roots(
+            tiles_pdf, None, subtree_levels=2)) > 1000
