@@ -405,8 +405,19 @@ def assign_to_content_tiles(
     """
     if opts.query:
         instances = instances.filter(F.expr(opts.query))
+    return match_content_tiles(
+        with_cell_keys(instances, tree.bounds, tree.deep_level), tree
+    )
 
-    spark = instances.sparkSession
+
+def match_content_tiles(cells: DataFrame, tree: TileTree) -> DataFrame:
+    """Rows keyed by their deep cell (``cell_x, cell_y`` at
+    ``tree.deep_level``) -> one row per content tile that is an
+    ancestor-or-self of that cell, keyed (level, x, y); the cell columns
+    are dropped. The join behind :func:`assign_to_content_tiles`; the
+    append also runs it over a batch's deep-cell counts to find the
+    content tiles the batch enters."""
+    spark = cells.sparkSession
     if tree.tiles_pdf is not None:
         # driver-resident tree: derive levels / count / the broadcast side
         # without any Spark job (the append's delta path calls this with a
@@ -435,7 +446,6 @@ def assign_to_content_tiles(
     # (~10^9 content tiles) fall back to a shuffle join and let AQE plan it
     content_side = F.broadcast(content) if n_content <= 2_000_000 else content
 
-    inst = with_cell_keys(instances, tree.bounds, tree.deep_level)
     # ancestor key per content level: right-shift of the deep key
     pairs = [
         F.struct(
@@ -445,14 +455,14 @@ def assign_to_content_tiles(
         )
         for lvl in levels
     ]
-    inst = (
-        inst.withColumn("_cand", F.explode(F.array(*pairs)))
+    exploded = (
+        cells.withColumn("_cand", F.explode(F.array(*pairs)))
         .withColumn("level", F.col("_cand.level"))
         .withColumn("x", F.col("_cand.x"))
         .withColumn("y", F.col("_cand.y"))
         .drop("_cand", "cell_x", "cell_y")
     )
-    return inst.join(content_side, ["level", "x", "y"], "inner")
+    return exploded.join(content_side, ["level", "x", "y"], "inner")
 
 
 def collect_tiles(tree: TileTree):

@@ -147,7 +147,13 @@ def write_driver_table(path: str, table) -> None:
     """Write a small pyarrow table from the driver as a one-file parquet
     directory, overwrite semantics like ``df.write.mode("overwrite")``.
     The footer carries Spark's schema under the key Spark's writer uses,
-    so ``read_parquet`` of the result launches no schema-inference job."""
+    so ``read_parquet`` of the result launches no schema-inference job.
+
+    The live directory is never removed before its replacement is in
+    place: it is renamed aside to ``path + ".old"``, the new one is
+    renamed in, then the aside copy goes. A crash between the two renames
+    leaves the previous table whole under ``.old``; the next call moves it
+    back before starting (or drops it when ``path`` already exists)."""
     import pyarrow.parquet as pq
     from pyspark.sql.pandas.types import from_arrow_schema
 
@@ -156,11 +162,19 @@ def write_driver_table(path: str, table) -> None:
         _SPARK_SCHEMA_KEY: from_arrow_schema(table.schema).json(),
     })
     tmp = path + ".tmpwrite"
+    aside = path + ".old"
     shutil.rmtree(tmp, ignore_errors=True)
     os.makedirs(tmp)
     pq.write_table(table, os.path.join(tmp, "part-00000.parquet"))
-    shutil.rmtree(path, ignore_errors=True)
+    if os.path.isdir(aside):
+        if os.path.exists(path):
+            shutil.rmtree(aside)
+        else:
+            os.replace(aside, path)
+    if os.path.exists(path):
+        os.replace(path, aside)
     os.replace(tmp, path)
+    shutil.rmtree(aside, ignore_errors=True)
 
 
 def _footer_schema(path: str):
@@ -178,16 +192,18 @@ def _footer_schema(path: str):
     return None
 
 
-def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+def read_parquet(spark: SparkSession, path: str,
+                 files: list[str] | None = None) -> DataFrame:
     """``spark.read.parquet(path)`` without the schema-inference job: the
     schema comes from the footer (:func:`_footer_schema`). Spark reads
     every file-source column as nullable either way, so the frame's schema
-    equals the inferred one."""
+    equals the inferred one. ``files``: read only these data files of
+    ``path``."""
     reader = spark.read
     schema = _footer_schema(path)
     if schema is not None:
         reader = reader.schema(schema)
-    return reader.parquet(path)
+    return reader.parquet(*(files or [path]))
 
 
 class CheckpointManager:

@@ -2,26 +2,42 @@
 
 The 100 TB operating mode is CDC-style appends (a new crawl drop lands
 next to 10^12 existing pages). Recomputing the whole export for a 0.1%
-append wastes almost all of its cost in stage 4 — the per-tile payload
-encode (and optional k-means LOD reduce) dominates, while the tree build
-and leaf assignment are cheap linear scans. This module therefore:
+append wastes almost all of its cost on tiles the batch never touches, so
+an append works from the base export's checkpoints and the batch:
 
-1. rebuilds the tile tree and leaf assignment over old ∪ new instances
-   (linear, one count-rollup shuffle — the same cost class as a metadata
-   pass, and unavoidable: appends can flip split decisions anywhere in
-   the ancestry of a new point);
-2. diffs the new assignment against the previous run's ``stage3_assigned``
-   checkpoint on the stable instance key (``url``) — one doc-key join;
-3. re-encodes ONLY the dirty tiles (tiles that gained, lost, or received
-   re-assigned instances), writes their content files (atomic replace),
-   deletes content files whose tile stopped being a content tile, and
-   merges the sink manifest;
-4. reassembles ONLY the subtrees whose bit-relevant tile rows changed
-   (diffed on the exact columns the bitstreams consume) and rewrites
-   ``tileset.json`` — the tile-row shuffle and payload builds scale with
-   the dirty region, and unchanged subtree files are never touched;
-5. refreshes the stage checkpoints so the NEXT append diffs against the
-   new state.
+1. guards: same ``ExportOptions``, batch inside the recorded bounds, urls
+   new to the corpus (see Preconditions);
+2. stage 0 is refreshed additively: the base's parquet files are
+   hard-linked and only the batch is written beside them;
+3. tree: the batch's deep-cell counts merge into the persisted base counts
+   (``stage2_cellcounts``) and the tree is re-descended from the merged
+   counts — O(cells), never a corpus groupBy;
+4. assignment: ``flipped`` = the content tiles of the old tree Δ those of
+   the new one. Only the batch and the base rows under a flipped tile are
+   reassigned; stage 3 is refreshed by hard-linking every part file whose
+   footer (level, x, y) box cannot hold such a row and writing the rest
+   as delta files;
+5. dirty tiles in closed form: an instance in deep cell ``c`` matches the
+   content tiles over ``c``, so the tiles whose member set changed are the
+   new content tiles over a batch cell, plus ``flipped``. No join over
+   instances: numpy over the batch's collected counts on the driver, the
+   assignment's content-tile join over the batch's cells beyond it;
+6. only dirty tiles re-encode; their files are written atomically, files
+   of tiles that stopped being content are removed, and the content
+   manifest is merged;
+7. only subtrees whose bit-relevant tile rows changed (existence,
+   content flag, emptiness) are reassembled, and ``tileset.json`` is
+   rewritten;
+8. the refreshed stage directories are renamed into place, so the NEXT
+   append starts from the new state.
+
+Tile- and cell-granularity steps run in pandas/numpy on the driver within
+``_MAX_DRIVER_CELLS`` / ``checkpoint._MAX_DRIVER_TILES`` and as Spark
+jobs beyond them (byte-parity-tested twins). A base export without
+persisted cell counts, a count overflow that would deepen the tree, or
+more than ``_MAX_FLIPPED_FOR_DELTA`` flipped tiles take the legacy path:
+rebuild the tree and assignment over base ∪ batch and diff the two
+assignments with the url-keyed :func:`dirty_tiles` join.
 
 Parity contract (tested): content/ + subtrees/ + tileset.json after
 ``run_export(A)`` + ``incremental_append(B)`` are byte-identical to
@@ -42,30 +58,20 @@ Preconditions (enforced):
 * the same ``ExportOptions`` drive the append (checked against the
   recorded snapshot);
 * ``url`` is the unique stable instance key (the engine-wide total-order
-  contract, FIXTURES.md §5).
+  contract, FIXTURES.md §5), and a batch url already in the corpus raises.
+  Counts therefore only grow, which is what makes the closed-form dirty
+  set exact.
 
 No reference analog: the reference re-runs its whole pipeline per
 invocation (src/Program.cs). This is engine-only scale machinery.
 
-Scale audit: the driver touches only the dirty-tile KEY set (broadcast to
-the member semi-join) and the removed-file relpath list — both
-proportional to the append's dirty REGION, never the corpus. A batch so
-large that its dirty set approaches the whole tile table gains nothing
-over ``run_export`` (which this module will happily lose to in that
-regime — the summary's ``n_dirty_tiles``/``n_content_tiles`` ratio tells
-the operator which side they're on).
-
-IO shape (round 4): the refreshed stage-0 checkpoint is built ADDITIVELY
-(hard-link the base's parquet files, write only the batch — the
-parquet-fallback analogue of an Iceberg fast-append snapshot), the
-refreshed assignment is materialized into its checkpoint tmp ONCE up
-front and every downstream consumer reads that parquet (the r3 shape
-re-evaluated the lazy union assignment once per consuming action), and
-checkpoint swaps are directory renames. Remaining O(corpus) costs per
-append: the union tree/assignment compute (unavoidable — appends can
-flip split decisions anywhere in a new point's ancestry) and the stage-3
-rewrite (assignment rows can MOVE tiles, and plain parquet has no
-row-level deletes; Iceberg MOR would make this a delta too).
+Scale audit: the driver holds the batch's deep-cell counts, the dirty
+tile keys and the removed-file relpaths — all proportional to the batch
+and its dirty REGION. The one O(corpus) term left is the append-only url
+guard, a column-pruned broadcast semi-join over the corpus's urls. A
+batch whose dirty set approaches the whole tile table gains nothing over
+``run_export``; the summary's ``n_dirty_tiles``/``n_content_tiles`` ratio
+tells the operator which side they're on.
 """
 
 from __future__ import annotations
@@ -73,6 +79,7 @@ from __future__ import annotations
 import dataclasses
 import json
 import os
+import shutil
 
 import numpy as np
 from pyspark.sql import DataFrame, functions as F
@@ -339,12 +346,12 @@ def incremental_append(
     append_fp = _chained_fingerprint(ckpt, new_pages, old_inst)
     _mark("guards.fingerprint")
 
-    # url is the diff key, so an appended url that ALREADY exists would
-    # alias its old row in the assignment diff: if both copies land in the
-    # same tile the diff sees "unchanged" and the tile never re-encodes —
-    # silently dropping the second instance a full rebuild would include.
-    # Broadcast the (small) batch's url set against the corpus and degrade
-    # loudly instead.
+    # appends are append-only on url, the stable instance key: a batch url
+    # that ALREADY exists is an upsert, which neither the delta path's
+    # counts merge (counts only grow, so the closed-form dirty set would
+    # miss the tile the old copy leaves) nor the legacy url-keyed diff
+    # (both copies in one tile look "unchanged") can express. Broadcast
+    # the (small) batch's url set against the corpus and degrade loudly.
     n_overlap = old_assigned.select("url").join(
         F.broadcast(new_inst.select("url").distinct()), "url", "left_semi"
     ).count()
@@ -374,11 +381,12 @@ def incremental_append(
         tmp0 = _stage_to_tmp(ckpt, "stage0_instances", union_inst)
     _mark("stage0_materialize")
 
-    # 1-2: tree + assignment refresh. DELTA path (VERDICT r4 #1): merge the
-    # batch's deep-cell counts into the persisted base counts (O(cells)),
-    # re-descend, reassign ONLY the batch plus rows covered by flipped
-    # content tiles, and refresh stage-3 by hard-linking every file the
-    # dirty region provably does not touch (parquet footer box stats).
+    # tree + assignment refresh and the dirty set. DELTA path (VERDICT r4
+    # #1): merge the batch's deep-cell counts into the persisted base
+    # counts (O(cells)), re-descend, reassign ONLY the batch plus rows
+    # covered by flipped content tiles, refresh stage-3 by hard-linking
+    # every file the dirty region provably does not touch (parquet footer
+    # box stats), and derive the dirty tiles from the batch's counts.
     # Falls back to the legacy full union rebuild when preconditions fail
     # (pre-r5 base export, counts overflow that would deepen the tree,
     # near-rebuild-sized flipped set).
@@ -428,7 +436,7 @@ def incremental_append(
     ext = opts.content_extension
     manifest_dir = os.path.join(ckpt_root, "_sink_manifests", "content")
 
-    # 3: re-encode only dirty tiles' members. A per-level bounding-box
+    # 6: re-encode only dirty tiles' members. A per-level bounding-box
     # prefilter (tiny collect over the dirty KEYS, never instances) is
     # pushed into the parquet scan so footer stats skip the hard-linked
     # clean files entirely — the member fetch reads O(dirty region), the
@@ -540,14 +548,22 @@ def incremental_append(
             n_removed = len(removed)
         else:
             # a near-rebuild-sized removal set: unlink on the executors
-            # over shared storage (VERDICT r4 #8)
-            rem_df = spark.createDataFrame(
-                [(r,) for r in removed], schema="relpath string"
-            ).repartition(n_part)
+            # over shared storage (VERDICT r4 #8). The list reaches them
+            # as a one-file parquet table written with pyarrow, not
+            # through py4j as Python rows
+            import pyarrow as pa
+
+            rem_dir = os.path.join(ckpt_root, "_sink_manifests",
+                                   "_content_removed")
+            checkpoint.write_driver_table(rem_dir, pa.table(
+                {"relpath": pa.array(removed, pa.string())}
+            ))
             n_removed = int(
-                rem_df.mapInPandas(_unlink_rows, "n long")
+                read_parquet(spark, rem_dir).repartition(n_part)
+                .mapInPandas(_unlink_rows, "n long")
                 .agg(F.sum("n")).first()[0] or 0
             )
+            shutil.rmtree(rem_dir, ignore_errors=True)
         _mark("reencode.removals")
         rewritten = set(incr_m["relpath"])
         keep = old_m[
@@ -596,7 +612,7 @@ def incremental_append(
         sum(v for k, v in walls.items() if k.startswith("reencode.")), 3
     )
 
-    # 4: subtrees + tileset.json. Reassemble ONLY subtrees whose
+    # 7: subtrees + tileset.json. Reassemble ONLY subtrees whose
     # bit-relevant tile rows changed (new tile key, content flag flip, or
     # emptiness flip) — every other subtree's bytes on disk are already
     # the union-tree bytes, so assembly cost tracks the append's dirty
@@ -765,7 +781,7 @@ def incremental_append(
     with open(os.path.join(output_dir, "tileset.json"), "w") as f:
         f.write(ts_json)
 
-    # 5: swap the already-materialized stage tmps into place and mark
+    # 8: swap the already-materialized stage tmps into place and mark
     # done (directory renames — the data was written exactly once, up
     # front). Payload/reduce checkpoints are dropped — they describe the
     # old member sets.
@@ -947,6 +963,31 @@ def _covered_expr(flipped: list[tuple[int, int, int]], bounds, deep_level: int):
     return attach, expr
 
 
+def _content_keys_over_cells(
+    cells_pdf, tiles_pdf, deep_level: int
+) -> set[tuple[int, int, int]]:
+    """Driver twin of ``tiling.match_content_tiles`` for key sets: the
+    content tiles of ``tiles_pdf`` that are ancestors-or-self of any deep
+    cell in ``cells_pdf`` (columns cell_x, cell_y at ``deep_level``). One
+    right shift per content level, then a packed-key ``np.isin``."""
+    cx = cells_pdf["cell_x"].to_numpy(np.int64)
+    cy = cells_pdf["cell_y"].to_numpy(np.int64)
+    content = tiles_pdf.loc[tiles_pdf["content_available"]]
+    lv = content["level"].to_numpy(np.int64)
+    packed_content = (
+        (content["x"].to_numpy(np.int64) << 32) | content["y"].to_numpy(np.int64)
+    )
+    out: set[tuple[int, int, int]] = set()
+    for level in np.unique(lv).tolist():
+        shift = deep_level - level
+        packed = (cx >> shift << 32) | (cy >> shift)
+        hit = np.unique(packed[np.isin(packed, packed_content[lv == level])])
+        out.update(
+            (level, int(k >> 32), int(k & 0xFFFFFFFF)) for k in hit.tolist()
+        )
+    return out
+
+
 #: delta-path safety valves: a flipped set larger than this means the
 #: append is reshaping a large fraction of the tree — the legacy full
 #: rebuild is then both simpler and no slower
@@ -1005,15 +1046,15 @@ def _delta_refresh(
     n_part: int,
 ) -> dict | None:
     """Sub-linear tree + assignment refresh (VERDICT r4 #1). Returns None
-    when preconditions fail (old export without the counts checkpoint, a
-    cells table too large for the driver-side merge, deep-cell overflow
-    that would deepen the tree, or a near-rebuild-sized flipped set) — the
-    caller then falls back to the legacy full union build, which is always
-    correct.
+    when preconditions fail (old export without the counts checkpoint,
+    deep-cell overflow that would deepen the tree, or a near-rebuild-sized
+    flipped set) — the caller then falls back to the legacy full union
+    build, which is always correct.
 
     Cost model at 10^12 rows: batch groupBy O(batch), counts merge
     O(cells), descent O(tiles), covered scan O(files intersecting the
-    dirty region), reassignment O(batch + covered), stage-3 refresh =
+    dirty region), dirty set O(batch cells + flipped), reassignment
+    O(batch + covered), stage-3 refresh =
     hard-links for clean files + a rewrite of only the dirty-region files.
     No full-corpus shuffle anywhere. The one remaining O(corpus) term in
     the whole append is OUTSIDE this function: the append-only url guard
@@ -1022,12 +1063,15 @@ def _delta_refresh(
     rows the production seam for that guard is a membership sidecar
     (parquet column bloom filters on url, or an Iceberg equality-delete
     index); the guard's join shape stays the same. Up to _MAX_DRIVER_CELLS the
-    tiles/cells-granularity steps run in pandas on the driver, keeping the
-    fixed Spark-job count minimal (~8 jobs — at small batch sizes per-job
-    latency, not data, dominates); beyond it the SAME steps run as
+    tiles/cells-granularity steps (counts merge, descent, flipped diff,
+    dirty set) run in pandas/numpy on the driver: the only Spark jobs are
+    the batch's deep-cell counts, the covered-row scan when a tile
+    flipped, and the stage-3 delta write — at small batch sizes per-job
+    latency, not data, dominates. Beyond it the SAME steps run as
     cells-granularity Spark jobs (counts-merge groupBy, distributed
-    descent, full-outer flipped diff), so the delta path never falls back
-    merely because the cell table outgrew one machine.
+    descent, full-outer flipped diff, the content-tile join over the
+    batch's cells), so the delta path never falls back merely because
+    the cell table outgrew one machine.
     """
     import pandas as pd
     import time as _time
@@ -1085,9 +1129,10 @@ def _delta_refresh(
         # tests/test_incremental.py via a monkeypatched cell budget)
         base_df = spark.read.parquet(counts_dir)
         deep_level = int(base_df.select("deep_level").first()[0])
+        batch_counts = deep_counts(new_inst, bounds, deep_level)
         merged_df = (
             base_df.select("cell_x", "cell_y", "cnt")
-            .unionByName(deep_counts(new_inst, bounds, deep_level))
+            .unionByName(batch_counts)
             .groupBy("cell_x", "cell_y")
             .agg(F.sum("cnt").alias("cnt"))
             .localCheckpoint()
@@ -1175,10 +1220,10 @@ def _delta_refresh(
 
     if dirty_files:
         attach, covered = _covered_expr(flipped, bounds, deep_level)
-        suspect = attach(spark.read.parquet(*dirty_files))
+        suspect = attach(read_parquet(spark, stage3_dir, dirty_files))
         covered_old = (
             suspect.filter(covered).select(*inst_columns, "level", "x", "y")
-            .localCheckpoint()          # job 2 (reads dirty-region files)
+            .localCheckpoint()          # reads the dirty-region files
         )
         keep_rows = suspect.filter(~covered).select(
             *inst_columns, "level", "x", "y"
@@ -1187,8 +1232,6 @@ def _delta_refresh(
         covered_old = None
         keep_rows = None
     _dmark("covered_scan")
-
-    from ..operators import tiling as _tiling
 
     to_reassign = new_inst.select(*inst_columns)
     if covered_old is not None:
@@ -1200,27 +1243,31 @@ def _delta_refresh(
         to_reassign = to_reassign.unionByName(
             covered_old.select(*inst_columns).dropDuplicates(["url"])
         )
-    # job 3 — assignment of batch + covered rows only; the tiles_pdf fast
-    # path inside assign_to_content_tiles avoids its collect jobs
-    reassigned = _tiling.assign_to_content_tiles(
+    # lazy: the stage-3 delta write below is its only consumer
+    reassigned = tiling.assign_to_content_tiles(
         to_reassign, tree, opts
-    ).select(*inst_columns, "level", "x", "y").localCheckpoint()
+    ).select(*inst_columns, "level", "x", "y")
     _dmark("reassign")
 
-    old_side = (
-        covered_old.select("url", "level", "x", "y")
-        if covered_old is not None
-        else spark.createDataFrame(
-            [], "url string, level int, x bigint, y bigint"
+    # the dirty set in closed form, from the batch's deep-cell counts: an
+    # instance in deep cell c matches the content tiles over c, so a batch
+    # instance enters exactly (anc(c) ∩ new content) and a base
+    # instance's matches change by exactly (anc(c) ∩ flipped). Every
+    # flipped tile has members on the side where it is content (content
+    # requires cnt > 0), so its member set changed too. No url join: the
+    # driver twin is numpy over the collected counts, the cells twin runs
+    # the assignment's content-tile join over the batch's cells.
+    if n_base_cells <= _MAX_DRIVER_CELLS:
+        entered = _content_keys_over_cells(
+            batch_pdf, tree.tiles_pdf, deep_level
         )
-    )
-    # job 4 — the member diff, restricted to affected urls (unaffected
-    # rows are provably identical on both sides); collected once, reused
-    # for count, per-level boxes, and the broadcast side
-    dirty_keys = [
-        (int(r["level"]), int(r["x"]), int(r["y"]))
-        for r in dirty_tiles(old_side, reassigned).collect()
-    ]
+    else:
+        entered = {
+            (int(r["level"]), int(r["x"]), int(r["y"]))
+            for r in tiling.match_content_tiles(batch_counts, tree)
+            .select(*TILE_KEY).distinct().collect()
+        }
+    dirty_keys = sorted(entered.union(flipped))
     dirty = spark.createDataFrame(
         dirty_keys or [],  # createDataFrame needs the schema when empty
         schema="level int, x bigint, y bigint",
@@ -1228,10 +1275,8 @@ def _delta_refresh(
     _dmark("member_diff")
 
     # refreshed stage-3: hard-link every clean file, write only the
-    # rewritten dirty-region rows + the reassignment as delta files (job 5)
+    # rewritten dirty-region rows + the reassignment as delta files
     tmp3 = stage3_dir + "._incr"
-    import shutil
-
     shutil.rmtree(tmp3, ignore_errors=True)
     os.makedirs(tmp3)
     for p in clean_files:
@@ -1273,8 +1318,6 @@ def _stage0_additive_tmp(ckpt: CheckpointManager, new_inst: DataFrame) -> str:
     rename keeps them alive when the old directory is dropped) and write
     ONLY the batch as extra parquet files beside them. Falls back to
     copies on filesystems without hard links."""
-    import shutil
-
     src_dir = ckpt._stage_path("stage0_instances")
     tmp = src_dir + "._incr"
     shutil.rmtree(tmp, ignore_errors=True)
@@ -1324,8 +1367,6 @@ def _swap_in(ckpt: CheckpointManager, stage: str, tmp: str,
     from its own fingerprints (single-writer pipeline). The recorded
     fingerprint is the append CHAIN fingerprint, so post-append resumes
     keep input pinning (VERDICT r3 item 7)."""
-    import shutil
-
     final = ckpt._stage_path(stage)
     shutil.rmtree(final, ignore_errors=True)
     os.replace(tmp, final)
@@ -1334,8 +1375,6 @@ def _swap_in(ckpt: CheckpointManager, stage: str, tmp: str,
 
 
 def _drop_stage(ckpt: CheckpointManager, stage: str) -> None:
-    import shutil
-
     shutil.rmtree(ckpt._stage_path(stage), ignore_errors=True)
     try:
         os.remove(ckpt._done_marker(stage))

@@ -33,6 +33,13 @@ EXPORT_JOBS_PINNED = 18
 #: content sink re-encodes (its content-compare fast path leaves the files
 #: untouched) and the text-invariant fingerprints run again
 EXPORT_RERUN_JOBS_PINNED = 11
+#: Spark jobs of a small localized append on the driver path (3 new
+#: instances into one content tile of the 500-row export, no flipped
+#: tile): the guards, the stage-0 batch write, the batch's deep-cell
+#: counts, the stage-3 delta write, the dirty-tile encode into the content
+#: sink and the summary's batch count. The dirty set itself is derived on
+#: the driver from the batch's counts and launches no job
+APPEND_JOBS_PINNED = 18
 
 
 def _count_jobs(spark, fn):
@@ -114,6 +121,25 @@ class TestJobCounts:
             f"{EXPORT_RERUN_JOBS_PINNED}")
 
 
+    def test_small_append_is_pinned(self, spark, tmp_path):
+        from i3dm_export_spark.plans.incremental import incremental_append
+        from tests.test_incremental import copies_in_smallest_tile
+
+        out = str(tmp_path / "exp")
+        _small_export(spark, out)
+        base = pages_df(spark, 500, scenario="A")
+        batch = copies_in_smallest_tile(spark, base, out).localCheckpoint()
+        summary, n_jobs = _count_jobs(
+            spark, lambda: incremental_append(batch, out))
+        assert summary["delta_path"] is True
+        assert summary["n_new_instances"] == 3
+        assert summary["n_dirty_tiles"] == 1
+        assert summary["n_stage3_rewritten_files"] == 0
+        assert n_jobs <= APPEND_JOBS_PINNED, (
+            f"append ran {n_jobs} Spark jobs, pinned at "
+            f"{APPEND_JOBS_PINNED}")
+
+
 class TestLineageContract:
     def test_one_row_per_part_file(self, small_export):
         out, summary, _ = small_export
@@ -162,3 +188,34 @@ class TestFooterHelper:
     def test_non_parquet_format_raises(self, spark, tmp_path):
         with pytest.raises(ValueError, match="Iceberg"):
             CheckpointManager(spark, str(tmp_path), table_format="iceberg")
+
+
+class TestDriverTableSwap:
+    def test_crash_between_renames_keeps_old_table(self, tmp_path,
+                                                    monkeypatch):
+        """write_driver_table renames the live table aside before moving
+        the new one in: a crash between the two renames leaves the old
+        table whole under ``.old``, and the next write succeeds."""
+        import pyarrow as pa
+
+        from i3dm_export_spark.plans import checkpoint
+
+        path = str(tmp_path / "manifest")
+        checkpoint.write_driver_table(path, pa.table({"a": [1, 2]}))
+        real_replace = os.replace
+
+        def crash_on_move_in(src, dst):
+            if src.endswith(".tmpwrite"):
+                raise OSError("injected crash")
+            return real_replace(src, dst)
+
+        monkeypatch.setattr(os, "replace", crash_on_move_in)
+        with pytest.raises(OSError, match="injected crash"):
+            checkpoint.write_driver_table(path, pa.table({"a": [3]}))
+        monkeypatch.undo()
+        assert not os.path.exists(path)
+        assert pq.read_table(path + ".old").column("a").to_pylist() == [1, 2]
+
+        checkpoint.write_driver_table(path, pa.table({"a": [3]}))
+        assert pq.read_table(path).column("a").to_pylist() == [3]
+        assert sorted(os.listdir(tmp_path)) == ["manifest"]

@@ -663,3 +663,143 @@ class TestIncrementalEdgeCases:
             for fn in os.listdir(os.path.join(out, "content"))
         }
         assert pre == post
+
+
+def copies_in_smallest_tile(spark, base, out, k=3):
+    """A localized batch for the export of ``base`` under ``out``: ``k``
+    new urls at the position of one instance of the smallest content
+    tile, so the batch lands in that one tile and (k small) flips none."""
+    import pandas as pd
+    from pyspark.sql import functions as F
+
+    s3 = pd.read_parquet(
+        os.path.join(out, "_checkpoints", "stage3_assigned"),
+        columns=["url", "level", "x", "y"],
+    )
+    level, x, y = s3.groupby(["level", "x", "y"]).size().idxmin()
+    url = s3.loc[(s3.level == level) & (s3.x == x) & (s3.y == y), "url"].min()
+    return (
+        base.filter(F.col("url") == url)
+        .crossJoin(spark.range(k))
+        .withColumn("url", F.format_string("%s~%d", "url", "id"))
+        .drop("id")
+    )
+
+
+def _stage3_tile_urls(out):
+    """Per-tile url sets of the stage-3 checkpoint, read with pandas."""
+    import pandas as pd
+
+    s3 = pd.read_parquet(
+        os.path.join(out, "_checkpoints", "stage3_assigned"),
+        columns=["url", "level", "x", "y"],
+    )
+    return {
+        (int(lv), int(x), int(y)): frozenset(g)
+        for (lv, x, y), g in s3.groupby(["level", "x", "y"])["url"]
+    }
+
+
+_CLUSTER_OPTS = ExportOptions(max_features_per_tile=40, max_level=8,
+                              use_i3dm=True, use_clustering=True)
+
+
+@pytest.fixture(scope="module")
+def oracle_cases(spark, tmp_path_factory):
+    """name -> (base export dir, batch, from-scratch union export dir or
+    None when the batch is empty, opts) for the exact-dirty-set cases."""
+    root = tmp_path_factory.mktemp("dirty_oracle")
+    cases = {}
+
+    base = pages_df(spark, 900)
+    out = str(root / "localized_base")
+    run_export(base, OPTS, out, bounds=BB)
+    batch = copies_in_smallest_tile(spark, base, out).localCheckpoint()
+    full = str(root / "localized_full")
+    run_export(base.unionByName(batch), OPTS, full, bounds=BB)
+    cases["localized"] = (out, batch, full, OPTS)
+
+    for name, n_total, n_base, opts in (("split", 900, 750, OPTS),
+                                        ("clustered", 700, 600, _CLUSTER_OPTS)):
+        base, batch, union = _split(spark, n_total, n_base)
+        out = str(root / f"{name}_base")
+        run_export(base, opts, out, bounds=BB)
+        full = str(root / f"{name}_full")
+        run_export(union, opts, full, bounds=BB)
+        cases[name] = (out, batch, full, opts)
+
+    base = pages_df(spark, 400)
+    out = str(root / "empty_base")
+    run_export(base, OPTS, out, bounds=BB)
+    cases["empty"] = (out, base.filter("url > 'z'"), None, OPTS)
+    return cases
+
+
+class TestExactDirtySet:
+    """The append's dirty set is derived in closed form from the batch's
+    deep-cell counts and the flipped content tiles. It must equal the
+    tiles whose member url set changed in stage 3 (the oracle, read with
+    pandas before and after), on the driver twin and on the cells twin
+    (``_MAX_DRIVER_CELLS = 0``), with byte parity against the
+    from-scratch union export."""
+
+    @pytest.mark.parametrize("twin", ["driver", "cells"])
+    @pytest.mark.parametrize("case",
+                             ["localized", "split", "clustered", "empty"])
+    def test_dirty_tiles_equal_changed_member_sets(
+        self, spark, tmp_path, monkeypatch, oracle_cases, case, twin
+    ):
+        import shutil
+
+        import pandas as pd
+
+        from i3dm_export_spark.plans import incremental as incr
+
+        if twin == "cells":
+            monkeypatch.setattr(incr, "_MAX_DRIVER_CELLS", 0)
+        base_out, batch, full_out, opts = oracle_cases[case]
+        out = str(tmp_path / "incr")
+        shutil.copytree(base_out, out)
+        before = _stage3_tile_urls(out)
+        want_files = _tree_files(full_out or base_out)
+
+        s = incremental_append(batch, out, opts=opts)
+
+        after = _stage3_tile_urls(out)
+        changed = {
+            k for k in before.keys() | after.keys()
+            if before.get(k) != after.get(k)
+        }
+        assert s["delta_path"] is True
+        assert s["n_dirty_tiles"] == len(changed)
+        incr_manifest = pd.read_parquet(os.path.join(
+            out, "_checkpoints", "_sink_manifests", "_content_incr"))
+        assert set(incr_manifest["relpath"]) == {
+            f"{lv}_{x}_{y}.i3dm" for lv, x, y in changed if (lv, x, y) in after
+        }
+        assert _tree_files(out) == want_files
+
+        # each case's premise
+        def tiles_by_url(tile_urls):
+            out = {}
+            for k, urls in tile_urls.items():
+                for u in urls:
+                    out.setdefault(u, set()).add(k)
+            return out
+
+        url_before, url_after = tiles_by_url(before), tiles_by_url(after)
+        moved = {u for u, ks in url_before.items() if url_after[u] != ks}
+        if case == "localized":
+            assert len(changed) == 1
+            assert s["n_stage3_rewritten_files"] == 0  # nothing flipped
+            assert not moved
+        elif case == "empty":
+            assert changed == set()
+        else:
+            # a flip: base urls moved between tiles (covered rows rewritten)
+            assert s["n_stage3_rewritten_files"] > 0
+            assert moved
+        if case == "clustered":
+            # a moved url holding >= 2 stage-3 rows, whose rows a url-keyed
+            # join would pair crosswise
+            assert any(len(url_before[u]) >= 2 for u in moved)
