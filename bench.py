@@ -352,11 +352,9 @@ def main() -> None:
     extras["append_dirty_subtrees"] = app["n_dirty_subtrees"]
     extras["append_speedup_vs_full"] = round(best_pair_speedup, 2)
     extras["append_phase_walls"] = app.get("phase_walls", {})
-    extras["append_delta_path"] = app.get("delta_path", False)
-    extras["append_stage3_linked_files"] = app.get("n_stage3_linked_files", 0)
-    extras["append_stage3_rewritten_files"] = app.get(
-        "n_stage3_rewritten_files", -1
-    )
+    extras["append_counts_recounted"] = app["counts_recounted"]
+    extras["append_stage3_linked_files"] = app["n_stage3_linked_files"]
+    extras["append_stage3_rewritten_files"] = app["n_stage3_rewritten_files"]
     timings["serve_query_bbox"] = round(best_serve, 3)
     extras["serve_tiles"] = served["n_tiles"]
     extras["serve_instances"] = served["n_instances"]

@@ -106,6 +106,7 @@ def build_tile_tree(
     opts: ExportOptions,
     deep_level: int | None = None,
     n_estimate: int | None = None,
+    driver_threshold: int = 4_000_000,
 ) -> TileTree:
     """Stage 2: the full availability tree as a DataFrame.
 
@@ -124,7 +125,8 @@ def build_tile_tree(
     skew slack — and the build retries deeper if any non-final level still
     holds an over-full forced leaf, so skewed data never silently loses
     resolution while uniform data avoids paying for a needlessly deep
-    roll-up chain.
+    roll-up chain. ``driver_threshold`` is :func:`tree_from_counts`'s
+    cell budget for the driver descent.
     """
     spark = instances.sparkSession
 
@@ -135,14 +137,16 @@ def build_tile_tree(
         est = math.ceil(math.log(max(n / max(opts.max_features_per_tile, 1), 1), 4))
         deep_level = min(max(est + 3, 2), opts.max_level)
         while True:
-            tree = _build_tile_tree_at(instances, bounds, opts, deep_level)
+            tree = _build_tile_tree_at(instances, bounds, opts, deep_level,
+                                       driver_threshold)
             if deep_level >= opts.max_level:
                 return tree
             if not _has_overfull_leaf(tree, deep_level,
                                       opts.max_features_per_tile):
                 return tree
             deep_level = min(deep_level + 4, opts.max_level)
-    return _build_tile_tree_at(instances, bounds, opts, deep_level)
+    return _build_tile_tree_at(instances, bounds, opts, deep_level,
+                               driver_threshold)
 
 
 def _has_overfull_leaf(tree: TileTree, level: int, max_features: int) -> bool:
@@ -248,33 +252,21 @@ def _build_tile_tree_at(
 def tree_from_counts(
     deep_df: DataFrame, bounds: Bounds, opts: ExportOptions, deep_level: int,
     driver_threshold: int = 4_000_000,
-    n_cells_hint: int | None = None,
 ) -> TileTree:
     """T2 descent over an already-computed deep-cell count table
-    (``cell_x, cell_y, cnt`` at ``deep_level``). This is the whole stage-2
-    compute once counts exist — the incremental append path merges a
-    batch's counts into the persisted base counts and calls this, paying
-    O(cells) instead of an O(instances) groupBy. Same decision table, same
-    driver-fast-path/distributed twin split as the instance path (the
-    driver twin is parity-tested in tests/test_tiling.py).
-
-    The counts are collected once, capped at ``driver_threshold + 1``
-    rows. If at most the threshold came back, the driver descends over
-    exactly those rows; one row more means the table is too big for the
-    driver, and the distributed descent recomputes it.
-
-    ``n_cells_hint``: a cell count the caller already knows (e.g. the base
-    checkpoint's rows, which a merge can only grow). Above the threshold
-    it sends the build straight to the distributed descent, skipping the
-    capped collect; both descents give the same tiles, so the hint only
-    picks the cheaper path."""
-    spark = deep_df.sparkSession
-
-    if n_cells_hint is None or n_cells_hint <= driver_threshold:
-        pdf = deep_df.limit(driver_threshold + 1).toPandas()
-        if len(pdf) <= driver_threshold:
-            return tree_from_counts_pandas(spark, pdf, bounds, opts,
-                                           deep_level)
+    (``cell_x, cell_y, cnt`` at ``deep_level``): the whole stage-2 compute
+    once counts exist. The counts are collected once, capped at
+    ``driver_threshold + 1`` rows. If at most the threshold came back, the
+    driver descends over exactly those rows
+    (:func:`tree_from_counts_pandas`, parity-tested in
+    tests/test_tiling.py); one row more means the table is too big for the
+    driver, and the distributed descent recomputes it. The append, which
+    already knows which side its merged counts sit on, calls the two
+    descents directly."""
+    pdf = deep_df.limit(driver_threshold + 1).toPandas()
+    if len(pdf) <= driver_threshold:
+        return tree_from_counts_pandas(deep_df.sparkSession, pdf, bounds,
+                                       opts, deep_level)
     return _descend_distributed(deep_df, bounds, opts, deep_level)
 
 
@@ -283,8 +275,8 @@ def tree_from_counts_pandas(
 ) -> TileTree:
     """Driver-side twin of :func:`tree_from_counts` over a pandas counts
     frame (columns cell_x, cell_y, cnt) — zero Spark jobs beyond the
-    createDataFrames; used by the append's delta path where the merged
-    counts are already on the driver."""
+    createDataFrames; the append calls it when its merged counts are
+    already on the driver."""
     floor_level = min(opts.max_level, deep_level)
     tiles_pdf = descend_counts_pandas(
         pdf["cell_x"], pdf["cell_y"], pdf["cnt"], deep_level,

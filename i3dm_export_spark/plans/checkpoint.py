@@ -119,9 +119,9 @@ def part_files(path: str) -> list[PartFile]:
 #: largest tiles/manifest table handled on the driver (pandas/pyarrow/
 #: numpy), judged by its footer row count (:func:`part_files`). Tile and
 #: manifest rows are O(tiles), 3 orders below instances; above the budget
-#: the append's tile-granularity bookkeeping steps, the serving tile
-#: lookup and a resumed export's subtree assembly take their distributed
-#: Spark twins. Read at call time.
+#: the serving tile lookup and a resumed export's subtree assembly take
+#: their distributed Spark twins (the append follows its tree's side
+#: instead, see ``incremental._MAX_DRIVER_CELLS``). Read at call time.
 _MAX_DRIVER_TILES = 4_000_000
 
 

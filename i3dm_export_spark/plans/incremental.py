@@ -11,7 +11,7 @@ an append works from the base export's checkpoints and the batch:
    hard-linked and only the batch is written beside them;
 3. tree: the batch's deep-cell counts merge into the persisted base counts
    (``stage2_cellcounts``) and the tree is re-descended from the merged
-   counts — O(cells), never a corpus groupBy;
+   counts — O(cells), never a corpus groupBy (but see the recount below);
 4. assignment: ``flipped`` = the content tiles of the old tree Δ those of
    the new one. Only the batch and the base rows under a flipped tile are
    reassigned; stage 3 is refreshed by hard-linking every part file whose
@@ -31,13 +31,18 @@ an append works from the base export's checkpoints and the batch:
 8. the refreshed stage directories are renamed into place, so the NEXT
    append starts from the new state.
 
-Tile- and cell-granularity steps run in pandas/numpy on the driver within
-``_MAX_DRIVER_CELLS`` / ``checkpoint._MAX_DRIVER_TILES`` and as Spark
-jobs beyond them (byte-parity-tested twins). A base export without
-persisted cell counts, a count overflow that would deepen the tree, or
-more than ``_MAX_FLIPPED_FOR_DELTA`` flipped tiles take the legacy path:
-rebuild the tree and assignment over base ∪ batch and diff the two
-assignments with the url-keyed :func:`dirty_tiles` join.
+This is the append's one path. Its one fork is where the tree's counts
+come from: the merge above, or a RECOUNT (``tiling.build_tile_tree`` over
+the refreshed stage 0, at its adaptive deep level) when the base has no
+persisted counts (a pre-r5 export) or a merged cell overflows below
+``max_level``, i.e. the persisted resolution is too coarse for the union
+tree. The recount's counts replace the persisted ones. The tree decides
+driver vs Spark once: within ``_MAX_DRIVER_CELLS`` it holds its tile table
+on the driver (``tiles_pdf``) and every later tile- and cell-granularity
+step runs in pandas/numpy; beyond it each runs as Spark jobs
+(byte-parity-tested twins). An empty base, or more than
+``_MAX_FLIPPED_FOR_DELTA`` flipped tiles, raise
+:class:`IncrementalRebuildRequired`.
 
 Parity contract (tested): content/ + subtrees/ + tileset.json after
 ``run_export(A)`` + ``incremental_append(B)`` are byte-identical to
@@ -98,8 +103,10 @@ TILE_KEY = ["level", "x", "y"]
 
 
 class IncrementalRebuildRequired(RuntimeError):
-    """The append cannot be applied incrementally (out-of-bounds points or
-    changed export options); run a full ``run_export`` instead."""
+    """The append cannot be applied incrementally: out-of-bounds points,
+    changed export options, url upserts, an incomplete or empty base, or a
+    batch that flips more than ``_MAX_FLIPPED_FOR_DELTA`` content tiles.
+    Run a full ``run_export`` over base ∪ batch instead."""
 
 
 def _load_meta(ckpt_root: str) -> dict:
@@ -184,33 +191,6 @@ def _check_bounds(new_inst: DataFrame, bounds: Bounds, meta: dict) -> None:
                 "export would derive different root bounds / region "
                 "z-range — run a full re-export"
             )
-
-
-def dirty_tiles(old_assigned: DataFrame, new_assigned: DataFrame) -> DataFrame:
-    """Distinct (level, x, y) whose member set changed between the two
-    assignments: one full-outer join on the instance key. A tile is dirty
-    when any instance is new to it, left it, or is new to the corpus."""
-    o = old_assigned.select(
-        "url", *[F.col(c).alias(f"_o_{c}") for c in TILE_KEY]
-    )
-    n = new_assigned.select(
-        "url", *[F.col(c).alias(f"_n_{c}") for c in TILE_KEY]
-    )
-    j = o.join(n, "url", "full_outer")
-    moved = j.filter(
-        F.col("_o_level").isNull()
-        | F.col("_n_level").isNull()
-        | (F.col("_o_level") != F.col("_n_level"))
-        | (F.col("_o_x") != F.col("_n_x"))
-        | (F.col("_o_y") != F.col("_n_y"))
-    )
-    old_side = moved.filter(F.col("_o_level").isNotNull()).select(
-        *[F.col(f"_o_{c}").alias(c) for c in TILE_KEY]
-    )
-    new_side = moved.filter(F.col("_n_level").isNotNull()).select(
-        *[F.col(f"_n_{c}").alias(c) for c in TILE_KEY]
-    )
-    return old_side.unionByName(new_side).distinct()
 
 
 def _changed_tile_keys(old_tiles: DataFrame, new_tiles: DataFrame) -> DataFrame:
@@ -347,11 +327,10 @@ def incremental_append(
     _mark("guards.fingerprint")
 
     # appends are append-only on url, the stable instance key: a batch url
-    # that ALREADY exists is an upsert, which neither the delta path's
-    # counts merge (counts only grow, so the closed-form dirty set would
-    # miss the tile the old copy leaves) nor the legacy url-keyed diff
-    # (both copies in one tile look "unchanged") can express. Broadcast
-    # the (small) batch's url set against the corpus and degrade loudly.
+    # that ALREADY exists is an upsert, which the counts merge cannot
+    # express (counts only grow, so the closed-form dirty set would miss
+    # the tile the old copy leaves). Broadcast the (small) batch's url set
+    # against the corpus and degrade loudly.
     n_overlap = old_assigned.select("url").join(
         F.broadcast(new_inst.select("url").distinct()), "url", "left_semi"
     ).count()
@@ -381,55 +360,25 @@ def incremental_append(
         tmp0 = _stage_to_tmp(ckpt, "stage0_instances", union_inst)
     _mark("stage0_materialize")
 
-    # tree + assignment refresh and the dirty set. DELTA path (VERDICT r4
-    # #1): merge the batch's deep-cell counts into the persisted base
-    # counts (O(cells)), re-descend, reassign ONLY the batch plus rows
-    # covered by flipped content tiles, refresh stage-3 by hard-linking
-    # every file the dirty region provably does not touch (parquet footer
-    # box stats), and derive the dirty tiles from the batch's counts.
-    # Falls back to the legacy full union rebuild when preconditions fail
-    # (pre-r5 base export, counts overflow that would deepen the tree,
-    # near-rebuild-sized flipped set).
+    # tree + assignment refresh and the dirty set (_delta_refresh): merge
+    # or recount the deep-cell counts, re-descend, reassign ONLY the batch
+    # plus rows covered by flipped content tiles, refresh stage-3 by
+    # hard-linking every file the dirty region provably does not touch
+    # (parquet footer box stats), and derive the dirty tiles from the
+    # batch's counts. The tree's driver tile table (or None) picks the
+    # side of every tile-granularity step below.
     n_part = max(int(spark.conf.get("spark.sql.shuffle.partitions")), 1)
-    delta = _delta_refresh(spark, ckpt, new_inst, list(old_inst.columns),
-                           bounds, opts, n_part)
-    tmp_counts = None
-    if delta is not None:
-        tree = delta["tree"]
-        tiles = delta["tiles"]
-        tmp2, tmp3 = delta["tmp2"], delta["tmp3"]
-        tmp_counts = delta["tmp_counts"]
-        new_assigned = read_parquet(spark, tmp3)
-        for k, v in delta.get("walls", {}).items():
-            walls[f"delta.{k}"] = v
-        _mark("tree_and_assignment")
-        dirty = delta["dirty"]
-        n_dirty = len(delta["dirty_keys"])  # already collected — no job
-        _mark("dirty_diff")
-    else:
-        union = read_parquet(spark, tmp0)
-        tree = tiling.build_tile_tree(union, bounds, opts)
-        new_assigned = tiling.assign_to_content_tiles(union, tree, opts)
-        tmp3 = _stage_to_tmp(
-            ckpt, "stage3_assigned",
-            new_assigned.repartitionByRange(n_part, *TILE_KEY),
-        )
-        new_assigned = read_parquet(spark, tmp3)
-        tmp2 = _stage_to_tmp(ckpt, "stage2_tiles", tree.tiles)
-        tiles = read_parquet(spark, tmp2)
-        if tree.deep_counts_df is not None:
-            # upgrade the base in passing: the NEXT append goes delta
-            tmp_counts = _stage_to_tmp(
-                ckpt, "stage2_cellcounts",
-                tree.deep_counts_df.withColumn(
-                    "deep_level", F.lit(tree.deep_level).cast("int")
-                ),
-            )
-        _mark("tree_and_assignment")
-
-        dirty = dirty_tiles(old_assigned, new_assigned).localCheckpoint()
-        n_dirty = dirty.count()
-        _mark("dirty_diff")
+    delta = _delta_refresh(spark, ckpt, new_inst, tmp0,
+                           list(old_inst.columns), bounds, opts, n_part)
+    tiles_pdf = delta["tree"].tiles_pdf
+    tiles = delta["tiles"]
+    new_assigned = read_parquet(spark, delta["tmp3"])
+    for k, v in delta["walls"].items():
+        walls[f"delta.{k}"] = v
+    _mark("tree_and_assignment")
+    dirty = delta["dirty"]
+    n_dirty = len(delta["dirty_keys"])  # already collected — no job
+    _mark("dirty_diff")
 
     content_dir = os.path.join(output_dir, "content")
     subtrees_dir = os.path.join(output_dir, "subtrees")
@@ -437,37 +386,24 @@ def incremental_append(
     manifest_dir = os.path.join(ckpt_root, "_sink_manifests", "content")
 
     # 6: re-encode only dirty tiles' members. A per-level bounding-box
-    # prefilter (tiny collect over the dirty KEYS, never instances) is
+    # prefilter over the (collected) dirty KEYS, never instances, is
     # pushed into the parquet scan so footer stats skip the hard-linked
     # clean files entirely — the member fetch reads O(dirty region), the
     # exact analogue of the reference's GIST-indexed per-tile queries
     # (src/InstancesRepository.cs:32-38).
+    by_level: dict[int, list[tuple[int, int]]] = {}
+    for (lv, dx, dy) in delta["dirty_keys"]:
+        by_level.setdefault(lv, []).append((dx, dy))
     members_src = new_assigned
-    if delta is not None:
-        by_level: dict[int, list[tuple[int, int]]] = {}
-        for (lv, dx, dy) in delta["dirty_keys"]:
-            by_level.setdefault(lv, []).append((dx, dy))
-        boxes = [
-            (lv, min(x for x, _ in ks), max(x for x, _ in ks),
-             min(y for _, y in ks), max(y for _, y in ks))
-            for lv, ks in by_level.items()
-        ]
-    else:
-        boxes = [
-            (int(b["level"]), int(b["x0"]), int(b["x1"]),
-             int(b["y0"]), int(b["y1"]))
-            for b in dirty.groupBy("level").agg(
-                F.min("x").alias("x0"), F.max("x").alias("x1"),
-                F.min("y").alias("y0"), F.max("y").alias("y1"),
-            ).collect()
-        ]
-    if boxes:
+    if by_level:
         pred = F.lit(False)
-        for lv, x0, x1, y0, y1 in boxes:
+        for lv, ks in by_level.items():
             pred = pred | (
                 (F.col("level") == lv)
-                & F.col("x").between(x0, x1)
-                & F.col("y").between(y0, y1)
+                & F.col("x").between(min(x for x, _ in ks),
+                                     max(x for x, _ in ks))
+                & F.col("y").between(min(y for _, y in ks),
+                                     max(y for _, y in ks))
             )
         members_src = new_assigned.filter(pred)
     members = members_src.join(F.broadcast(dirty), TILE_KEY, "left_semi")
@@ -497,30 +433,29 @@ def incremental_append(
     # from the TREE (every content tile has members by the decision table:
     # content_available requires cnt > 0), so this is O(tiles), never a
     # corpus-wide distinct.
+    def _rm(rel: str) -> None:
+        try:
+            os.remove(os.path.join(content_dir, rel))
+        except FileNotFoundError:
+            pass
+
     def _unlink_rows(batches):
         import pandas as _pd
 
         for pdf in batches:
             for rel in pdf["relpath"]:
-                try:
-                    os.remove(os.path.join(content_dir, rel))
-                except FileNotFoundError:
-                    pass
+                _rm(rel)
             yield _pd.DataFrame({"n": [len(pdf)]})
 
-    tiles_pdf = getattr(tree, "tiles_pdf", None)
-    # footer walks only when the driver path is even possible — on the
-    # big-corpus path (tiles_pdf None) they'd touch every part file of
-    # shared storage for nothing
-    n_old_manifest = (
-        _parquet_rows(manifest_dir) if tiles_pdf is not None else None
-    )
-    if (tiles_pdf is not None
-            and n_old_manifest <= checkpoint._MAX_DRIVER_TILES):
-        # driver fast path: the manifest is O(tiles) — merge it in pandas
-        # and write with pyarrow instead of paying ~4 Spark jobs' latency
-        # for a few hundred rows (distributed twin below for bigger trees;
-        # parity-tested via a monkeypatched checkpoint._MAX_DRIVER_TILES)
+    if tiles_pdf is not None:
+        # driver plan: the manifest is O(tiles) — merge it in pandas and
+        # write it with pyarrow instead of paying ~4 Spark jobs' latency
+        # for a few hundred rows, and unlink with a thread pool. The
+        # removed files are old content tiles that are content no longer,
+        # a subset of the flipped tiles, so _MAX_FLIPPED_FOR_DELTA bounds
+        # them too.
+        from concurrent.futures import ThreadPoolExecutor
+
         import pandas as pd
 
         cc = tiles_pdf.loc[tiles_pdf["content_available"]]
@@ -533,37 +468,10 @@ def incremental_append(
         removed = old_m.loc[
             ~old_m["relpath"].isin(cur_rel), "relpath"
         ].tolist()
-        if len(removed) <= _MAX_DRIVER_UNLINKS:
-            from concurrent.futures import ThreadPoolExecutor
-
-            def _rm(rel: str) -> None:
-                try:
-                    os.remove(os.path.join(content_dir, rel))
-                except FileNotFoundError:
-                    pass
-
-            if removed:
-                with ThreadPoolExecutor(max_workers=32) as pool:
-                    list(pool.map(_rm, removed))
-            n_removed = len(removed)
-        else:
-            # a near-rebuild-sized removal set: unlink on the executors
-            # over shared storage (VERDICT r4 #8). The list reaches them
-            # as a one-file parquet table written with pyarrow, not
-            # through py4j as Python rows
-            import pyarrow as pa
-
-            rem_dir = os.path.join(ckpt_root, "_sink_manifests",
-                                   "_content_removed")
-            checkpoint.write_driver_table(rem_dir, pa.table(
-                {"relpath": pa.array(removed, pa.string())}
-            ))
-            n_removed = int(
-                read_parquet(spark, rem_dir).repartition(n_part)
-                .mapInPandas(_unlink_rows, "n long")
-                .agg(F.sum("n")).first()[0] or 0
-            )
-            shutil.rmtree(rem_dir, ignore_errors=True)
+        if removed:
+            with ThreadPoolExecutor(max_workers=32) as pool:
+                list(pool.map(_rm, removed))
+        n_removed = len(removed)
         _mark("reencode.removals")
         rewritten = set(incr_m["relpath"])
         keep = old_m[
@@ -618,17 +526,14 @@ def incremental_append(
     # the union-tree bytes, so assembly cost tracks the append's dirty
     # REGION, not the corpus tree. Appends never remove content, so no
     # subtree file is ever deleted; the manifest is merged like content.
-    n_old_tiles = (
-        _parquet_rows(ckpt._stage_path("stage2_tiles"))
-        if tiles_pdf is not None
-        else checkpoint._MAX_DRIVER_TILES + 1
-    )
-    if tiles_pdf is not None and n_old_tiles <= checkpoint._MAX_DRIVER_TILES:
-        # driver fast path: the bit-relevant diff and the root projection
-        # are O(tiles) — numpy on the driver instead of a full-outer join
-        # + distinct + localCheckpoint job chain over a few hundred rows
+    if tiles_pdf is not None:
+        # driver plan: the bit-relevant diff and the root projection are
+        # O(tiles) — numpy on the driver instead of a full-outer join +
+        # distinct + localCheckpoint job chain over a few hundred rows
         # (same decision table as _changed_tile_keys /
-        # affected_subtree_roots; distributed twin below, parity-tested)
+        # affected_subtree_roots; Spark twin below, parity-tested). The
+        # old tile table is no bigger than the new one: counts only grow,
+        # so every old tile key survives.
         import pandas as pd
 
         old_p = pd.read_parquet(
@@ -669,7 +574,6 @@ def incremental_append(
             (cy[bm] >> s).tolist(),
         ))
         n_affected_roots = len(roots)
-        roots_set = roots
         affected_roots = None
     else:
         old_tiles = ckpt.read("stage2_tiles")
@@ -678,14 +582,11 @@ def incremental_append(
             changed_keys, subtree_levels
         ).localCheckpoint()
         n_affected_roots = affected_roots.count()
-        roots_set = None
     _mark("subtrees.changed_roots")
     sub_manifest_dir = os.path.join(ckpt_root, "_sink_manifests", "subtrees")
     sub_incr_dir = os.path.join(ckpt_root, "_sink_manifests", "_subtrees_incr")
-    # roots_set non-None implies tiles_pdf non-None (set only by the
-    # driver changed-roots branch above)
-    if roots_set is not None and sinks.subtree_tiles_on_driver(
-        tiles_pdf, subtree_levels, roots=roots_set
+    if tiles_pdf is not None and sinks.subtree_tiles_on_driver(
+        tiles_pdf, subtree_levels, roots=roots
     ) is not None:
         # driver fast path: a localized append touches a handful of
         # subtrees — assemble their (bounded) bitstreams from the driver
@@ -695,12 +596,12 @@ def incremental_append(
         # via a monkeypatched sinks._MAX_DRIVER_SUBTREE_WRITES)
         sinks.write_subtrees_driver(
             tiles_pdf, subtree_levels, subtrees_dir, sub_incr_dir,
-            roots=roots_set,
+            roots=roots,
         )
     else:
         if affected_roots is None:
             affected_roots = spark.createDataFrame(
-                sorted((int(a), int(b), int(c)) for a, b, c in roots_set),
+                sorted((int(a), int(b), int(c)) for a, b, c in roots),
                 schema="root_level int, root_x bigint, root_y bigint",
             )
         subs_df = subtree.build_subtrees_spark(
@@ -715,13 +616,9 @@ def incremental_append(
         sinks.write_binary_files(sub_files, subtrees_dir,
                                  manifest_path=sub_incr_dir)
     _mark("subtrees.assemble_write")
-    if (
-        tiles_pdf is not None
-        and _parquet_rows(sub_manifest_dir) <= checkpoint._MAX_DRIVER_TILES
-    ):
-        # driver fast path (O(subtree files) — strictly below O(tiles);
-        # tiles_pdf gates the footer walk itself off the big-corpus path):
-        # pandas merge + pyarrow write; distributed twin beyond
+    if tiles_pdf is not None:
+        # driver plan (O(subtree files) — strictly below O(tiles)): pandas
+        # merge + pyarrow write; Spark twin beyond
         import pandas as pd
 
         old_s = pd.read_parquet(sub_manifest_dir)
@@ -787,11 +684,10 @@ def incremental_append(
     # old member sets.
     tmps = {
         "stage0_instances": tmp0,
-        "stage3_assigned": tmp3,
-        "stage2_tiles": tmp2,
+        "stage3_assigned": delta["tmp3"],
+        "stage2_tiles": delta["tmp2"],
+        "stage2_cellcounts": delta["tmp_counts"],
     }
-    if tmp_counts is not None:
-        tmps["stage2_cellcounts"] = tmp_counts
     for stage, tmp in tmps.items():
         _swap_in(ckpt, stage, tmp, input_fingerprint=append_fp)
     for stale in ("stage4_payloads", "stage4_reduced", "stage5_subtrees",
@@ -812,13 +708,9 @@ def incremental_append(
         "n_subtree_files": n_subtree_files,
         "n_dirty_subtrees": n_affected_roots,
         "available_levels": avail_levels,
-        "delta_path": delta is not None,
-        "n_stage3_linked_files": (
-            delta["n_linked_files"] if delta is not None else 0
-        ),
-        "n_stage3_rewritten_files": (
-            delta["n_rewritten_source_files"] if delta is not None else -1
-        ),
+        "counts_recounted": delta["recounted"],
+        "n_stage3_linked_files": delta["n_linked_files"],
+        "n_stage3_rewritten_files": delta["n_rewritten_source_files"],
     }
 
 
@@ -988,16 +880,15 @@ def _content_keys_over_cells(
     return out
 
 
-#: delta-path safety valves: a flipped set larger than this means the
-#: append is reshaping a large fraction of the tree — the legacy full
-#: rebuild is then both simpler and no slower
+#: a flipped set larger than this means the append is reshaping a large
+#: fraction of the tree: it raises IncrementalRebuildRequired, since a
+#: full run_export is then both simpler and no slower. It also bounds the
+#: driver plan's unlink set (removed files are flipped content tiles)
 _MAX_FLIPPED_FOR_DELTA = 200_000
-#: largest cell table merged in pandas on the driver (above it the delta
-#: path switches to the distributed cells-granularity twin)
+#: largest cell table the append's tree descends on the driver; beyond it
+#: the tree, and with it every later tile/cell-granularity step of the
+#: append, takes its distributed Spark twin
 _MAX_DRIVER_CELLS = 4_000_000
-#: largest removed-file set unlinked from the driver (thread pool);
-#: beyond it deletions run distributed on the executors (VERDICT r4 #8)
-_MAX_DRIVER_UNLINKS = 100_000
 
 _ARROW_TYPES = {
     "int32": "int32", "int64": "int64", "bool": "bool_", "string": "string",
@@ -1041,37 +932,44 @@ _MANIFEST_DDL = [
 
 
 def _delta_refresh(
-    spark, ckpt: CheckpointManager, new_inst: DataFrame,
+    spark, ckpt: CheckpointManager, new_inst: DataFrame, tmp0: str,
     inst_columns: list[str], bounds: Bounds, opts: ExportOptions,
     n_part: int,
-) -> dict | None:
-    """Sub-linear tree + assignment refresh (VERDICT r4 #1). Returns None
-    when preconditions fail (old export without the counts checkpoint,
-    deep-cell overflow that would deepen the tree, or a near-rebuild-sized
-    flipped set) — the caller then falls back to the legacy full union
-    build, which is always correct.
+) -> dict:
+    """Sub-linear tree + assignment refresh (VERDICT r4 #1), the append's
+    one path. Its one fork is where the tree's counts come from:
 
-    Cost model at 10^12 rows: batch groupBy O(batch), counts merge
+    * merge: the batch's deep-cell counts (at the persisted deep level)
+      merged into the persisted base counts;
+    * recount: ``tiling.build_tile_tree`` over the refreshed stage 0
+      (``tmp0``) at its adaptive deep level, when the base has no counts
+      checkpoint (a pre-r5 export) or a merged cell overflows below
+      ``max_level``. Its counts replace the persisted ones.
+
+    Everything after the tree runs once for both. The tree decides the
+    plan: within ``_MAX_DRIVER_CELLS`` it holds ``tiles_pdf`` on the
+    driver and the tiles/cells-granularity steps (counts merge, descent,
+    flipped diff, dirty set, stage-2 writes) run in pandas/numpy — the
+    only Spark jobs are the batch's deep-cell counts, the covered-row scan
+    when a tile flipped, and the stage-3 delta write; at small batch sizes
+    per-job latency, not data, dominates. Beyond it the SAME steps run as
+    cells-granularity Spark jobs (counts-merge groupBy, distributed
+    descent, full-outer flipped diff, the content-tile join over the
+    batch's cells). An empty base, or more than ``_MAX_FLIPPED_FOR_DELTA``
+    flipped tiles, raise :class:`IncrementalRebuildRequired`.
+
+    Cost model at 10^12 rows (merge): batch groupBy O(batch), counts merge
     O(cells), descent O(tiles), covered scan O(files intersecting the
     dirty region), dirty set O(batch cells + flipped), reassignment
     O(batch + covered), stage-3 refresh =
     hard-links for clean files + a rewrite of only the dirty-region files.
-    No full-corpus shuffle anywhere. The one remaining O(corpus) term in
-    the whole append is OUTSIDE this function: the append-only url guard
-    scans the corpus's url column once (column-pruned, shuffle-free
-    broadcast semi-join — a bandwidth pass, not a recompute). At 10^12
-    rows the production seam for that guard is a membership sidecar
-    (parquet column bloom filters on url, or an Iceberg equality-delete
-    index); the guard's join shape stays the same. Up to _MAX_DRIVER_CELLS the
-    tiles/cells-granularity steps (counts merge, descent, flipped diff,
-    dirty set) run in pandas/numpy on the driver: the only Spark jobs are
-    the batch's deep-cell counts, the covered-row scan when a tile
-    flipped, and the stage-3 delta write — at small batch sizes per-job
-    latency, not data, dominates. Beyond it the SAME steps run as
-    cells-granularity Spark jobs (counts-merge groupBy, distributed
-    descent, full-outer flipped diff, the content-tile join over the
-    batch's cells), so the delta path never falls back merely because
-    the cell table outgrew one machine.
+    No full-corpus shuffle anywhere; the recount is one, over stage 0. The
+    one remaining O(corpus) term of a merge append is OUTSIDE this
+    function: the append-only url guard scans the corpus's url column once
+    (column-pruned, shuffle-free broadcast semi-join — a bandwidth pass,
+    not a recompute). At 10^12 rows the production seam for that guard is
+    a membership sidecar (parquet column bloom filters on url, or an
+    Iceberg equality-delete index); the guard's join shape stays the same.
     """
     import pandas as pd
     import time as _time
@@ -1085,98 +983,70 @@ def _delta_refresh(
         dwalls[sub] = round(dwalls.get(sub, 0.0) + (now - _dt0), 3)
         _dt0 = now
 
-    if not ckpt.is_complete("stage2_cellcounts"):
-        return None
+    tree = counts_pdf = batch_pdf = batch_counts = None
     counts_dir = ckpt._stage_path("stage2_cellcounts")
-    n_base_cells = _parquet_rows(counts_dir)
-    if n_base_cells == 0:
-        return None
-
-    from ..operators.tiling import (
-        deep_counts,
-        tree_from_counts,
-        tree_from_counts_pandas,
-    )
-
-    if n_base_cells <= _MAX_DRIVER_CELLS:
-        deep_level_row = pd.read_parquet(
-            counts_dir, columns=["deep_level"]
-        ).head(1)
-        deep_level = int(deep_level_row.iloc[0, 0])
-        # ONE Spark job: the batch's deep-cell counts (the caller already
-        # applied opts.query to new_inst). Base counts come straight off
-        # the checkpoint parquet via pyarrow — no job.
-        batch_pdf = deep_counts(new_inst, bounds, deep_level).toPandas()
-        base_pdf = pd.read_parquet(
-            counts_dir, columns=["cell_x", "cell_y", "cnt"]
-        )
-        merged = (
-            pd.concat([base_pdf, batch_pdf], ignore_index=True)
-            .groupby(["cell_x", "cell_y"], as_index=False)["cnt"].sum()
-        )
-        if (
-            deep_level < opts.max_level
-            and (merged["cnt"] > opts.max_features_per_tile).any()
-        ):
-            # a union rebuild would retry at a deeper level than the
-            # persisted counts can express — fall back
-            return None
-        tree = tree_from_counts_pandas(spark, merged, bounds, opts,
-                                       deep_level)
-    else:
-        # distributed twin: identical decision table, cells-granularity
-        # Spark jobs instead of driver pandas (parity-tested in
-        # tests/test_incremental.py via a monkeypatched cell budget)
-        base_df = spark.read.parquet(counts_dir)
-        deep_level = int(base_df.select("deep_level").first()[0])
-        batch_counts = deep_counts(new_inst, bounds, deep_level)
-        merged_df = (
-            base_df.select("cell_x", "cell_y", "cnt")
-            .unionByName(batch_counts)
-            .groupBy("cell_x", "cell_y")
-            .agg(F.sum("cnt").alias("cnt"))
-            .localCheckpoint()
-        )
-        if (
-            deep_level < opts.max_level
-            and merged_df.filter(
+    if ckpt.is_complete("stage2_cellcounts"):
+        n_base_cells = _parquet_rows(counts_dir)
+        if n_base_cells == 0:
+            raise IncrementalRebuildRequired(
+                f"the base export under {ckpt.root} holds no instances "
+                "(empty cell counts): run a full run_export over base ∪ "
+                "batch"
+            )
+        if n_base_cells <= _MAX_DRIVER_CELLS:
+            # ONE Spark job: the batch's deep-cell counts (the caller
+            # already applied opts.query to new_inst). Base counts come
+            # straight off the checkpoint parquet via pyarrow — no job.
+            base_pdf = pd.read_parquet(counts_dir)
+            deep_level = int(base_pdf["deep_level"].iloc[0])
+            batch_pdf = tiling.deep_counts(
+                new_inst, bounds, deep_level).toPandas()
+            merged = (
+                pd.concat([base_pdf[["cell_x", "cell_y", "cnt"]], batch_pdf],
+                          ignore_index=True)
+                .groupby(["cell_x", "cell_y"], as_index=False)["cnt"].sum()
+            )
+            if (deep_level >= opts.max_level
+                    or not (merged["cnt"] > opts.max_features_per_tile).any()):
+                tree = tiling.tree_from_counts_pandas(
+                    spark, merged, bounds, opts, deep_level)
+                counts_pdf = merged.assign(deep_level=deep_level)
+        else:
+            base_df = read_parquet(spark, counts_dir)
+            deep_level = int(base_df.select("deep_level").first()[0])
+            batch_counts = tiling.deep_counts(new_inst, bounds, deep_level)
+            merged_df = (
+                base_df.select("cell_x", "cell_y", "cnt")
+                .unionByName(batch_counts)
+                .groupBy("cell_x", "cell_y")
+                .agg(F.sum("cnt").alias("cnt"))
+                .localCheckpoint()
+            )
+            if deep_level >= opts.max_level or not merged_df.filter(
                 F.col("cnt") > opts.max_features_per_tile
-            ).limit(1).count()
-        ):
-            return None
-        tree = tree_from_counts(merged_df, bounds, opts, deep_level,
-                                driver_threshold=_MAX_DRIVER_CELLS,
-                                n_cells_hint=n_base_cells)
-
-    _dmark("counts_and_tree")
-    # stage-2 refresh writes: tiles and cell counts are O(tiles)/O(cells)
-    # frames already sitting in driver memory on the pandas path — write
-    # them with pyarrow directly (zero Spark jobs) instead of paying two
-    # full job round-trips for a few hundred rows; the distributed branch
-    # keeps the Spark writes
-    if tree.tiles_pdf is not None:
-        tmp2 = ckpt._stage_path("stage2_tiles") + "._incr"
-        _write_parquet_driver(tmp2, tree.tiles_pdf, _TILES_DDL)
-    else:
-        tmp2 = _stage_to_tmp(ckpt, "stage2_tiles", tree.tiles)
-    if n_base_cells <= _MAX_DRIVER_CELLS:
-        counts_pdf = merged.copy()
-        counts_pdf["deep_level"] = deep_level
-        tmp_counts = ckpt._stage_path("stage2_cellcounts") + "._incr"
-        _write_parquet_driver(tmp_counts, counts_pdf, _COUNTS_DDL)
-    else:
-        tmp_counts = _stage_to_tmp(
-            ckpt, "stage2_cellcounts",
-            tree.deep_counts_df.withColumn(
-                "deep_level", F.lit(deep_level).cast("int")
-            ),
+            ).limit(1).count():
+                tree = tiling._descend_distributed(merged_df, bounds, opts,
+                                                   deep_level)
+    recounted = tree is None
+    if recounted:
+        # no persisted counts, or a merged cell over the feature cap below
+        # max_level: the union tree needs a finer resolution than the
+        # counts hold. Recount at build_tile_tree's own adaptive level,
+        # with run_export's row estimate (stage 0's footer count)
+        tree = tiling.build_tile_tree(
+            read_parquet(spark, tmp0), bounds, opts,
+            n_estimate=_parquet_rows(tmp0),
+            driver_threshold=_MAX_DRIVER_CELLS,
         )
-    tiles = read_parquet(spark, tmp2)
-    _dmark("write_stage2")
+        batch_counts = tiling.deep_counts(new_inst, bounds, tree.deep_level)
+        if tree.tiles_pdf is not None:
+            batch_pdf = batch_counts.toPandas()
+    deep_level = tree.deep_level
+    _dmark("counts_and_tree")
 
     # flipped content keys (tiles granularity): pandas symmetric diff on
-    # the driver path, full-outer anti-match + bounded collect on the
-    # distributed path (the cap proves the collect is small)
+    # the driver plan, full-outer anti-match + bounded collect on the
+    # Spark plan (the cap proves the collect is small)
     if tree.tiles_pdf is not None:
         old_cpdf = pd.read_parquet(
             ckpt._stage_path("stage2_tiles"),
@@ -1192,19 +1062,44 @@ def _delta_refresh(
             (int(l), int(x), int(y))
             for (l, x, y) in old_keys.symmetric_difference(new_keys)
         ]
-        if len(flipped) > _MAX_FLIPPED_FOR_DELTA:
-            return None
     else:
-        flipped_rows = _flipped_content_keys(
-            ckpt.read("stage2_tiles"), tree.tiles
-        ).limit(_MAX_FLIPPED_FOR_DELTA + 1).collect()
-        if len(flipped_rows) > _MAX_FLIPPED_FOR_DELTA:
-            return None
         flipped = [
-            (int(r["level"]), int(r["x"]), int(r["y"])) for r in flipped_rows
+            (int(r["level"]), int(r["x"]), int(r["y"]))
+            for r in _flipped_content_keys(
+                ckpt.read("stage2_tiles"), tree.tiles
+            ).limit(_MAX_FLIPPED_FOR_DELTA + 1).collect()
         ]
-
+    if len(flipped) > _MAX_FLIPPED_FOR_DELTA:
+        raise IncrementalRebuildRequired(
+            f"the batch flips more than {_MAX_FLIPPED_FOR_DELTA} content "
+            "tiles: it reshapes a large part of the tree — run a full "
+            "run_export over base ∪ batch"
+        )
     _dmark("flipped_keys")
+
+    # stage-2 refresh writes: tiles and cell counts are O(tiles)/O(cells)
+    # frames already sitting in driver memory on the driver plan — write
+    # them with pyarrow directly (zero Spark jobs) instead of paying two
+    # full job round-trips for a few hundred rows; the Spark plan (and a
+    # recount's counts) keep the Spark writes
+    if tree.tiles_pdf is not None:
+        tmp2 = ckpt._stage_path("stage2_tiles") + "._incr"
+        _write_parquet_driver(tmp2, tree.tiles_pdf, _TILES_DDL)
+    else:
+        tmp2 = _stage_to_tmp(ckpt, "stage2_tiles", tree.tiles)
+    if counts_pdf is not None:
+        tmp_counts = ckpt._stage_path("stage2_cellcounts") + "._incr"
+        _write_parquet_driver(tmp_counts, counts_pdf, _COUNTS_DDL)
+    else:
+        tmp_counts = _stage_to_tmp(
+            ckpt, "stage2_cellcounts",
+            tree.deep_counts_df.withColumn(
+                "deep_level", F.lit(deep_level).cast("int")
+            ),
+        )
+    tiles = read_parquet(spark, tmp2)
+    _dmark("write_stage2")
+
     stage3_dir = ckpt._stage_path("stage3_assigned")
     stats = _stage3_file_stats(stage3_dir)
     _dmark("file_stats")
@@ -1255,9 +1150,9 @@ def _delta_refresh(
     # instance's matches change by exactly (anc(c) ∩ flipped). Every
     # flipped tile has members on the side where it is content (content
     # requires cnt > 0), so its member set changed too. No url join: the
-    # driver twin is numpy over the collected counts, the cells twin runs
+    # driver twin is numpy over the collected counts, the Spark twin runs
     # the assignment's content-tile join over the batch's cells.
-    if n_base_cells <= _MAX_DRIVER_CELLS:
+    if tree.tiles_pdf is not None:
         entered = _content_keys_over_cells(
             batch_pdf, tree.tiles_pdf, deep_level
         )
@@ -1305,7 +1200,7 @@ def _delta_refresh(
     return {
         "tree": tree, "tiles": tiles, "tmp2": tmp2, "tmp3": tmp3,
         "tmp_counts": tmp_counts, "dirty": dirty,
-        "dirty_keys": dirty_keys,
+        "dirty_keys": dirty_keys, "recounted": recounted,
         "n_linked_files": len(clean_files),
         "n_rewritten_source_files": len(dirty_files),
         "walls": dwalls,

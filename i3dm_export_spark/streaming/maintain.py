@@ -27,9 +27,13 @@ Two independent defenses make the sink replay-idempotent:
    overlap with CHANGED content (a genuine upsert), falls through and
    fails loudly via the append's own guard (ADVICE r4 #1).
 
-Batches whose data would change tile-key semantics (out-of-bounds points,
-url upserts) raise ``IncrementalRebuildRequired`` and FAIL the streaming
-query — loud degradation, same contract as the batch append.
+Batches the append cannot apply in place raise ``IncrementalRebuildRequired``
+and FAIL the streaming query — loud degradation, same contract as the
+batch append: data that would change tile-key semantics (out-of-bounds
+points, url upserts), an empty base, or a batch that flips more than
+``incremental._MAX_FLIPPED_FOR_DELTA`` content tiles. A batch that
+over-fills a persisted deep cell is not one of them: the append recounts
+the tree's cell counts from stage 0 and stays byte-identical.
 """
 
 from __future__ import annotations

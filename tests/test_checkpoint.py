@@ -131,7 +131,7 @@ class TestJobCounts:
         batch = copies_in_smallest_tile(spark, base, out).localCheckpoint()
         summary, n_jobs = _count_jobs(
             spark, lambda: incremental_append(batch, out))
-        assert summary["delta_path"] is True
+        assert summary["counts_recounted"] is False
         assert summary["n_new_instances"] == 3
         assert summary["n_dirty_tiles"] == 1
         assert summary["n_stage3_rewritten_files"] == 0

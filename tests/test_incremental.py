@@ -399,43 +399,6 @@ class TestCliAppend:
         assert files(out_full, "subtrees") == files(out_incr, "subtrees")
 
 
-class TestDirtyTilesProperty:
-    from hypothesis import given, settings, strategies as st
-
-    _assign = st.dictionaries(
-        st.integers(min_value=0, max_value=30).map(lambda i: f"u{i}"),
-        st.tuples(st.integers(2, 3), st.integers(0, 3), st.integers(0, 3)),
-        max_size=20,
-    )
-
-    @given(old=_assign, new=_assign)
-    @settings(max_examples=8, deadline=None)
-    def test_dirty_set_is_exactly_changed_keys(self, spark, old, new):
-        """dirty_tiles == the tiles (old and new side) of every url whose
-        assignment changed, appeared, or disappeared — no more, no less."""
-        from i3dm_export_spark.plans.incremental import dirty_tiles
-
-        def df(d):
-            rows = [(u, l, x, y) for u, (l, x, y) in sorted(d.items())]
-            return spark.createDataFrame(
-                rows or [("_", 0, 0, 0)],
-                "url string, level int, x int, y int",
-            ).filter("url != '_'")
-
-        got = {
-            (r["level"], r["x"], r["y"])
-            for r in dirty_tiles(df(old), df(new)).collect()
-        }
-        want = set()
-        for u in set(old) | set(new):
-            if old.get(u) != new.get(u):
-                if u in old:
-                    want.add(old[u])
-                if u in new:
-                    want.add(new[u])
-        assert got == want
-
-
 class TestIncrementalClusteredParity:
     def test_append_matches_full_rebuild_with_clustering(self, spark, tmp_path):
         """The LOD-reduce path (seeded per-tile k-means + salting) is a
@@ -491,7 +454,7 @@ class TestDeltaPath:
         }
         summary = incremental_append(batch, out_incr)
 
-        assert summary["delta_path"] is True
+        assert summary["counts_recounted"] is False
         assert _tree_files(out_full) == _tree_files(out_incr)
         # stage-3 economics: clean base files survive as hard links of the
         # SAME inodes (zero corpus bytes rewritten for the clean region)
@@ -506,8 +469,8 @@ class TestDeltaPath:
 
     def test_pre_r5_base_falls_back_then_upgrades(self, spark, tmp_path):
         """A base export lacking the stage2_cellcounts checkpoint (pre-r5
-        layout) must fall back to the legacy full rebuild — same bytes —
-        and write the counts in passing so the NEXT append goes delta."""
+        layout) must recount the tree's cell counts from stage 0 — same
+        bytes — and persist them, so the NEXT append merges."""
         import shutil
 
         full = pages_df(spark, 1000)
@@ -533,50 +496,30 @@ class TestDeltaPath:
         )
 
         s1 = incremental_append(b, out_incr)
-        assert s1["delta_path"] is False
+        assert s1["counts_recounted"] is True
         s2 = incremental_append(c, out_incr)
-        assert s2["delta_path"] is True
+        assert s2["counts_recounted"] is False
         assert _tree_files(out_full) == _tree_files(out_incr)
 
     def test_distributed_twin_byte_parity(self, spark, tmp_path, monkeypatch):
-        """Beyond _MAX_DRIVER_CELLS the delta path switches to the
-        cells-granularity Spark twin (distributed counts merge, distributed
-        descent, full-outer flipped diff). Forcing the budget to 0 routes
-        every step through it — bytes must still match a full rebuild."""
+        """Beyond _MAX_DRIVER_CELLS the tree descends in Spark and every
+        later tile-granularity step takes its Spark twin (distributed
+        counts merge and descent, full-outer flipped diff, Spark manifest
+        merges and changed-root diff, executor-side unlinks). Forcing the
+        budget to 0 routes the whole append through them — bytes must
+        still match a full rebuild, and the split's removed tile files
+        must be gone."""
         from i3dm_export_spark.plans import incremental as incr
 
         monkeypatch.setattr(incr, "_MAX_DRIVER_CELLS", 0)
-        base, batch, full = _split(spark, 900, 750)
+        base, batch, full = _split(spark, 900, 700)
         out_full = str(tmp_path / "full")
         run_export(full, OPTS, out_full, bounds=BB)
         out_incr = str(tmp_path / "incr")
         run_export(base, OPTS, out_incr, bounds=BB)
         s = incremental_append(batch, out_incr)
-        assert s["delta_path"] is True
-        assert _tree_files(out_full) == _tree_files(out_incr)
-
-    def test_tile_granularity_spark_twins_byte_parity(
-        self, spark, tmp_path, monkeypatch
-    ):
-        """The r5 driver fast paths gated on _MAX_DRIVER_TILES (pandas
-        manifest merges, numpy changed-roots) and _MAX_DRIVER_UNLINKS
-        (thread-pool unlinks) are latency optimizations with distributed
-        Spark twins behind the budgets; forcing both to 0 routes those
-        steps through the twins — bytes must still match a full rebuild.
-        (The pyarrow stage-2 writes key on the CELL budget and are
-        exercised by test_distributed_twin_byte_parity instead.)"""
-        from i3dm_export_spark.plans import checkpoint
-        from i3dm_export_spark.plans import incremental as incr
-
-        monkeypatch.setattr(checkpoint, "_MAX_DRIVER_TILES", 0)
-        monkeypatch.setattr(incr, "_MAX_DRIVER_UNLINKS", 0)
-        base, batch, full = _split(spark, 900, 750)
-        out_full = str(tmp_path / "full")
-        run_export(full, OPTS, out_full, bounds=BB)
-        out_incr = str(tmp_path / "incr")
-        run_export(base, OPTS, out_incr, bounds=BB)
-        s = incremental_append(batch, out_incr)
-        assert s["delta_path"] is True
+        assert s["counts_recounted"] is False
+        assert s["n_removed_files"] > 0
         assert _tree_files(out_full) == _tree_files(out_incr)
 
     def test_driver_roots_spark_assembly_byte_parity(
@@ -595,28 +538,8 @@ class TestDeltaPath:
         out_incr = str(tmp_path / "incr")
         run_export(base, OPTS, out_incr, bounds=BB)
         s = incremental_append(batch, out_incr)
-        assert s["delta_path"] is True
+        assert s["counts_recounted"] is False
         assert _tree_files(out_full) == _tree_files(out_incr)
-
-    def test_driver_unlink_threshold_routes_distributed(
-        self, spark, tmp_path, monkeypatch
-    ):
-        """With the manifest merge on the driver path but the unlink
-        budget at 0, removals must still happen (via the executor-side
-        mapInPandas) — no stale content file survives a split flip."""
-        from i3dm_export_spark.plans import incremental as incr
-
-        monkeypatch.setattr(incr, "_MAX_DRIVER_UNLINKS", 0)
-        base, batch, full = _split(spark, 900, 700)
-        out_full = str(tmp_path / "full")
-        run_export(full, OPTS, out_full, bounds=BB)
-        out_incr = str(tmp_path / "incr")
-        run_export(base, OPTS, out_incr, bounds=BB)
-        s = incremental_append(batch, out_incr)
-        # parity implies every removed-tile file is gone and every
-        # current file present, whichever unlink path ran
-        assert _tree_files(out_full) == _tree_files(out_incr)
-        assert s["n_removed_files"] >= 0
 
     def test_delta_engages_under_clustering(self, spark, tmp_path):
         """Clustering assigns an instance to its leaf AND every over-full
@@ -630,7 +553,7 @@ class TestDeltaPath:
         out_incr = str(tmp_path / "incr")
         run_export(base, opts, out_incr, bounds=BB)
         s = incremental_append(batch, out_incr)
-        assert s["delta_path"] is True
+        assert s["counts_recounted"] is False
         assert _tree_files(out_full) == _tree_files(out_incr)
 
 
@@ -770,7 +693,7 @@ class TestExactDirtySet:
             k for k in before.keys() | after.keys()
             if before.get(k) != after.get(k)
         }
-        assert s["delta_path"] is True
+        assert s["counts_recounted"] is False
         assert s["n_dirty_tiles"] == len(changed)
         incr_manifest = pd.read_parquet(os.path.join(
             out, "_checkpoints", "_sink_manifests", "_content_incr"))
@@ -803,3 +726,98 @@ class TestExactDirtySet:
             # a moved url holding >= 2 stage-3 rows, whose rows a url-keyed
             # join would pair crosswise
             assert any(len(url_before[u]) >= 2 for u in moved)
+
+
+@pytest.fixture(scope="module")
+def overflow_case(spark, oracle_cases, tmp_path_factory):
+    """The localized base, a batch of ``max_features_per_tile + 1`` copies
+    of one point (its deep cell overflows at the persisted resolution),
+    a 3-copy batch that follows it, and the from-scratch union exports
+    after each."""
+    root = tmp_path_factory.mktemp("overflow")
+    base_out, _batch, _full, opts = oracle_cases["localized"]
+    base = pages_df(spark, 900)
+    over = copies_in_smallest_tile(
+        spark, base, base_out, k=opts.max_features_per_tile + 1
+    ).localCheckpoint()
+    full1 = str(root / "full1")
+    run_export(base.unionByName(over), opts, full1, bounds=BB)
+    # the union export's stage 3 has the appended export's tile url sets
+    follow = copies_in_smallest_tile(
+        spark, base.unionByName(over), full1
+    ).localCheckpoint()
+    full2 = str(root / "full2")
+    run_export(base.unionByName(over).unionByName(follow), opts, full2,
+               bounds=BB)
+    return base_out, over, full1, follow, full2, opts
+
+
+def _digests(out):
+    """sha256 per file of the export's outputs, sink manifests and stage
+    done markers."""
+    import glob
+    import hashlib
+
+    ckpt = os.path.join(out, "_checkpoints")
+    paths = [os.path.join(out, "tileset.json")]
+    for d in (os.path.join(out, "content"), os.path.join(out, "subtrees"),
+              os.path.join(ckpt, "_sink_manifests", "content"),
+              os.path.join(ckpt, "_sink_manifests", "subtrees")):
+        paths += [os.path.join(d, f) for f in os.listdir(d)]
+    paths += glob.glob(os.path.join(ckpt, "_lineage", "*.done.json"))
+    out_map = {}
+    for p in sorted(paths):
+        with open(p, "rb") as f:
+            out_map[os.path.relpath(p, out)] = hashlib.sha256(
+                f.read()).hexdigest()
+    return out_map
+
+
+class TestCountsRecount:
+    """The append's one fork: the tree's counts are merged from the
+    persisted ones, or recounted from stage 0 when a merged cell
+    overflows below ``max_level``. Either way the bytes equal the
+    from-scratch union export, on the driver plan and on the Spark plan
+    (``_MAX_DRIVER_CELLS = 0``)."""
+
+    @pytest.mark.parametrize("twin", ["driver", "spark"])
+    def test_overflow_recounts_then_merges(
+        self, spark, tmp_path, monkeypatch, overflow_case, twin
+    ):
+        import shutil
+
+        from i3dm_export_spark.plans import incremental as incr
+
+        if twin == "spark":
+            monkeypatch.setattr(incr, "_MAX_DRIVER_CELLS", 0)
+        base_out, over, full1, follow, full2, opts = overflow_case
+        out = str(tmp_path / "incr")
+        shutil.copytree(base_out, out)
+
+        s1 = incremental_append(over, out, opts=opts)
+        assert s1["counts_recounted"] is True
+        assert _tree_files(out) == _tree_files(full1)
+
+        s2 = incremental_append(follow, out, opts=opts)
+        assert s2["counts_recounted"] is False
+        assert _tree_files(out) == _tree_files(full2)
+
+    def test_flip_cap_raises_and_leaves_export_untouched(
+        self, spark, tmp_path, monkeypatch, oracle_cases
+    ):
+        """A batch that flips more content tiles than the cap raises
+        before anything visible changes: outputs, sink manifests and
+        stage done markers keep their bytes (leftover ``._incr`` scratch
+        directories are cleared by the next append or vacuum)."""
+        import shutil
+
+        from i3dm_export_spark.plans import incremental as incr
+
+        monkeypatch.setattr(incr, "_MAX_FLIPPED_FOR_DELTA", 0)
+        base_out, batch, _full, opts = oracle_cases["split"]
+        out = str(tmp_path / "incr")
+        shutil.copytree(base_out, out)
+        before = _digests(out)
+        with pytest.raises(IncrementalRebuildRequired, match="run_export"):
+            incremental_append(batch, out, opts=opts)
+        assert _digests(out) == before

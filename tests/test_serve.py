@@ -57,7 +57,7 @@ def appended_dir(spark, tmp_path_factory):
     out = str(tmp_path_factory.mktemp("serve_append") / "out")
     base, batch, _full = _split(spark, 900, 750)
     run_export(base, OPTS, out, bounds=BB)
-    assert incremental_append(batch, out)["delta_path"] is True
+    assert incremental_append(batch, out)["counts_recounted"] is False
     return out
 
 
