@@ -1,7 +1,11 @@
 #!/usr/bin/env python
 """Benchmark harness: headline queries at $SPARK_GRAFT_SF_DIR on
-local[$SPARK_GRAFT_CPUS]. Prints ONE JSON line:
+local[$SPARK_GRAFT_CPUS]. Prints the full record as ONE JSON line:
   {"metric": ..., "value": N, "unit": "sec", "queries": {...}, "sf": ...}
+(also written to BENCH_LAST.json), then a compact headline JSON line
+(value, throughputs, append speed-up, serve results, leg count) as the
+LAST stdout line, so a reader that keeps only the tail of stdout still
+gets a line that parses.
 
 Headline = the flagship tiling export (tree + assignment + payload encode
 over a deterministically synthesized 600k-instance pages table — the
@@ -418,6 +422,15 @@ def main() -> None:
     with open(out_path, "w") as f:
         f.write(line + "\n")
     print(line)
+    headline = {k: payload[k] for k in ("metric", "value", "unit", "sf", "cpus")}
+    headline["legs"] = len(timings)
+    headline["serve_query_bbox"] = timings["serve_query_bbox"]
+    headline.update(
+        (k, v) for k, v in extras.items()
+        if k.endswith("instances_per_sec") or k.startswith("serve_")
+        or k == "append_speedup_vs_full"
+    )
+    print(json.dumps(headline))
     spark.stop()
 
 

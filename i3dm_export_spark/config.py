@@ -55,12 +55,6 @@ class ExportOptions:
     # treated as skewed and salted before per-tile work
     skew_salt_threshold: float = 8.0
     skew_salt_buckets: int = 16
-    # materialize a stage-1 checkpoint of ECEF + S2 cell keys (the S4 parity
-    # surface). Default False: the per-tile encoder and the k-means reducer
-    # compute ECEF in-group from the same float64 kernel (byte-identical
-    # output, parity-tested), which skips one full-width materialization
-    # and one full pass of the input — the 100 TB default.
-    precompute_ecef: bool = False
 
     def __post_init__(self):
         if self.use_gpu_instancing and self.use_external_model:

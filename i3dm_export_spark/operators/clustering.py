@@ -109,15 +109,13 @@ def reduce_tile(pdf: pd.DataFrame, k: int, seed: int = 42,
     min(k, n) rows.
 
     The clustering metric matches the reference's fetch CRS: ECEF meters
-    normally (computed in-group from lon/lat when stage 1 didn't
-    precompute it — identical float64 kernel, so members are identical),
-    raw source coordinates under keep_projection (``use_ecef=False``)."""
+    normally (computed in-group from lon/lat with the encoder's float64
+    kernel), raw source coordinates under keep_projection
+    (``use_ecef=False``)."""
     if len(pdf) <= k:
         return pdf
     pdf = pdf.sort_values(order_col, kind="mergesort").reset_index(drop=True)
-    if "x_ecef" in pdf:
-        pts = pdf[["x_ecef", "y_ecef", "z_ecef"]].to_numpy()
-    elif use_ecef:
+    if use_ecef:
         from ..functions.geodesy import wgs84_to_ecef
 
         pts = wgs84_to_ecef(

@@ -20,7 +20,7 @@ embedding-cosine near-dup variant lives in operators/similarity.py.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 
 def normalize_text(col="text"):
@@ -232,110 +232,24 @@ def simhash(docs: DataFrame, id_col="doc_id", text_col="text", bits: int = 16) -
     return summed.select(F.col(id_col), sim.alias("simhash"))
 
 
-def dedup_rank_representatives(
-    docs: DataFrame, key_col: str, id_col="doc_id"
-) -> DataFrame:
-    """Generic 'keep first per group' (window + row_number) used by all
-    dedup flavors to elect survivors deterministically."""
-    w = Window.partitionBy(key_col).orderBy(F.col(id_col).asc())
-    return (
-        docs.withColumn("_rn", F.row_number().over(w))
-        .filter("_rn = 1")
-        .drop("_rn")
-    )
-
-
 def connected_components(
     pairs: DataFrame, a_col: str = "a", b_col: str = "b",
-    max_iters: int = 50, algorithm: str = "star", stats: dict | None = None,
+    max_iters: int = 50, stats: dict | None = None,
 ) -> DataFrame:
     """Canonical-document election: connected components over the near-dup
     pair graph, labeling every node with the MIN id reachable from it
     (dedup keeps the min-id doc per component, drops the rest).
 
-    ``algorithm='star'`` (default) runs alternating large-star/small-star
-    contractions (Kiveris et al., "Connected Components in MapReduce and
-    Beyond", SoCC 2014): O(log n)-ish rounds even on adversarial
-    long-chain graphs, each round one edge-list shuffle — the 10^12-scale
-    path. ``algorithm='label_prop'`` keeps the round-per-hop min-label
-    propagation (O(diameter) rounds; fine for shallow near-dup families).
-    Both raise a warning if ``max_iters`` elapses without convergence
-    instead of silently returning split components (ADVICE r1).
+    Alternating large-star/small-star contractions (Kiveris et al.,
+    "Connected Components in MapReduce and Beyond", SoCC 2014):
+    O(log n)-ish rounds even on adversarial long-chain graphs, each round
+    one edge-list shuffle — the 10^12-scale path. Raises a warning if
+    ``max_iters`` elapses without convergence instead of silently
+    returning split components (ADVICE r1).
 
     ``stats``, when given, receives {'rounds': n_rounds_run}.
 
     Returns (node, comp) for every node appearing in ``pairs``.
-    """
-    if algorithm == "star":
-        return _cc_star(pairs, a_col, b_col, max_iters, stats)
-    return _cc_label_prop(pairs, a_col, b_col, max_iters, stats)
-
-
-def _cc_label_prop(
-    pairs: DataFrame, a_col: str, b_col: str, max_iters: int,
-    stats: dict | None = None,
-) -> DataFrame:
-    from pyspark.sql import functions as F
-
-    edges = pairs.select(
-        F.col(a_col).alias("src"), F.col(b_col).alias("dst")
-    )
-    edges = edges.unionByName(
-        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).distinct().localCheckpoint()
-
-    labels = (
-        edges.select(F.col("src").alias("node"))
-        .distinct()
-        .withColumn("comp", F.col("node"))
-        .localCheckpoint()
-    )
-    rounds = 0
-    for _ in range(max_iters):
-        nbr_min = (
-            edges.join(labels, edges["src"] == labels["node"])
-            .groupBy("dst")
-            .agg(F.min("comp").alias("nbr_comp"))
-        )
-        new_labels = (
-            labels.join(nbr_min, labels["node"] == nbr_min["dst"], "left")
-            .select(
-                "node",
-                F.least(
-                    F.col("comp"), F.coalesce("nbr_comp", "comp")
-                ).alias("comp"),
-            )
-            .localCheckpoint()
-        )
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "node")
-            .filter(F.col("n.comp") != F.col("o.comp"))
-            .limit(1)
-            .count()
-        )
-        labels = new_labels
-        rounds += 1
-        if changed == 0:
-            break
-    else:
-        import warnings
-
-        warnings.warn(
-            f"connected_components(label_prop) did not converge in "
-            f"{max_iters} rounds; labels may split components",
-            RuntimeWarning,
-        )
-    if stats is not None:
-        stats["rounds"] = rounds
-    return labels
-
-
-def _cc_star(
-    pairs: DataFrame, a_col: str, b_col: str, max_iters: int,
-    stats: dict | None = None,
-) -> DataFrame:
-    """Alternating large-star/small-star contraction (SoCC'14).
 
     Edges are kept canonical as (u, v) with u > v, deduped, self-loops
     dropped. Per round:
@@ -348,8 +262,6 @@ def _cc_star(
     count never grows. ``localCheckpoint`` per round keeps the plan O(1).
     """
     import warnings
-
-    from pyspark.sql import functions as F
 
     raw = pairs.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))
     nodes = (
@@ -432,7 +344,7 @@ def _cc_star(
 
     if not converged:
         warnings.warn(
-            f"connected_components(star) did not converge in {max_iters} "
+            f"connected_components did not converge in {max_iters} "
             f"rounds; labels may split components",
             RuntimeWarning,
         )

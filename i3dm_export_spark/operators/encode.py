@@ -290,118 +290,17 @@ def encode_tile_pdf(
     return write_cmpt(tiles)
 
 
-def encode_tiles_batched(assigned, opts, order_col: str = "url",
-                         num_partitions: int | None = None):
-    """Alternative stage-4 encode: ``repartitionByRange`` +
-    ``sortWithinPartitions`` + ONE ``mapInPandas`` pass grouping inside each
-    Arrow batch (carry-over for tiles spanning batches).
-
-    Measured SLOWER than the grouped variant on local[32] (the range
-    partitioner adds a sampling pass and a per-partition sort, and Spark's
-    per-group applyInPandas overhead turned out negligible at ~3000-row
-    groups: 26.9s grouped vs 36.3s batched for 24M rows / 14,744 tiles).
-    Kept because the trade flips when groups are tiny (<100 rows) or group
-    count is huge — byte-identical output, parity-tested.
-
-    A third variant — ``applyInArrow`` + per-group ``Table.to_pandas
-    (self_destruct=True)`` — was also measured and rejected: interleaved
-    A/B on the same 24M-row input gave 16.7-20.9s (grouped pandas) vs
-    26.4-33.8s (arrow); Spark's own grouped-pandas serde builds the frame
-    cheaper than pyarrow's to_pandas per group, and the encode kernel
-    needs pandas/numpy anyway. (An arrow-native no-op IS ~30% cheaper
-    than a pandas no-op, but only if the kernel never converts.)"""
-    from pyspark.sql import functions as F, types as T
-
-    from ..packaging import ensure_shipped
-
-    ensure_shipped(assigned.sparkSession)
-    keep = opts.keep_projection
-    use_i3dm = opts.use_i3dm
-    snu = opts.use_scale_non_uniform
-    ext = opts.use_external_model
-    gpu = opts.use_gpu_instancing
-
-    schema = T.StructType(
-        [
-            T.StructField("level", T.IntegerType()),
-            T.StructField("x", T.LongType()),
-            T.StructField("y", T.LongType()),
-            T.StructField("n_instances", T.LongType()),
-            T.StructField("payload", T.BinaryType()),
-        ]
-    )
-
-    def _encode_group(pdf: pd.DataFrame) -> bytes:
-        pdf = _ensure_ecef_cols(pdf, keep)
-        if gpu:
-            from .gpu_encode import encode_gpu_tile_pdf
-
-            return encode_gpu_tile_pdf(
-                pdf, keep_projection=keep, use_scale_non_uniform=snu,
-                order_col=order_col,
-            )
-        return encode_tile_pdf(
-            pdf, keep_projection=keep, use_i3dm=use_i3dm,
-            use_scale_non_uniform=snu, use_external_model=ext,
-            order_col=order_col,
-        )
-
-    def _encode_batches(batches):
-        carry = None
-
-        def emit(groups_pdf: pd.DataFrame) -> pd.DataFrame:
-            rows = {"level": [], "x": [], "y": [], "n_instances": [], "payload": []}
-            for (lvl, x, y), grp in groups_pdf.groupby(
-                ["level", "x", "y"], sort=False
-            ):
-                rows["level"].append(int(lvl))
-                rows["x"].append(int(x))
-                rows["y"].append(int(y))
-                rows["n_instances"].append(len(grp))
-                rows["payload"].append(_encode_group(grp.reset_index(drop=True)))
-            return pd.DataFrame(rows)
-
-        for pdf in batches:
-            if carry is not None and len(carry):
-                pdf = pd.concat([carry, pdf], ignore_index=True)
-            if not len(pdf):
-                carry = None
-                continue
-            last = pdf.iloc[-1]
-            last_mask = (
-                (pdf["level"] == last["level"])
-                & (pdf["x"] == last["x"])
-                & (pdf["y"] == last["y"])
-            )
-            carry = pdf[last_mask]
-            body = pdf[~last_mask]
-            if len(body):
-                yield emit(body)
-        if carry is not None and len(carry):
-            yield emit(carry)
-
-    spark = assigned.sparkSession
-    parts = num_partitions or max(
-        int(spark.conf.get("spark.sql.shuffle.partitions")), 1
-    )
-    arranged = assigned.repartitionByRange(
-        parts, "level", "x", "y"
-    ).sortWithinPartitions("level", "x", "y", order_col)
-    return arranged.mapInPandas(_encode_batches, schema=schema)
-
-
 def _encode_input_cols(opts, order_col: str, available: set[str]) -> list[str]:
     """Exactly the columns the per-tile encoder consumes — everything else
     is pruned BEFORE the tile-key shuffle (the one big exchange in the
     pipeline; ~25% byte reduction on the stage-0 schema).
 
-    When the input has no precomputed ECEF columns (x_ecef absent) the
-    encoder runs in FUSED mode: lon/lat/z ride the shuffle (same bytes)
-    and the ECEF transform happens inside the per-tile group function —
-    one Arrow round-trip over the data instead of two (a separate
-    stage1_encode pandas-UDF pass costs a full serialize+deserialize of
-    every row). The checkpointed pipeline still precomputes ECEF once
-    (stage1 is its own resumable artifact); direct export paths fuse."""
+    The export's input has no ECEF columns, so the encoder runs FUSED:
+    lon/lat/z ride the shuffle and the ECEF transform happens inside the
+    per-tile group function — one Arrow round-trip over the data instead
+    of two (a separate stage1_encode pandas-UDF pass costs a full
+    serialize+deserialize of every row). Precomputed x/y/z_ecef columns,
+    when present, are consumed as-is (same bytes, parity-tested)."""
     cols = ["level", "x", "y", order_col, "scale", "yaw", "pitch", "roll",
             "model", "tags"]
     if opts.keep_projection or "x_ecef" not in available:
@@ -482,9 +381,14 @@ def prepare_models(
 def encode_tiles(assigned, opts, order_col: str = "url",
                  model_glbs: dict | None = None):
     """Stage-4 encode over all content tiles: grouped applyInPandas -> one
-    row per tile with the payload bytes column (K1 sink-ready). The default
-    physical shape — column-pruned input, one hash shuffle on the tile key,
-    no sort (see encode_tiles_batched for the measured alternative).
+    row per tile with the payload bytes column (K1 sink-ready). The physical
+    shape — column-pruned input, one hash shuffle on the tile key, no sort —
+    beat two measured alternatives on local[32], 24M rows / 14,744 tiles:
+    range partition + sort + one batch-grouping ``mapInPandas`` pass took
+    36.3 s vs 26.9 s (sampling pass + per-partition sort; per-group
+    overhead is negligible at ~3000-row groups), and ``applyInArrow`` +
+    per-group ``to_pandas`` took 26.4-33.8 s vs 16.7-20.9 s interleaved
+    (Spark's grouped-pandas serde builds the frame cheaper).
 
     ``model_glbs`` ({model name: glb bytes}, e.g. from
     :func:`prepare_models`) is captured by closure — it rides the

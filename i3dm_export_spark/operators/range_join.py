@@ -62,16 +62,3 @@ def extent_overlap_join_cellkey(
     joined = lc.join(rc, (F.col("a._cx") == F.col("b._cx")) & (F.col("a._cy") == F.col("b._cy")))
     exact = joined.filter(_overlap_pred("a", "b"))
     return exact.select(f"a.{left_id}", f"b.{right_id}").distinct()
-
-
-def tile_extents(tiles: DataFrame, bounds: Bounds) -> DataFrame:
-    """(level, x, y) tile keys -> extent columns (closed-form cell bounds)."""
-    n = F.shiftleft(F.lit(1), F.col("level")).cast("double")
-    w = F.lit(bounds.xmax - bounds.xmin) / n
-    h = F.lit(bounds.ymax - bounds.ymin) / n
-    return (
-        tiles.withColumn("min_lon", F.lit(bounds.xmin) + F.col("x") * w)
-        .withColumn("max_lon", F.lit(bounds.xmin) + (F.col("x") + 1) * w)
-        .withColumn("min_lat", F.lit(bounds.ymin) + F.col("y") * h)
-        .withColumn("max_lat", F.lit(bounds.ymin) + (F.col("y") + 1) * h)
-    )

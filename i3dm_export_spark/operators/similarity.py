@@ -35,12 +35,6 @@ def _norm(a):
     )
 
 
-def with_cosine(df: DataFrame, a: str, b: str, out: str = "cosine") -> DataFrame:
-    return df.withColumn(
-        out, _dot(F.col(a), F.col(b)) / (_norm(F.col(a)) * _norm(F.col(b)))
-    )
-
-
 def cosine_topk_bruteforce(
     corpus: DataFrame,
     queries: DataFrame,

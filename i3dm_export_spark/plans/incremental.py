@@ -265,7 +265,11 @@ def incremental_append(
     bounds = Bounds(*meta["bounds"])
     subtree_levels = meta.get("subtree_levels", 2)
     if opts is None:
-        rec = dict(meta["opts"])
+        # a recorded key that is no longer an option (an export written
+        # before it was removed) carries no meaning; _check_opts skips
+        # such keys too
+        known = {f.name for f in dataclasses.fields(ExportOptions)}
+        rec = {k: v for k, v in meta["opts"].items() if k in known}
         rec["boundingvolume_heights"] = tuple(rec["boundingvolume_heights"])
         opts = ExportOptions(**rec)
     else:
@@ -681,7 +685,9 @@ def incremental_append(
     # 8: swap the already-materialized stage tmps into place and mark
     # done (directory renames — the data was written exactly once, up
     # front). Payload/reduce checkpoints are dropped — they describe the
-    # old member sets.
+    # old member sets. An export no longer writes stage4_payloads,
+    # stage5_subtrees or stage1_encoded, but older exports on disk may
+    # still hold them.
     tmps = {
         "stage0_instances": tmp0,
         "stage3_assigned": delta["tmp3"],

@@ -2,7 +2,6 @@
 
     pages (url, warc_ts, html, text, lang, geocode cols)
       -> stage0_instances   project + geocode + text-invariant fingerprint
-      -> stage1_encoded     ECEF + S2 cell keys (vectorized pandas UDF)
       -> stage2 tile tree   (operators/tiling.build_tile_tree — one shuffle)
       -> stage3_assigned    leaf assignment (+ salt-aware repartition)
       -> stage4_reduced     k-means LOD reduce (clustering only)
@@ -16,7 +15,11 @@
                             shuffle piped into the executor writer
       -> tileset.json
 
-Stages 0-4 checkpoint through plans/checkpoint.CheckpointManager with
+ECEF is computed inside the per-tile encoder and the k-means reducer from
+one float64 kernel, so no stage materializes it: that saves a full-width
+write and one full pass over the input.
+
+Stages 0 and 2-4 checkpoint through plans/checkpoint.CheckpointManager with
 per-part-file lineage read from parquet footers; a killed export rerun with
 the same output dir skips completed stages (resume test in
 tests/test_pipeline.py). Payloads are not checkpointed: the sink
@@ -96,8 +99,9 @@ _ECEF_SCHEMA = T.StructType(
 
 def stage1_encode(instances: DataFrame, s2_level: int = 16) -> DataFrame:
     """F17 + S2 cell keys in ONE Arrow-batched pandas UDF (the reference
-    reprojects inside each fetch query, src/InstancesRepository.cs:42,52;
-    here exactly once, checkpointed)."""
+    reprojects inside each fetch query, src/InstancesRepository.cs:42,52).
+    The export computes ECEF in-group instead; this standalone kernel is
+    the S4 parity surface and the scaling bench's compute probe."""
     from ..packaging import ensure_shipped
 
     ensure_shipped(instances.sparkSession)
@@ -230,15 +234,6 @@ def run_export(
             clamp=not opts.keep_projection,
         )
 
-    if opts.precompute_ecef:
-        encoded = ckpt.run_stage("stage1_encoded", lambda: stage1_encode(inst),
-                                 input_fingerprint=in_fp)
-    else:
-        # fused: ECEF is computed inside the per-tile encoder / reducer from
-        # the same float64 kernel (byte-identical payloads, parity-tested);
-        # skips a full-width materialization + one full input pass
-        encoded = inst
-
     # stage 2: tile tree (tiny output; checkpointed as a table) + the
     # deep-cell counts it consumed (also tiny — O(cells)). Persisted counts
     # make the next incremental append's tree a counts MERGE instead of a
@@ -253,7 +248,7 @@ def run_export(
     n_inst = None if _preprojected else ckpt.done("stage0_instances")["n_rows"]
 
     def _stage2():
-        t = tiling.build_tile_tree(encoded, bounds, opts, n_estimate=n_inst)
+        t = tiling.build_tile_tree(inst, bounds, opts, n_estimate=n_inst)
         _built["tree"] = t
         return t.tiles
 
@@ -265,7 +260,7 @@ def run_export(
         if t is None:
             # resume of an export predating the counts checkpoint: rebuild
             # once (deterministic — same input, same estimate) to upgrade
-            t = tiling.build_tile_tree(encoded, bounds, opts,
+            t = tiling.build_tile_tree(inst, bounds, opts,
                                        n_estimate=n_inst)
         return t.deep_counts_df.withColumn(
             "deep_level", F.lit(t.deep_level).cast("int")
@@ -291,7 +286,7 @@ def run_export(
     # stage 3: assignment, range-partitioned by tile key (Morton-ordered
     # spatial locality) so stage-4 groups are co-located
     def _assign():
-        assigned = tiling.assign_to_content_tiles(encoded, tree, opts)
+        assigned = tiling.assign_to_content_tiles(inst, tree, opts)
         return assigned.repartitionByRange(
             max(int(spark.conf.get("spark.sql.shuffle.partitions")), 1),
             "level", "x", "y",

@@ -11,11 +11,6 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
-TABLE_NAMES = (
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-)
-
 
 def load_table(
     spark: SparkSession, sf_dir: str, name: str, min_splits: int | None = None
@@ -32,12 +27,6 @@ def load_table(
     if min_splits and df.rdd.getNumPartitions() < min_splits:
         df = df.repartition(min_splits)
     return df
-
-
-def register_views(spark: SparkSession, sf_dir: str, names=TABLE_NAMES) -> None:
-    """Temp views so Spark SQL text matches the DuckDB oracle text."""
-    for name in names:
-        load_table(spark, sf_dir, name).createOrReplaceTempView(name)
 
 
 def schema_columns(df: DataFrame) -> set[str]:

@@ -69,12 +69,14 @@ class TestConnectedComponents:
         }
         assert got == {1: 1, 9: 1, 4: 1, 7: 1, 20: 20, 30: 20}
 
-    def test_star_equals_label_prop_random_graph(self, spark):
-        """SoCC'14 large-star/small-star must label identically to min-label
-        propagation on a random graph (both = true component minima)."""
+    def test_star_equals_union_find_random_graph(self, spark):
+        """SoCC'14 large-star/small-star must label every node of a random
+        graph with its true component minimum (union-find oracle)."""
         import numpy as np
 
         from i3dm_export_spark.operators.dedup import connected_components
+
+        from .test_property import _union_find_components
 
         rng = np.random.default_rng(11)
         n = 400
@@ -82,15 +84,9 @@ class TestConnectedComponents:
         pairs = spark.createDataFrame(edges, "a long, b long")
         star = {
             r["node"]: r["comp"]
-            for r in connected_components(pairs, algorithm="star").collect()
+            for r in connected_components(pairs).collect()
         }
-        prop = {
-            r["node"]: r["comp"]
-            for r in connected_components(
-                pairs, algorithm="label_prop", max_iters=n
-            ).collect()
-        }
-        assert star == prop
+        assert star == _union_find_components(edges)
 
     def test_star_chain_converges_in_log_rounds(self, spark):
         """Adversarial 10^4-node chain: label propagation needs O(n) rounds;
@@ -105,13 +101,15 @@ class TestConnectedComponents:
             [(i, i + 1) for i in range(n - 1)], "a long, b long"
         ).repartition(8)
         stats = {}
-        labels = connected_components(pairs, algorithm="star", stats=stats)
+        labels = connected_components(pairs, stats=stats)
         bad = labels.filter("comp != 0").count()
         assert bad == 0
         assert labels.count() == n
         assert stats["rounds"] <= 4 * math.ceil(math.log2(n))
 
-    def test_label_prop_warns_without_convergence(self, spark):
+    def test_star_warns_without_convergence(self, spark):
+        """A 21-node chain is not a star, so the first round changes the
+        edge set and one round cannot show convergence."""
         import pytest
 
         from i3dm_export_spark.operators.dedup import connected_components
@@ -120,4 +118,4 @@ class TestConnectedComponents:
             [(i, i + 1) for i in range(20)], "a long, b long"
         )
         with pytest.warns(RuntimeWarning, match="did not converge"):
-            connected_components(pairs, algorithm="label_prop", max_iters=2)
+            connected_components(pairs, max_iters=1)

@@ -165,33 +165,6 @@ class TestTilesetJson:
         assert js["root"]["content"]["uri"].endswith(".cmpt")
 
 
-class TestEncodeTilesParity:
-    def test_mapinpandas_equals_grouped(self, spark):
-        """The grouped applyInPandas encoder must produce byte-identical
-        payloads to the batched mapInPandas variant."""
-        from i3dm_export_spark.config import ExportOptions
-        from i3dm_export_spark.operators import encode as enc
-        from i3dm_export_spark.operators import extent, tiling
-        from i3dm_export_spark.plans.pipeline import stage0_instances, stage1_encode
-        from i3dm_export_spark.sources.pages import pages_df
-
-        pages = stage0_instances(pages_df(spark, 2500, "A"))
-        bounds = extent.compute_bounds(pages)
-        opts = ExportOptions(max_features_per_tile=100, max_level=12, use_i3dm=True)
-        tree = tiling.build_tile_tree(pages, bounds, opts)
-        assigned = stage1_encode(tiling.assign_to_content_tiles(pages, tree, opts))
-        a = {
-            (r["level"], r["x"], r["y"]): (r["n_instances"], bytes(r["payload"]))
-            for r in enc.encode_tiles(assigned, opts).collect()
-        }
-        b = {
-            (r["level"], r["x"], r["y"]): (r["n_instances"], bytes(r["payload"]))
-            for r in enc.encode_tiles_batched(assigned, opts).collect()
-        }
-        assert a == b
-        assert len(a) > 10
-
-
 class TestFusedEcefEncode:
     def test_fused_equals_stage1_precomputed(self, spark):
         """encode_tiles over raw lon/lat/z (fused ECEF) must produce

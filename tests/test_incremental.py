@@ -171,6 +171,24 @@ class TestIncrementalGuards:
         with pytest.raises(IncrementalRebuildRequired, match="options"):
             incremental_append(batch, out, opts=other)
 
+    def test_recorded_removed_option_still_appends(self, spark, tmp_path):
+        """An export written while ExportOptions still had
+        ``precompute_ecef`` records it in its meta; an append with the
+        recorded options (opts=None) must ignore the key, not fail."""
+        base, batch, full = _split(spark, 900, 750)
+        out_full = str(tmp_path / "full")
+        run_export(full, OPTS, out_full, bounds=BB)
+        out_incr = str(tmp_path / "incr")
+        run_export(base, OPTS, out_incr, bounds=BB)
+        meta_path = os.path.join(out_incr, "_checkpoints", "_export_meta.json")
+        with open(meta_path) as f:
+            meta = json.load(f)
+        meta["opts"]["precompute_ecef"] = False
+        with open(meta_path, "w") as f:
+            json.dump(meta, f)
+        incremental_append(batch, out_incr)
+        assert _tree_files(out_full) == _tree_files(out_incr)
+
     def test_missing_base_export_degrades_loudly(self, spark, tmp_path):
         _, batch, _ = _split(spark, 500, 450)
         with pytest.raises(IncrementalRebuildRequired):

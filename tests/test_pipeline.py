@@ -101,7 +101,7 @@ class TestResume:
         stages = {m["stage"] for m in s["stage_metrics"]}
         assert {"stage0_instances", "stage2_tiles",
                 "stage3_assigned"} <= stages
-        # stage 1 is opt-in (fused default computes ECEF in the encoder)
+        # no stage materializes ECEF (the encoder computes it in-group)
         assert "stage1_encoded" not in stages
         for m in s["stage_metrics"]:
             assert m["n_rows"] > 0
@@ -270,24 +270,6 @@ class TestTextInvariantModes:
         )
         assert s_full["text_invariant_violations"] == 0
         assert s_agg["text_invariant_violations"] == 0
-
-
-class TestFusedVsPrecomputedEcef:
-    def test_payloads_byte_identical(self, spark, tmp_path):
-        """precompute_ecef=True (stage-1 checkpoint) and the fused default
-        must write byte-identical tile payloads — same ECEF float64 kernel
-        either way, including the clustering metric."""
-        pages = pages_df(spark, 1500, scenario="A")
-        for name, pre in (("fused", False), ("pre", True)):
-            opts = ExportOptions(
-                max_features_per_tile=100, max_level=10, use_i3dm=True,
-                use_clustering=True, precompute_ecef=pre,
-            )
-            pipeline.run_export(pages, opts, str(tmp_path / name))
-        a = _dir_bytes(tmp_path / "fused" / "content")
-        b = _dir_bytes(tmp_path / "pre" / "content")
-        assert a == b
-        assert len(a) > 0
 
 
 class TestPartialSinkResume:

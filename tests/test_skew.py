@@ -2,9 +2,12 @@
 
 Synthesized 100:1 hot cell: one tile with ~100x the rows of the others.
 Checks routing (cold untouched / warm single-stage / hot two-stage),
-the exactly-k count invariant, salt determinism, and that salts actually
-fragment the hot group.
+the exactly-k count invariant, salt determinism, that salts actually
+fragment the hot group, and that the elected members do not depend on
+the input's partitioning.
 """
+
+from collections import Counter
 
 import pytest
 from pyspark.sql import functions as F
@@ -81,3 +84,26 @@ class TestSalting:
         out = skew.cluster_tiles_salted(df, opts)
         in_urls = {r.url for r in df.collect()}
         assert {r.url for r in out.collect()} <= in_urls
+
+    def test_member_sets_partition_invariant(self, spark, opts):
+        """The elected members of every route — hot (salted two-stage),
+        warm (single stage), cold (untouched) — must not depend on how the
+        input is partitioned."""
+        warm = _assigned(spark, hot_rows=120, cold_rows=0, n_cold=0).select(
+            "level", F.lit(7).cast("long").alias("x"),
+            F.lit(7).cast("long").alias("y"),
+            F.concat(F.lit("w"), "url").alias("url"), "lon", "lat", "z",
+        )
+        df = _assigned(spark).unionByName(warm)
+
+        def members(n_parts):
+            out = skew.cluster_tiles_salted(df.repartition(n_parts), opts)
+            return {(r.level, r.x, r.y, r.url) for r in out.collect()}
+
+        one = members(1)
+        assert one == members(64)
+        per_tile = Counter((level, x, y) for level, x, y, _ in one)
+        k = opts.max_features_per_tile
+        assert per_tile[(3, 0, 0)] == k  # hot: 2000 rows > 8k
+        assert per_tile[(3, 7, 7)] == k  # warm: 120 rows in (k, 8k]
+        assert all(per_tile[(3, t, t)] == 20 for t in range(1, 6))  # cold
