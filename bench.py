@@ -416,11 +416,18 @@ def main() -> None:
     }
     line = json.dumps(payload)
     # the machine-readable record survives stdout truncation (VERDICT r4
-    # item 3: the driver's tail capture clipped the r4 line's head)
-    out_path = os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                            "BENCH_LAST.json")
-    with open(out_path, "w") as f:
-        f.write(line + "\n")
+    # item 3: the driver's tail capture clipped the r4 line's head). Only
+    # the canonical config (600k rows, local[32]) replaces it: a smaller
+    # smoke run's numbers are not comparable with the committed record
+    if N_EXPORT == 600_000 and CPUS == 32:
+        out_path = os.path.join(os.path.dirname(os.path.abspath(__file__)),
+                                "BENCH_LAST.json")
+        with open(out_path, "w") as f:
+            f.write(line + "\n")
+    else:
+        print(f"bench: BENCH_LAST.json left alone ({N_EXPORT} rows, "
+              f"{CPUS} cpus is not the canonical 600000 rows, 32 cpus)",
+              file=sys.stderr)
     print(line)
     headline = {k: payload[k] for k in ("metric", "value", "unit", "sf", "cpus")}
     headline["legs"] = len(timings)

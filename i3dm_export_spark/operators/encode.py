@@ -378,6 +378,29 @@ def prepare_models(
     return prepared, external
 
 
+def encode_tile(pdf: pd.DataFrame, opts, order_col: str = "url",
+                model_glbs: dict | None = None) -> bytes:
+    """One content tile's member rows -> its payload under ``opts``: the
+    ECEF transform in-group (fused mode), then the GPU glb or the
+    i3dm/cmpt encoder. The group function of :func:`encode_tiles`, and the
+    append's driver re-encode."""
+    pdf = _ensure_ecef_cols(pdf, opts.keep_projection)
+    if opts.use_gpu_instancing:
+        from .gpu_encode import encode_gpu_tile_pdf
+
+        return encode_gpu_tile_pdf(
+            pdf, keep_projection=opts.keep_projection,
+            use_scale_non_uniform=opts.use_scale_non_uniform,
+            order_col=order_col,
+        )
+    return encode_tile_pdf(
+        pdf, keep_projection=opts.keep_projection, use_i3dm=opts.use_i3dm,
+        use_scale_non_uniform=opts.use_scale_non_uniform,
+        use_external_model=opts.use_external_model,
+        order_col=order_col, model_glbs=model_glbs,
+    )
+
+
 def encode_tiles(assigned, opts, order_col: str = "url",
                  model_glbs: dict | None = None):
     """Stage-4 encode over all content tiles: grouped applyInPandas -> one
@@ -397,15 +420,11 @@ def encode_tiles(assigned, opts, order_col: str = "url",
     assigned = assigned.select(
         *_encode_input_cols(opts, order_col, set(assigned.columns))
     )
-    from pyspark.sql import functions as F, types as T
+    from pyspark.sql import types as T
 
     from ..packaging import ensure_shipped
 
     ensure_shipped(assigned.sparkSession)
-    keep = opts.keep_projection
-    use_i3dm = opts.use_i3dm
-    snu = opts.use_scale_non_uniform
-    ext = opts.use_external_model
 
     schema = T.StructType(
         [
@@ -417,27 +436,14 @@ def encode_tiles(assigned, opts, order_col: str = "url",
         ]
     )
 
-    gpu = opts.use_gpu_instancing
-
-    def _encode(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = _ensure_ecef_cols(pdf, keep)
-        if gpu:
-            from .gpu_encode import encode_gpu_tile_pdf
-
-            data = encode_gpu_tile_pdf(
-                pdf, keep_projection=keep, use_scale_non_uniform=snu,
-                order_col=order_col,
-            )
-        else:
-            data = encode_tile_pdf(
-                pdf, keep_projection=keep, use_i3dm=use_i3dm,
-                use_scale_non_uniform=snu, use_external_model=ext,
-                order_col=order_col, model_glbs=model_glbs,
-            )
+    # no type hints: pyspark infers the eval type from them, and a partly
+    # annotated (key, pdf) signature makes it warn on every call
+    def _encode(key, pdf):
         return pd.DataFrame(
             {
                 "level": [int(key[0])], "x": [int(key[1])], "y": [int(key[2])],
-                "n_instances": [len(pdf)], "payload": [data],
+                "n_instances": [len(pdf)],
+                "payload": [encode_tile(pdf, opts, order_col, model_glbs)],
             }
         )
 

@@ -89,7 +89,9 @@ def knn_per_tile(
     cc = list(coord_cols)
     tc = list(tile_cols)
 
-    def _knn(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    # no type hints: pyspark infers the eval type from them, and a partly
+    # annotated (key, pdf) signature makes it warn on every call
+    def _knn(key, pdf):
         pdf = pdf.sort_values(id_col, kind="mergesort").reset_index(drop=True)
         pts = pdf[cc].to_numpy(np.float64)
         r, c, d = knn_pairs_batch(pts, k)

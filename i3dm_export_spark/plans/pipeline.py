@@ -56,12 +56,19 @@ INSTANCE_COLS = [
     "url", "text_fp", "lon", "lat", "z", "scale", "yaw", "pitch", "roll",
     "model", "tags", "lang",
 ]
+#: source columns stage 0 keeps only when the source has them: the
+#: per-axis scale the encoder reads under ``use_scale_non_uniform``
+OPTIONAL_INSTANCE_COLS = ["scale_non_uniform"]
+
+
+def instance_cols(columns) -> list[str]:
+    """Stage 0's columns for a source with ``columns``."""
+    return INSTANCE_COLS + [c for c in OPTIONAL_INSTANCE_COLS if c in columns]
 
 
 def stage0_instances(pages: DataFrame) -> DataFrame:
     """Project the tiling-relevant columns; html/text stay out of every
     downstream shuffle. text_fp pins the byte-identical-text invariant."""
-    cols = [c for c in INSTANCE_COLS if c in pages.columns or c == "text_fp"]
     # idempotent: accept already-projected instances (text_fp precomputed)
     if "text_fp" in pages.columns:
         out = pages
@@ -84,7 +91,7 @@ def stage0_instances(pages: DataFrame) -> DataFrame:
     for name, default in missing_defaults.items():
         if name not in out.columns:
             out = out.withColumn(name, default)
-    return out.select(*INSTANCE_COLS)
+    return out.select(*instance_cols(pages.columns))
 
 
 _ECEF_SCHEMA = T.StructType(
@@ -210,7 +217,7 @@ def run_export(
         and bool(pages.inputFiles())
     )
     if _preprojected:
-        inst = pages.select(*INSTANCE_COLS)
+        inst = pages.select(*instance_cols(pages.columns))
     else:
         inst = ckpt.run_stage("stage0_instances", _stage0, input_fingerprint=in_fp)
 

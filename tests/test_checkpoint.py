@@ -36,10 +36,11 @@ EXPORT_RERUN_JOBS_PINNED = 11
 #: Spark jobs of a small localized append on the driver path (3 new
 #: instances into one content tile of the 500-row export, no flipped
 #: tile): the guards, the stage-0 batch write, the batch's deep-cell
-#: counts, the stage-3 delta write, the dirty-tile encode into the content
-#: sink and the summary's batch count. The dirty set itself is derived on
-#: the driver from the batch's counts and launches no job
-APPEND_JOBS_PINNED = 18
+#: counts, the stage-3 delta write and the summary's batch count. The
+#: dirty set is derived on the driver from the batch's counts, and the
+#: dirty tile is fetched, encoded and written on the driver: neither
+#: launches a job
+APPEND_JOBS_PINNED = 15
 
 
 def _count_jobs(spark, fn):
@@ -135,6 +136,7 @@ class TestJobCounts:
         assert summary["n_new_instances"] == 3
         assert summary["n_dirty_tiles"] == 1
         assert summary["n_stage3_rewritten_files"] == 0
+        assert summary["reencode_on_driver"] is True
         assert n_jobs <= APPEND_JOBS_PINNED, (
             f"append ran {n_jobs} Spark jobs, pinned at "
             f"{APPEND_JOBS_PINNED}")

@@ -839,3 +839,180 @@ class TestCountsRecount:
         with pytest.raises(IncrementalRebuildRequired, match="run_export"):
             incremental_append(batch, out, opts=opts)
         assert _digests(out) == before
+
+
+def _model_glbs():
+    from i3dm_export_spark.functions import glbtools
+
+    return {
+        f"m{i}.glb": glbtools.write_glb(
+            {"asset": {"version": "2.0"}, "nodes": [{"name": f"m{i}"}]})
+        for i in range(3)
+    }
+
+
+def _rich_split(spark, n_total, n_base, snu=False):
+    """``_split`` over pages with three models, per-row tags and yaw, and
+    (``snu``) a per-axis ``scale_non_uniform``: every column an encoder
+    branch reads varies across the members of a tile."""
+    from pyspark.sql import functions as F
+
+    h = F.pmod(F.xxhash64("url"), F.lit(97))
+    full = (
+        pages_df(spark, n_total)
+        .withColumn("model", F.format_string("m%d.glb", F.pmod(h, F.lit(3))))
+        .withColumn("tags", F.format_string('[{"lang":"%s"},{"n":"%d"}]',
+                                            "lang", h))
+        .withColumn("yaw", h.cast("double") * 3.5)
+    )
+    if snu:
+        full = full.withColumn("scale_non_uniform", F.array(
+            h.cast("double"), F.lit(2.0), F.col("scale")))
+    urls = sorted(r["url"] for r in full.select("url").collect())
+    cut = urls[n_base]
+    return full.filter(f"url < '{cut}'"), full.filter(f"url >= '{cut}'"), full
+
+
+#: name -> (opts, rich source?, scale_non_uniform?, model_glbs?, driver
+#: plan under the default budget?, (n_total, n_base))
+_PLAN_CASES = {
+    "cmpt_models": (ExportOptions(max_features_per_tile=60, max_level=8),
+                    True, False, True, True, (900, 750)),
+    "keep_projection": (ExportOptions(max_features_per_tile=60, max_level=8,
+                                      use_i3dm=True, keep_projection=True),
+                        True, False, False, True, (900, 750)),
+    "scale_non_uniform": (ExportOptions(max_features_per_tile=60,
+                                        max_level=8, use_i3dm=True,
+                                        use_scale_non_uniform=True),
+                          True, True, False, True, (900, 750)),
+    "external_model": (ExportOptions(max_features_per_tile=60, max_level=8,
+                                     use_external_model=True),
+                       True, False, False, True, (900, 750)),
+    "gpu_glb": (ExportOptions(max_features_per_tile=60, max_level=8,
+                              use_gpu_instancing=True),
+                True, False, False, True, (600, 520)),
+    # no tile over skew_salt_threshold * k: warm tiles reduce on the driver
+    "clustered_warm": (ExportOptions(max_features_per_tile=40, max_level=8,
+                                     use_i3dm=True, use_clustering=True,
+                                     skew_salt_threshold=100.0),
+                       False, False, False, True, (700, 600)),
+    # the 700-row root is over 8 * 40: a hot dirty tile takes the Spark plan
+    "clustered_hot": (_CLUSTER_OPTS, False, False, False, False, (700, 600)),
+}
+
+
+@pytest.fixture(scope="module")
+def plan_case_exports(spark, tmp_path_factory):
+    """Lazily built per case: (base export dir, batch, from-scratch union
+    export dir)."""
+    built = {}
+
+    def get(name):
+        if name not in built:
+            opts, rich, snu, glbs, _drv, (n_total, n_base) = _PLAN_CASES[name]
+            if rich:
+                base, batch, full = _rich_split(spark, n_total, n_base, snu)
+            else:
+                base, batch, full = _split(spark, n_total, n_base)
+            models = _model_glbs() if glbs else None
+            root = tmp_path_factory.mktemp(f"plan_{name}")
+            base_out, full_out = str(root / "base"), str(root / "full")
+            run_export(base, opts, base_out, bounds=BB, model_glbs=models)
+            run_export(full, opts, full_out, bounds=BB, model_glbs=models)
+            built[name] = (base_out, batch, full_out)
+        return built[name]
+
+    return get
+
+
+class TestReencodePlans:
+    """The append re-encodes its dirty tiles on the driver (pyarrow fetch,
+    in-process reduce + encode, driver sink) while the tile table is on
+    the driver, the dirty member rows fit ``_MAX_DRIVER_MEMBER_ROWS`` and
+    no dirty tile is hot; otherwise on Spark. Both plans must produce the
+    from-scratch union export's bytes for every encoder branch; the Spark
+    plan is forced with the budget at 0."""
+
+    @pytest.mark.parametrize("plan", ["driver", "spark"])
+    @pytest.mark.parametrize("case", list(_PLAN_CASES))
+    def test_byte_parity(self, spark, tmp_path, monkeypatch,
+                         plan_case_exports, case, plan):
+        import shutil
+
+        import pandas as pd
+
+        from i3dm_export_spark.plans import incremental as incr
+
+        if plan == "spark":
+            monkeypatch.setattr(incr, "_MAX_DRIVER_MEMBER_ROWS", 0)
+        opts, _rich, _snu, glbs, driver_ok, _sizes = _PLAN_CASES[case]
+        base_out, batch, full_out = plan_case_exports(case)
+        out = str(tmp_path / "incr")
+        shutil.copytree(base_out, out)
+
+        s = incremental_append(batch, out, opts=opts,
+                               model_glbs=_model_glbs() if glbs else None)
+
+        assert s["reencode_on_driver"] is (plan == "driver" and driver_ok)
+        assert s["n_dirty_tiles"] > 0
+        tiles = pd.read_parquet(
+            os.path.join(out, "_checkpoints", "stage2_tiles"))
+        rewritten = pd.read_parquet(os.path.join(
+            out, "_checkpoints", "_sink_manifests", "_content_incr"))
+        n_by_file = {
+            f"{lv}_{x}_{y}.{opts.content_extension}": n
+            for lv, x, y, n in zip(tiles["level"], tiles["x"], tiles["y"],
+                                   tiles["n_instances"])
+        }
+        n_rewritten = [n_by_file[r] for r in rewritten["relpath"]]
+        assert s["n_dirty_member_rows"] == sum(n_rewritten)
+        k, t = opts.max_features_per_tile, opts.skew_salt_threshold
+        if case == "clustered_warm":
+            assert any(k < n <= t * k for n in n_rewritten)
+        if case == "clustered_hot":
+            assert any(n > t * k for n in n_rewritten)
+        assert _tree_files(out) == _tree_files(full_out)
+
+    def test_stage3_missing_a_dirty_row_raises(
+        self, spark, tmp_path, monkeypatch, oracle_cases
+    ):
+        """The driver plan checks the fetched member rows against the tile
+        table: a stage 3 short of one dirty-tile row raises before any
+        content file or manifest changes."""
+        import shutil
+
+        import pyarrow.compute as pc
+        import pyarrow.parquet as pq
+
+        from i3dm_export_spark.plans import incremental as incr
+
+        base_out, batch, _full, opts = oracle_cases["localized"]
+        out = str(tmp_path / "incr")
+        shutil.copytree(base_out, out)
+        refresh = incr._delta_refresh
+
+        def drop_one_dirty_row(*args, **kwargs):
+            delta = refresh(*args, **kwargs)
+            lv, x, y = delta["dirty_keys"][0]
+            for name in sorted(os.listdir(delta["tmp3"])):
+                if not name.endswith(".parquet"):
+                    continue
+                path = os.path.join(delta["tmp3"], name)
+                t = pq.read_table(path)
+                hit = pc.and_(pc.and_(pc.equal(t["level"], lv),
+                                      pc.equal(t["x"], x)),
+                              pc.equal(t["y"], y)).to_numpy(
+                                  zero_copy_only=False)
+                if hit.any():
+                    keep = ~hit
+                    keep[hit.argmax() + 1:] |= hit[hit.argmax() + 1:]
+                    os.remove(path)  # a hard link: leave the base file
+                    pq.write_table(t.filter(keep), path)
+                    return delta
+            raise AssertionError("no stage-3 row of the dirty tile")
+
+        monkeypatch.setattr(incr, "_delta_refresh", drop_one_dirty_row)
+        before = _digests(out)
+        with pytest.raises(IncrementalRebuildRequired, match="stage 3"):
+            incremental_append(batch, out, opts=opts)
+        assert _digests(out) == before
