@@ -1004,8 +1004,8 @@ class TestReencodePlans:
                               pc.equal(t["y"], y)).to_numpy(
                                   zero_copy_only=False)
                 if hit.any():
-                    keep = ~hit
-                    keep[hit.argmax() + 1:] |= hit[hit.argmax() + 1:]
+                    keep = [True] * len(hit)
+                    keep[int(hit.argmax())] = False  # the tile's first row
                     os.remove(path)  # a hard link: leave the base file
                     pq.write_table(t.filter(keep), path)
                     return delta
