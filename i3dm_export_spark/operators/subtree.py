@@ -22,10 +22,11 @@ Availability rule (spec-monotone, derived from the tiles table):
                       n_instances > 0
 
 The tiles table is tiny relative to instances (README.md:179: 372 subtree
-files for 588k instances), so assembly runs either on the driver
-(:func:`build_subtrees_pandas_for_roots`, one sort of (root, tile) pairs;
-:func:`build_subtrees_pandas` is the per-root reference) or distributed
-as one tile-row shuffle by root (:func:`build_subtrees_spark`).
+files for 588k instances). One assembly core (:func:`_assemble_pairs`,
+one sort of (root, tile) pairs) runs either on the driver over the whole
+table (:func:`build_subtrees_pandas_for_roots`) or in executors once per
+partition of a tile-row shuffle by root (:func:`build_subtrees_spark`);
+:func:`build_subtrees_pandas` is the per-root reference.
 """
 
 from __future__ import annotations
@@ -222,50 +223,70 @@ def n_subtree_roots(tiles_pdf, subtree_levels: int) -> int:
 
 def build_subtrees_pandas_for_roots(tiles_pdf, roots=None,
                                     subtree_levels: int = 2):
-    """Driver twin of ``build_subtrees_spark(roots=...)``: assemble the
-    requested subtree roots (every root when ``roots`` is None) from a
-    collected tiles frame. Returns ``[(root_level, root_x, root_y,
-    payload)]`` in sorted root order, byte-identical to
+    """Assemble the requested subtree roots (every root when ``roots`` is
+    None) from a collected tiles frame. Returns ``[(root_level, root_x,
+    root_y, payload)]`` in sorted root order, byte-identical to
     :func:`build_subtrees_pandas` and :func:`build_subtrees_spark`
     (parity-tested); requested roots recording no content are skipped —
     the same existence rule (any interior row with content).
 
-    One pass, no per-root frame masks: the (root, tile) pairs of
-    :func:`subtree_tile_pairs` (each tile's own root, plus the parent
-    root for boundary tiles) are sorted once by root, and every pair
-    sets its bit in a (roots x binary-buffer) byte matrix; a payload is
-    the shared header plus its matrix row. Full quadtrees at
-    ``subtree_levels=2`` on a 4-core host: 4,369 roots over 5,461 tiles
-    in 0.005 s (the earlier per-root frame-mask loop: 2.8 s), 69,905
-    roots over 87,381 tiles in 0.09 s (128 s)."""
-    s = subtree_levels
-    levels = tiles_pdf["level"].to_numpy(np.int64)
-    xs = tiles_pdf["x"].to_numpy(np.int64)
-    ys = tiles_pdf["y"].to_numpy(np.int64)
-    content = tiles_pdf["content_available"].to_numpy(bool)
-    hc = tiles_pdf["n_instances"].to_numpy(np.int64) > 0
+    The (root, tile) pairs of :func:`root_pairs` go through
+    :func:`_assemble_pairs`, the one assembly core, which
+    :func:`build_subtrees_spark` runs per partition too. Full quadtrees
+    at ``subtree_levels=2`` on a 4-core host: 4,369 roots over 5,461
+    tiles in 0.005 s (the earlier per-root frame-mask loop: 2.8 s),
+    69,905 roots over 87,381 tiles in 0.09 s (128 s)."""
+    levels, xs, ys = (tiles_pdf[c].to_numpy(np.int64)
+                      for c in ("level", "x", "y"))
+    rl, rx, ry, tile = root_pairs(levels, xs, ys, subtree_levels)
+    return _assemble_pairs(
+        rl, rx, ry, levels[tile], xs[tile], ys[tile],
+        tiles_pdf["content_available"].to_numpy(bool)[tile],
+        tiles_pdf["n_instances"].to_numpy(np.int64)[tile] > 0,
+        subtree_levels, roots,
+    )
 
-    # (root, tile) pairs: own root (interior), parent root (boundary)
+
+def root_pairs(levels, xs, ys, subtree_levels: int):
+    """(root_level, root_x, root_y, tile index) of every (subtree root,
+    tile) pair whose bitstreams read the tile: its own root (interior),
+    plus the parent root of a boundary tile (local level s,
+    childSubtreeAvailability). Numpy twin of :func:`subtree_tile_pairs`."""
+    s = subtree_levels
     own_l, own_x, own_y = subtree_roots(levels, xs, ys, s)
     b = np.flatnonzero((levels % s == 0) & (levels > 0))
-    tile = np.concatenate([np.arange(len(levels)), b])
-    prl = np.concatenate([own_l, levels[b] - s])
-    prx = np.concatenate([own_x, xs[b] >> s])
-    pry = np.concatenate([own_y, ys[b] >> s])
-    order = np.lexsort((pry, prx, prl))
-    tile, prl, prx, pry = tile[order], prl[order], prx[order], pry[order]
-    if not len(tile):
-        return []
-    first = np.ones(len(tile), bool)
-    first[1:] = ((prl[1:] != prl[:-1]) | (prx[1:] != prx[:-1])
-                 | (pry[1:] != pry[:-1]))
-    gid = np.cumsum(first) - 1
-    g_l, g_x, g_y = prl[first], prx[first], pry[first]
+    return (np.concatenate([own_l, levels[b] - s]),
+            np.concatenate([own_x, xs[b] >> s]),
+            np.concatenate([own_y, ys[b] >> s]),
+            np.concatenate([np.arange(len(levels)), b]))
 
-    ll = levels[tile] - prl
+
+def _assemble_pairs(rl, rx, ry, levels, xs, ys, content, hc, s, roots=None):
+    """The assembly core over (root, tile) pairs given as arrays: root key,
+    tile key, content flag and has-content flag per pair. Every root's
+    pairs must be present. Returns ``[(root_level, root_x, root_y,
+    payload)]`` in sorted root order for the roots recording content
+    (within ``roots``, a set of root keys, when given).
+
+    One sort by root, no per-root frame masks: every pair sets its bit
+    in a (roots x binary-buffer) byte matrix, and a payload is the shared
+    header plus its matrix row."""
+    order = np.lexsort((ry, rx, rl))
+    rl, rx, ry, levels, xs, ys, content, hc = (
+        np.asarray(a)[order]
+        for a in (rl, rx, ry, levels, xs, ys, content, hc))
+    if not len(rl):
+        return []
+    first = np.ones(len(rl), bool)
+    first[1:] = ((rl[1:] != rl[:-1]) | (rx[1:] != rx[:-1])
+                 | (ry[1:] != ry[:-1]))
+    gid = np.cumsum(first) - 1
+    g_l, g_x, g_y = rl[first], rx[first], ry[first]
+
+    ll = levels - rl
     interior = ll < s
     keep = np.zeros(len(g_l), bool)
-    keep[gid[interior & hc[tile]]] = True
+    keep[gid[interior & hc]] = True
     if roots is not None:
         want = {(int(a), int(c), int(d)) for a, c, d in roots}
         keep &= np.fromiter(
@@ -274,19 +295,20 @@ def build_subtrees_pandas_for_roots(tiles_pdf, roots=None,
             bool, len(g_l))
     row = np.cumsum(keep) - 1
     sel = keep[gid]
-    tile, ll, interior, gid = tile[sel], ll[sel], interior[sel], gid[sel]
-    bit = _local_bit_index(ll, xs[tile] - (prx[sel] << ll),
-                           ys[tile] - (pry[sel] << ll))
+    ll, interior, gid = ll[sel], interior[sel], gid[sel]
+    content, hc = content[sel], hc[sel]
+    bit = _local_bit_index(ll, xs[sel] - (rx[sel] << ll),
+                           ys[sel] - (ry[sel] << ll))
 
     n_interior = (4**s - 1) // 3
     prefix, padded = _header_for_lengths(n_interior, n_interior, 4**s)
     starts = np.cumsum([0] + [n + p for n, p in padded])
     buf = np.zeros((int(keep.sum()), int(starts[-1])), np.uint8)
     for start, on, pos in (
-        (starts[0], interior & hc[tile], bit),  # tileAvailability
-        (starts[1], interior & content[tile], bit),  # contentAvailability
+        (starts[0], interior & hc, bit),  # tileAvailability
+        (starts[1], interior & content, bit),  # contentAvailability
         # boundary tiles: local level s starts right after the interior
-        (starts[2], ~interior & hc[tile], bit - n_interior),  # child
+        (starts[2], ~interior & hc, bit - n_interior),  # child
     ):
         p = pos[on]
         np.bitwise_or.at(
@@ -294,15 +316,28 @@ def build_subtrees_pandas_for_roots(tiles_pdf, roots=None,
             np.left_shift(1, p & 7).astype(np.uint8),
         )
     return [
-        (rl, rx, ry, prefix + buf[i].tobytes())
-        for i, (rl, rx, ry) in enumerate(zip(
+        (a, b, c, prefix + buf[i].tobytes())
+        for i, (a, b, c) in enumerate(zip(
             g_l[keep].tolist(), g_x[keep].tolist(), g_y[keep].tolist()))
     ]
 
 
+def _payload_bitstrings(payload: bytes, s: int) -> tuple[str, str, str]:
+    """The three bitstreams of a subtree payload as '0'/'1' strings."""
+    n_interior = (4**s - 1) // 3
+    prefix, padded = _header_for_lengths(n_interior, n_interior, 4**s)
+    buf = np.frombuffer(payload, np.uint8, offset=len(prefix))
+    out, start = [], 0
+    for n_bits, (n_bytes, pad) in zip((n_interior, n_interior, 4**s), padded):
+        bits = np.unpackbits(buf[start:start + n_bytes], bitorder="little")
+        out.append("".join(map(str, bits[:n_bits])))
+        start += n_bytes + pad
+    return tuple(out)
+
+
 def subtree_tile_pairs(tiles, subtree_levels: int):
-    """(subtree root, tile) pairs as a DataFrame — the distributed analogue
-    of the per-root row selection in :func:`build_subtrees_pandas`.
+    """(subtree root, tile) pairs as a DataFrame — the distributed twin of
+    :func:`root_pairs`.
 
     Every tile maps to the root of the subtree it is INTERIOR to
     (local level in [0, s)); tiles sitting exactly on a subtree-root level
@@ -318,35 +353,14 @@ def subtree_tile_pairs(tiles, subtree_levels: int):
         F.expr(f"shiftright(x, CAST(level % {s} AS INT))").cast("long").alias("root_x"),
         F.expr(f"shiftright(y, CAST(level % {s} AS INT))").cast("long").alias("root_y"),
         "level", "x", "y", "content_available", "n_instances",
-        F.lit(True).alias("is_interior"),
     )
     parent = t.filter((F.col("level") % s == 0) & (F.col("level") > 0)).select(
         (F.col("level") - s).cast("int").alias("root_level"),
         F.expr(f"shiftright(x, {s})").cast("long").alias("root_x"),
         F.expr(f"shiftright(y, {s})").cast("long").alias("root_y"),
         "level", "x", "y", "content_available", "n_instances",
-        F.lit(False).alias("is_interior"),
     )
     return own.unionByName(parent)
-
-
-def affected_subtree_roots(keys, subtree_levels: int):
-    """Distinct (root_level, root_x, root_y) whose bitstreams read ANY of
-    ``keys`` (a DataFrame of level/x/y tile keys): each key's own subtree
-    root plus, for boundary tiles, the parent subtree root that records
-    the key in its childSubtreeAvailability. Feeding this to
-    :func:`build_subtrees_spark` ``roots=`` restricts assembly to the
-    subtrees an incremental append can have changed."""
-    from pyspark.sql import functions as F
-
-    t = keys.select(
-        "level", "x", "y",
-        F.lit(True).alias("content_available"),
-        F.lit(1).cast("bigint").alias("n_instances"),
-    )
-    return subtree_tile_pairs(t, subtree_levels).select(
-        "root_level", "root_x", "root_y"
-    ).distinct()
 
 
 _SUBTREE_SCHEMA = (
@@ -355,32 +369,16 @@ _SUBTREE_SCHEMA = (
 )
 
 
-def _assemble_root_group(pdf: pd.DataFrame, s: int):
-    """One subtree root's rows -> 0 or 1 result tuples."""
-    rl = int(pdf["root_level"].iloc[0])
-    rx = int(pdf["root_x"].iloc[0])
-    ry = int(pdf["root_y"].iloc[0])
-    interior = pdf["is_interior"].to_numpy(bool)
-    hc = pdf["n_instances"].to_numpy(np.int64) > 0
-    # a subtree file exists iff the subtree records any content
-    # (same root-set rule as build_subtrees_pandas)
-    if not bool((interior & hc).any()):
-        return None
-    bits = subtree_bitstrings(pdf, rl, rx, ry, s)
-    return (rl, rx, ry, bits[0], bits[1], bits[2], serialize_subtree(*bits))
-
-
-def build_subtrees_spark(tiles, subtree_levels: int = 2,
-                         num_partitions: int | None = None,
-                         roots=None):
+def build_subtrees_spark(tiles, subtree_levels: int = 2, roots=None):
     """T4 at scale: all subtree files assembled IN EXECUTORS.
 
-    One shuffle of tile rows (never instances) hash-partitioned by subtree
-    root, then ``mapInPandas`` per PARTITION with a vectorized pandas
-    groupby inside — thousands of (bounded, <= (4^s-1)/3 + 4^s rows)
-    root groups per Arrow batch, so per-group overhead is C-level, not a
-    Spark task round-trip. Assembles a full level-10 tree (1.4M tiles ->
-    1.1M subtree files) in seconds; the 10^8-tile regime the driver-side
+    One shuffle of (root, tile) pairs (:func:`subtree_tile_pairs`, tile
+    rows, never instances) hash-partitioned by subtree root, then the
+    driver's assembly core (:func:`_assemble_pairs`) runs once per
+    PARTITION through ``packaging.map_kernel`` — thousands of roots per
+    sort, so per-root overhead is C-level, not a Spark task round-trip.
+    Assembles a full level-10 tree (1.4M tiles -> 1.1M subtree files) in
+    seconds; the 10^8-tile regime the driver-side
     :func:`build_subtrees_pandas` cannot reach (the reference delegates to
     a single-process NuGet package, src/ImplicitTiling.cs:13-31).
 
@@ -397,45 +395,27 @@ def build_subtrees_spark(tiles, subtree_levels: int = 2,
     """
     from pyspark.sql import functions as F
 
-    from ..packaging import ensure_shipped
+    from ..packaging import map_kernel
 
-    spark = tiles.sparkSession
-    ensure_shipped(spark)
     s = subtree_levels
-    n_parts = num_partitions or max(
-        int(spark.conf.get("spark.sql.shuffle.partitions")), 1
-    )
+    root = ["root_level", "root_x", "root_y"]
     pairs = subtree_tile_pairs(tiles, s)
     if roots is not None:
-        pairs = pairs.join(
-            F.broadcast(roots.select("root_level", "root_x", "root_y")),
-            ["root_level", "root_x", "root_y"],
-            "left_semi",
+        pairs = pairs.join(F.broadcast(roots.select(*root)), root, "left_semi")
+
+    def assemble(pdf):
+        subs = _assemble_pairs(
+            *(pdf[c].to_numpy(np.int64) for c in (*root, "level", "x", "y")),
+            pdf["content_available"].to_numpy(bool),
+            pdf["n_instances"].to_numpy(np.int64) > 0, s,
         )
-    pairs = pairs.repartition(n_parts, "root_level", "root_x", "root_y")
-    cols = ["root_level", "root_x", "root_y", "tile_bits",
-            "content_bits", "child_bits", "payload"]
+        return pd.DataFrame(
+            [(a, b, c, *_payload_bitstrings(p, s), p) for a, b, c, p in subs],
+            columns=[*root, "tile_bits", "content_bits", "child_bits",
+                     "payload"],
+        )
 
-    def _assemble_partition(batches):
-        # a partition holds every row of each root it owns (hash
-        # partitioning), but one root's rows may span Arrow batches —
-        # concatenate first, then groupby (groups are tiny; the partition
-        # row count is bounded by tiles/partition, safe to hold)
-        pdfs = [pdf for pdf in batches]
-        if not pdfs:
-            return
-        whole = pd.concat(pdfs, ignore_index=True) if len(pdfs) > 1 else pdfs[0]
-        out = []
-        for _, g in whole.groupby(
-            ["root_level", "root_x", "root_y"], sort=False
-        ):
-            row = _assemble_root_group(g, s)
-            if row is not None:
-                out.append(row)
-        if out:
-            yield pd.DataFrame(out, columns=cols)
-
-    return pairs.mapInPandas(_assemble_partition, _SUBTREE_SCHEMA)
+    return map_kernel(assemble, pairs, _SUBTREE_SCHEMA, by=root)
 
 
 def parse_subtree(data: bytes):
@@ -445,8 +425,3 @@ def parse_subtree(data: bytes):
     j = json.loads(data[24 : 24 + jlen].decode())
     buf = data[24 + jlen : 24 + jlen + blen]
     return j, buf
-
-
-def available_levels(tiles_pdf: pd.DataFrame) -> int:
-    """reference src/Program.cs:152: max recorded level + 1."""
-    return int(tiles_pdf["level"].max()) + 1

@@ -100,13 +100,19 @@ def rollup_counts(counts: DataFrame) -> DataFrame:
     )
 
 
+#: largest deep-cell table the tree descends on the driver
+#: (:func:`tree_from_counts`), for the export and the append alike; beyond
+#: it the distributed descent runs, and an append takes its Spark plan for
+#: every later tile-granularity step. Read at call time.
+_MAX_DRIVER_CELLS = 4_000_000
+
+
 def build_tile_tree(
     instances: DataFrame,
     bounds: Bounds,
     opts: ExportOptions,
     deep_level: int | None = None,
     n_estimate: int | None = None,
-    driver_threshold: int = 4_000_000,
 ) -> TileTree:
     """Stage 2: the full availability tree as a DataFrame.
 
@@ -125,8 +131,7 @@ def build_tile_tree(
     skew slack — and the build retries deeper if any non-final level still
     holds an over-full forced leaf, so skewed data never silently loses
     resolution while uniform data avoids paying for a needlessly deep
-    roll-up chain. ``driver_threshold`` is :func:`tree_from_counts`'s
-    cell budget for the driver descent.
+    roll-up chain. :func:`tree_from_counts` picks the descent's side.
     """
     spark = instances.sparkSession
 
@@ -137,16 +142,14 @@ def build_tile_tree(
         est = math.ceil(math.log(max(n / max(opts.max_features_per_tile, 1), 1), 4))
         deep_level = min(max(est + 3, 2), opts.max_level)
         while True:
-            tree = _build_tile_tree_at(instances, bounds, opts, deep_level,
-                                       driver_threshold)
+            tree = _build_tile_tree_at(instances, bounds, opts, deep_level)
             if deep_level >= opts.max_level:
                 return tree
             if not _has_overfull_leaf(tree, deep_level,
                                       opts.max_features_per_tile):
                 return tree
             deep_level = min(deep_level + 4, opts.max_level)
-    return _build_tile_tree_at(instances, bounds, opts, deep_level,
-                               driver_threshold)
+    return _build_tile_tree_at(instances, bounds, opts, deep_level)
 
 
 def _has_overfull_leaf(tree: TileTree, level: int, max_features: int) -> bool:
@@ -242,29 +245,26 @@ def descend_counts_pandas(
 
 def _build_tile_tree_at(
     instances: DataFrame, bounds: Bounds, opts: ExportOptions, deep_level: int,
-    driver_threshold: int = 4_000_000,
 ) -> TileTree:
     deep_df = deep_counts(instances, bounds, deep_level, opts.query)
-    return tree_from_counts(deep_df, bounds, opts, deep_level,
-                            driver_threshold=driver_threshold)
+    return tree_from_counts(deep_df, bounds, opts, deep_level)
 
 
 def tree_from_counts(
     deep_df: DataFrame, bounds: Bounds, opts: ExportOptions, deep_level: int,
-    driver_threshold: int = 4_000_000,
 ) -> TileTree:
     """T2 descent over an already-computed deep-cell count table
     (``cell_x, cell_y, cnt`` at ``deep_level``): the whole stage-2 compute
     once counts exist. The counts are collected once, capped at
-    ``driver_threshold + 1`` rows. If at most the threshold came back, the
+    ``_MAX_DRIVER_CELLS + 1`` rows. If at most the budget came back, the
     driver descends over exactly those rows
     (:func:`tree_from_counts_pandas`, parity-tested in
     tests/test_tiling.py); one row more means the table is too big for the
     driver, and the distributed descent recomputes it. The append, which
     already knows which side its merged counts sit on, calls the two
     descents directly."""
-    pdf = deep_df.limit(driver_threshold + 1).toPandas()
-    if len(pdf) <= driver_threshold:
+    pdf = deep_df.limit(_MAX_DRIVER_CELLS + 1).toPandas()
+    if len(pdf) <= _MAX_DRIVER_CELLS:
         return tree_from_counts_pandas(deep_df.sparkSession, pdf, bounds,
                                        opts, deep_level)
     return _descend_distributed(deep_df, bounds, opts, deep_level)

@@ -47,3 +47,33 @@ def ensure_shipped(spark) -> None:
     zip_path = build_pyfiles_zip()
     sc.addPyFile(zip_path)
     _SHIPPED_SESSIONS.add(key)
+
+
+def map_kernel(kernel, frame, schema: str, by=None):
+    """Run ``kernel``, a function from one pandas frame to another, on the
+    side ``frame`` lives on — the one driver-vs-Spark switch of the
+    kernels the export and the append write once.
+
+    A pandas ``frame`` is the driver plan: the kernel runs on it whole.
+    A Spark DataFrame is the Spark plan: the package is shipped and the
+    same kernel runs once per partition through ``mapInPandas``, after a
+    repartition on the ``by`` columns when it needs each key's rows
+    together; it returns a DataFrame of ``schema``. A kernel must accept
+    an empty frame."""
+    import pandas as pd
+
+    if isinstance(frame, pd.DataFrame):
+        return kernel(frame)
+    spark = frame.sparkSession
+    ensure_shipped(spark)
+    if by:
+        frame = frame.repartition(
+            max(int(spark.conf.get("spark.sql.shuffle.partitions")), 1), *by
+        )
+
+    def run(batches):
+        pdfs = list(batches)
+        if pdfs:
+            yield kernel(pd.concat(pdfs, ignore_index=True))
+
+    return frame.mapInPandas(run, schema)

@@ -121,7 +121,7 @@ def part_files(path: str) -> list[PartFile]:
 #: manifest rows are O(tiles), 3 orders below instances; above the budget
 #: the serving tile lookup and a resumed export's subtree assembly take
 #: their distributed Spark twins (the append follows its tree's side
-#: instead, see ``incremental._MAX_DRIVER_CELLS``). Read at call time.
+#: instead, see ``tiling._MAX_DRIVER_CELLS``). Read at call time.
 _MAX_DRIVER_TILES = 4_000_000
 
 

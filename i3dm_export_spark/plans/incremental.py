@@ -22,16 +22,17 @@ an append works from the base export's checkpoints and the batch:
    new content tiles over a batch cell, plus ``flipped``. No join over
    instances: numpy over the batch's collected counts on the driver, the
    assignment's content-tile join over the batch's cells beyond it;
-6. only dirty tiles re-encode; their files are written atomically, files
-   of tiles that stopped being content are removed, and the content
-   manifest is merged. Within ``_MAX_DRIVER_MEMBER_ROWS`` dirty member
-   rows (and no hot dirty tile under clustering) the driver fetches the
-   members with pyarrow, reduces and encodes them in-process and writes
-   the files itself, with no Spark job; beyond it the members go through
-   ``encode_tiles`` into the executor sink;
-7. only subtrees whose bit-relevant tile rows changed (existence,
-   content flag, emptiness) are reassembled, and ``tileset.json`` is
-   rewritten;
+6. only dirty tiles re-encode and their files are written atomically.
+   Within ``_MAX_DRIVER_MEMBER_ROWS`` dirty member rows (and no hot dirty
+   tile under clustering) the driver fetches the members with pyarrow,
+   reduces and encodes them in-process and writes the files itself, with
+   no Spark job; beyond it the members go through ``encode_tiles`` into
+   the executor sink. The files of tiles that stopped being content are
+   removed on the driver and the content manifest is merged;
+7. only subtrees that read a key of the tile diff (existence, content
+   flag, emptiness changed) are reassembled, the subtree manifest is
+   merged, and ``tileset.json`` is rewritten from the new tile table's
+   max level;
 8. the refreshed stage directories are renamed into place, so the NEXT
    append starts from the new state.
 
@@ -41,13 +42,19 @@ the refreshed stage 0, at its adaptive deep level) when the base has no
 persisted counts (a pre-r5 export) or a merged cell overflows below
 ``max_level``, i.e. the persisted resolution is too coarse for the union
 tree. The recount's counts replace the persisted ones. The tree decides
-driver vs Spark once: within ``_MAX_DRIVER_CELLS`` it holds its tile table
-on the driver (``tiles_pdf``) and every later tile- and cell-granularity
-step runs in pandas/numpy; beyond it each runs as Spark jobs
-(byte-parity-tested twins). The re-encode makes the one further
-decision (``_reencode_on_driver``), from the same table: its member rows
-are the dirty tiles' ``n_instances``. An empty base, or more than
-``_MAX_FLIPPED_FOR_DELTA`` flipped tiles, raise
+driver vs Spark once: within ``tiling._MAX_DRIVER_CELLS`` it holds its
+tile table on the driver (``tiles_pdf``). Each bookkeeping step after the
+tree is one pandas kernel — the tile diff (``_tile_diff``), the changed
+subtree roots (``_changed_roots``), the manifest keep
+(``_manifest_keep``), the subtree assembly core. The driver plan calls
+it on the whole frame; where a step's input stays in Spark (the tiles,
+the old manifest, the subtree pairs) the Spark plan runs the same kernel
+per partition through ``packaging.map_kernel``. The tile diff is O(the
+flipped tiles) and collected on both plans, so the removals and the
+changed roots run on the driver either way. The
+re-encode makes the one further decision (``_reencode_on_driver``), from
+the same table: its member rows are the dirty tiles' ``n_instances``. An
+empty base, or more than ``_MAX_FLIPPED_FOR_DELTA`` flipped tiles, raise
 :class:`IncrementalRebuildRequired`.
 
 Parity contract (tested): content/ + subtrees/ + tileset.json after
@@ -76,10 +83,11 @@ Preconditions (enforced):
 No reference analog: the reference re-runs its whole pipeline per
 invocation (src/Program.cs). This is engine-only scale machinery.
 
-Scale audit: the driver holds the batch's deep-cell counts, the dirty
-tile keys and the removed-file relpaths — all proportional to the batch
-and its dirty REGION. The one O(corpus) term left is the append-only url
-guard, a column-pruned broadcast semi-join over the corpus's urls. A
+Scale audit: the driver holds the batch's deep-cell counts, the tile
+diff, the dirty tile keys and the removed-file relpaths — all
+proportional to the batch and its dirty REGION. The one O(corpus) term
+left is the append-only url guard, a column-pruned broadcast semi-join
+over the corpus's urls. A
 batch whose dirty set approaches the whole tile table gains nothing over
 ``run_export``; the summary's ``n_dirty_tiles``/``n_content_tiles`` ratio
 tells the operator which side they're on.
@@ -100,11 +108,12 @@ from ..operators import encode as enc
 from ..operators import subtree, tiling
 from ..operators.clustering import reduce_tile
 from ..operators.skew import cluster_tiles_salted
+from ..packaging import map_kernel
 from . import checkpoint, sinks
 from .checkpoint import (
     CheckpointManager, part_files, read_parquet,
 )
-from .pipeline import stage0_instances
+from .pipeline import stage0_instances, tileset_levels
 
 TILE_KEY = ["level", "x", "y"]
 
@@ -198,30 +207,6 @@ def _check_bounds(new_inst: DataFrame, bounds: Bounds, meta: dict) -> None:
                 "export would derive different root bounds / region "
                 "z-range — run a full re-export"
             )
-
-
-def _changed_tile_keys(old_tiles: DataFrame, new_tiles: DataFrame) -> DataFrame:
-    """Tile keys whose subtree-bit-relevant state differs between the two
-    tile tables. Subtree bitstreams read exactly (tile existence,
-    content_available, n_instances > 0) per tile — robust to any future
-    split-rule change, because the diff is on the consumed columns, not on
-    assumptions about how appends move counts."""
-    def proj(df: DataFrame, p: str) -> DataFrame:
-        return df.select(
-            "level", "x", "y",
-            F.col("content_available").alias(f"{p}c"),
-            (F.col("n_instances") > 0).alias(f"{p}h"),
-        )
-
-    j = proj(old_tiles, "_o").join(
-        proj(new_tiles, "_n"), ["level", "x", "y"], "full_outer"
-    )
-    return j.filter(
-        F.col("_oc").isNull()
-        | F.col("_nc").isNull()
-        | (F.col("_oc") != F.col("_nc"))
-        | (F.col("_oh") != F.col("_nh"))
-    ).select("level", "x", "y")
 
 
 def incremental_append(
@@ -383,6 +368,7 @@ def incremental_append(
     delta = _delta_refresh(spark, ckpt, new_inst, tmp0,
                            list(old_inst.columns), bounds, opts, n_part)
     tiles_pdf = delta["tree"].tiles_pdf
+    driver_plan = tiles_pdf is not None
     tiles = delta["tiles"]
     for k, v in delta["walls"].items():
         walls[f"delta.{k}"] = v
@@ -408,247 +394,55 @@ def incremental_append(
         n_member_rows if on_driver else None, _mark,
     )
 
-    # removals: previously-written content files whose tile is gone or was
-    # re-encoded under a different key set. Old manifest rows minus (still
-    # current content tiles) minus (rows just rewritten). Current keys come
-    # from the TREE (every content tile has members by the decision table:
-    # content_available requires cnt > 0), so this is O(tiles), never a
-    # corpus-wide distinct.
-    def _rm(rel: str) -> None:
-        try:
-            os.remove(os.path.join(content_dir, rel))
-        except FileNotFoundError:
-            pass
-
-    def _unlink_rows(batches):
-        import pandas as _pd
-
-        for pdf in batches:
-            for rel in pdf["relpath"]:
-                _rm(rel)
-            yield _pd.DataFrame({"n": [len(pdf)]})
-
-    if tiles_pdf is not None:
-        # driver plan: the manifest is O(tiles) — merge it in pandas and
-        # write it with pyarrow instead of paying ~4 Spark jobs' latency
-        # for a few hundred rows, and unlink with a thread pool. The
-        # removed files are old content tiles that are content no longer,
-        # a subset of the flipped tiles, so _MAX_FLIPPED_FOR_DELTA bounds
-        # them too.
+    # removals, on the driver on both plans: the files of the tiles that
+    # stopped being content — flipped tiles, so _MAX_FLIPPED_FOR_DELTA
+    # bounds them — then the manifest merge drops their rows
+    diff = delta["diff"]
+    gone = diff.loc[diff["was_content"] & ~diff["is_content"]]
+    removed = [f"{l}_{x}_{y}.{ext}"
+               for l, x, y in zip(gone["level"], gone["x"], gone["y"])]
+    if removed:
         from concurrent.futures import ThreadPoolExecutor
 
-        import pandas as pd
+        def _rm(rel: str) -> None:
+            try:
+                os.remove(os.path.join(content_dir, rel))
+            except FileNotFoundError:
+                pass
 
-        cc = tiles_pdf.loc[tiles_pdf["content_available"]]
-        cur_rel = {
-            f"{int(l)}_{int(x)}_{int(y)}.{ext}"
-            for l, x, y in zip(cc["level"], cc["x"], cc["y"])
-        }
-        old_m = pd.read_parquet(manifest_dir)
-        incr_m = pd.read_parquet(dirty_manifest_dir)
-        removed = old_m.loc[
-            ~old_m["relpath"].isin(cur_rel), "relpath"
-        ].tolist()
-        if removed:
-            with ThreadPoolExecutor(max_workers=32) as pool:
-                list(pool.map(_rm, removed))
-        n_removed = len(removed)
-        _mark("reencode.removals")
-        rewritten = set(incr_m["relpath"])
-        keep = old_m[
-            old_m["relpath"].isin(cur_rel)
-            & ~old_m["relpath"].isin(rewritten)
-        ]
-        merged_m = pd.concat([keep, incr_m], ignore_index=True)
-        n_content = len(merged_m)
-        _write_parquet_driver(manifest_dir, merged_m, _MANIFEST_DDL)
-        _mark("reencode.manifest_merge")
-    else:
-        current_files = tiles.filter("content_available").select(
-            F.format_string(f"%d_%d_%d.{ext}", "level", "x", "y")
-            .alias("relpath")
-        )
-        old_manifest = spark.read.parquet(manifest_dir)
-        # deletions run ON THE EXECUTORS over shared storage (VERDICT r4
-        # #8): a near-rebuild append can remove a large fraction of the
-        # corpus's files, and collecting the relpaths to unlink serially
-        # would make the driver the bottleneck. mapInPandas yields one
-        # count per batch — the driver sees only the tally.
-        removed_df = old_manifest.select("relpath").join(
-            current_files, "relpath", "left_anti"
-        )
-        n_removed = int(
-            removed_df.mapInPandas(_unlink_rows, "n long")
-            .agg(F.sum("n")).first()[0] or 0
-        )
-        _mark("reencode.removals")
-
-        # merged manifest: old rows minus removed minus rewritten, plus
-        # the incremental rows — then swap into place
-        new_manifest = (
-            old_manifest.join(current_files, "relpath", "left_semi")
-            .join(
-                spark.read.parquet(dirty_manifest_dir).select("relpath"),
-                "relpath",
-                "left_anti",
-            )
-            .unionByName(spark.read.parquet(dirty_manifest_dir))
-        ).localCheckpoint()
-        n_content = new_manifest.count()
-        new_manifest.write.mode("overwrite").parquet(manifest_dir)
-        _mark("reencode.manifest_merge")
+        with ThreadPoolExecutor(max_workers=32) as pool:
+            list(pool.map(_rm, removed))
+    _mark("reencode.removals")
+    n_content = _merge_manifest(spark, manifest_dir, dirty_manifest_dir,
+                                removed, driver_plan)
+    _mark("reencode.manifest_merge")
     walls["reencode_dirty"] = round(
         sum(v for k, v in walls.items() if k.startswith("reencode.")), 3
     )
 
-    # 7: subtrees + tileset.json. Reassemble ONLY subtrees whose
-    # bit-relevant tile rows changed (new tile key, content flag flip, or
-    # emptiness flip) — every other subtree's bytes on disk are already
-    # the union-tree bytes, so assembly cost tracks the append's dirty
-    # REGION, not the corpus tree. Appends never remove content, so no
-    # subtree file is ever deleted; the manifest is merged like content.
-    if tiles_pdf is not None:
-        # driver plan: the bit-relevant diff and the root projection are
-        # O(tiles) — numpy on the driver instead of a full-outer join +
-        # distinct + localCheckpoint job chain over a few hundred rows
-        # (same decision table as _changed_tile_keys /
-        # affected_subtree_roots; Spark twin below, parity-tested). The
-        # old tile table is no bigger than the new one: counts only grow,
-        # so every old tile key survives.
-        import pandas as pd
-
-        old_p = pd.read_parquet(
-            ckpt._stage_path("stage2_tiles"),
-            columns=["level", "x", "y", "content_available", "n_instances"],
-        )
-
-        def _proj_pdf(p: "pd.DataFrame", pre: str) -> "pd.DataFrame":
-            return pd.DataFrame({
-                "level": p["level"].astype("int64"),
-                "x": p["x"].astype("int64"),
-                "y": p["y"].astype("int64"),
-                f"{pre}c": p["content_available"].astype(bool),
-                f"{pre}h": (p["n_instances"] > 0),
-            })
-
-        m = _proj_pdf(old_p, "_o").merge(
-            _proj_pdf(tiles_pdf, "_n"), on=["level", "x", "y"], how="outer"
-        )
-        chg = m[
-            m["_oc"].isna() | m["_nc"].isna()
-            | (m["_oc"] != m["_nc"]) | (m["_oh"] != m["_nh"])
-        ]
-        s = subtree_levels
-        lv = chg["level"].to_numpy(np.int64)
-        cx = chg["x"].to_numpy(np.int64)
-        cy = chg["y"].to_numpy(np.int64)
-        # own (interior) root via the shared mapping; boundary tiles
-        # additionally feed the PARENT subtree's childSubtreeAvailability
-        # (the parent branch of subtree_tile_pairs)
-        orl, orx, ory = subtree.subtree_roots(lv, cx, cy, s)
-        bm = (lv % s == 0) & (lv > 0)
-        roots = set(zip(
-            orl.tolist(), orx.tolist(), ory.tolist()
-        )) | set(zip(
-            (lv[bm] - s).tolist(),
-            (cx[bm] >> s).tolist(),
-            (cy[bm] >> s).tolist(),
-        ))
-        n_affected_roots = len(roots)
-        affected_roots = None
-    else:
-        old_tiles = ckpt.read("stage2_tiles")
-        changed_keys = _changed_tile_keys(old_tiles, tiles)
-        affected_roots = subtree.affected_subtree_roots(
-            changed_keys, subtree_levels
-        ).localCheckpoint()
-        n_affected_roots = affected_roots.count()
+    # 7: subtrees + tileset.json. Reassemble ONLY the subtrees that read a
+    # key of the tile diff — every other subtree's bytes on disk are
+    # already the union-tree bytes, so assembly cost tracks the append's
+    # dirty REGION, not the corpus tree. Appends never remove content, so
+    # no subtree file is ever deleted; the manifest is merged like content.
+    roots = list(_changed_roots(diff, subtree_levels).itertuples(
+        index=False, name=None))
     _mark("subtrees.changed_roots")
     sub_manifest_dir = os.path.join(ckpt_root, "_sink_manifests", "subtrees")
     sub_incr_dir = os.path.join(ckpt_root, "_sink_manifests", "_subtrees_incr")
-    if tiles_pdf is not None and sinks.subtree_tiles_on_driver(
-        tiles_pdf, subtree_levels, roots=roots
-    ) is not None:
-        # driver fast path: a localized append touches a handful of
-        # subtrees — assemble their (bounded) bitstreams from the driver
-        # tiles frame and write the files with a thread pool instead of
-        # paying a tile-row shuffle + mapInPandas job; the distributed
-        # assembly below handles big affected sets (byte-parity-tested
-        # via a monkeypatched sinks._MAX_DRIVER_SUBTREE_WRITES)
-        sinks.write_subtrees_driver(
-            tiles_pdf, subtree_levels, subtrees_dir, sub_incr_dir,
-            roots=roots,
-        )
-    else:
-        if affected_roots is None:
-            affected_roots = spark.createDataFrame(
-                sorted((int(a), int(b), int(c)) for a, b, c in roots),
-                schema="root_level int, root_x bigint, root_y bigint",
-            )
-        subs_df = subtree.build_subtrees_spark(
-            tiles, subtree_levels, roots=affected_roots
-        )
-        sub_files = subs_df.select(
-            F.format_string("%d_%d_%d.subtree",
-                            "root_level", "root_x", "root_y")
-            .alias("relpath"),
-            "payload",
-        )
-        sinks.write_binary_files(sub_files, subtrees_dir,
-                                 manifest_path=sub_incr_dir)
+    sinks.write_subtrees(tiles, tiles_pdf, subtree_levels, subtrees_dir,
+                         sub_incr_dir, roots=roots)
     _mark("subtrees.assemble_write")
-    if tiles_pdf is not None:
-        # driver plan (O(subtree files) — strictly below O(tiles)): pandas
-        # merge + pyarrow write; Spark twin beyond
-        import pandas as pd
-
-        old_s = pd.read_parquet(sub_manifest_dir)
-        incr_s = pd.read_parquet(sub_incr_dir)
-        merged_s = pd.concat(
-            [old_s[~old_s["relpath"].isin(set(incr_s["relpath"]))], incr_s],
-            ignore_index=True,
-        )
-        n_subtree_files = len(merged_s)
-        _write_parquet_driver(sub_manifest_dir, merged_s, _MANIFEST_DDL)
-    else:
-        sub_incr = spark.read.parquet(sub_incr_dir)
-        merged_sub = (
-            spark.read.parquet(sub_manifest_dir)
-            .join(sub_incr.select("relpath"), "relpath", "left_anti")
-            .unionByName(sub_incr)
-        ).localCheckpoint()
-        n_subtree_files = merged_sub.count()
-        merged_sub.write.mode("overwrite").parquet(sub_manifest_dir)
+    n_subtree_files = _merge_manifest(spark, sub_manifest_dir, sub_incr_dir,
+                                      (), driver_plan)
     _mark("subtrees.manifest_merge")
     walls["subtrees"] = round(
         sum(v for k, v in walls.items() if k.startswith("subtrees.")), 3
     )
 
-    # subtreeLevels inference (reference src/Program.cs:151: level of the
-    # 2nd subtree in sorted key order, else 2) from the union tree — the
-    # level-0 root is unique, so the 2nd sorted subtree sits at the 2nd
-    # distinct root level whenever one exists.
-    if tiles_pdf is not None:
-        # O(tiles) aggregates straight off the driver frame — no jobs
-        lv = tiles_pdf.loc[tiles_pdf["n_instances"] > 0, "level"].to_numpy(
-            np.int64)
-        rls = np.unique(lv - lv % subtree_levels)[:2]
-        inferred_subtree_levels = int(rls[1]) if len(rls) > 1 else 2
-        avail_levels = int(tiles_pdf["level"].max()) + 1
-    else:
-        root_levels = (
-            tiles.filter(F.col("n_instances") > 0)
-            .select((F.col("level") - F.col("level") % subtree_levels)
-                    .alias("rl"))
-            .distinct().orderBy("rl").limit(2).collect()
-        )
-        inferred_subtree_levels = (
-            int(root_levels[1]["rl"]) if len(root_levels) > 1 else 2
-        )
-        avail_levels = (
-            tiles.agg((F.max("level") + F.lit(1)).alias("al"))
-            .collect()[0]["al"]
-        )
+    avail_levels, inferred_subtree_levels = tileset_levels(
+        delta["tmp2"], subtree_levels
+    )
     region = bounds.to_region(radians=not opts.keep_projection)
     ts_json = enc.tileset_json(
         region, opts.geometric_error, avail_levels, inferred_subtree_levels,
@@ -688,10 +482,10 @@ def incremental_append(
         "n_dirty_member_rows": n_member_rows,
         "reencode_on_driver": on_driver,
         "n_rewritten_files": n_written,
-        "n_removed_files": n_removed,
+        "n_removed_files": len(removed),
         "n_content_tiles": n_content,
         "n_subtree_files": n_subtree_files,
-        "n_dirty_subtrees": n_affected_roots,
+        "n_dirty_subtrees": len(roots),
         "available_levels": avail_levels,
         "counts_recounted": delta["recounted"],
         "n_stage3_linked_files": delta["n_linked_files"],
@@ -863,7 +657,10 @@ def _fetch_members(stage3_dir: str, by_level, boxes, opts: ExportOptions):
                 & (ds.field("x") >= x0) & (ds.field("x") <= x1)
                 & (ds.field("y") >= y0) & (ds.field("y") <= y1))
         box = term if box is None else box | term
-    table = dset.to_table(columns=cols, filter=box)
+    # one scan thread: the dirty region is a few row groups, and the
+    # threaded scan's buffers raised the driver's peak RSS (~0.9 MB on the
+    # append mix, 9/10 interleaved pairs) with no time gained
+    table = dset.to_table(columns=cols, filter=box, use_threads=False)
     keep = _dirty_mask(
         table.column("level").to_numpy(), table.column("x").to_numpy(),
         table.column("y").to_numpy(), by_level,
@@ -901,25 +698,6 @@ def _chained_fingerprint(
     return hashlib.sha256(
         f"append|{base_fp}|{batch_fp}".encode()
     ).hexdigest()
-
-
-def _flipped_content_keys(old_tiles: DataFrame, new_tiles: DataFrame) -> DataFrame:
-    """Symmetric difference of the CONTENT-tile key sets — exactly the
-    tiles whose appearance/disappearance can change any instance's
-    assignment (an instance's content matches change iff some content tile
-    covering it flipped; proven in the module docstring's delta argument
-    and byte-parity-tested)."""
-    def proj(df: DataFrame, p: str) -> DataFrame:
-        return df.filter("content_available").select(
-            "level", "x", "y", F.lit(True).alias(f"{p}present")
-        )
-
-    j = proj(old_tiles, "_o").join(
-        proj(new_tiles, "_n"), ["level", "x", "y"], "full_outer"
-    )
-    return j.filter(
-        F.col("_opresent").isNull() | F.col("_npresent").isNull()
-    ).select("level", "x", "y")
 
 
 def _stage3_file_stats(stage3_dir: str):
@@ -1039,24 +817,97 @@ def _content_keys_over_cells(
 
 #: a flipped set larger than this means the append is reshaping a large
 #: fraction of the tree: it raises IncrementalRebuildRequired, since a
-#: full run_export is then both simpler and no slower. It also bounds the
-#: driver plan's unlink set (removed files are flipped content tiles)
+#: full run_export is then both simpler and no slower. It also bounds both
+#: plans' unlink sets (removed files are flipped content tiles) and the
+#: tile diff the Spark plan collects
 _MAX_FLIPPED_FOR_DELTA = 200_000
-#: largest dirty member-row count the append re-encodes on the driver
-#: (``_reencode_dirty``); beyond it the Spark plan runs. Set at the
-#: measured crossover: synthetic stage 3 of 1000-row i3dm tiles, 4-core
-#: local[4] host, fetch + encode + files + manifest into a fresh
-#: directory, warm session, median of 3 interleaved, driver vs Spark
-#: plan (identical bytes) — 10^3 rows 0.02 vs 1.4 s, 10^4 0.11 vs 1.5 s,
-#: 10^5 1.0 vs 2.4 s, 3·10^5 3.1 vs 3.1 s, 5·10^5 5.2 vs 4.6 s, 10^6
-#: 12.1 vs 7.1 s. The driver encodes on one core, so on a cluster the
-#: crossover sits lower. Driver peak RSS over a 114 MB session: 233 MB
-#: at 10^5 rows, 442 MB at 3·10^5, 857 MB at 10^6
 _MAX_DRIVER_MEMBER_ROWS = 300_000
-#: largest cell table the append's tree descends on the driver; beyond it
-#: the tree, and with it every later tile/cell-granularity step of the
-#: append, takes its distributed Spark twin
-_MAX_DRIVER_CELLS = 4_000_000
+
+
+def _cap_flipped(n_flipped: int) -> None:
+    if n_flipped > _MAX_FLIPPED_FOR_DELTA:
+        raise IncrementalRebuildRequired(
+            f"the batch flips more than {_MAX_FLIPPED_FOR_DELTA} content "
+            "tiles: it reshapes a large part of the tree — run a full "
+            "run_export over base ∪ batch"
+        )
+
+
+def _tile_diff(pdf):
+    """Kernel: the tile diff of old and new stage-2 rows (columns level, x,
+    y, content_available, n_instances, and ``old``, the row's side), with
+    every row of a key in ``pdf``. Emits (level, x, y, was_content,
+    is_content) for each key whose subtree-relevant state — existence,
+    content flag, n_instances > 0, exactly what the subtree bitstreams
+    read — differs; a missing side is not content. ``was_content !=
+    is_content`` are the flipped tiles: an instance's content matches
+    change iff a content tile over it flipped."""
+    import pandas as pd
+
+    side = pdf[[*TILE_KEY, "content_available", "old"]].assign(
+        has=pdf["n_instances"] > 0)
+    m = side.loc[side["old"]].merge(
+        side.loc[~side["old"]], on=TILE_KEY, how="outer",
+        suffixes=("_o", "_n"), indicator=True)
+    was = m["content_available_o"].eq(True)
+    now = m["content_available_n"].eq(True)
+    changed = ((m["_merge"] != "both") | (was != now)
+               | (m["has_o"] != m["has_n"]))
+    return pd.DataFrame({
+        "level": m.loc[changed, "level"].astype("int32"),
+        "x": m.loc[changed, "x"].astype("int64"),
+        "y": m.loc[changed, "y"].astype("int64"),
+        "was_content": was[changed], "is_content": now[changed],
+    })
+
+
+def _changed_roots(diff, subtree_levels: int):
+    """Kernel: the distinct subtree roots whose bitstreams read a key of
+    the tile diff — each key's own root, plus the parent root of a
+    boundary key (:func:`subtree.root_pairs`)."""
+    import pandas as pd
+
+    rl, rx, ry, _t = subtree.root_pairs(
+        *(diff[c].to_numpy(np.int64) for c in TILE_KEY), subtree_levels)
+    return pd.DataFrame({
+        "root_level": rl.astype("int32"), "root_x": rx, "root_y": ry,
+    }).drop_duplicates(ignore_index=True)
+
+
+def _manifest_keep(pdf, excluded):
+    """Kernel: the manifest rows whose relpath is not in ``excluded``."""
+    return pdf.loc[~pdf["relpath"].isin(excluded)]
+
+
+def _merge_manifest(spark, manifest_dir: str, incr_dir: str, drop,
+                    on_driver: bool) -> int:
+    """Merge the incremental manifest at ``incr_dir`` into the manifest at
+    ``manifest_dir``: the old rows whose relpath is in neither ``drop``
+    nor the incremental manifest, plus the incremental rows. Returns the
+    merged row count.
+
+    The incremental relpaths and ``drop`` are O(dirty region) and read
+    to the driver on both plans. The old manifest is O(files): pandas
+    written with pyarrow on the driver plan, a Spark frame through the
+    same keep kernel on the Spark plan."""
+    import functools
+
+    import pandas as pd
+    import pyarrow.parquet as pq
+
+    excluded = frozenset(drop).union(
+        pq.read_table(incr_dir, columns=["relpath"])["relpath"].to_pylist())
+    keep = functools.partial(_manifest_keep, excluded=excluded)
+    if on_driver:
+        merged = pd.concat([keep(pd.read_parquet(manifest_dir)),
+                            pd.read_parquet(incr_dir)], ignore_index=True)
+        _write_parquet_driver(manifest_dir, merged, _MANIFEST_DDL)
+        return len(merged)
+    merged = map_kernel(
+        keep, read_parquet(spark, manifest_dir), sinks._MANIFEST_SCHEMA
+    ).unionByName(read_parquet(spark, incr_dir)).localCheckpoint()
+    merged.write.mode("overwrite").parquet(manifest_dir)
+    return _parquet_rows(manifest_dir)
 
 _ARROW_TYPES = {
     "int32": "int32", "int64": "int64", "bool": "bool_", "string": "string",
@@ -1115,16 +966,18 @@ def _delta_refresh(
       ``max_level``. Its counts replace the persisted ones.
 
     Everything after the tree runs once for both. The tree decides the
-    plan: within ``_MAX_DRIVER_CELLS`` it holds ``tiles_pdf`` on the
-    driver and the tiles/cells-granularity steps (counts merge, descent,
-    flipped diff, dirty set, stage-2 writes) run in pandas/numpy — the
-    only Spark jobs are the batch's deep-cell counts, the covered-row scan
-    when a tile flipped, and the stage-3 delta write; at small batch sizes
-    per-job latency, not data, dominates. Beyond it the SAME steps run as
-    cells-granularity Spark jobs (counts-merge groupBy, distributed
-    descent, full-outer flipped diff, the content-tile join over the
-    batch's cells). An empty base, or more than ``_MAX_FLIPPED_FOR_DELTA``
-    flipped tiles, raise :class:`IncrementalRebuildRequired`.
+    plan: within ``tiling._MAX_DRIVER_CELLS`` it holds ``tiles_pdf`` on
+    the driver and the tiles/cells-granularity steps (counts merge,
+    descent, stage-2 writes, tile diff, dirty set) run in pandas/numpy —
+    the only Spark jobs are the batch's deep-cell counts, the covered-row
+    scan when a tile flipped, and the stage-3 delta write; at small batch
+    sizes per-job latency, not data, dominates. Beyond it the SAME steps
+    run as Spark jobs (counts-merge groupBy, distributed descent, the
+    tile diff kernel per key partition, the content-tile join over the
+    batch's cells). An empty base, or more than
+    ``_MAX_FLIPPED_FOR_DELTA`` flipped tiles, raise
+    :class:`IncrementalRebuildRequired`. The returned ``diff`` is the
+    tile diff as pandas on both plans.
 
     Cost model at 10^12 rows (merge): batch groupBy O(batch), counts merge
     O(cells), descent O(tiles), covered scan O(files intersecting the
@@ -1161,7 +1014,7 @@ def _delta_refresh(
                 "(empty cell counts): run a full run_export over base ∪ "
                 "batch"
             )
-        if n_base_cells <= _MAX_DRIVER_CELLS:
+        if n_base_cells <= tiling._MAX_DRIVER_CELLS:
             # ONE Spark job: the batch's deep-cell counts (the caller
             # already applied opts.query to new_inst). Base counts come
             # straight off the checkpoint parquet via pyarrow — no job.
@@ -1204,57 +1057,42 @@ def _delta_refresh(
         tree = tiling.build_tile_tree(
             read_parquet(spark, tmp0), bounds, opts,
             n_estimate=_parquet_rows(tmp0),
-            driver_threshold=_MAX_DRIVER_CELLS,
         )
         batch_counts = tiling.deep_counts(new_inst, bounds, tree.deep_level)
-        if tree.tiles_pdf is not None:
-            batch_pdf = batch_counts.toPandas()
     deep_level = tree.deep_level
     _dmark("counts_and_tree")
 
-    # flipped content keys (tiles granularity): pandas symmetric diff on
-    # the driver plan, full-outer anti-match + bounded collect on the
-    # Spark plan (the cap proves the collect is small)
+    # stage-2 refresh writes and the tile diff (_tile_diff: the keys whose
+    # subtree-relevant state changed, with the content flag before and
+    # after; was != is are the flipped tiles). On the driver plan the tile
+    # table is written with pyarrow (zero Spark jobs) and the kernel runs
+    # over the old tiles read with pyarrow and the tree's frame. On the
+    # Spark plan the table is written by Spark and the same kernel runs
+    # per key partition; the flipped count is capped before the diff is
+    # collected, and within the cap it is O(flipped) rows: every changed
+    # key that did not flip is a tile the batch split or its child.
+    cols = ["level", "x", "y", "content_available", "n_instances"]
+    old2 = ckpt._stage_path("stage2_tiles")
     if tree.tiles_pdf is not None:
-        old_cpdf = pd.read_parquet(
-            ckpt._stage_path("stage2_tiles"),
-            columns=["level", "x", "y", "content_available"],
-        )
-        old_keys = set(map(tuple, old_cpdf.loc[
-            old_cpdf.content_available, ["level", "x", "y"]
-        ].to_numpy()))
-        new_keys = set(map(tuple, tree.tiles_pdf.loc[
-            tree.tiles_pdf.content_available, ["level", "x", "y"]
-        ].to_numpy()))
-        flipped = [
-            (int(l), int(x), int(y))
-            for (l, x, y) in old_keys.symmetric_difference(new_keys)
-        ]
-    else:
-        flipped = [
-            (int(r["level"]), int(r["x"]), int(r["y"]))
-            for r in _flipped_content_keys(
-                ckpt.read("stage2_tiles"), tree.tiles
-            ).limit(_MAX_FLIPPED_FOR_DELTA + 1).collect()
-        ]
-    if len(flipped) > _MAX_FLIPPED_FOR_DELTA:
-        raise IncrementalRebuildRequired(
-            f"the batch flips more than {_MAX_FLIPPED_FOR_DELTA} content "
-            "tiles: it reshapes a large part of the tree — run a full "
-            "run_export over base ∪ batch"
-        )
-    _dmark("flipped_keys")
-
-    # stage-2 refresh writes: tiles and cell counts are O(tiles)/O(cells)
-    # frames already sitting in driver memory on the driver plan — write
-    # them with pyarrow directly (zero Spark jobs) instead of paying two
-    # full job round-trips for a few hundred rows; the Spark plan (and a
-    # recount's counts) keep the Spark writes
-    if tree.tiles_pdf is not None:
-        tmp2 = ckpt._stage_path("stage2_tiles") + "._incr"
+        tmp2 = old2 + "._incr"
         _write_parquet_driver(tmp2, tree.tiles_pdf, _TILES_DDL)
+        both = pd.concat([
+            pd.read_parquet(old2, columns=cols).assign(old=True),
+            tree.tiles_pdf[cols].assign(old=False),
+        ], ignore_index=True)
     else:
         tmp2 = _stage_to_tmp(ckpt, "stage2_tiles", tree.tiles)
+        both = read_parquet(spark, old2).select(
+            *cols, F.lit(True).alias("old")
+        ).unionByName(read_parquet(spark, tmp2).select(
+            *cols, F.lit(False).alias("old")))
+    diff = map_kernel(_tile_diff, both, "level int, x bigint, y bigint, "
+                      "was_content boolean, is_content boolean", by=TILE_KEY)
+    if not isinstance(diff, pd.DataFrame):
+        diff = diff.localCheckpoint()
+        _cap_flipped(diff.filter("was_content != is_content")
+                     .limit(_MAX_FLIPPED_FOR_DELTA + 1).count())
+        diff = diff.toPandas()
     if counts_pdf is not None:
         tmp_counts = ckpt._stage_path("stage2_cellcounts") + "._incr"
         _write_parquet_driver(tmp_counts, counts_pdf, _COUNTS_DDL)
@@ -1267,6 +1105,10 @@ def _delta_refresh(
         )
     tiles = read_parquet(spark, tmp2)
     _dmark("write_stage2")
+    fl = diff.loc[diff["was_content"] != diff["is_content"]]
+    _cap_flipped(len(fl))
+    flipped = list(zip(*(fl[c].astype(int).tolist() for c in TILE_KEY)))
+    _dmark("flipped_keys")
 
     stage3_dir = ckpt._stage_path("stage3_assigned")
     stats = _stage3_file_stats(stage3_dir)
@@ -1322,7 +1164,8 @@ def _delta_refresh(
     # the assignment's content-tile join over the batch's cells.
     if tree.tiles_pdf is not None:
         entered = _content_keys_over_cells(
-            batch_pdf, tree.tiles_pdf, deep_level
+            batch_counts.toPandas() if batch_pdf is None else batch_pdf,
+            tree.tiles_pdf, deep_level,
         )
     else:
         entered = {
@@ -1362,7 +1205,7 @@ def _delta_refresh(
 
     _dmark("stage3_link_write")
     return {
-        "tree": tree, "tiles": tiles, "tmp2": tmp2, "tmp3": tmp3,
+        "tree": tree, "tiles": tiles, "diff": diff, "tmp2": tmp2, "tmp3": tmp3,
         "tmp_counts": tmp_counts, "dirty_keys": dirty_keys, "recounted": recounted,
         "n_linked_files": len(clean_files),
         "n_rewritten_source_files": len(dirty_files),

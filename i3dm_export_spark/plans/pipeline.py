@@ -11,7 +11,7 @@
       -> subtree sink       subtrees/*.subtree + its manifest: assembled
                             and written on the driver from the driver-held
                             tile table under the budgets
-                            (sinks.subtree_tiles_on_driver), else a tile-row
+                            (sinks.write_subtrees), else a tile-row
                             shuffle piped into the executor writer
       -> tileset.json
 
@@ -39,7 +39,6 @@ from __future__ import annotations
 
 import os
 
-import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F, types as T
 
@@ -47,10 +46,10 @@ from ..config import Bounds, ExportOptions
 from ..functions import geodesy as geo
 from ..functions.cells import s2_cell_id
 from ..operators import encode as enc
-from ..operators import extent, subtree, tiling
+from ..operators import extent, tiling
 from ..operators.skew import cluster_tiles_salted
 from . import sinks
-from .checkpoint import CheckpointManager
+from .checkpoint import CheckpointManager, _parquet_paths
 
 INSTANCE_COLS = [
     "url", "text_fp", "lon", "lat", "z", "scale", "yaw", "pitch", "roll",
@@ -168,6 +167,28 @@ def _is_bare_scan(df: DataFrame) -> bool:
         return walk(plan)
     except Exception:
         return False
+
+
+def tileset_levels(stage2_dir: str, subtree_levels: int) -> tuple[int, int]:
+    """tileset.json's (availableLevels, subtreeLevels) from one number: the
+    tile table's max level L, read off the stage-2 parquet footers' column
+    stats (both of its writers record them) — no Spark job, on both plans
+    of the export and the append.
+
+    availableLevels is L + 1 (reference src/Program.cs:152). subtreeLevels
+    is the level of the 2nd subtree file in sorted key order, else 2
+    (src/Program.cs:151): every child set of a split tile holds a
+    non-empty tile, so level L holds content and so does its ancestor at
+    ``subtree_levels`` — that level when L >= ``subtree_levels``, else 2."""
+    import pyarrow.parquet as pq
+
+    top = 0
+    for path in _parquet_paths(stage2_dir):
+        md = pq.read_metadata(path)
+        col = md.schema.names.index("level")
+        for rg in range(md.num_row_groups):
+            top = max(top, md.row_group(rg).column(col).statistics.max)
+    return top + 1, (subtree_levels if top >= subtree_levels else 2)
 
 
 def run_export(
@@ -376,53 +397,18 @@ def run_export(
     else:
         n_content = payloads.count()
 
-    # T4 subtree files, decided once (sinks.subtree_tiles_on_driver): from
-    # the driver-held tile table while it and its root set fit the
-    # budgets, else assembled in executors (one tile-row shuffle) and piped
-    # into the executor sink. Either way subtreeLevels (reference
-    # src/Program.cs:151: level of the 2nd subtree file in sorted key
-    # order, else 2) comes from the subtree set just written: the level-0
-    # root is unique, so that is its 2nd distinct root level.
-    sub_manifest = os.path.join(ckpt.root, "_sink_manifests", "subtrees")
-    tiles_pdf = sinks.subtree_tiles_on_driver(
-        tree.tiles_pdf, subtree_levels,
+    # T4 subtree files, decided once (sinks.write_subtrees): from the
+    # driver-held tile table while it and its root set fit the budgets,
+    # else assembled in executors (one tile-row shuffle) and piped into
+    # the executor sink.
+    n_subtree_files = sinks.write_subtrees(
+        tree.tiles, tree.tiles_pdf, subtree_levels, subtrees_dir,
+        os.path.join(ckpt.root, "_sink_manifests", "subtrees"),
         stage_dir=ckpt._stage_path("stage2_tiles"),
     )
-    if tiles_pdf is not None:
-        root_levels = sinks.write_subtrees_driver(
-            tiles_pdf, subtree_levels, subtrees_dir, sub_manifest
-        )
-        n_subtree_files = len(root_levels)
-    else:
-        import pyarrow as pa
-        import pyarrow.compute as pc
-        import pyarrow.parquet as pq
-
-        sub_files = subtree.build_subtrees_spark(
-            tree.tiles, subtree_levels
-        ).select(
-            F.format_string("%d_%d_%d.subtree", "root_level", "root_x",
-                            "root_y").alias("relpath"),
-            "payload",
-        )
-        n_subtree_files = sinks.write_binary_files(
-            sub_files, subtrees_dir, manifest_path=sub_manifest,
-        )
-        relpaths = pq.read_table(sub_manifest, columns=["relpath"])["relpath"]
-        root_levels = pc.list_element(
-            pc.split_pattern(relpaths, "_", max_splits=1), 0
-        ).cast(pa.int64()).to_numpy()
-    rls = np.unique(np.asarray(root_levels, np.int64))[:2]
-    inferred_subtree_levels = int(rls[1]) if len(rls) > 1 else 2
-    if tiles_pdf is None:
-        tiles_pdf = tree.tiles_pdf
-    if tiles_pdf is not None:
-        avail_levels = int(tiles_pdf["level"].max()) + 1
-    else:
-        avail_levels = (
-            tree.tiles.agg((F.max("level") + F.lit(1)).alias("al"))
-            .collect()[0]["al"]
-        )
+    avail_levels, inferred_subtree_levels = tileset_levels(
+        ckpt._stage_path("stage2_tiles"), subtree_levels
+    )
     region = bounds.to_region(radians=not opts.keep_projection)
     ts_json = enc.tileset_json(
         region, opts.geometric_error, avail_levels, inferred_subtree_levels,

@@ -12,11 +12,10 @@ per file.
 
 Subtree files are assembled from the tile table, which is O(tiles) and,
 under the tile budget, already on the driver. While their root set fits
-``_MAX_DRIVER_SUBTREE_WRITES`` (:func:`subtree_tiles_on_driver`, the one
-driver-vs-Spark rule of the export and the append), the driver assembles
-and writes them (:func:`write_subtrees_driver`, through
-:func:`write_binary_files_driver`) instead of a tile-row shuffle plus a
-writer job.
+``_MAX_DRIVER_SUBTREE_WRITES``, :func:`write_subtrees` (the one
+driver-vs-Spark rule of the export and the append) assembles and writes
+them on the driver, through :func:`write_binary_files_driver`, instead of
+a tile-row shuffle plus a writer job.
 
 Properties (both writers):
 * **Idempotent / retry-safe**: files land via write-to-temp + atomic
@@ -41,7 +40,7 @@ from pyspark.sql import DataFrame
 _MANIFEST_SCHEMA = "relpath string, n_bytes bigint, content_md5 string"
 
 #: largest subtree-root set assembled and written on the driver
-#: (:func:`subtree_tiles_on_driver`); beyond it ``build_subtrees_spark``
+#: (:func:`write_subtrees`); beyond it ``build_subtrees_spark``
 #: pipes into :func:`write_binary_files`. Set from the measured crossover:
 #: full quadtrees at ``subtree_levels=2`` on a 4-core local[4] host,
 #: assembly plus files plus manifest into a fresh directory, median of 3,
@@ -148,41 +147,50 @@ def write_binary_files_driver(files, root_dir: str,
     return len(rows)
 
 
-def write_subtrees_driver(tiles_pdf, subtree_levels: int, root_dir: str,
-                          manifest_path: str, roots=None) -> list[int]:
+def write_subtrees(tiles, tiles_pdf, subtree_levels: int, root_dir: str,
+                   manifest_path: str, roots=None,
+                   stage_dir: str | None = None) -> int:
     """Assemble the subtree files of ``roots`` (every root with content
-    when None) from a driver tile table and write them through
-    :func:`write_binary_files_driver`. Returns their root levels in
-    sorted root order."""
-    from ..operators.subtree import build_subtrees_pandas_for_roots
+    when None) and write them under ``root_dir`` with their manifest at
+    ``manifest_path``; returns the number of files.
 
-    subs = build_subtrees_pandas_for_roots(tiles_pdf, roots, subtree_levels)
-    write_binary_files_driver(
-        [(f"{rl}_{rx}_{ry}.subtree", payload)
-         for rl, rx, ry, payload in subs],
-        root_dir, manifest_path,
-    )
-    return [rl for rl, _x, _y, _p in subs]
+    The one driver-vs-Spark rule for subtrees, shared by the export and
+    the append: the driver assembles them
+    (``subtree.build_subtrees_pandas_for_roots``) and writes them
+    (:func:`write_binary_files_driver`) when it holds the tile table —
+    ``tiles_pdf``, or failing that ``stage_dir``'s footers count at most
+    ``checkpoint._MAX_DRIVER_TILES`` rows (read with pyarrow) — and the
+    root set (``roots``, else every root with content) fits
+    ``_MAX_DRIVER_SUBTREE_WRITES``. Otherwise the same assembly core runs
+    in executors (``subtree.build_subtrees_spark`` over the Spark frame
+    ``tiles``) and pipes into :func:`write_binary_files`."""
+    from pyspark.sql import functions as F
 
-
-def subtree_tiles_on_driver(tiles_pdf, subtree_levels: int, roots=None,
-                            stage_dir: str | None = None):
-    """The driver-vs-Spark rule for subtree assembly and writes, shared by
-    the export and the append: the tile table to assemble from on the
-    driver, or None for ``build_subtrees_spark``.
-
-    The table is on the driver when the caller holds it (``tiles_pdf``)
-    or, failing that, when ``stage_dir``'s footers count at most
-    ``checkpoint._MAX_DRIVER_TILES`` rows (read with pyarrow). The root
-    set — ``roots``, else every root with content — must fit
-    ``_MAX_DRIVER_SUBTREE_WRITES``."""
-    from ..operators.subtree import n_subtree_roots
+    from ..operators import subtree
     from . import checkpoint
 
+    s = subtree_levels
     if tiles_pdf is None and stage_dir is not None:
         tiles_pdf = checkpoint.read_driver_table(stage_dir)
-    if tiles_pdf is None:
-        return None
-    n_roots = (len(roots) if roots is not None
-               else n_subtree_roots(tiles_pdf, subtree_levels))
-    return tiles_pdf if n_roots <= _MAX_DRIVER_SUBTREE_WRITES else None
+    if tiles_pdf is not None and (
+        len(roots) if roots is not None
+        else subtree.n_subtree_roots(tiles_pdf, s)
+    ) <= _MAX_DRIVER_SUBTREE_WRITES:
+        return write_binary_files_driver(
+            [(f"{rl}_{rx}_{ry}.subtree", payload) for rl, rx, ry, payload in
+             subtree.build_subtrees_pandas_for_roots(tiles_pdf, roots, s)],
+            root_dir, manifest_path,
+        )
+    if roots is not None:
+        roots = tiles.sparkSession.createDataFrame(
+            sorted(roots),
+            schema="root_level int, root_x bigint, root_y bigint",
+        )
+    return write_binary_files(
+        subtree.build_subtrees_spark(tiles, s, roots=roots).select(
+            F.format_string("%d_%d_%d.subtree",
+                            "root_level", "root_x", "root_y").alias("relpath"),
+            "payload",
+        ),
+        root_dir, manifest_path=manifest_path,
+    )

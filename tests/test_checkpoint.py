@@ -41,6 +41,12 @@ EXPORT_RERUN_JOBS_PINNED = 11
 #: dirty tile is fetched, encoded and written on the driver: neither
 #: launches a job
 APPEND_JOBS_PINNED = 15
+#: Spark jobs of the same append on the Spark plan
+#: (``tiling._MAX_DRIVER_CELLS`` = 0, set after the export): the
+#: distributed counts merge and per-level descent, the stage-2 writes,
+#: the tile diff kernel with its cap and collect, the Spark dirty set,
+#: the Spark re-encode and the manifest merges through the keep kernel
+APPEND_SPARK_PLAN_JOBS_PINNED = 71
 
 
 def _count_jobs(spark, fn):
@@ -140,6 +146,26 @@ class TestJobCounts:
         assert n_jobs <= APPEND_JOBS_PINNED, (
             f"append ran {n_jobs} Spark jobs, pinned at "
             f"{APPEND_JOBS_PINNED}")
+
+    def test_small_append_spark_plan_is_pinned(self, spark, tmp_path,
+                                               monkeypatch):
+        from i3dm_export_spark.operators import tiling
+        from i3dm_export_spark.plans.incremental import incremental_append
+        from tests.test_incremental import copies_in_smallest_tile
+
+        out = str(tmp_path / "exp")
+        _small_export(spark, out)
+        base = pages_df(spark, 500, scenario="A")
+        batch = copies_in_smallest_tile(spark, base, out).localCheckpoint()
+        monkeypatch.setattr(tiling, "_MAX_DRIVER_CELLS", 0)
+        summary, n_jobs = _count_jobs(
+            spark, lambda: incremental_append(batch, out))
+        assert summary["counts_recounted"] is False
+        assert summary["n_dirty_tiles"] == 1
+        assert summary["reencode_on_driver"] is False
+        assert n_jobs <= APPEND_SPARK_PLAN_JOBS_PINNED, (
+            f"Spark-plan append ran {n_jobs} Spark jobs, pinned at "
+            f"{APPEND_SPARK_PLAN_JOBS_PINNED}")
 
 
 class TestLineageContract:

@@ -417,24 +417,6 @@ class TestCliAppend:
         assert files(out_full, "subtrees") == files(out_incr, "subtrees")
 
 
-class TestIncrementalClusteredParity:
-    def test_append_matches_full_rebuild_with_clustering(self, spark, tmp_path):
-        """The LOD-reduce path (seeded per-tile k-means + salting) is a
-        deterministic function of each tile's member set, so dirty-tile
-        re-encode under use_clustering must still match a full rebuild."""
-        opts = ExportOptions(max_features_per_tile=40, max_level=8,
-                             use_i3dm=True, use_clustering=True)
-        base, batch, full = _split(spark, 700, 600)
-
-        out_full = str(tmp_path / "full")
-        run_export(full, opts, out_full, bounds=BB)
-        out_incr = str(tmp_path / "incr")
-        run_export(base, opts, out_incr, bounds=BB)
-        incremental_append(batch, out_incr)
-
-        assert _tree_files(out_full) == _tree_files(out_incr)
-
-
 class TestIncrementalGpuParity:
     def test_append_matches_full_rebuild_gpu_glb(self, spark, tmp_path):
         """GPU-glb payloads (EXT_mesh_gpu_instancing + binary property
@@ -520,21 +502,22 @@ class TestDeltaPath:
         assert _tree_files(out_full) == _tree_files(out_incr)
 
     def test_distributed_twin_byte_parity(self, spark, tmp_path, monkeypatch):
-        """Beyond _MAX_DRIVER_CELLS the tree descends in Spark and every
-        later tile-granularity step takes its Spark twin (distributed
-        counts merge and descent, full-outer flipped diff, Spark manifest
-        merges and changed-root diff, executor-side unlinks). Forcing the
-        budget to 0 routes the whole append through them — bytes must
-        still match a full rebuild, and the split's removed tile files
-        must be gone."""
-        from i3dm_export_spark.plans import incremental as incr
+        """Beyond tiling._MAX_DRIVER_CELLS the tree descends in Spark and
+        every later tile-granularity step takes its Spark plan
+        (distributed counts merge and descent, the tile diff kernel per
+        key partition, Spark manifest merges through the keep kernel).
+        Forcing the budget to 0 routes the whole append through them —
+        bytes must still match a full rebuild, and the split's removed
+        tile files must be gone."""
+        from i3dm_export_spark.operators import tiling
 
-        monkeypatch.setattr(incr, "_MAX_DRIVER_CELLS", 0)
         base, batch, full = _split(spark, 900, 700)
         out_full = str(tmp_path / "full")
         run_export(full, OPTS, out_full, bounds=BB)
         out_incr = str(tmp_path / "incr")
         run_export(base, OPTS, out_incr, bounds=BB)
+        # after the exports: only the append takes the Spark plan
+        monkeypatch.setattr(tiling, "_MAX_DRIVER_CELLS", 0)
         s = incremental_append(batch, out_incr)
         assert s["counts_recounted"] is False
         assert s["n_removed_files"] > 0
@@ -555,21 +538,6 @@ class TestDeltaPath:
         run_export(full, OPTS, out_full, bounds=BB)
         out_incr = str(tmp_path / "incr")
         run_export(base, OPTS, out_incr, bounds=BB)
-        s = incremental_append(batch, out_incr)
-        assert s["counts_recounted"] is False
-        assert _tree_files(out_full) == _tree_files(out_incr)
-
-    def test_delta_engages_under_clustering(self, spark, tmp_path):
-        """Clustering assigns an instance to its leaf AND every over-full
-        ancestor (multi-row stage-3) — the covered-row dedup inside the
-        delta refresh is what keeps parity here."""
-        opts = ExportOptions(max_features_per_tile=40, max_level=8,
-                             use_i3dm=True, use_clustering=True)
-        base, batch, full = _split(spark, 700, 600)
-        out_full = str(tmp_path / "full")
-        run_export(full, opts, out_full, bounds=BB)
-        out_incr = str(tmp_path / "incr")
-        run_export(base, opts, out_incr, bounds=BB)
         s = incremental_append(batch, out_incr)
         assert s["counts_recounted"] is False
         assert _tree_files(out_full) == _tree_files(out_incr)
@@ -681,7 +649,7 @@ class TestExactDirtySet:
     deep-cell counts and the flipped content tiles. It must equal the
     tiles whose member url set changed in stage 3 (the oracle, read with
     pandas before and after), on the driver twin and on the cells twin
-    (``_MAX_DRIVER_CELLS = 0``), with byte parity against the
+    (``tiling._MAX_DRIVER_CELLS = 0``), with byte parity against the
     from-scratch union export."""
 
     @pytest.mark.parametrize("twin", ["driver", "cells"])
@@ -694,10 +662,10 @@ class TestExactDirtySet:
 
         import pandas as pd
 
-        from i3dm_export_spark.plans import incremental as incr
+        from i3dm_export_spark.operators import tiling
 
         if twin == "cells":
-            monkeypatch.setattr(incr, "_MAX_DRIVER_CELLS", 0)
+            monkeypatch.setattr(tiling, "_MAX_DRIVER_CELLS", 0)
         base_out, batch, full_out, opts = oracle_cases[case]
         out = str(tmp_path / "incr")
         shutil.copytree(base_out, out)
@@ -744,6 +712,113 @@ class TestExactDirtySet:
             # a moved url holding >= 2 stage-3 rows, whose rows a url-keyed
             # join would pair crosswise
             assert any(len(url_before[u]) >= 2 for u in moved)
+
+    def test_split_bookkeeping_equal_on_both_plans(
+        self, spark, tmp_path, monkeypatch, oracle_cases
+    ):
+        """The removals, the changed subtree roots, both manifest merges
+        and the tileset levels come from one kernel each on both plans:
+        their counts agree on the split case, which removes files."""
+        import shutil
+
+        from i3dm_export_spark.operators import tiling
+
+        base_out, batch, _full, opts = oracle_cases["split"]
+        keys = ("n_removed_files", "n_dirty_subtrees", "n_content_tiles",
+                "n_subtree_files", "available_levels")
+        got = {}
+        for plan, budget in (("driver", tiling._MAX_DRIVER_CELLS),
+                             ("spark", 0)):
+            monkeypatch.setattr(tiling, "_MAX_DRIVER_CELLS", budget)
+            out = str(tmp_path / plan)
+            shutil.copytree(base_out, out)
+            s = incremental_append(batch, out, opts=opts)
+            got[plan] = {k: s[k] for k in keys}
+        assert got["driver"]["n_removed_files"] > 0
+        assert got["driver"] == got["spark"]
+
+
+def _kernel_frames(empty):
+    """Old and new stage-2 rows (subtree_levels 2) for the kernel parity
+    test: the level-1 tile (1, 0, 0) splits — it flips out of content —
+    and its four children appear at level 2, a subtree-boundary level, so
+    each feeds its own root and the parent root (0, 0, 0)."""
+    import pandas as pd
+
+    def rows(tiles, old):
+        return [(lv, x, y, c, n, old) for lv, x, y, c, n in tiles]
+
+    old = [(0, 0, 0, False, 100), (1, 0, 0, True, 50), (1, 1, 0, True, 50),
+           (1, 0, 1, False, 0), (1, 1, 1, False, 0)]
+    new = [(0, 0, 0, False, 130), (1, 0, 0, False, 80), (1, 1, 0, True, 50),
+           (1, 0, 1, False, 0), (1, 1, 1, False, 0),
+           (2, 0, 0, True, 40), (2, 1, 0, True, 40), (2, 0, 1, False, 0),
+           (2, 1, 1, False, 0)]
+    tiles = pd.DataFrame(
+        rows(old, True) + rows(new, False),
+        columns=["level", "x", "y", "content_available", "n_instances",
+                 "old"],
+    ).astype({"level": "int32"})
+    manifest = pd.DataFrame({
+        "relpath": [f"{lv}_{x}_{y}.i3dm" for lv, x, y, _c, _n in old],
+        "n_bytes": range(len(old)), "content_md5": "0" * 32,
+    })
+    if empty:
+        return tiles.iloc[:0], manifest.iloc[:0]
+    return tiles, manifest
+
+
+class TestKernelParity:
+    """Each append bookkeeping kernel gives the same rows called on a
+    pandas frame (the driver plan) as through ``packaging.map_kernel`` on
+    a Spark frame of the same rows (the Spark plan), the way pyspark's own
+    grouped-map tests compare ``apply`` with the pandas function."""
+
+    @pytest.mark.parametrize("empty", [False, True])
+    def test_same_rows_on_both_plans(self, spark, empty):
+        import functools
+
+        from i3dm_export_spark.packaging import map_kernel
+        from i3dm_export_spark.plans import incremental as incr
+        from i3dm_export_spark.plans.sinks import _MANIFEST_SCHEMA
+
+        tiles, manifest = _kernel_frames(empty)
+        diff_schema = ("level int, x bigint, y bigint, "
+                       "was_content boolean, is_content boolean")
+        cases = (
+            (incr._tile_diff, tiles,
+             "level int, x bigint, y bigint, content_available boolean, "
+             "n_instances bigint, old boolean", diff_schema, incr.TILE_KEY),
+            (functools.partial(incr._changed_roots, subtree_levels=2),
+             incr._tile_diff(tiles), diff_schema,
+             "root_level int, root_x bigint, root_y bigint", None),
+            (functools.partial(incr._manifest_keep,
+                               excluded=frozenset({"1_0_0.i3dm"})),
+             manifest, _MANIFEST_SCHEMA, _MANIFEST_SCHEMA, None),
+        )
+        for kernel, pdf, in_schema, out_schema, by in cases:
+            on_driver = map_kernel(kernel, pdf, out_schema, by=by)
+            on_spark = map_kernel(
+                kernel, spark.createDataFrame(pdf, in_schema).repartition(3),
+                out_schema, by=by,
+            ).toPandas()
+            assert list(on_spark.columns) == list(on_driver.columns)
+            rows = sorted(on_driver.itertuples(index=False, name=None))
+            assert len(set(rows)) == len(rows)
+            # the roots kernel is distinct within its input: the Spark
+            # plan's partitions may repeat a root, so compare as sets
+            assert rows == sorted(
+                set(on_spark.itertuples(index=False, name=None)))
+            assert len(rows) == 0 if empty else len(rows) > 0
+
+        if not empty:
+            diff = incr._tile_diff(tiles)
+            flipped = diff.loc[diff["was_content"] != diff["is_content"]]
+            assert sorted(zip(flipped["level"], flipped["x"], flipped["y"])) \
+                == [(1, 0, 0), (2, 0, 0), (2, 1, 0)]
+            roots = incr._changed_roots(diff, 2)
+            assert sorted(roots.itertuples(index=False, name=None)) == [
+                (0, 0, 0), (2, 0, 0), (2, 0, 1), (2, 1, 0), (2, 1, 1)]
 
 
 @pytest.fixture(scope="module")
@@ -796,7 +871,7 @@ class TestCountsRecount:
     persisted ones, or recounted from stage 0 when a merged cell
     overflows below ``max_level``. Either way the bytes equal the
     from-scratch union export, on the driver plan and on the Spark plan
-    (``_MAX_DRIVER_CELLS = 0``)."""
+    (``tiling._MAX_DRIVER_CELLS = 0``)."""
 
     @pytest.mark.parametrize("twin", ["driver", "spark"])
     def test_overflow_recounts_then_merges(
@@ -804,10 +879,10 @@ class TestCountsRecount:
     ):
         import shutil
 
-        from i3dm_export_spark.plans import incremental as incr
+        from i3dm_export_spark.operators import tiling
 
         if twin == "spark":
-            monkeypatch.setattr(incr, "_MAX_DRIVER_CELLS", 0)
+            monkeypatch.setattr(tiling, "_MAX_DRIVER_CELLS", 0)
         base_out, over, full1, follow, full2, opts = overflow_case
         out = str(tmp_path / "incr")
         shutil.copytree(base_out, out)
@@ -950,9 +1025,14 @@ class TestReencodePlans:
         out = str(tmp_path / "incr")
         shutil.copytree(base_out, out)
 
-        s = incremental_append(batch, out, opts=opts,
-                               model_glbs=_model_glbs() if glbs else None)
+        # clustered_hot also stands for the former clustered parity and
+        # clustered delta tests (same opts and split): its append reads
+        # the recorded opts, as theirs did
+        s = incremental_append(
+            batch, out, opts=None if case == "clustered_hot" else opts,
+            model_glbs=_model_glbs() if glbs else None)
 
+        assert s["counts_recounted"] is False
         assert s["reencode_on_driver"] is (plan == "driver" and driver_ok)
         assert s["n_dirty_tiles"] > 0
         tiles = pd.read_parquet(

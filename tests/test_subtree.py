@@ -105,8 +105,6 @@ class TestBuildSubtrees:
         tile_b, content_b, child_b, data = subs[(0, 0, 0)]
         j, _ = subtree.parse_subtree(data)
         assert j["buffers"][0]["byteLength"] > 0
-        # availableLevels per reference src/Program.cs:152
-        assert subtree.available_levels(tiles_pdf) == tiles_pdf["level"].max() + 1
 
 
 class TestRootSubtreeContentBits:
@@ -318,3 +316,50 @@ class TestDriverKernelAtScale:
                 assert payload == spk[(rl, rx, ry)]
         assert len(subtree.build_subtrees_pandas_for_roots(
             tiles_pdf, None, subtree_levels=2)) > 1000
+
+
+class TestTilesetLevels:
+    def test_one_number_rule_on_random_skewed_trees(self, tmp_path):
+        """tileset.json's levels from the tile table's max level L alone
+        (``pipeline.tileset_levels``, read off the parquet footers) agree
+        with the two rules it replaced on random skewed trees: the
+        append's (2nd distinct root level of the tiles with content) and
+        the export's (2nd distinct root level of the subtree files
+        written), for subtree depths 1-4 with clustering on and off."""
+        from i3dm_export_spark.operators import tiling
+        from i3dm_export_spark.plans import incremental
+        from i3dm_export_spark.plans.pipeline import tileset_levels
+
+        rng = np.random.default_rng(11)
+        path = str(tmp_path / "tiles")
+        for i in range(240):
+            s = int(rng.integers(1, 5))
+            clustering = bool(i % 2)
+            deep = int(rng.integers(1, 9))
+            side = 1 << deep
+            n = int(rng.integers(1, 400))
+            # skew: most points in one small corner cluster
+            hot = rng.random(n) < rng.random()
+            xs = np.where(hot, rng.integers(0, max(side // 8, 1), n),
+                          rng.integers(0, side, n))
+            ys = np.where(hot, rng.integers(0, max(side // 8, 1), n),
+                          rng.integers(0, side, n))
+            cells, cnt = np.unique(np.stack([xs, ys], 1), axis=0,
+                                   return_counts=True)
+            tiles = tiling.descend_counts_pandas(
+                cells[:, 0], cells[:, 1], cnt, deep,
+                int(rng.integers(1, 60)), clustering,
+                int(rng.integers(1, deep + 1)),
+            )
+            lv = tiles.loc[tiles["n_instances"] > 0, "level"].to_numpy(np.int64)
+            rls = np.unique(lv - lv % s)[:2]
+            append_rule = int(rls[1]) if len(rls) > 1 else 2
+            written = np.unique([rl for rl, _x, _y, _p in
+                                 subtree.build_subtrees_pandas_for_roots(
+                                     tiles, None, s)])[:2]
+            export_rule = int(written[1]) if len(written) > 1 else 2
+            incremental._write_parquet_driver(path, tiles,
+                                              incremental._TILES_DDL)
+            assert tileset_levels(path, s) == (
+                int(tiles["level"].max()) + 1, append_rule), (i, s)
+            assert export_rule == append_rule, (i, s)

@@ -148,12 +148,15 @@ class TestDriverDescentParity:
         got_slow = _tree_to_dict(tiling.collect_tiles(slow))
         assert got_fast == got_slow
 
-    def test_threshold_routes_to_distributed(self, spark, fixture_pages, fixture_bounds):
+    def test_threshold_routes_to_distributed(self, spark, fixture_pages, fixture_bounds,
+                                             monkeypatch):
         opts = ExportOptions(max_features_per_tile=100, max_level=10)
         df = spark.createDataFrame(fixture_pages)
-        fast = tiling._build_tile_tree_at(df, fixture_bounds, opts, 10, driver_threshold=1)
-        # threshold=1 forces the distributed path; results must still match
         slow = tiling._build_tile_tree_at(df, fixture_bounds, opts, 10)
+        # a 1-cell budget forces the distributed path; results must still match
+        monkeypatch.setattr(tiling, "_MAX_DRIVER_CELLS", 1)
+        fast = tiling._build_tile_tree_at(df, fixture_bounds, opts, 10)
+        assert fast.tiles_pdf is None
         assert _tree_to_dict(tiling.collect_tiles(fast)) == _tree_to_dict(
             tiling.collect_tiles(slow)
         )
