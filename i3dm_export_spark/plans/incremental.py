@@ -893,14 +893,13 @@ def _merge_manifest(spark, manifest_dir: str, incr_dir: str, drop,
     import functools
 
     import pandas as pd
-    import pyarrow.parquet as pq
 
-    excluded = frozenset(drop).union(
-        pq.read_table(incr_dir, columns=["relpath"])["relpath"].to_pylist())
-    keep = functools.partial(_manifest_keep, excluded=excluded)
+    incr = pd.read_parquet(incr_dir)
+    keep = functools.partial(_manifest_keep, excluded=frozenset(drop).union(
+        incr["relpath"]))
     if on_driver:
-        merged = pd.concat([keep(pd.read_parquet(manifest_dir)),
-                            pd.read_parquet(incr_dir)], ignore_index=True)
+        merged = pd.concat([keep(pd.read_parquet(manifest_dir)), incr],
+                           ignore_index=True)
         _write_parquet_driver(manifest_dir, merged, _MANIFEST_DDL)
         return len(merged)
     merged = map_kernel(
@@ -908,6 +907,7 @@ def _merge_manifest(spark, manifest_dir: str, incr_dir: str, drop,
     ).unionByName(read_parquet(spark, incr_dir)).localCheckpoint()
     merged.write.mode("overwrite").parquet(manifest_dir)
     return _parquet_rows(manifest_dir)
+
 
 _ARROW_TYPES = {
     "int32": "int32", "int64": "int64", "bool": "bool_", "string": "string",
