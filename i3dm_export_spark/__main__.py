@@ -229,16 +229,22 @@ def main(argv=None, spark=None) -> dict:
                 f"--query_bbox: expected 'minlon,minlat,maxlon,maxlat', "
                 f"got {args.query_bbox!r}"
             )
-        own = spark is None
-        if own:
-            spark = get_spark(app_name="i3dm_export_spark_query",
-                              master=args.master)
+        # a session starts only when a budget sends a side to Spark
+        started = []
+
+        def session():
+            if not started:
+                started.append(get_spark(app_name="i3dm_export_spark_query",
+                                         master=args.master))
+            return started[0]
+
         try:
             report = query_bbox_summary(
-                spark, args.output, bbox, checkpoint_dir=args.checkpoint_dir)
+                spark or session, args.output, bbox,
+                checkpoint_dir=args.checkpoint_dir)
         finally:
-            if own:
-                spark.stop()
+            for s in started:
+                s.stop()
         print(json.dumps(report))
         return report
 

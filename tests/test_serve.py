@@ -7,18 +7,24 @@ from manifests/checkpoints only (no re-tiling), and the instance path must
 push its lon/lat predicates into the parquet scan. ``query_bbox_summary``
 finds tiles on the driver under the tile budget; with the budget at 0 it
 takes the Spark ``tiles_in_bbox`` twin, and both must answer identically.
+Its instance count walks the stage-3 footers on the driver under the
+boundary-row budget and must equal ``instances_in_bbox(...).count()``.
 """
 from __future__ import annotations
 
 import json
+import math
 import os
 import shutil
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 
 from i3dm_export_spark.config import Bounds, ExportOptions
-from i3dm_export_spark.plans import checkpoint
-from i3dm_export_spark.plans.checkpoint import read_parquet
+from i3dm_export_spark import session
+from i3dm_export_spark.plans import checkpoint, serve
+from i3dm_export_spark.plans.checkpoint import _parquet_paths, read_parquet
 from i3dm_export_spark.plans.incremental import incremental_append
 from i3dm_export_spark.plans.pipeline import run_export
 from i3dm_export_spark.plans.serve import (
@@ -58,6 +64,17 @@ def appended_dir(spark, tmp_path_factory):
     base, batch, _full = _split(spark, 900, 750)
     run_export(base, OPTS, out, bounds=BB)
     assert incremental_append(batch, out)["counts_recounted"] is False
+    return out
+
+
+@pytest.fixture(scope="module")
+def clustered_dir(spark, tmp_path_factory):
+    """An export whose stage 3 holds a point once per content tile over it."""
+    out = str(tmp_path_factory.mktemp("serve_clustered") / "out")
+    run_export(pages_df(spark, 900),
+               ExportOptions(max_features_per_tile=60, max_level=8,
+                             use_i3dm=True, use_clustering=True),
+               out, bounds=BB)
     return out
 
 
@@ -145,6 +162,24 @@ class TestServe:
         with pytest.raises(SystemExit, match="query_bbox"):
             main(["--query_bbox", "1,2,3", "-o", export_dir], spark=spark)
 
+    def test_cli_query_bbox_starts_no_session_on_the_driver(
+            self, spark, export_dir, monkeypatch):
+        from i3dm_export_spark.__main__ import main
+
+        class SessionStarted(Exception):
+            pass
+
+        def refuse(*args, **kwargs):
+            raise SessionStarted
+
+        monkeypatch.setattr(session, "get_spark", refuse)
+        argv = ["--query_bbox", "34.021,44.032,34.047,44.063", "-o", export_dir]
+        assert main(argv) == main(argv, spark=spark)
+        # a side sent to Spark asks for a session
+        monkeypatch.setattr(serve, "_MAX_DRIVER_BBOX_ROWS", 0)
+        with pytest.raises(SessionStarted):
+            main(argv)
+
 
 class TestServeRobustness:
     def test_missing_stage3_raises_clear_error(self, spark, export_dir,
@@ -161,6 +196,9 @@ class TestServeRobustness:
         shutil.rmtree(os.path.join(clone, "_checkpoints", "stage3_assigned"))
         with pytest.raises(ServingStateMissing, match="stage3_assigned"):
             instances_in_bbox(spark, clone, QBOX).count()
+        # the driver count raises the same error: no Spark fallback, no 0
+        with pytest.raises(ServingStateMissing, match="stage3_assigned"):
+            query_bbox_summary(spark, clone, QBOX)
         # tiles_in_bbox still answers (manifests survive)
         assert tiles_in_bbox(spark, clone, QBOX).count() > 0
 
@@ -219,13 +257,21 @@ class TestServeDriverTiles:
         assert outside["n_instances"] == 0
         assert cut["tiles"] == full["tiles"][:3] and cut["n_tiles"] > 3
 
-    def test_under_budget_launches_only_the_instance_count(self, spark,
-                                                           appended_dir):
+    def test_under_budget_launches_no_job(self, spark, appended_dir):
         query_bbox_summary(spark, appended_dir, QBOX)  # warm
         rep, n_jobs = _count_jobs(
             spark, lambda: query_bbox_summary(spark, appended_dir, QBOX))
-        assert rep["n_tiles"] > 0
-        assert n_jobs <= 2
+        assert rep["n_tiles"] > 0 and rep["n_instances"] > 0
+        assert n_jobs == 0
+
+    def test_over_budget_counts_in_spark(self, spark, appended_dir,
+                                         monkeypatch):
+        driver = query_bbox_summary(spark, appended_dir, QBOX)
+        monkeypatch.setattr(serve, "_MAX_DRIVER_BBOX_ROWS", 0)
+        rep, n_jobs = _count_jobs(
+            spark, lambda: query_bbox_summary(spark, appended_dir, QBOX))
+        assert rep == driver
+        assert 1 <= n_jobs <= 2
 
     def test_driver_written_manifest_reads_without_jobs(self, spark,
                                                         appended_dir):
@@ -248,3 +294,101 @@ class TestServeDriverTiles:
         shutil.rmtree(_content_manifest(clone))
         with pytest.raises(ServingStateMissing, match="content sink manifest"):
             query_bbox_summary(spark, clone, QBOX)
+
+
+def _stage3_dir(out_dir):
+    return os.path.join(out_dir, "_checkpoints", "stage3_assigned")
+
+
+def _rg_stats(meta, i):
+    """(lon min, lat min, lon max, lat max) from row group ``i``'s footer."""
+    names = meta.schema.names
+    lon, lat = (meta.row_group(i).column(names.index(c)).statistics
+                for c in ("lon", "lat"))
+    return lon.min, lat.min, lon.max, lat.max
+
+
+def _parity_boxes(out_dir):
+    """PARITY_CASES' boxes plus edges on level-3 cell boundaries, edges
+    equal to points' coordinates (closed interval) and one row group's
+    footer min/max (the fully-inside shortcut at equality)."""
+    pts = pq.read_table(_stage3_dir(out_dir), columns=["lon", "lat"])
+    lon = sorted(pts["lon"].to_pylist())
+    lat = sorted(pts["lat"].to_pylist())
+    p = pts.slice(len(pts) // 2, 1).to_pylist()[0]
+    lo, hi = _cell_rect(BOX, 3, 2, 3), _cell_rect(BOX, 3, 5, 4)
+    fp = next(_parquet_paths(_stage3_dir(out_dir)))
+    return [
+        *dict.fromkeys(bbox for bbox, _k in PARITY_CASES),
+        (lo[0], lo[1], hi[2], hi[3]),
+        (p["lon"], p["lat"], p["lon"], p["lat"]),
+        (lon[len(lon) // 4], lat[len(lat) // 4],
+         lon[3 * len(lon) // 4], lat[3 * len(lat) // 4]),
+        _rg_stats(pq.read_metadata(fp), 0),
+    ]
+
+
+class TestServeDriverCount:
+    """``query_bbox_summary``'s footer-walk instance count against the
+    Spark count ``instances_in_bbox(...).count()``."""
+
+    @pytest.mark.parametrize("which", ["export", "append", "clustered"])
+    def test_driver_count_matches_spark_count(self, spark, export_dir,
+                                              appended_dir, clustered_dir,
+                                              which):
+        out = {"export": export_dir, "append": appended_dir,
+               "clustered": clustered_dir}[which]
+        boxes = _parity_boxes(out)
+        stage3 = _stage3_dir(out)
+        driver = [serve._count_in_bbox_driver(stage3, b) for b in boxes]
+        twin = [instances_in_bbox(spark, out, b).count() for b in boxes]
+        assert driver == twin
+        qbox, full, outside, _cells, point, _quartiles, footer = driver
+        assert 0 < qbox < full and outside == 0 and point >= 1
+        # the footer box takes its row group whole, by the shortcut
+        meta = pq.read_metadata(next(_parquet_paths(stage3)))
+        assert serve._row_group_case(
+            meta.row_group(0), meta.schema.names.index("lon"),
+            meta.schema.names.index("lat"), boxes[-1]) == serve._INSIDE
+        assert footer >= meta.row_group(0).num_rows
+        if which == "clustered":
+            # a point counts once per content tile it falls in
+            urls = pq.read_table(stage3, columns=["url"])["url"]
+            assert full == len(urls) > len(set(urls.to_pylist()))
+        if which == "append":
+            # Spark-written delta files sit beside the hard-linked ones
+            delta = [os.path.basename(fp).startswith("delta-")
+                     for fp in _parquet_paths(stage3)]
+            assert any(delta) and not all(delta)
+
+    def test_footer_edge_cases(self, spark, tmp_path):
+        """A NaN lon in a Spark-written row group (its footer max is NaN),
+        a file written without statistics and an empty file: each is read
+        or skipped as its footer allows, never counted whole."""
+        root = str(tmp_path / "ck")
+        stage3 = os.path.join(root, "stage3_assigned")
+        spark.createDataFrame(
+            [(1.0, 44.0), (float("nan"), 44.0), (2.0, 44.0)],
+            "lon double, lat double").coalesce(1).write.parquet(stage3)
+        schema = pa.schema([("lon", pa.float64()), ("lat", pa.float64())])
+        pq.write_table(pa.table({"lon": [1.5, 5.0], "lat": [44.0, 44.0]},
+                                schema=schema),
+                       os.path.join(stage3, "part-90000-nostats.parquet"),
+                       write_statistics=False)
+        pq.write_table(schema.empty_table(),
+                       os.path.join(stage3, "part-90001-empty.parquet"))
+        nan_fp, nostats_fp, _empty = _parquet_paths(stage3)
+        nan_meta, nostats_meta = map(pq.read_metadata, (nan_fp, nostats_fp))
+        assert math.isnan(_rg_stats(nan_meta, 0)[2])
+        for meta in (nan_meta, nostats_meta):
+            assert serve._row_group_case(
+                meta.row_group(0), 0, 1, (0.0, 40.0, 3.0, 50.0)) \
+                == serve._BOUNDARY
+        for bbox, want in [((0.0, 40.0, 3.0, 50.0), 3),
+                           ((0.0, 40.0, 1.5, 50.0), 2),
+                           ((2.5, 40.0, 3.0, 50.0), 0),
+                           ((0.0, 40.0, 10.0, 50.0), 4)]:
+            got = serve._count_in_bbox_driver(stage3, bbox)
+            assert got == want, bbox
+            assert instances_in_bbox(spark, None, bbox, checkpoint_dir=root,
+                                     columns=("lon", "lat")).count() == want
