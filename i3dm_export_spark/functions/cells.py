@@ -43,6 +43,11 @@ def tile_xy(lon, lat, level, bbox):
     TMS flip). Points outside the bbox clamp into the edge cells, matching
     the reference's behavior of the root bbox being inflated to cover all
     data (src/InstancesRepository.cs:89-101).
+
+    Bit for bit the keys of ``tiling.with_cell_keys``: the same float
+    expression, then the clamp in float before the cast, which is where
+    Spark's saturating ``floor`` puts a huge or infinite value; a NaN
+    floors to 0 there, as here.
     """
     xmin, ymin, xmax, ymax = bbox
     lon = np.asarray(lon, dtype=np.float64)
@@ -50,8 +55,9 @@ def tile_xy(lon, lat, level, bbox):
     n = np.int64(1) << np.int64(level)
     fx = (lon - xmin) / (xmax - xmin) * n
     fy = (lat - ymin) / (ymax - ymin) * n
-    x = np.clip(np.floor(fx).astype(np.int64), 0, int(n) - 1)
-    y = np.clip(np.floor(fy).astype(np.int64), 0, int(n) - 1)
+    hi = float(n - 1)
+    x = np.clip(np.nan_to_num(np.floor(fx)), 0.0, hi).astype(np.int64)
+    y = np.clip(np.nan_to_num(np.floor(fy)), 0.0, hi).astype(np.int64)
     return x, y
 
 

@@ -75,6 +75,8 @@ def raw_extent_from_parquet_stats(
     data rows read. Returns None when any row group lacks stats."""
     import pyarrow.dataset as pads
 
+    from ..plans.checkpoint import footer_columns
+
     if isinstance(path, (list, tuple)):
         path = [p.removeprefix("file:") for p in path]
     else:
@@ -87,9 +89,10 @@ def raw_extent_from_parquet_stats(
     n_groups = 0
     for frag in dataset.get_fragments():
         md = frag.metadata
-        schema_names = [md.schema.column(i).path for i in range(md.num_columns)]
-        idx = {c: schema_names.index(c) for c in want if c in schema_names}
-        if len(idx) != len(want):
+        if not md.num_row_groups:
+            continue
+        cols = footer_columns(md)
+        if any(c not in cols for c in want):
             return None
         for rg in range(md.num_row_groups):
             group = md.row_group(rg)
@@ -97,7 +100,7 @@ def raw_extent_from_parquet_stats(
                 continue
             n_groups += 1
             for col, (lo, hi) in want.items():
-                stats = group.column(idx[col]).statistics
+                stats = group.column(cols[col]).statistics
                 if stats is None or not stats.has_min_max:
                     return None
                 want[col][0] = stats.min if lo is None else min(lo, stats.min)

@@ -276,20 +276,26 @@ def tree_from_counts_pandas(
     """Driver-side twin of :func:`tree_from_counts` over a pandas counts
     frame (columns cell_x, cell_y, cnt) — zero Spark jobs beyond the
     createDataFrames; the append calls it when its merged counts are
-    already on the driver."""
+    already on the driver. ``spark`` None builds no Spark frame at all
+    (``tiles`` and ``deep_counts_df`` are None), for a caller that reads
+    only ``tiles_pdf``."""
     floor_level = min(opts.max_level, deep_level)
     tiles_pdf = descend_counts_pandas(
         pdf["cell_x"], pdf["cell_y"], pdf["cnt"], deep_level,
         opts.max_features_per_tile, opts.use_clustering, floor_level,
     )
+    max_content_level = int(
+        tiles_pdf.loc[tiles_pdf.content_available, "level"].max()
+    ) if tiles_pdf.content_available.any() else 0
+    if spark is None:
+        return TileTree(tiles=None, deep_level=deep_level, bounds=bounds,
+                        max_content_level=max_content_level,
+                        tiles_pdf=tiles_pdf)
     tiles = spark.createDataFrame(
         tiles_pdf,
         schema="level int, x bigint, y bigint, available boolean, "
                "content_available boolean, n_instances bigint",
     ).persist()
-    max_content_level = int(
-        tiles_pdf.loc[tiles_pdf.content_available, "level"].max()
-    ) if tiles_pdf.content_available.any() else 0
     counts_df = spark.createDataFrame(
         pdf, schema="cell_x bigint, cell_y bigint, cnt bigint"
     )

@@ -143,29 +143,46 @@ def read_driver_table(path: str):
     return pa.concat_tables(tables).to_pandas()
 
 
+def footer_columns(meta) -> dict[str, int]:
+    """Column path -> position in a parquet footer (``pq.read_metadata``),
+    read off the first row group's column chunks; empty for a file with
+    no row group. ``FileMetaData.schema`` would build a schema object,
+    which grows driver RSS by 3-5 MB over a few hundred footers."""
+    if not meta.num_row_groups:
+        return {}
+    first = meta.row_group(0)
+    return {first.column(j).path_in_schema: j
+            for j in range(first.num_columns)}
+
+
+def write_driver_file(path: str, table) -> None:
+    """Write a pyarrow table from the driver as one parquet file whose
+    footer carries Spark's schema under the key Spark's writer uses, so
+    ``read_parquet`` of its directory launches no schema-inference job."""
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import from_arrow_schema
+
+    pq.write_table(table.replace_schema_metadata({
+        **(table.schema.metadata or {}),
+        _SPARK_SCHEMA_KEY: from_arrow_schema(table.schema).json(),
+    }), path)
+
+
 def write_driver_table(path: str, table) -> None:
     """Write a small pyarrow table from the driver as a one-file parquet
-    directory, overwrite semantics like ``df.write.mode("overwrite")``.
-    The footer carries Spark's schema under the key Spark's writer uses,
-    so ``read_parquet`` of the result launches no schema-inference job.
+    directory (:func:`write_driver_file`), overwrite semantics like
+    ``df.write.mode("overwrite")``.
 
     The live directory is never removed before its replacement is in
     place: it is renamed aside to ``path + ".old"``, the new one is
     renamed in, then the aside copy goes. A crash between the two renames
     leaves the previous table whole under ``.old``; the next call moves it
     back before starting (or drops it when ``path`` already exists)."""
-    import pyarrow.parquet as pq
-    from pyspark.sql.pandas.types import from_arrow_schema
-
-    table = table.replace_schema_metadata({
-        **(table.schema.metadata or {}),
-        _SPARK_SCHEMA_KEY: from_arrow_schema(table.schema).json(),
-    })
     tmp = path + ".tmpwrite"
     aside = path + ".old"
     shutil.rmtree(tmp, ignore_errors=True)
     os.makedirs(tmp)
-    pq.write_table(table, os.path.join(tmp, "part-00000.parquet"))
+    write_driver_file(os.path.join(tmp, "part-00000.parquet"), table)
     if os.path.isdir(aside):
         if os.path.exists(path):
             shutil.rmtree(aside)
@@ -185,7 +202,9 @@ def _footer_schema(path: str):
     from pyspark.sql.types import StructType
 
     for fp in _parquet_paths(path):
-        meta = pq.read_schema(fp).metadata or {}
+        # the key-value metadata alone: ``pq.read_schema`` builds a schema
+        # object, which grows driver RSS (see :func:`footer_columns`)
+        meta = pq.read_metadata(fp).metadata or {}
         if _SPARK_SCHEMA_KEY not in meta:
             return None
         return StructType.fromJson(json.loads(meta[_SPARK_SCHEMA_KEY]))

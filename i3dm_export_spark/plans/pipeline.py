@@ -49,7 +49,7 @@ from ..operators import encode as enc
 from ..operators import extent, tiling
 from ..operators.skew import cluster_tiles_salted
 from . import sinks
-from .checkpoint import CheckpointManager, _parquet_paths
+from .checkpoint import CheckpointManager, _parquet_paths, footer_columns
 
 INSTANCE_COLS = [
     "url", "text_fp", "lon", "lat", "z", "scale", "yaw", "pitch", "roll",
@@ -185,7 +185,9 @@ def tileset_levels(stage2_dir: str, subtree_levels: int) -> tuple[int, int]:
     top = 0
     for path in _parquet_paths(stage2_dir):
         md = pq.read_metadata(path)
-        col = md.schema.names.index("level")
+        if not md.num_row_groups:
+            continue
+        col = footer_columns(md)["level"]
         for rg in range(md.num_row_groups):
             top = max(top, md.row_group(rg).column(col).statistics.max)
     return top + 1, (subtree_levels if top >= subtree_levels else 2)

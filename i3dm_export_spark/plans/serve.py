@@ -52,7 +52,9 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from . import checkpoint
-from .checkpoint import _parquet_paths, part_files, read_parquet
+from .checkpoint import (
+    _parquet_paths, footer_columns, part_files, read_parquet,
+)
 
 
 class ServingStateMissing(RuntimeError):
@@ -280,12 +282,8 @@ def _count_in_bbox_driver(stage3: str, bbox) -> int | None:
         meta = pq.read_metadata(fp)
         if not meta.num_row_groups:
             continue
-        # column paths from a row group: ``meta.schema`` builds a schema
-        # object that grows driver RSS by 3-5 MB over a few hundred footers
-        first = meta.row_group(0)
-        paths = [first.column(j).path_in_schema
-                 for j in range(first.num_columns)]
-        ilon, ilat = paths.index("lon"), paths.index("lat")
+        cols = footer_columns(meta)
+        ilon, ilat = cols["lon"], cols["lat"]
         groups = []
         for i in range(meta.num_row_groups):
             rg = meta.row_group(i)

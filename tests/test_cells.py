@@ -74,6 +74,44 @@ class TestTileXY:
         x, y = cells.parent_xy(np.array([5]), np.array([6]), 1)
         assert (x[0], y[0]) == (2, 3)
 
+    def test_matches_with_cell_keys_bit_for_bit(self, spark):
+        """The append's driver counts and reassignment key rows with
+        ``tile_xy``; the export keys them with ``tiling.with_cell_keys``.
+        Both must agree on every double: cell edges at the level, the root
+        bounds' edges, points outside (clamped), their ``nextafter``
+        neighbours, and the non-finite values Spark's floor saturates."""
+        from i3dm_export_spark.config import Bounds
+        from i3dm_export_spark.operators.tiling import with_cell_keys
+
+        bounds = Bounds(34.0, 44.0, 34.1, 44.1)
+        rng = np.random.default_rng(7)
+        for level in (0, 1, 14, 20):
+            n = 1 << level
+            k = np.unique(np.concatenate([
+                np.arange(min(n, 64) + 1), rng.integers(0, n + 1, 64)]))
+            edges_x = 34.0 + k / n * (34.1 - 34.0)
+            edges_y = 44.0 + k / n * (44.1 - 44.0)
+            special = [np.nan, np.inf, -np.inf, 1e300, -1e300]
+
+            def points(edges, lo, hi):
+                return np.concatenate([
+                    edges, np.nextafter(edges, -np.inf),
+                    np.nextafter(edges, np.inf),
+                    [lo, hi, lo - 1.0, hi + 1.0], special])
+
+            xs = points(edges_x, 34.0, 34.1)
+            ys = points(edges_y, 44.0, 44.1)
+            pts = (np.concatenate([xs, xs]),
+                   np.concatenate([ys, np.roll(ys, len(ys) // 2)]))
+            df = spark.createDataFrame(
+                [(i, float(a), float(b))
+                 for i, (a, b) in enumerate(zip(*pts))],
+                "i long, lon double, lat double")
+            got = with_cell_keys(df, bounds, level).orderBy("i").toPandas()
+            x, y = cells.tile_xy(pts[0], pts[1], level, bounds.bbox)
+            np.testing.assert_array_equal(got["cell_x"].to_numpy(), x)
+            np.testing.assert_array_equal(got["cell_y"].to_numpy(), y)
+
 
 class TestMorton:
     def test_known_values(self):

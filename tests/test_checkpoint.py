@@ -35,12 +35,16 @@ EXPORT_JOBS_PINNED = 18
 EXPORT_RERUN_JOBS_PINNED = 11
 #: Spark jobs of a small localized append on the driver path (3 new
 #: instances into one content tile of the 500-row export, no flipped
-#: tile): the guards, the stage-0 batch write, the batch's deep-cell
-#: counts, the stage-3 delta write and the summary's batch count. The
-#: dirty set is derived on the driver from the batch's counts, and the
-#: dirty tile is fetched, encoded and written on the driver: neither
-#: launches a job
-APPEND_JOBS_PINNED = 15
+#: tile): the one collect of the batch. Its guards, deep-cell counts,
+#: stage-0 and stage-3 writes, dirty set and re-encode all run on the
+#: driver over the collected rows
+APPEND_JOBS_PINNED = 1
+#: Spark jobs of the same append on the Spark batch plan
+#: (``incremental._MAX_DRIVER_BATCH_ROWS`` = 0): the guards, the stage-0
+#: batch write, the batch's deep-cell counts, the stage-3 delta write and
+#: the summary's batch count; the tree and the re-encode stay on the
+#: driver
+APPEND_BATCH_BUDGET_0_JOBS_PINNED = 15
 #: Spark jobs of the same append on the Spark plan
 #: (``tiling._MAX_DRIVER_CELLS`` = 0, set after the export): the
 #: distributed counts merge and per-level descent, the stage-2 writes,
@@ -142,10 +146,31 @@ class TestJobCounts:
         assert summary["n_new_instances"] == 3
         assert summary["n_dirty_tiles"] == 1
         assert summary["n_stage3_rewritten_files"] == 0
+        assert summary["batch_on_driver"] is True
         assert summary["reencode_on_driver"] is True
         assert n_jobs <= APPEND_JOBS_PINNED, (
             f"append ran {n_jobs} Spark jobs, pinned at "
             f"{APPEND_JOBS_PINNED}")
+
+    def test_small_append_batch_budget_0_is_pinned(self, spark, tmp_path,
+                                                   monkeypatch):
+        from i3dm_export_spark.plans import incremental as incr
+        from tests.test_incremental import copies_in_smallest_tile
+
+        out = str(tmp_path / "exp")
+        _small_export(spark, out)
+        base = pages_df(spark, 500, scenario="A")
+        batch = copies_in_smallest_tile(spark, base, out).localCheckpoint()
+        monkeypatch.setattr(incr, "_MAX_DRIVER_BATCH_ROWS", 0)
+        summary, n_jobs = _count_jobs(
+            spark, lambda: incr.incremental_append(batch, out))
+        assert summary["batch_on_driver"] is False
+        assert summary["n_new_instances"] == 3
+        assert summary["n_dirty_tiles"] == 1
+        assert summary["reencode_on_driver"] is True
+        assert n_jobs <= APPEND_BATCH_BUDGET_0_JOBS_PINNED, (
+            f"Spark-batch-plan append ran {n_jobs} Spark jobs, pinned at "
+            f"{APPEND_BATCH_BUDGET_0_JOBS_PINNED}")
 
     def test_small_append_spark_plan_is_pinned(self, spark, tmp_path,
                                                monkeypatch):

@@ -90,11 +90,13 @@ class TestIncrementalParity:
 
         out_incr = str(tmp_path / "incr")
         run_export(a, OPTS, out_incr, bounds=BB)
-        incremental_append(b, out_incr)
+        s1 = incremental_append(b, out_incr)
         s2 = incremental_append(c, out_incr)
 
         assert _tree_files(out_full) == _tree_files(out_incr)
         assert s2["n_instances"] == 1000
+        # the second append reads the driver-written files of the first
+        assert s1["batch_on_driver"] and s2["batch_on_driver"]
 
     def test_manifest_stays_consistent(self, spark, tmp_path):
         """After an append, the merged manifest matches the on-disk file
@@ -574,10 +576,11 @@ class TestIncrementalEdgeCases:
         assert pre == post
 
 
-def copies_in_smallest_tile(spark, base, out, k=3):
+def copies_in_smallest_tile(spark, base, out, k=3, rank=0):
     """A localized batch for the export of ``base`` under ``out``: ``k``
     new urls at the position of one instance of the smallest content
-    tile, so the batch lands in that one tile and (k small) flips none."""
+    tile (the ``rank``-th smallest), so the batch lands in that one tile
+    and (k small) flips none."""
     import pandas as pd
     from pyspark.sql import functions as F
 
@@ -585,7 +588,8 @@ def copies_in_smallest_tile(spark, base, out, k=3):
         os.path.join(out, "_checkpoints", "stage3_assigned"),
         columns=["url", "level", "x", "y"],
     )
-    level, x, y = s3.groupby(["level", "x", "y"]).size().idxmin()
+    sizes = s3.groupby(["level", "x", "y"]).size()
+    level, x, y = sizes.sort_values(kind="stable").index[rank]
     url = s3.loc[(s3.level == level) & (s3.x == x) & (s3.y == y), "url"].min()
     return (
         base.filter(F.col("url") == url)
@@ -648,11 +652,14 @@ class TestExactDirtySet:
     """The append's dirty set is derived in closed form from the batch's
     deep-cell counts and the flipped content tiles. It must equal the
     tiles whose member url set changed in stage 3 (the oracle, read with
-    pandas before and after), on the driver twin and on the cells twin
-    (``tiling._MAX_DRIVER_CELLS = 0``), with byte parity against the
-    from-scratch union export."""
+    pandas before and after), with byte parity against the from-scratch
+    union export, on three plans: the driver twin with the batch on the
+    driver, the driver twin with the batch in Spark
+    (``incremental._MAX_DRIVER_BATCH_ROWS = 0``), and the cells twin
+    (``tiling._MAX_DRIVER_CELLS = 0``, which keeps the batch in Spark
+    too)."""
 
-    @pytest.mark.parametrize("twin", ["driver", "cells"])
+    @pytest.mark.parametrize("twin", ["driver", "cells", "spark_batch"])
     @pytest.mark.parametrize("case",
                              ["localized", "split", "clustered", "empty"])
     def test_dirty_tiles_equal_changed_member_sets(
@@ -663,9 +670,12 @@ class TestExactDirtySet:
         import pandas as pd
 
         from i3dm_export_spark.operators import tiling
+        from i3dm_export_spark.plans import incremental as incr
 
         if twin == "cells":
             monkeypatch.setattr(tiling, "_MAX_DRIVER_CELLS", 0)
+        if twin == "spark_batch":
+            monkeypatch.setattr(incr, "_MAX_DRIVER_BATCH_ROWS", 0)
         base_out, batch, full_out, opts = oracle_cases[case]
         out = str(tmp_path / "incr")
         shutil.copytree(base_out, out)
@@ -673,6 +683,7 @@ class TestExactDirtySet:
         want_files = _tree_files(full_out or base_out)
 
         s = incremental_append(batch, out, opts=opts)
+        assert s["batch_on_driver"] is (twin == "driver")
 
         after = _stage3_tile_urls(out)
         changed = {
@@ -895,6 +906,33 @@ class TestCountsRecount:
         assert s2["counts_recounted"] is False
         assert _tree_files(out) == _tree_files(full2)
 
+    @pytest.mark.parametrize("plan", ["driver", "spark_batch"])
+    def test_recount_dirty_set_uses_the_recount_level(
+        self, spark, tmp_path, monkeypatch, overflow_case, plan
+    ):
+        """A recount deepens the tree's deep level, so the dirty set must
+        match the batch's cells counted at that level: a batch that
+        overflows one cell and also enters another content tile
+        re-encodes that tile too."""
+        import shutil
+
+        from i3dm_export_spark.plans import incremental as incr
+
+        if plan == "spark_batch":
+            monkeypatch.setattr(incr, "_MAX_DRIVER_BATCH_ROWS", 0)
+        base_out, over, _full1, _follow, _full2, opts = overflow_case
+        base = pages_df(spark, 900)
+        batch = over.unionByName(copies_in_smallest_tile(
+            spark, base, base_out, k=2, rank=1)).localCheckpoint()
+        full = str(tmp_path / "full")
+        run_export(base.unionByName(batch), opts, full, bounds=BB)
+        out = str(tmp_path / "incr")
+        shutil.copytree(base_out, out)
+        s = incremental_append(batch, out, opts=opts)
+        assert s["counts_recounted"] is True
+        assert s["batch_on_driver"] is (plan == "driver")
+        assert _tree_files(out) == _tree_files(full)
+
     def test_flip_cap_raises_and_leaves_export_untouched(
         self, spark, tmp_path, monkeypatch, oracle_cases
     ):
@@ -1006,9 +1044,12 @@ class TestReencodePlans:
     the driver, the dirty member rows fit ``_MAX_DRIVER_MEMBER_ROWS`` and
     no dirty tile is hot; otherwise on Spark. Both plans must produce the
     from-scratch union export's bytes for every encoder branch; the Spark
-    plan is forced with the budget at 0."""
+    plan is forced with the budget at 0. Both run with the batch on the
+    driver; ``spark_batch`` runs the driver re-encode after a batch kept
+    in Spark (``_MAX_DRIVER_BATCH_ROWS = 0``), so the stage-0 and stage-3
+    files it reads were written by Spark."""
 
-    @pytest.mark.parametrize("plan", ["driver", "spark"])
+    @pytest.mark.parametrize("plan", ["driver", "spark", "spark_batch"])
     @pytest.mark.parametrize("case", list(_PLAN_CASES))
     def test_byte_parity(self, spark, tmp_path, monkeypatch,
                          plan_case_exports, case, plan):
@@ -1020,6 +1061,8 @@ class TestReencodePlans:
 
         if plan == "spark":
             monkeypatch.setattr(incr, "_MAX_DRIVER_MEMBER_ROWS", 0)
+        if plan == "spark_batch":
+            monkeypatch.setattr(incr, "_MAX_DRIVER_BATCH_ROWS", 0)
         opts, _rich, _snu, glbs, driver_ok, _sizes = _PLAN_CASES[case]
         base_out, batch, full_out = plan_case_exports(case)
         out = str(tmp_path / "incr")
@@ -1033,7 +1076,8 @@ class TestReencodePlans:
             model_glbs=_model_glbs() if glbs else None)
 
         assert s["counts_recounted"] is False
-        assert s["reencode_on_driver"] is (plan == "driver" and driver_ok)
+        assert s["batch_on_driver"] is (plan != "spark_batch")
+        assert s["reencode_on_driver"] is (plan != "spark" and driver_ok)
         assert s["n_dirty_tiles"] > 0
         tiles = pd.read_parquet(
             os.path.join(out, "_checkpoints", "stage2_tiles"))
@@ -1096,3 +1140,234 @@ class TestReencodePlans:
         with pytest.raises(IncrementalRebuildRequired, match="stage 3"):
             incremental_append(batch, out, opts=opts)
         assert _digests(out) == before
+
+
+def _spy_batch_plan(monkeypatch):
+    """Record what ``_collect_batch`` returns: a table on the driver plan,
+    None on the Spark plan."""
+    from i3dm_export_spark.plans import incremental as incr
+
+    seen = []
+    real = incr._collect_batch
+
+    def spy(*args):
+        seen.append(real(*args))
+        return seen[-1]
+
+    monkeypatch.setattr(incr, "_collect_batch", spy)
+    return seen
+
+
+@pytest.fixture(scope="module")
+def guard_bases(spark, tmp_path_factory):
+    """name -> (base export dir, base, batch): a base with pinned bounds,
+    and one with bounds computed from its data and an interior batch."""
+    root = tmp_path_factory.mktemp("guards")
+    base, batch, _ = _split(spark, 500, 450)
+    pinned = str(root / "pinned")
+    run_export(base, OPTS, pinned, bounds=BB)
+    ibase, ibatch, _ = TestIncrementalGuards._interior_split(spark)
+    computed = str(root / "computed")
+    run_export(ibase, OPTS, computed)
+    return {"pinned": (pinned, base, batch),
+            "computed": (computed, ibase, ibatch)}
+
+
+def _strip_stage3_statistics(out):
+    """Rewrite every stage-3 file of ``out`` without column statistics
+    (Spark's schema key stays in the footer)."""
+    import pyarrow.parquet as pq
+
+    stage3 = os.path.join(out, "_checkpoints", "stage3_assigned")
+    for name in os.listdir(stage3):
+        if name.endswith(".parquet"):
+            path = os.path.join(stage3, name)
+            t = pq.read_table(path)
+            os.remove(path)  # may be a hard link
+            pq.write_table(t, path, write_statistics=False)
+            crc = os.path.join(stage3, f".{name}.crc")  # Spark's checksum
+            if os.path.exists(crc):
+                os.remove(crc)
+
+
+class TestBatchPlans:
+    """Within ``_MAX_DRIVER_BATCH_ROWS`` the append collects its batch once
+    and runs the guards, counts, stage-0 and stage-3 writes on the driver;
+    at 0 (or with a null or NaN coordinate) the Spark batch plan runs.
+    Every guard stays loud on both."""
+
+    @pytest.mark.parametrize("plan", ["driver", "spark"])
+    @pytest.mark.parametrize("case", ["out_of_bounds", "z_range",
+                                      "duplicate_url", "duplicate_url_nostats",
+                                      "empty"])
+    def test_guards_on_both_batch_plans(self, spark, tmp_path, monkeypatch,
+                                        guard_bases, case, plan):
+        import shutil
+
+        from pyspark.sql import functions as F
+
+        from i3dm_export_spark.plans import incremental as incr
+
+        if plan == "spark":
+            monkeypatch.setattr(incr, "_MAX_DRIVER_BATCH_ROWS", 0)
+        seen = _spy_batch_plan(monkeypatch)
+        base_out, base, batch = guard_bases[
+            "computed" if case == "z_range" else "pinned"]
+        out = str(tmp_path / "o")
+        shutil.copytree(base_out, out)
+        if case == "duplicate_url_nostats":
+            _strip_stage3_statistics(out)
+        rogue, match = {
+            "out_of_bounds": (batch.withColumn(
+                "lon", batch["lon"] + (BB.xmax - BB.xmin + 1.0)), "outside"),
+            "z_range": (batch.withColumn("z", F.lit(25.0)), "z-range"),
+            "duplicate_url": (base.limit(5).unionByName(batch),
+                              "already exist"),
+            "duplicate_url_nostats": (base.limit(5).unionByName(batch),
+                                      "already exist"),
+            "empty": (base.filter("url > 'z'"), None),
+        }[case]
+        if match is None:
+            s = incremental_append(rogue, out)
+            assert s["n_new_instances"] == s["n_dirty_tiles"] == 0
+            assert s["batch_on_driver"] is (plan == "driver")
+        else:
+            with pytest.raises(IncrementalRebuildRequired, match=match):
+                incremental_append(rogue, out)
+        assert (seen[0] is not None) is (plan == "driver")
+
+    def test_url_guard_prunes_by_footer(self, guard_bases, tmp_path,
+                                        monkeypatch):
+        """The driver url guard reads exactly the row groups whose url
+        min/max brackets a batch url, plus every row group without
+        statistics, and counts exactly the stage-3 rows with a batch url
+        (a null url matches nothing); beyond the budget it hands over to
+        the semi-join."""
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        from i3dm_export_spark.plans import incremental as incr
+
+        pinned, _base, _batch = guard_bases["pinned"]
+        t = pq.read_table(os.path.join(
+            pinned, "_checkpoints", "stage3_assigned")).sort_by("url")
+        half = t.num_rows // 2
+        stage3 = str(tmp_path / "stage3")
+        os.makedirs(stage3)
+        with_stats = os.path.join(stage3, "part-00000.parquet")
+        pq.write_table(t.slice(0, half), with_stats, row_group_size=40)
+        pq.write_table(t.slice(half), os.path.join(stage3,
+                                                   "part-00001.parquet"),
+                       write_statistics=False)
+        urls = t.column("url").to_pylist()
+        # inside row group 0, bracketed by row group 1 but absent, the max
+        # of row group 2 (its only probe), in the file without statistics,
+        # beyond every row group
+        probe = [urls[3], urls[50] + "~", urls[119], urls[-1], "~~~~"]
+        assert urls[50] + "~" < urls[51]
+        md = pq.read_metadata(with_stats)
+        iurl = md.schema.names.index("url")
+        n_cand = t.num_rows - half + sum(
+            md.row_group(i).num_rows for i in range(md.num_row_groups)
+            if any(md.row_group(i).column(iurl).statistics.min <= u
+                   <= md.row_group(i).column(iurl).statistics.max
+                   for u in probe))
+        assert n_cand < t.num_rows  # some row group was pruned
+        batch_urls = pa.chunked_array([probe + [None]], pa.string())
+        want = sum(u in set(probe) for u in urls)
+        assert want == 3
+        monkeypatch.setattr(incr, "_MAX_DRIVER_BATCH_ROWS", n_cand)
+        assert incr._url_overlap_driver(stage3, batch_urls) == want
+        monkeypatch.setattr(incr, "_MAX_DRIVER_BATCH_ROWS", n_cand - 1)
+        assert incr._url_overlap_driver(stage3, batch_urls) is None
+
+    def test_driver_written_files_match_spark_written(self, spark, tmp_path,
+                                                      oracle_cases):
+        """The stage-0 batch file and the stage-3 delta files the driver
+        writes carry the Spark-written files' Arrow schema and footer
+        Spark schema, and lon/lat (stage 3: also level/x/y) statistics in
+        every row group: the next append prunes on them, and serve."""
+        import shutil
+
+        import pyarrow.parquet as pq
+
+        from i3dm_export_spark.plans.checkpoint import _SPARK_SCHEMA_KEY
+
+        base_out, batch, _full, opts = oracle_cases["split"]
+        out = str(tmp_path / "incr")
+        shutil.copytree(base_out, out)
+        s = incremental_append(batch, out, opts=opts)
+        assert s["batch_on_driver"] is True
+        assert s["n_stage3_rewritten_files"] > 0  # a flip: dirty files read
+        for stage, prefix, stat_cols in (
+                ("stage0_instances", "batch-", ("lon", "lat")),
+                ("stage3_assigned", "delta-",
+                 ("level", "x", "y", "lon", "lat"))):
+            d = os.path.join(out, "_checkpoints", stage)
+            names = sorted(n for n in os.listdir(d) if n.endswith(".parquet"))
+            ref = pq.read_schema(os.path.join(
+                d, next(n for n in names if n.startswith("part-"))))
+            driver = [n for n in names if n.startswith(prefix)]
+            assert driver, stage
+            for name in driver:
+                assert "part-" in name and name.endswith(".snappy.parquet")
+                got = pq.read_schema(os.path.join(d, name))
+                assert got.remove_metadata() == ref.remove_metadata(), name
+                # the same Spark schema; pyspark's JSON sorts its keys
+                assert (json.loads(got.metadata[_SPARK_SCHEMA_KEY])
+                        == json.loads(ref.metadata[_SPARK_SCHEMA_KEY])), name
+                md = pq.read_metadata(os.path.join(d, name))
+                for i in range(md.num_row_groups):
+                    for c in stat_cols:
+                        st = md.row_group(i).column(
+                            md.schema.names.index(c)).statistics
+                        assert st is not None and st.has_min_max, (name, c)
+
+    @pytest.mark.parametrize("plan", ["driver", "spark"])
+    def test_query_filtered_batch(self, spark, tmp_path, monkeypatch, plan):
+        """``opts.query`` filters the batch before any guard: rows it drops
+        may lie outside the root bounds, and the append equals the
+        from-scratch union export under the same query."""
+        from pyspark.sql import functions as F
+
+        from i3dm_export_spark.plans import incremental as incr
+
+        if plan == "spark":
+            monkeypatch.setattr(incr, "_MAX_DRIVER_BATCH_ROWS", 0)
+        opts = ExportOptions(max_features_per_tile=60, max_level=8,
+                             use_i3dm=True, query="lang <> 'nl'")
+        base, batch, _ = _split(spark, 900, 750)
+        rogue = batch.filter("lang = 'nl'").withColumn(
+            "lon", F.col("lon") + (BB.xmax - BB.xmin + 1.0))
+        batch = batch.filter("lang <> 'nl'").unionByName(rogue)
+        out_full = str(tmp_path / "full")
+        run_export(base.unionByName(batch), opts, out_full, bounds=BB)
+        out = str(tmp_path / "incr")
+        run_export(base, opts, out, bounds=BB)
+        s = incremental_append(batch, out, opts=opts)
+        assert s["batch_on_driver"] is (plan == "driver")
+        assert s["n_new_instances"] == batch.filter("lang <> 'nl'").count()
+        assert rogue.count() > 0
+        assert _tree_files(out) == _tree_files(out_full)
+
+    def test_nan_lon_batch_takes_the_spark_plan(self, spark, tmp_path,
+                                                monkeypatch):
+        """Spark's max(lon) over a NaN is NaN, which no bounds test
+        rejects; numpy's would differ, so such a batch takes the Spark
+        plan and appends as it always has: byte parity with the
+        from-scratch union export."""
+        from pyspark.sql import functions as F
+
+        base, batch, _ = _split(spark, 900, 750)
+        first = batch.agg(F.min("url")).collect()[0][0]
+        batch = batch.withColumn("lon", F.when(
+            F.col("url") == first, F.lit(float("nan"))
+        ).otherwise(F.col("lon")))
+        out_full = str(tmp_path / "full")
+        run_export(base.unionByName(batch), OPTS, out_full, bounds=BB)
+        out = str(tmp_path / "incr")
+        run_export(base, OPTS, out, bounds=BB)
+        seen = _spy_batch_plan(monkeypatch)
+        s = incremental_append(batch, out)
+        assert seen == [None] and s["batch_on_driver"] is False
+        assert _tree_files(out) == _tree_files(out_full)

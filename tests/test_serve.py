@@ -59,11 +59,13 @@ def export_dir(spark, tmp_path_factory):
 
 @pytest.fixture(scope="module")
 def appended_dir(spark, tmp_path_factory):
-    """An export whose content manifest the append rewrote on the driver."""
+    """An export whose content manifest and stage-3 delta files the
+    append wrote on the driver."""
     out = str(tmp_path_factory.mktemp("serve_append") / "out")
     base, batch, _full = _split(spark, 900, 750)
     run_export(base, OPTS, out, bounds=BB)
-    assert incremental_append(batch, out)["counts_recounted"] is False
+    s = incremental_append(batch, out)
+    assert s["counts_recounted"] is False and s["batch_on_driver"] is True
     return out
 
 
@@ -356,7 +358,7 @@ class TestServeDriverCount:
             urls = pq.read_table(stage3, columns=["url"])["url"]
             assert full == len(urls) > len(set(urls.to_pylist()))
         if which == "append":
-            # Spark-written delta files sit beside the hard-linked ones
+            # driver-written delta files sit beside the hard-linked ones
             delta = [os.path.basename(fp).startswith("delta-")
                      for fp in _parquet_paths(stage3)]
             assert any(delta) and not all(delta)
