@@ -19,6 +19,12 @@ its footer row count and ``n_bytes`` its size on disk. The done marker
 the schema Spark stored in a part file's footer, so they launch no
 schema-inference job either.
 
+A directory that is rewritten rather than built (the append's stage
+refreshes and manifest merges, the sinks' manifests, the lineage tables)
+takes two steps: :func:`refresh_dir` builds the new copy beside
+it, hard-linking the files that stay, and :func:`replace_dir` swaps it
+in, renaming the live directory aside until the copy is in place.
+
 Checkpoints are parquet only. Input pinning uses a content fingerprint
 of the input files (:func:`input_fingerprint`); the Iceberg table-format
 seam (snapshot-id pinning, catalog-qualified locations) is deferred, and
@@ -39,6 +45,7 @@ import shutil
 import time
 from typing import NamedTuple
 
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 
 
@@ -155,48 +162,122 @@ def footer_columns(meta) -> dict[str, int]:
             for j in range(first.num_columns)}
 
 
-def write_driver_file(path: str, table) -> None:
-    """Write a pyarrow table from the driver as one parquet file whose
-    footer carries Spark's schema under the key Spark's writer uses, so
-    ``read_parquet`` of its directory launches no schema-inference job."""
+#: what a directory swap leaves beside the live directory ``final``: the
+#: refreshed copy being built (:func:`refresh_dir`) and the live copy
+#: renamed aside while the new one moves in (:func:`replace_dir`)
+_TMP_SUFFIX = "._incr"
+_ASIDE_SUFFIX = ".old"
+
+
+def refresh_dir(final: str, rows, keep=(), prefix: str = "",
+                n_files: int = 1, sort_by=(), schema: str | None = None
+                ) -> str:
+    """Build the refreshed copy of the parquet directory ``final`` at
+    ``final + "._incr"`` and return its path (:func:`replace_dir` swaps it
+    in). ``final`` stays live meanwhile, so ``rows`` may read it.
+
+    Each data file in ``keep`` is hard-linked in under its own name (a
+    copy where the filesystem has none), and ``rows`` are added beside
+    them as new files named ``<prefix>part-NNNNN-...``, like Spark's, so
+    the lineage still parses ``part-NNNNN``:
+
+    * a pyarrow table is written from the driver, cast to the schema of
+      ``final``'s first data file (:func:`arrow_schema`; ``schema``, a DDL
+      string, when ``final`` holds none; else its own) with a NOT NULL
+      field relaxed only where the column holds a null (:func:`cast_to`),
+      sorted by ``sort_by`` when given and split into at most ``n_files``
+      contiguous ``...-<uuid>-c000.snappy.parquet`` files. Each carries
+      Spark's schema in its footer, so :func:`read_parquet` launches no
+      inference job, and pyarrow's column statistics, so footer pruning
+      reads it as it reads Spark's. An empty table writes one empty file,
+      as Spark's writer does;
+    * a DataFrame is written by Spark, range-partitioned on ``sort_by``
+      into ``n_files`` partitions when given, into a scratch directory
+      inside the copy, and its data files are renamed in."""
+    import uuid
+
     import pyarrow.parquet as pq
-    from pyspark.sql.pandas.types import from_arrow_schema
+    from pyspark.sql.pandas.types import from_arrow_schema, to_arrow_schema
+    from pyspark.sql.types import StructType
 
-    pq.write_table(table.replace_schema_metadata({
-        **(table.schema.metadata or {}),
-        _SPARK_SCHEMA_KEY: from_arrow_schema(table.schema).json(),
-    }), path)
-
-
-def write_driver_table(path: str, table) -> None:
-    """Write a small pyarrow table from the driver as a one-file parquet
-    directory (:func:`write_driver_file`), overwrite semantics like
-    ``df.write.mode("overwrite")``.
-
-    The live directory is never removed before its replacement is in
-    place: it is renamed aside to ``path + ".old"``, the new one is
-    renamed in, then the aside copy goes. A crash between the two renames
-    leaves the previous table whole under ``.old``; the next call moves it
-    back before starting (or drops it when ``path`` already exists)."""
-    tmp = path + ".tmpwrite"
-    aside = path + ".old"
+    tmp = final + _TMP_SUFFIX
     shutil.rmtree(tmp, ignore_errors=True)
     os.makedirs(tmp)
-    write_driver_file(os.path.join(tmp, "part-00000.parquet"), table)
-    if os.path.isdir(aside):
-        if os.path.exists(path):
-            shutil.rmtree(aside)
-        else:
-            os.replace(aside, path)
-    if os.path.exists(path):
-        os.replace(path, aside)
-    os.replace(tmp, path)
+    for src in keep:
+        dst = os.path.join(tmp, os.path.basename(src))
+        try:
+            os.link(src, dst)
+        except OSError:
+            shutil.copy2(src, dst)
+    if isinstance(rows, DataFrame):
+        scratch = os.path.join(tmp, "_scratch")
+        if sort_by:
+            rows = rows.repartitionByRange(n_files, *sort_by)
+        rows.write.parquet(scratch)
+        for src in _parquet_paths(scratch):
+            os.replace(src, os.path.join(tmp, prefix + os.path.basename(src)))
+        shutil.rmtree(scratch)
+        return tmp
+    target = arrow_schema(final)
+    if target is None:
+        target = (to_arrow_schema(StructType.fromDDL(schema)) if schema
+                  else rows.schema)
+    rows = cast_to(rows, target)
+    if sort_by:
+        rows = rows.sort_by([(c, "ascending") for c in sort_by])
+    rows = rows.replace_schema_metadata({
+        _SPARK_SCHEMA_KEY: from_arrow_schema(rows.schema).json()})
+    n = max(min(n_files, rows.num_rows), 1)
+    cuts = np.linspace(0, rows.num_rows, n + 1).astype(np.int64)
+    tag = uuid.uuid4()
+    for i in range(n):
+        name = f"{prefix}part-{i:05d}-{tag}-c000.snappy.parquet"
+        pq.write_table(rows.slice(cuts[i], cuts[i + 1] - cuts[i]),
+                       os.path.join(tmp, name))
+    return tmp
+
+
+def replace_dir(tmp: str, final: str) -> None:
+    """Swap the directory ``tmp`` in as ``final``. The live directory is
+    never removed before its replacement is in place: it is renamed aside
+    to ``final + ".old"``, ``tmp`` is renamed in, then the aside goes. A
+    crash between the two renames leaves the live data whole under the
+    aside, and the next call puts it back before it starts (an aside
+    beside a live ``final`` is a finished swap's, and is dropped)."""
+    aside = final + _ASIDE_SUFFIX
+    if os.path.isdir(aside) and not os.path.exists(final):
+        os.replace(aside, final)
     shutil.rmtree(aside, ignore_errors=True)
+    if os.path.exists(final):
+        os.replace(final, aside)
+    os.replace(tmp, final)
+    shutil.rmtree(aside, ignore_errors=True)
+
+
+def write_driver_table(path: str, table, schema: str | None = None) -> None:
+    """Replace the parquet directory ``path`` with the pyarrow ``table`` as
+    one file written from the driver (:func:`refresh_dir`, then
+    :func:`replace_dir`); ``schema`` is the DDL of a fresh directory's
+    rows."""
+    replace_dir(refresh_dir(path, table, schema=schema), path)
+
+
+def cast_to(table, schema):
+    """``table``'s columns of ``schema``, in its order and cast to its
+    types; a NOT NULL field stays so only while its column holds no
+    null."""
+    import pyarrow as pa
+
+    table = table.select(schema.names)
+    return table.cast(pa.schema([
+        f if f.nullable or not table.column(f.name).null_count
+        else f.with_nullable(True) for f in schema
+    ]))
 
 
 def _footer_schema(path: str):
     """The Spark schema stored in the first data file's footer, or None
-    when that file carries none (pyarrow-written tables) or the
+    when that file carries none (a plain pyarrow-written file) or the
     directory is empty; the reader then infers the schema."""
     import pyarrow.parquet as pq
     from pyspark.sql.types import StructType
@@ -208,6 +289,24 @@ def _footer_schema(path: str):
         if _SPARK_SCHEMA_KEY not in meta:
             return None
         return StructType.fromJson(json.loads(meta[_SPARK_SCHEMA_KEY]))
+    return None
+
+
+def arrow_schema(path: str):
+    """The Arrow schema of the rows of the parquet directory ``path``: the
+    Spark schema in its first data file's footer, as Arrow, or that
+    file's own schema when it carries none; None when ``path`` holds no
+    data file."""
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if not os.path.isdir(path):
+        return None
+    spark_schema = _footer_schema(path)
+    if spark_schema is not None:
+        return to_arrow_schema(spark_schema)
+    for fp in _parquet_paths(path):
+        return pq.read_schema(fp).remove_metadata()
     return None
 
 
@@ -306,7 +405,6 @@ class CheckpointManager:
         """Write the stage's footer-derived lineage table and its done
         marker (``extra`` keys go into the marker)."""
         import pyarrow as pa
-        import pyarrow.parquet as pq
 
         files = part_files(self._stage_path(stage))
         n = len(files)
@@ -320,10 +418,7 @@ class CheckpointManager:
                                           pa.string()),
             "n_bytes": pa.array([f.n_bytes for f in files], pa.int64()),
         })
-        lineage_dir = self._lineage_path(stage)
-        shutil.rmtree(lineage_dir, ignore_errors=True)
-        os.makedirs(lineage_dir)
-        pq.write_table(lineage, os.path.join(lineage_dir, "part-00000.parquet"))
+        write_driver_table(self._lineage_path(stage), lineage)
 
         with open(self._done_marker(stage), "w") as fh:
             json.dump({
@@ -353,37 +448,37 @@ def anti_join_pending(work: DataFrame, completed: DataFrame,
     return work.join(completed.select(*keys).distinct(), list(keys), "left_anti")
 
 
-#: scratch-directory suffixes the incremental append writes beside a stage
-#: before its atomic rename swap (plans/incremental._stage_to_tmp /
-#: _stage0_additive_tmp). A crash between materialize and swap strands them.
-_SCRATCH_SUFFIXES = ("._incr", "._batch")
-
-
 def vacuum(root: str, dry_run: bool = False) -> dict:
     """Garbage-collect a checkpoint root after crashes: reclaim scratch
     space and repair marker/data mismatches so the next resume is clean.
 
     At cluster scale a killed job can strand multi-TB directories that the
     resume contract tolerates (``run_stage`` rebuilds with overwrite) but
-    never deletes. Four orphan classes, each safe to remove under the
+    never deletes. Five orphan classes, each safe to handle under the
     single-writer pipeline contract:
 
-    1. **swap scratch** — ``<stage>._incr`` / ``<stage>._batch`` left by an
-       append that died between materialization and its rename swap;
-    2. **incomplete stages** — a stage data dir with no ``.done.json``
+    1. **swap scratch** — ``<dir>._incr``, a refreshed copy
+       (:func:`refresh_dir`) left by an append that died before its swap;
+    2. **swap asides** — ``<dir>.old``, the live copy a swap renamed aside
+       (:func:`replace_dir`). Beside a missing live directory it is the
+       only copy of the live data and is RESTORED (renamed back); beside a
+       live one it is a finished swap's and is reclaimed. Classes 1 and 2
+       are looked for in the root, ``_lineage`` and ``_sink_manifests``;
+    3. **incomplete stages** — a stage data dir with no ``.done.json``
        marker (crashed mid-write; the next run overwrites it anyway);
-    3. **orphaned markers/lineage** — a done marker or ``_lineage/<stage>``
+    4. **orphaned markers/lineage** — a done marker or ``_lineage/<stage>``
        whose stage data dir is gone (half-dropped stage). Left in place,
        the marker makes ``is_complete`` true while ``read`` fails — this is
        a repair, not just a space reclaim;
-    4. **Spark write residue** — ``_temporary`` job dirs inside a stage
+    5. **Spark write residue** — ``_temporary`` job dirs inside a stage
        from a killed Spark write.
 
     Never touches a complete stage's data, marker, or lineage. Returns
-    ``{"removed": [paths], "reclaimed_bytes": N, "kept_stages": [names]}``;
-    with ``dry_run=True`` it only reports.
+    ``{"removed": [paths], "reclaimed_bytes": N, "kept_stages": [names],
+    "restored": [live paths]}``; with ``dry_run=True`` it only reports.
     """
     removed: list[str] = []
+    restored: list[str] = []
     reclaimed = 0
     kept: list[str] = []
 
@@ -404,40 +499,53 @@ def vacuum(root: str, dry_run: bool = False) -> dict:
                     pass
 
     if not os.path.isdir(root):
-        return {"removed": removed, "reclaimed_bytes": 0, "kept_stages": kept}
+        return {"removed": [], "reclaimed_bytes": 0, "kept_stages": [],
+                "restored": []}
 
     lineage_dir = os.path.join(root, "_lineage")
+    for parent in (root, lineage_dir, os.path.join(root, "_sink_manifests")):
+        for name in sorted(os.listdir(parent)) if os.path.isdir(parent) else ():
+            path = os.path.join(parent, name)
+            if not os.path.isdir(path):
+                continue
+            if name.endswith(_TMP_SUFFIX):  # class 1
+                _rm(path)
+            elif name.endswith(_ASIDE_SUFFIX):  # class 2
+                live = path[: -len(_ASIDE_SUFFIX)]
+                if os.path.exists(live):
+                    _rm(path)
+                else:
+                    restored.append(live)
+                    if not dry_run:
+                        os.replace(path, live)
+
     for name in sorted(os.listdir(root)):
         path = os.path.join(root, name)
-        if not os.path.isdir(path):
-            continue
-        if name.endswith(_SCRATCH_SUFFIXES):  # class 1
-            _rm(path)
-            continue
         # underscore-prefixed dirs are shared infrastructure, not stages
         # (_lineage, the sinks' _sink_manifests, export metadata) — stage
         # names never start with '_', so "no done marker" proves nothing
-        # about them. Their own scratch (class-1 suffixes) is still caught
-        # above.
-        if name.startswith("_"):
+        # about them
+        if (not os.path.isdir(path) or name.startswith("_")
+                or name.endswith((_TMP_SUFFIX, _ASIDE_SUFFIX))):
             continue
         marker = os.path.join(lineage_dir, name + ".done.json")
-        if not os.path.exists(marker):  # class 2
+        if not os.path.exists(marker):  # class 3
             _rm(path)
             continue
         kept.append(name)
-        tmp = os.path.join(path, "_temporary")  # class 4
+        tmp = os.path.join(path, "_temporary")  # class 5
         if os.path.isdir(tmp):
             _rm(tmp)
 
-    if os.path.isdir(lineage_dir):  # class 3
+    if os.path.isdir(lineage_dir):  # class 4
         for name in sorted(os.listdir(lineage_dir)):
-            stage = name[: -len(".done.json")] if name.endswith(".done.json") else name
-            if not os.path.isdir(os.path.join(root, stage)):
+            stage_dir = os.path.join(root, name.removesuffix(".done.json"))
+            if not (name.endswith((_TMP_SUFFIX, _ASIDE_SUFFIX))
+                    or os.path.isdir(stage_dir) or stage_dir in restored):
                 _rm(os.path.join(lineage_dir, name))
 
     return {"removed": removed, "reclaimed_bytes": reclaimed,
-            "kept_stages": kept}
+            "kept_stages": kept, "restored": restored}
 
 
 def _dir_bytes(path: str) -> int:

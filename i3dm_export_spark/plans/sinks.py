@@ -37,6 +37,8 @@ import uuid
 import pandas as pd
 from pyspark.sql import DataFrame
 
+from . import checkpoint
+
 _MANIFEST_SCHEMA = "relpath string, n_bytes bigint, content_md5 string"
 
 #: largest subtree-root set assembled and written on the driver
@@ -88,8 +90,10 @@ def write_binary_files(
 
     ``relpath`` may contain subdirectories; parents are created per task.
     When ``manifest_path`` is given the (relpath, n_bytes) manifest is
-    persisted there as parquet (the action that drives the writes);
-    otherwise a plain count() drives them.
+    persisted there as parquet (the action that drives the writes), as a
+    refreshed copy swapped in by renaming the live one aside
+    (``checkpoint.refresh_dir`` / ``replace_dir``), and its row count is
+    read off the written footers; otherwise a plain count() drives them.
     """
     from ..packaging import ensure_shipped
 
@@ -108,15 +112,9 @@ def write_binary_files(
         _write, _MANIFEST_SCHEMA
     )
     if manifest_path:
-        manifest.write.mode("overwrite").parquet(manifest_path)
-        # row count straight off the written footers (pyarrow) — a Spark
-        # re-read pays a second full job's latency for metadata; non-local
-        # manifest roots (hdfs://, s3a://) keep the engine count
-        from .checkpoint import part_files
-
-        if os.path.isdir(manifest_path.removeprefix("file:")):
-            return sum(f.n_rows for f in part_files(manifest_path))
-        return files.sparkSession.read.parquet(manifest_path).count()
+        checkpoint.replace_dir(checkpoint.refresh_dir(manifest_path, manifest),
+                               manifest_path)
+        return sum(f.n_rows for f in checkpoint.part_files(manifest_path))
     return manifest.count()
 
 
@@ -125,25 +123,23 @@ def write_binary_files_driver(files, root_dir: str,
     """Driver twin of :func:`write_binary_files` for ``files``, a list of
     (relpath, bytes) already on the driver: the same atomic write with
     the content-compare fast path, from a thread pool, and the same
-    (relpath, n_bytes, content_md5) manifest, written with pyarrow (its
-    footer carries Spark's schema, so ``read_parquet`` of it launches no
-    job). Returns the number of files."""
+    (relpath, n_bytes, content_md5) manifest, written with pyarrow
+    (``checkpoint.write_driver_table``: its footer carries Spark's schema,
+    so ``read_parquet`` of it launches no job). Returns the number of
+    files."""
     from concurrent.futures import ThreadPoolExecutor
 
     import pyarrow as pa
-
-    from .checkpoint import write_driver_table
 
     os.makedirs(root_dir, exist_ok=True)
     rows = []
     if files:
         with ThreadPoolExecutor(max_workers=min(32, len(files))) as pool:
             rows = list(pool.map(lambda f: _write_file(root_dir, *f), files))
-    write_driver_table(manifest_path, pa.table(
-        [pa.array([r[i] for r in rows], t) for i, t in
-         enumerate((pa.string(), pa.int64(), pa.string()))],
-        names=["relpath", "n_bytes", "content_md5"],
-    ))
+    checkpoint.write_driver_table(manifest_path, pa.table({
+        c: [r[i] for r in rows]
+        for i, c in enumerate(("relpath", "n_bytes", "content_md5"))}),
+        _MANIFEST_SCHEMA)
     return len(rows)
 
 
@@ -167,7 +163,6 @@ def write_subtrees(tiles, tiles_pdf, subtree_levels: int, root_dir: str,
     from pyspark.sql import functions as F
 
     from ..operators import subtree
-    from . import checkpoint
 
     s = subtree_levels
     if tiles_pdf is None and stage_dir is not None:

@@ -50,7 +50,8 @@ APPEND_BATCH_BUDGET_0_JOBS_PINNED = 15
 #: distributed counts merge and per-level descent, the stage-2 writes,
 #: the tile diff kernel with its cap and collect, the Spark dirty set,
 #: the Spark re-encode and the manifest merges through the keep kernel
-APPEND_SPARK_PLAN_JOBS_PINNED = 71
+#: (one write each, into the refreshed copy)
+APPEND_SPARK_PLAN_JOBS_PINNED = 69
 
 
 def _count_jobs(spark, fn):
@@ -258,7 +259,7 @@ class TestDriverTableSwap:
         real_replace = os.replace
 
         def crash_on_move_in(src, dst):
-            if src.endswith(".tmpwrite"):
+            if src.endswith("._incr"):
                 raise OSError("injected crash")
             return real_replace(src, dst)
 
@@ -272,3 +273,100 @@ class TestDriverTableSwap:
         checkpoint.write_driver_table(path, pa.table({"a": [3]}))
         assert pq.read_table(path).column("a").to_pylist() == [3]
         assert sorted(os.listdir(tmp_path)) == ["manifest"]
+
+    def test_aside_beside_live_table_is_dropped(self, tmp_path):
+        """An aside next to a live directory is a finished swap's: the next
+        swap drops it and leaves only the new table."""
+        import pyarrow as pa
+
+        from i3dm_export_spark.plans import checkpoint
+
+        path = str(tmp_path / "manifest")
+        checkpoint.write_driver_table(path, pa.table({"a": [1]}))
+        checkpoint.write_driver_table(path + ".old", pa.table({"a": [0]}))
+        checkpoint.write_driver_table(path, pa.table({"a": [2]}))
+        assert pq.read_table(path).column("a").to_pylist() == [2]
+        assert sorted(os.listdir(tmp_path)) == ["manifest"]
+
+
+class TestRefreshDir:
+    """``checkpoint.refresh_dir`` builds ``<dir>._incr``: kept files are
+    hard-linked, rows are added as new files in the live directory's
+    schema, from the driver (Arrow) or from Spark (a DataFrame)."""
+
+    @staticmethod
+    def _live(tmp_path):
+        import pyarrow as pa
+
+        from i3dm_export_spark.plans import checkpoint
+
+        final = str(tmp_path / "stage")
+        schema = pa.schema([pa.field("k", pa.int32(), nullable=False),
+                            pa.field("v", pa.string())])
+        checkpoint.write_driver_table(final, pa.table(
+            {"k": [7, 8], "v": ["a", "b"]}, schema=schema))
+        return final, part_files(final)[0].path, schema
+
+    def test_arrow_rows_take_the_live_schema(self, tmp_path):
+        import pyarrow as pa
+
+        from i3dm_export_spark.plans import checkpoint
+
+        final, kept, schema = self._live(tmp_path)
+        rows = pa.table({"v": ["c", "d", "e"], "k": [3, 1, 2],
+                         "extra": [0.5, 0.5, 0.5]})
+        tmp = checkpoint.refresh_dir(final, rows, keep=[kept],
+                                     prefix="delta-", n_files=2,
+                                     sort_by=["k"])
+        assert tmp == final + "._incr"
+        linked = os.path.join(tmp, os.path.basename(kept))
+        assert os.stat(linked).st_ino == os.stat(kept).st_ino
+        added = sorted(n for n in os.listdir(tmp) if n.startswith("delta-"))
+        assert [n[:17] for n in added] == ["delta-part-00000-",
+                                           "delta-part-00001-"]
+        assert all(n.endswith("-c000.snappy.parquet") for n in added)
+        got = pa.concat_tables(pq.read_table(os.path.join(tmp, n))
+                               for n in added)
+        assert got.schema.remove_metadata() == schema
+        assert got.column("k").to_pylist() == [1, 2, 3]
+        assert checkpoint.arrow_schema(tmp) == schema
+        # a null relaxes the NOT NULL field of the file that holds it only
+        tmp = checkpoint.refresh_dir(final, pa.table(
+            {"k": pa.array([None], pa.int64()), "v": ["x"]}))
+        assert pq.read_schema(part_files(tmp)[0].path).field(
+            "k").nullable
+        assert os.listdir(final) and not os.path.exists(final + ".old")
+
+    def test_empty_rows_write_one_empty_file(self, tmp_path):
+        import pyarrow as pa
+
+        from i3dm_export_spark.plans import checkpoint
+
+        final, kept, schema = self._live(tmp_path)
+        tmp = checkpoint.refresh_dir(final, pa.table(
+            {"k": pa.array([], pa.int32()), "v": pa.array([], pa.string())}),
+            keep=[kept], prefix="batch-", n_files=4)
+        files = part_files(tmp)
+        assert [f.n_rows for f in files] == [0, 2]
+        assert os.path.basename(files[0].path).startswith("batch-part-00000-")
+
+    def test_spark_rows_range_partitioned_and_renamed_in(self, spark,
+                                                         tmp_path):
+        from i3dm_export_spark.plans import checkpoint
+
+        final, kept, _schema = self._live(tmp_path)
+        rows = spark.range(30).selectExpr("cast(29 - id as int) as k",
+                                          "cast(id as string) as v")
+        tmp = checkpoint.refresh_dir(final, rows, keep=[kept],
+                                     prefix="delta-", n_files=3,
+                                     sort_by=["k"])
+        assert not os.path.exists(os.path.join(tmp, "_scratch"))
+        added = [f for f in part_files(tmp)
+                 if os.path.basename(f.path).startswith("delta-part-")]
+        assert len(added) == 3 and sum(f.n_rows for f in added) == 30
+        ranges = sorted((min(k), max(k)) for k in (
+            pq.read_table(f.path).column("k").to_pylist() for f in added))
+        assert all(a[1] < b[0] for a, b in zip(ranges, ranges[1:]))
+        checkpoint.replace_dir(tmp, final)
+        assert sorted(os.listdir(tmp_path)) == ["stage"]
+        assert checkpoint.read_parquet(spark, final).count() == 32

@@ -1283,10 +1283,13 @@ class TestBatchPlans:
 
     def test_driver_written_files_match_spark_written(self, spark, tmp_path,
                                                       oracle_cases):
-        """The stage-0 batch file and the stage-3 delta files the driver
-        writes carry the Spark-written files' Arrow schema and footer
-        Spark schema, and lon/lat (stage 3: also level/x/y) statistics in
-        every row group: the next append prunes on them, and serve."""
+        """Every file the driver writes carries the Arrow schema and footer
+        Spark schema of the Spark-written files of its table: the stage-0
+        batch file and the stage-3 delta files (with lon/lat, stage 3 also
+        level/x/y, statistics in every row group: the next append prunes
+        on them, and serve), the stage-2 tiles and cell counts (against
+        the base export's), and both merged sink manifests (against the
+        base export's content manifest, which the executor sink wrote)."""
         import shutil
 
         import pyarrow.parquet as pq
@@ -1299,29 +1302,77 @@ class TestBatchPlans:
         s = incremental_append(batch, out, opts=opts)
         assert s["batch_on_driver"] is True
         assert s["n_stage3_rewritten_files"] > 0  # a flip: dirty files read
-        for stage, prefix, stat_cols in (
-                ("stage0_instances", "batch-", ("lon", "lat")),
+
+        def parquet(d, prefix):
+            return sorted(os.path.join(d, n) for n in os.listdir(d)
+                          if n.startswith(prefix) and n.endswith(".parquet"))
+
+        for table, prefix, stat_cols, ref_table in (
+                ("stage0_instances", "batch-", ("lon", "lat"), None),
                 ("stage3_assigned", "delta-",
-                 ("level", "x", "y", "lon", "lat"))):
-            d = os.path.join(out, "_checkpoints", stage)
-            names = sorted(n for n in os.listdir(d) if n.endswith(".parquet"))
-            ref = pq.read_schema(os.path.join(
-                d, next(n for n in names if n.startswith("part-"))))
-            driver = [n for n in names if n.startswith(prefix)]
-            assert driver, stage
-            for name in driver:
+                 ("level", "x", "y", "lon", "lat"), None),
+                ("stage2_tiles", "part-", ("level", "x", "y"), None),
+                ("stage2_cellcounts", "part-", ("cell_x", "cell_y"), None),
+                ("_sink_manifests/content", "part-", (), None),
+                ("_sink_manifests/subtrees", "part-", (),
+                 "_sink_manifests/content")):
+            ref = pq.read_schema(parquet(os.path.join(
+                base_out, "_checkpoints", ref_table or table), "part-")[0])
+            driver = parquet(os.path.join(out, "_checkpoints", table), prefix)
+            assert driver, table
+            for path in driver:
+                name = os.path.basename(path)
                 assert "part-" in name and name.endswith(".snappy.parquet")
-                got = pq.read_schema(os.path.join(d, name))
+                got = pq.read_schema(path)
                 assert got.remove_metadata() == ref.remove_metadata(), name
                 # the same Spark schema; pyspark's JSON sorts its keys
                 assert (json.loads(got.metadata[_SPARK_SCHEMA_KEY])
                         == json.loads(ref.metadata[_SPARK_SCHEMA_KEY])), name
-                md = pq.read_metadata(os.path.join(d, name))
+                md = pq.read_metadata(path)
                 for i in range(md.num_row_groups):
                     for c in stat_cols:
                         st = md.row_group(i).column(
                             md.schema.names.index(c)).statistics
                         assert st is not None and st.has_min_max, (name, c)
+
+    @pytest.mark.parametrize("spark_step", ["stage3_rows", "url_guard"])
+    def test_batch_source_evaluated_once(self, spark, tmp_path, monkeypatch,
+                                         oracle_cases, spark_step):
+        """After the collect, the Spark steps read the collected rows, not
+        the batch's source: a counting UDF on the source runs once per
+        batch row when the stage-3 rows overflow the batch budget (the
+        dirty files' rows come on top of the batch's) and when the url
+        guard hands over to its semi-join; the bytes still equal the
+        from-scratch union export's."""
+        import shutil
+
+        from pyspark.sql import functions as F
+
+        from i3dm_export_spark.plans import incremental as incr
+
+        base_out, batch, full, opts = oracle_cases["split"]
+        n_batch = batch.count()
+        if spark_step == "stage3_rows":
+            monkeypatch.setattr(incr, "_MAX_DRIVER_BATCH_ROWS", n_batch)
+        else:
+            monkeypatch.setattr(incr, "_url_overlap_driver",
+                                lambda *_a: None)
+        evaluations = spark.sparkContext.accumulator(0)
+
+        @F.udf("string")
+        def counted(url):
+            evaluations.add(1)
+            return url
+
+        out = str(tmp_path / "incr")
+        shutil.copytree(base_out, out)
+        s = incremental_append(batch.withColumn("url", counted("url")), out,
+                               opts=opts)
+        assert s["batch_on_driver"] is True
+        assert s["n_new_instances"] == n_batch
+        assert evaluations.value == n_batch
+        assert _tree_files(out) == _tree_files(full)
+
 
     @pytest.mark.parametrize("plan", ["driver", "spark"])
     def test_query_filtered_batch(self, spark, tmp_path, monkeypatch, plan):
@@ -1371,3 +1422,53 @@ class TestBatchPlans:
         s = incremental_append(batch, out)
         assert seen == [None] and s["batch_on_driver"] is False
         assert _tree_files(out) == _tree_files(out_full)
+
+
+class TestSwapCrash:
+    """A crash at the move-in of a directory swap (``os.replace`` of the
+    refreshed copy fails) leaves the live data whole under ``<dir>.old``;
+    the next ``checkpoint.replace_dir`` puts it back and completes the
+    swap, leaving neither the aside nor the copy behind."""
+
+    @pytest.mark.parametrize("target", ["stage3_assigned",
+                                        "_sink_manifests/content"])
+    def test_crash_at_move_in(self, tmp_path, monkeypatch, oracle_cases,
+                              target):
+        import shutil
+
+        from i3dm_export_spark.plans import checkpoint
+
+        base_out, batch, _full, opts = oracle_cases["split"]
+        out = str(tmp_path / "incr")
+        shutil.copytree(base_out, out)
+        final = os.path.join(out, "_checkpoints", target)
+
+        def contents(d):
+            files = {}
+            for name in sorted(os.listdir(d)):
+                with open(os.path.join(d, name), "rb") as f:
+                    files[name] = f.read()
+            return files
+
+        live = contents(final)
+        tmp = final + "._incr"
+        real_replace = os.replace
+
+        def crash_on_move_in(src, dst):
+            if src == tmp:
+                raise OSError("injected crash")
+            return real_replace(src, dst)
+
+        monkeypatch.setattr(os, "replace", crash_on_move_in)
+        with pytest.raises(OSError, match="injected crash"):
+            incremental_append(batch, out, opts=opts)
+        monkeypatch.undo()
+        assert not os.path.exists(final)
+        assert contents(final + ".old") == live
+        refreshed = contents(tmp)
+
+        checkpoint.replace_dir(tmp, final)
+        assert contents(final) == refreshed
+        parent, name = os.path.split(final)
+        assert not [n for n in os.listdir(parent)
+                    if n in (name + ".old", name + "._incr")]

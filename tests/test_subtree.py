@@ -326,8 +326,10 @@ class TestTilesetLevels:
         append's (2nd distinct root level of the tiles with content) and
         the export's (2nd distinct root level of the subtree files
         written), for subtree depths 1-4 with clustering on and off."""
+        import pyarrow as pa
+
         from i3dm_export_spark.operators import tiling
-        from i3dm_export_spark.plans import incremental
+        from i3dm_export_spark.plans import checkpoint
         from i3dm_export_spark.plans.pipeline import tileset_levels
 
         rng = np.random.default_rng(11)
@@ -358,8 +360,8 @@ class TestTilesetLevels:
                                  subtree.build_subtrees_pandas_for_roots(
                                      tiles, None, s)])[:2]
             export_rule = int(written[1]) if len(written) > 1 else 2
-            incremental._write_parquet_driver(path, tiles,
-                                              incremental._TILES_DDL)
+            checkpoint.write_driver_table(
+                path, pa.Table.from_pandas(tiles, preserve_index=False))
             assert tileset_levels(path, s) == (
                 int(tiles["level"].max()) + 1, append_rule), (i, s)
             assert export_rule == append_rule, (i, s)

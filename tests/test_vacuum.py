@@ -33,7 +33,7 @@ class TestVacuumFs:
     def test_empty_and_missing_root(self, tmp_path):
         missing = vacuum(str(tmp_path / "nope"))
         assert missing == {"removed": [], "reclaimed_bytes": 0,
-                           "kept_stages": []}
+                           "kept_stages": [], "restored": []}
         assert vacuum(str(tmp_path))["removed"] == []
 
     def test_swap_scratch_removed(self, tmp_path):
@@ -100,6 +100,72 @@ class TestVacuumFs:
         assert os.path.exists(
             os.path.join(root, "stage2_tiles", "part-0.parquet"))
         assert rep["kept_stages"] == ["stage2_tiles"]
+
+    def test_aside_of_missing_stage_is_restored(self, tmp_path):
+        """A swap that died between its two renames leaves the live stage
+        only under ``<stage>.old``: vacuum renames it back (a dry run only
+        reports it), and the stage is complete again."""
+        root = str(tmp_path)
+        _fake_complete_stage(root, "stage3_assigned")
+        live = os.path.join(root, "stage3_assigned")
+        os.replace(live, live + ".old")
+        rep = vacuum(root, dry_run=True)
+        assert rep["restored"] == [live] and rep["removed"] == []
+        assert os.path.isdir(live + ".old") and not os.path.exists(live)
+        rep = vacuum(root)
+        assert rep["restored"] == [live] and rep["removed"] == []
+        assert rep["kept_stages"] == ["stage3_assigned"]
+        assert os.path.exists(os.path.join(live, "part-0.parquet"))
+        assert not os.path.exists(live + ".old")
+        assert os.path.exists(
+            os.path.join(root, "_lineage", "stage3_assigned.done.json"))
+
+    def test_aside_of_missing_lineage_table_is_restored(self, tmp_path):
+        """The lineage tables are swapped too (``mark_done``): an aside of
+        a missing one is restored, not dropped as orphaned lineage."""
+        root = str(tmp_path)
+        _fake_complete_stage(root, "stage0_instances")
+        live = os.path.join(root, "_lineage", "stage0_instances")
+        os.replace(live, live + ".old")
+        _mkfile(os.path.join(live + "._incr", "part-0.parquet"), 9)
+        rep = vacuum(root, dry_run=True)
+        assert rep["restored"] == [live]
+        assert rep["removed"] == [live + "._incr"]
+        rep = vacuum(root)
+        assert rep["restored"] == [live]
+        assert rep["removed"] == [live + "._incr"]
+        assert os.path.exists(os.path.join(live, "part-0.parquet"))
+        assert sorted(os.listdir(os.path.join(root, "_lineage"))) == [
+            "stage0_instances", "stage0_instances.done.json"]
+
+    def test_aside_of_live_stage_is_reclaimed(self, tmp_path):
+        """An aside beside a live stage is a finished swap's: reclaimed,
+        and the live stage is untouched."""
+        root = str(tmp_path)
+        _fake_complete_stage(root, "stage2_tiles")
+        _mkfile(os.path.join(root, "stage2_tiles.old", "part-0.parquet"), 70)
+        rep = vacuum(root)
+        assert rep["removed"] == [os.path.join(root, "stage2_tiles.old")]
+        assert rep["reclaimed_bytes"] == 70 and rep["restored"] == []
+        assert os.path.exists(
+            os.path.join(root, "stage2_tiles", "part-0.parquet"))
+
+    def test_manifest_aside_and_scratch(self, tmp_path):
+        """The manifest merges swap inside ``_sink_manifests``: an aside
+        there is restored or reclaimed like a stage's, and a refreshed
+        copy left by a crash is reclaimed."""
+        root = str(tmp_path)
+        sinks = os.path.join(root, "_sink_manifests")
+        _mkfile(os.path.join(sinks, "content.old", "part-0.parquet"), 30)
+        _mkfile(os.path.join(sinks, "content._incr", "part-0.parquet"), 20)
+        _mkfile(os.path.join(sinks, "subtrees", "part-0.parquet"), 10)
+        _mkfile(os.path.join(sinks, "subtrees.old", "part-0.parquet"), 5)
+        rep = vacuum(root)
+        assert rep["restored"] == [os.path.join(sinks, "content")]
+        assert sorted(rep["removed"]) == [os.path.join(sinks, "content._incr"),
+                                          os.path.join(sinks, "subtrees.old")]
+        assert rep["reclaimed_bytes"] == 25
+        assert sorted(os.listdir(sinks)) == ["content", "subtrees"]
 
     def test_dry_run_reports_without_deleting(self, tmp_path):
         root = str(tmp_path)
