@@ -19,7 +19,10 @@ src/TileHandler.cs:70, src/TileHandler.cs:51). Semantics reproduced:
 
 The encoder is a grouped ``applyInPandas`` over (level, x, y) — pandas is
 already columnar, so the reference's row->column array building
-(src/TileHandler.cs:74-116) disappears.
+(src/TileHandler.cs:74-116) disappears. Under clustering its group
+function first reduces an over-full tile (:func:`tile_members`), as the
+reference reduces and encodes each tile in one step
+(src/ImplicitTiling.cs:45-47).
 """
 
 from __future__ import annotations
@@ -31,6 +34,7 @@ import numpy as np
 import pandas as pd
 
 from ..functions import geodesy as geo
+from .clustering import reduce_tile
 
 
 # ---------------------------------------------------------------------------
@@ -378,13 +382,28 @@ def prepare_models(
     return prepared, external
 
 
+def tile_members(pdf: pd.DataFrame, opts, order_col: str = "url") -> pd.DataFrame:
+    """The rows a content tile encodes: under clustering, the LOD reduce of
+    an over-full tile to exactly ``max_features_per_tile`` representatives
+    (:func:`~.clustering.reduce_tile`; for a hot tile this is the second
+    stage over the survivors of ``skew.cluster_tiles_salted``), else every
+    row (reference src/ImplicitTiling.cs:45-47)."""
+    if not opts.use_clustering:
+        return pdf
+    return reduce_tile(pdf, opts.max_features_per_tile,
+                       seed=opts.cluster_seed, order_col=order_col,
+                       use_ecef=not opts.keep_projection)
+
+
 def encode_tile(pdf: pd.DataFrame, opts, order_col: str = "url",
                 model_glbs: dict | None = None) -> bytes:
-    """One content tile's member rows -> its payload under ``opts``: the
-    ECEF transform in-group (fused mode), then the GPU glb or the
-    i3dm/cmpt encoder. The group function of :func:`encode_tiles`, and the
-    append's driver re-encode."""
-    pdf = _ensure_ecef_cols(pdf, opts.keep_projection)
+    """One content tile's rows -> its payload under ``opts``: the LOD
+    reduce (:func:`tile_members`), the ECEF transform in-group (fused
+    mode), then the GPU glb or the i3dm/cmpt encoder. The one per-tile
+    kernel of the export's :func:`encode_tiles` and both plans of the
+    append's re-encode, so a tile is reduced and encoded in one step."""
+    pdf = _ensure_ecef_cols(tile_members(pdf, opts, order_col),
+                            opts.keep_projection)
     if opts.use_gpu_instancing:
         from .gpu_encode import encode_gpu_tile_pdf
 
@@ -403,8 +422,9 @@ def encode_tile(pdf: pd.DataFrame, opts, order_col: str = "url",
 
 def encode_tiles(assigned, opts, order_col: str = "url",
                  model_glbs: dict | None = None):
-    """Stage-4 encode over all content tiles: grouped applyInPandas -> one
-    row per tile with the payload bytes column (K1 sink-ready). The physical
+    """Stage-4 reduce + encode over all content tiles: grouped
+    applyInPandas of :func:`encode_tile` -> one row per tile with the
+    payload bytes column (K1 sink-ready). The physical
     shape — column-pruned input, one hash shuffle on the tile key, no sort —
     beat two measured alternatives on local[32], 24M rows / 14,744 tiles:
     range partition + sort + one batch-grouping ``mapInPandas`` pass took
@@ -431,7 +451,6 @@ def encode_tiles(assigned, opts, order_col: str = "url",
             T.StructField("level", T.IntegerType()),
             T.StructField("x", T.LongType()),
             T.StructField("y", T.LongType()),
-            T.StructField("n_instances", T.LongType()),
             T.StructField("payload", T.BinaryType()),
         ]
     )
@@ -442,7 +461,6 @@ def encode_tiles(assigned, opts, order_col: str = "url",
         return pd.DataFrame(
             {
                 "level": [int(key[0])], "x": [int(key[1])], "y": [int(key[2])],
-                "n_instances": [len(pdf)],
                 "payload": [encode_tile(pdf, opts, order_col, model_glbs)],
             }
         )

@@ -6,14 +6,17 @@ GROUP: one ``applyInPandas`` group is one task, so a dense urban cell with
 100x the median instance count pins one executor for (superlinearly) 100x
 the median time. This module is the explicit mechanism:
 
-* :func:`hot_cell_keys` — hot cells from the stage-2 counts (a tile is
-  hot when its instance count exceeds ``threshold x max_features``);
+* :func:`hot_tile_keys` — the hot content tiles, read off the stage-2
+  tile table (a tile is hot when its ``n_instances`` exceeds
+  ``threshold x max_features``), with no count over the instances;
 * :func:`add_salt_for_hot` — deterministic per-row salt
-  ``pmod(xxhash64(id), n_buckets)`` for rows in hot cells, salt 0
-  elsewhere (cold groups are not fragmented);
-* :func:`cluster_tiles_salted` — two-stage LOD reduction: stage A
-  reduces each (tile, salt) sub-group to <= k rows, stage B reduces the
-  <= n_buckets*k survivors per tile to exactly k.
+  ``pmod(xxhash64(id), n_buckets)`` for rows in hot cells, null elsewhere
+  (cold groups are not fragmented);
+* :func:`cluster_tiles_salted` — stage A of the hot tiles' two-stage LOD
+  reduction: each (hot tile, salt) sub-group is reduced to <= k rows.
+  Stage B, the reduce of the <= n_buckets*k survivors per tile to exactly
+  k, is the encode's per-tile kernel (``encode.tile_members``), which
+  also reduces every warm tile in one step.
 
 The two-stage split is valid for reductions R where
 R(R(A_1) u ... u R(A_m)) is an acceptable R(A) — k-means representative
@@ -27,7 +30,7 @@ bounded by max_features per tile (operators/knn.py).
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 TILE_KEY = ("level", "x", "y")
 
@@ -41,6 +44,22 @@ def hot_cell_keys(
     return counts.filter(F.col(count_col) > hot_threshold).select(*key_cols)
 
 
+def hot_tile_keys(tiles: DataFrame, tiles_pdf, opts) -> DataFrame | None:
+    """(level, x, y) of the content tiles over ``skew_salt_threshold x
+    max_features_per_tile`` stage-3 rows, from the stage-2 tile table: a
+    content tile's stage-3 rows are exactly the ``n_instances`` under it.
+    With the driver's copy (``tiles_pdf``) the keys become a small Spark
+    frame, or None when no tile is hot; else a filter of ``tiles``."""
+    threshold = int(opts.skew_salt_threshold * opts.max_features_per_tile)
+    if tiles_pdf is None:
+        return hot_cell_keys(tiles, threshold, count_col="n_instances")
+    hot = tiles_pdf.loc[tiles_pdf["n_instances"] > threshold, list(TILE_KEY)]
+    if hot.empty:
+        return None
+    return tiles.sparkSession.createDataFrame(
+        hot, schema="level int, x bigint, y bigint")
+
+
 def add_salt_for_hot(
     df: DataFrame,
     hot: DataFrame,
@@ -50,9 +69,9 @@ def add_salt_for_hot(
     salt_col: str = "_salt",
 ) -> DataFrame:
     """Adds ``salt_col``: pmod(xxhash64(id), n_buckets) inside hot cells,
-    0 elsewhere. The hot-key side is broadcast (it is a filtered subset of
-    the cell-count table — small by construction even at 10^12 rows);
-    the salt is a pure projection, so the only shuffle is whatever the
+    null elsewhere. The hot-key side is broadcast (it is a filtered subset
+    of the tile table — small by construction even at 10^12 rows); the
+    salt is a pure projection, so the only shuffle is whatever the
     downstream groupBy does on (key, salt)."""
     flagged = df.join(
         F.broadcast(hot.withColumn("_is_hot", F.lit(True))),
@@ -64,28 +83,28 @@ def add_salt_for_hot(
         F.when(
             F.col("_is_hot").isNotNull(),
             F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_buckets)),
-        ).otherwise(F.lit(0)),
+        ),
     ).drop("_is_hot")
 
 
 def cluster_tiles_salted(
-    assigned: DataFrame, opts, order_col: str = "url"
+    assigned: DataFrame, hot: DataFrame | None, opts, order_col: str = "url"
 ) -> DataFrame:
-    """Stage-4 LOD reduction with explicit skew salting.
+    """Stage A of the LOD reduction of the hot tiles ``hot`` (keys from
+    :func:`hot_tile_keys`; None: no hot tile, ``assigned`` comes back as
+    is).
 
-    Routing by per-tile count n (k = max_features_per_tile,
-    t = skew_salt_threshold, m = skew_salt_buckets):
-
-    * n <= k          — pass through untouched;
-    * k < n <= t*k    — single-stage reduce (one group, bounded work);
-    * n > t*k (hot)   — salted two-stage: (tile, salt) sub-groups of
-      ~n/m rows reduce to <= k each, then one final reduce of <= m*k rows
-      per tile. Worst-case single-task input drops from n to
-      max(n/m, m*k); per-task k-means cost is superlinear in group size,
-      so wall-clock on a 100:1 hot cell drops accordingly.
-
-    Output: exactly min(k, n) rows per content tile — the same count
-    invariant as the unsalted path."""
+    A hot tile's rows (n > t*k; k = max_features_per_tile,
+    t = skew_salt_threshold, m = skew_salt_buckets) are split into m
+    (tile, salt) sub-groups of ~n/m rows, each reduced to <= k rows; every
+    other row passes through untouched. The encode's per-tile kernel then
+    reduces each tile to exactly min(k, n) rows: a hot tile's <= m*k
+    survivors (stage B) and a warm tile (k < n <= t*k) in one step.
+    Worst-case single-task input drops from n to max(n/m, m*k); per-task
+    k-means cost is superlinear in group size, so wall-clock on a 100:1
+    hot cell drops accordingly."""
+    if hot is None:
+        return assigned
     from ..packaging import ensure_shipped
 
     from .clustering import reduce_tile
@@ -94,39 +113,19 @@ def cluster_tiles_salted(
     k = opts.max_features_per_tile
     seed = opts.cluster_seed
     m = max(int(opts.skew_salt_buckets), 1)
-    hot_threshold = int(opts.skew_salt_threshold * k)
-    key = list(TILE_KEY)
-    schema = assigned.schema
-
-    # per-tile size via a window count (one shuffle on the tile key, which
-    # stage 3 already partitioned by — NOT a broadcast of the full per-tile
-    # count table, which is one row per tile and would overflow broadcast
-    # limits at deep-level scale). Only the filtered HOT key set below is
-    # small-by-construction and safe to collect/broadcast.
-    counts = assigned.groupBy(*key).agg(F.count(F.lit(1)).alias("_n"))
-    wkey = Window.partitionBy(*key)
-    with_n = assigned.withColumn("_n", F.count(F.lit(1)).over(wkey))
-
-    small = with_n.filter(F.col("_n") <= k).drop("_n")
-    warm = with_n.filter((F.col("_n") > k) & (F.col("_n") <= hot_threshold)).drop("_n")
-    hot = with_n.filter(F.col("_n") > hot_threshold).drop("_n")
-
     use_ecef = not opts.keep_projection
+    key = list(TILE_KEY)
 
     def _reduce(pdf: pd.DataFrame) -> pd.DataFrame:
-        return reduce_tile(pdf, k, seed=seed, order_col=order_col,
-                           use_ecef=use_ecef)
+        return reduce_tile(pdf.drop(columns=["_salt"]), k, seed=seed,
+                           order_col=order_col, use_ecef=use_ecef)
 
-    warm_reduced = warm.groupBy(*key).applyInPandas(_reduce, schema=schema)
-
-    hot_keys = hot_cell_keys(counts, hot_threshold, key)
-    salted = add_salt_for_hot(hot, hot_keys, m, id_col=order_col, key_cols=key)
+    salted = add_salt_for_hot(assigned, hot, m, id_col=order_col,
+                              key_cols=key)
+    cold = salted.filter(F.col("_salt").isNull()).drop("_salt")
     stage_a = (
-        salted.groupBy(*key, "_salt")
-        .applyInPandas(
-            lambda pdf: _reduce(pdf.drop(columns=["_salt"])), schema=schema
-        )
+        salted.filter(F.col("_salt").isNotNull())
+        .groupBy(*key, "_salt")
+        .applyInPandas(_reduce, schema=assigned.schema)
     )
-    stage_b = stage_a.groupBy(*key).applyInPandas(_reduce, schema=schema)
-
-    return small.unionByName(warm_reduced).unionByName(stage_b)
+    return cold.unionByName(stage_a)

@@ -430,6 +430,18 @@ class CheckpointManager:
                 **extra,
             }, fh)
 
+    def drop(self, stage: str) -> None:
+        """Remove a stage's done marker, lineage table and directory
+        (absent ones are fine). The marker goes first, so a crash in
+        between leaves an unmarked directory, which ``vacuum`` removes,
+        never a marked stage without its data."""
+        try:
+            os.remove(self._done_marker(stage))
+        except FileNotFoundError:
+            pass
+        shutil.rmtree(self._lineage_path(stage), ignore_errors=True)
+        shutil.rmtree(self._stage_path(stage), ignore_errors=True)
+
     def metrics(self) -> list[dict]:
         out = []
         lineage_dir = os.path.join(self.root, "_lineage")

@@ -4,9 +4,10 @@
       -> stage0_instances   project + geocode + text-invariant fingerprint
       -> stage2 tile tree   (operators/tiling.build_tile_tree — one shuffle)
       -> stage3_assigned    leaf assignment (+ salt-aware repartition)
-      -> stage4_reduced     k-means LOD reduce (clustering only)
-      -> content sink       encode (applyInPandas per tile) piped straight
-                            into the executor writer:
+      -> content sink       one grouped pass per tile: the k-means LOD
+                            reduce (clustering only; hot tiles salted and
+                            pre-reduced first) and the encode, piped
+                            straight into the executor writer:
                             content/{z}_{x}_{y}.cmpt|i3dm + its manifest
       -> subtree sink       subtrees/*.subtree + its manifest: assembled
                             and written on the driver from the driver-held
@@ -19,15 +20,16 @@ ECEF is computed inside the per-tile encoder and the k-means reducer from
 one float64 kernel, so no stage materializes it: that saves a full-width
 write and one full pass over the input.
 
-Stages 0 and 2-4 checkpoint through plans/checkpoint.CheckpointManager with
-per-part-file lineage read from parquet footers; a killed export rerun with
-the same output dir skips completed stages (resume test in
-tests/test_pipeline.py). Payloads are not checkpointed: the sink
-manifests are the durable output of the tail, and a rerun re-encodes
-while the sinks' content-compare fast path leaves current files
-untouched. Facts the driver already holds — the stage done markers' row
-counts, the driver-built tile table — answer the summary and the tree's
-row estimate instead of extra Spark jobs.
+Stages 0, 2 and 3 checkpoint through plans/checkpoint.CheckpointManager
+with per-part-file lineage read from parquet footers; a killed export rerun
+with the same output dir skips completed stages (resume test in
+tests/test_pipeline.py). Neither the reduced rows nor the payloads are
+checkpointed: the sink manifests are the durable output of the tail, and
+a rerun re-reduces (deterministic: url order, seeded k-means) and
+re-encodes from stage 3 while the sinks' content-compare fast path leaves
+current files untouched. Facts the driver already holds — the stage done
+markers' row counts, the driver-built tile table — answer the summary and
+the tree's row estimate instead of extra Spark jobs.
 
 Heavy payload columns (html) are projected away in stage 0 and never enter
 a shuffle (SURVEY.md §7 hazard 8); the byte-identical-text-per-url
@@ -47,9 +49,11 @@ from ..functions import geodesy as geo
 from ..functions.cells import s2_cell_id
 from ..operators import encode as enc
 from ..operators import extent, tiling
-from ..operators.skew import cluster_tiles_salted
+from ..operators.skew import cluster_tiles_salted, hot_tile_keys
 from . import sinks
-from .checkpoint import CheckpointManager, _parquet_paths, footer_columns
+from .checkpoint import (
+    CheckpointManager, _parquet_paths, footer_columns, read_driver_table,
+)
 
 INSTANCE_COLS = [
     "url", "text_fp", "lon", "lat", "z", "scale", "yaw", "pitch", "roll",
@@ -58,6 +62,10 @@ INSTANCE_COLS = [
 #: source columns stage 0 keeps only when the source has them: the
 #: per-axis scale the encoder reads under ``use_scale_non_uniform``
 OPTIONAL_INSTANCE_COLS = ["scale_non_uniform"]
+#: checkpoint stages older exports wrote and no stage reads any more; an
+#: export or an append over such a directory drops them
+RETIRED_STAGES = ("stage1_encoded", "stage4_reduced", "stage4_payloads",
+                  "stage5_subtrees")
 
 
 def instance_cols(columns) -> list[str]:
@@ -299,8 +307,9 @@ def run_export(
     ckpt.run_stage("stage2_cellcounts", _stage2_counts,
                    input_fingerprint=in_fp)
     # a tree built in this run carries its tile facts on the driver: the
-    # assignment and the tileset read them instead of running jobs over
-    # the stage-2 checkpoint (None when stage 2 resumed)
+    # assignment, the hot tiles and the subtrees read them instead of
+    # running jobs over the stage-2 checkpoint. A resumed stage 2 is read
+    # onto the driver with pyarrow within checkpoint._MAX_DRIVER_TILES.
     built = _built.get("tree")
     tree = tiling.TileTree(
         tiles=tree_df, deep_level=opts.max_level,
@@ -310,7 +319,8 @@ def run_export(
             else tree_df.filter("content_available")
             .agg(F.max("level")).collect()[0][0] or 0
         ),
-        tiles_pdf=built.tiles_pdf if built is not None else None,
+        tiles_pdf=(built.tiles_pdf if built is not None else
+                   read_driver_table(ckpt._stage_path("stage2_tiles"))),
     )
 
     # stage 3: assignment, range-partitioned by tile key (Morton-ordered
@@ -325,14 +335,17 @@ def run_export(
     assigned = ckpt.run_stage("stage3_assigned", _assign, partition_cols=None,
                                input_fingerprint=in_fp)
 
-    # stage 4: LOD reduction for over-full content tiles, then payload encode
+    # stage 4: the encode's per-tile kernel reduces each over-full content
+    # tile under clustering. Only hot tiles (dense urban cells, read off
+    # the tile table) are first salted into bounded sub-groups, each
+    # pre-reduced before the superlinear per-tile k-means. Nothing is
+    # checkpointed: a rerun re-reduces from stage 3 (url order, seeded
+    # k-means), so a stage4_reduced left by an older export is dropped.
+    for stale in RETIRED_STAGES:
+        ckpt.drop(stale)
     if opts.use_clustering:
-        # explicit skew path: hot cells (dense urban tiles) are salted into
-        # bounded sub-groups before the superlinear per-tile k-means
-        reduced = ckpt.run_stage(
-            "stage4_reduced", lambda: cluster_tiles_salted(assigned, opts),
-            input_fingerprint=in_fp,
-        )
+        reduced = cluster_tiles_salted(
+            assigned, hot_tile_keys(tree.tiles, tree.tiles_pdf, opts), opts)
     else:
         reduced = assigned
 
@@ -379,12 +392,12 @@ def run_export(
             model_glbs, opts, output_dir=content_dir
         )
 
-    # stage 4 encode, straight into the content sink: the payloads are
-    # written once, by the executors (K1 — SURVEY §2.1; gated by
-    # test_export_never_materializes_on_driver). The content manifest is
-    # the stage's durable output; a rerun re-encodes from stage 3 /
-    # stage4_reduced and the sink's content-compare fast path leaves
-    # current files untouched.
+    # stage 4 reduce + encode, straight into the content sink: the
+    # payloads are written once, by the executors (K1 — SURVEY §2.1; gated
+    # by test_export_never_materializes_on_driver). The content manifest
+    # is the stage's durable output; a rerun re-reduces and re-encodes
+    # from stage 3 and the sink's content-compare fast path leaves current
+    # files untouched.
     payloads = enc.encode_tiles(reduced, opts, model_glbs=prepared_models)
     ext = opts.content_extension
     if write_content:

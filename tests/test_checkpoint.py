@@ -29,6 +29,12 @@ from i3dm_export_spark.sources.pages import pages_df
 #: content-sink pass and the text-invariant fingerprints; its subtree files
 #: are written from the driver-held tile table)
 EXPORT_JOBS_PINNED = 18
+#: Spark jobs of the same export under clustering with hot tiles
+#: (``skew_salt_threshold=2``, so tiles over 200 rows are hot): the
+#: export's jobs plus the salted stage A over the hot tiles, whose keys
+#: come from the driver's tile table. The LOD reduce runs inside the
+#: encode-into-content-sink pass and writes no checkpoint of its own
+CLUSTERED_EXPORT_JOBS_PINNED = 20
 #: Spark jobs of a rerun of that complete export: every stage reloads, the
 #: content sink re-encodes (its content-compare fast path leaves the files
 #: untouched) and the text-invariant fingerprints run again
@@ -121,6 +127,22 @@ class TestJobCounts:
         assert n_jobs <= EXPORT_JOBS_PINNED, (
             f"export ran {n_jobs} Spark jobs, pinned at "
             f"{EXPORT_JOBS_PINNED}: a new per-stage job crept in")
+
+    def test_small_clustered_export_total_is_pinned(self, spark, tmp_path):
+        pages = pages_df(spark, 500, scenario="A")
+        opts = ExportOptions(max_features_per_tile=100, max_level=10,
+                             use_clustering=True, skew_salt_threshold=2.0)
+        out = str(tmp_path / "exp")
+        summary, n_jobs = _count_jobs(
+            spark, lambda: pipeline.run_export(pages, opts, out))
+        tiles = pq.read_table(os.path.join(out, "_checkpoints",
+                                           "stage2_tiles")).to_pandas()
+        content = tiles.loc[tiles["content_available"], "n_instances"]
+        assert (content > 200).any() and (content.between(101, 200)).any()
+        assert summary["n_content_tiles"] == len(content)
+        assert n_jobs <= CLUSTERED_EXPORT_JOBS_PINNED, (
+            f"clustered export ran {n_jobs} Spark jobs, pinned at "
+            f"{CLUSTERED_EXPORT_JOBS_PINNED}")
 
     def test_rerun_of_complete_export_is_pinned(self, spark, tmp_path):
         out = str(tmp_path / "exp")

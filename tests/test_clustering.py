@@ -41,6 +41,22 @@ class TestMiniBatchKMeans:
             assert len(np.unique(blob)) == 1
         assert len(np.unique(labels)) == 4
 
+    @pytest.mark.parametrize("n,k", [(2500, 300), (5000, 40)])
+    def test_labels_independent_of_assignment_chunk(self, monkeypatch, n, k):
+        """The final assignment is chunked by element count; the chunk
+        size bounds memory only, so one row per chunk, the default and
+        one chunk for all rows give the same labels."""
+        from i3dm_export_spark.operators import clustering
+
+        rng = np.random.default_rng(6)
+        # ECEF-scale coordinates: the magnitudes a tile's k-means sees
+        pts = 6.4e6 + rng.normal(0, 50.0, size=(n, 3))
+        default = minibatch_kmeans_labels(pts, k)
+        for elements in (k, 10**9):
+            monkeypatch.setattr(clustering, "_ASSIGN_CHUNK_ELEMENTS", elements)
+            np.testing.assert_array_equal(minibatch_kmeans_labels(pts, k),
+                                          default)
+
 
 class TestReduceTile:
     def _pdf(self, n):

@@ -110,22 +110,54 @@ class TestResume:
 
 class TestClusteredExport:
     def test_clustered_tiles_capped(self, spark, tmp_path):
+        from i3dm_export_spark.operators.encode import parse_cmpt, parse_i3dm
+
         pages = pages_df(spark, 2500, scenario="A")
         opts = ExportOptions(
             max_features_per_tile=100, max_level=12, use_clustering=True
         )
-        s = pipeline.run_export(pages, opts, str(tmp_path / "exp3"), write_content=False)
-        ckpt = os.path.join(tmp_path / "exp3", "_checkpoints", "stage4_reduced")
-        import duckdb
-
+        out = tmp_path / "exp3"
+        s = pipeline.run_export(pages, opts, str(out))
         # the encoder writes every reduced row of a tile into its payload
-        mx = duckdb.sql(
-            f"select max(n) from (select count(*) n from parquet_scan("
-            f"'{ckpt}/*.parquet') group by level, x, y)"
-        ).fetchone()[0]
-        assert mx <= 100
+        counts = [
+            sum(parse_i3dm(t)[0]["INSTANCES_LENGTH"]
+                for t in parse_cmpt((out / "content" / fn).read_bytes()))
+            for fn in os.listdir(out / "content")
+        ]
+        assert len(counts) == s["n_content_tiles"]
+        assert max(counts) <= 100
         # clustering doubles up: interior over-full tiles also carry content
         assert s["n_content_tiles"] > 25  # 2500/100 leaves alone would be ~25
+        # the reduce runs inside the encode's group: no stage checkpoints it
+        assert not os.path.exists(out / "_checkpoints" / "stage4_reduced")
+
+    def test_resume_drops_stale_reduced_stage(self, spark, tmp_path):
+        """An export directory written when the LOD reduce had its own
+        checkpoint keeps a ``stage4_reduced`` stage; a resumed export
+        drops it (data, lineage and marker) and leaves the outputs as
+        they were."""
+        import shutil
+
+        pages = pages_df(spark, 500, scenario="A")
+        opts = ExportOptions(max_features_per_tile=100, max_level=10,
+                             use_clustering=True, use_i3dm=True)
+        out = tmp_path / "exp"
+        pipeline.run_export(pages, opts, str(out))
+        before = (_dir_bytes(out / "content"), _dir_bytes(out / "subtrees"),
+                  (out / "tileset.json").read_bytes())
+        ck = out / "_checkpoints"
+        shutil.copytree(ck / "stage3_assigned", ck / "stage4_reduced")
+        shutil.copytree(ck / "_lineage" / "stage3_assigned",
+                        ck / "_lineage" / "stage4_reduced")
+        shutil.copy(ck / "_lineage" / "stage3_assigned.done.json",
+                    ck / "_lineage" / "stage4_reduced.done.json")
+        s = pipeline.run_export(pages, opts, str(out))
+        assert not os.path.exists(ck / "stage4_reduced")
+        assert not os.path.exists(ck / "_lineage" / "stage4_reduced")
+        assert not os.path.exists(ck / "_lineage" / "stage4_reduced.done.json")
+        assert "stage4_reduced" not in {m["stage"] for m in s["stage_metrics"]}
+        assert (_dir_bytes(out / "content"), _dir_bytes(out / "subtrees"),
+                (out / "tileset.json").read_bytes()) == before
 
 
 class TestDistributedSinks:
@@ -239,21 +271,52 @@ class TestDistributedSinks:
 
     def test_export_never_materializes_on_driver(self, spark, tmp_path, monkeypatch):
         """K1/K3 plan gate (VERDICT r1 items 1-2, 10): the export hot path
-        must not pull payloads or the tile table through the driver."""
-        from pyspark.sql import DataFrame
+        must not pull payloads or the tile table through the driver. The
+        one driver collect allowed is the tree's deep-cell counts, capped
+        at the cell budget (``tiling.tree_from_counts``)."""
+        from i3dm_export_spark.operators import tiling
+
+        pages = pages_df(spark, 500, scenario="A")
+        # the session's concrete frame class: pyspark's classic DataFrame
+        # overrides the collect methods of the ``pyspark.sql.DataFrame``
+        # base, so patching the base intercepts nothing
+        frame_cls = type(pages)
+        allowed = []
 
         def _boom(name):
+            real = getattr(frame_cls, name)
+
             def _f(self, *a, **k):
-                raise AssertionError(f"driver materialization via {name} in export path")
+                if not allowed:
+                    raise AssertionError(
+                        f"driver materialization via {name} in export path")
+                return real(self, *a, **k)
             return _f
 
-        monkeypatch.setattr(DataFrame, "toLocalIterator", _boom("toLocalIterator"))
-        monkeypatch.setattr(DataFrame, "toPandas", _boom("toPandas"))
-        pages = pages_df(spark, 500, scenario="A")
+        tree_from_counts = tiling.tree_from_counts
+
+        def _counts_collect_allowed(*a, **k):
+            allowed.append(True)
+            try:
+                return tree_from_counts(*a, **k)
+            finally:
+                allowed.pop()
+
+        for name in ("toLocalIterator", "toPandas", "toArrow"):
+            monkeypatch.setattr(frame_cls, name, _boom(name))
+        monkeypatch.setattr(tiling, "tree_from_counts", _counts_collect_allowed)
+        with pytest.raises(AssertionError, match="via toPandas"):
+            spark.range(3).toPandas()
         opts = ExportOptions(max_features_per_tile=100, max_level=10)
         s = pipeline.run_export(pages, opts, str(tmp_path / "exp_gate"))
         assert s["n_content_tiles"] > 0
         assert s["n_subtree_files"] >= 1
+        # clustered, with hot tiles: the hot keys come from the tile table
+        # the driver already holds, and the reduce runs in executors
+        opts = ExportOptions(max_features_per_tile=100, max_level=10,
+                             use_clustering=True, skew_salt_threshold=2.0)
+        s = pipeline.run_export(pages, opts, str(tmp_path / "exp_gate_c"))
+        assert s["n_content_tiles"] > 0
 
 
 class TestTextInvariantModes:

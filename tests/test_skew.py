@@ -1,10 +1,14 @@
 """Explicit skew salting (SURVEY.md §7 step 8 / north_rule).
 
 Synthesized 100:1 hot cell: one tile with ~100x the rows of the others.
-Checks routing (cold untouched / warm single-stage / hot two-stage),
-the exactly-k count invariant, salt determinism, that salts actually
-fragment the hot group, and that the elected members do not depend on
-the input's partitioning.
+The LOD reduce is two steps: the salted stage A
+(``skew.cluster_tiles_salted``) over hot tiles only, then the encode's
+per-tile kernel (``encode.encode_tile``, whose reduce is
+``encode.tile_members``), which reduces every over-full tile to exactly
+k. Checks the hot keys read off a tile table, routing (cold and warm
+untouched by stage A, hot fragmented), the exactly-k count invariant of
+the encoded payloads, salt determinism, and that the elected members do
+not depend on the input's partitioning.
 """
 
 from collections import Counter
@@ -13,7 +17,10 @@ import pytest
 from pyspark.sql import functions as F
 
 from i3dm_export_spark.config import ExportOptions
+from i3dm_export_spark.operators import encode as enc
 from i3dm_export_spark.operators import skew
+
+KEY = ["level", "x", "y"]
 
 
 def _assigned(spark, hot_rows=2000, cold_rows=20, n_cold=5):
@@ -25,7 +32,44 @@ def _assigned(spark, hot_rows=2000, cold_rows=20, n_cold=5):
             rows.append((3, t, t, f"c{t}_{i:04d}", 34.05 + t * 1e-3 + i * 1e-5, 44.05, 0.0))
     return spark.createDataFrame(
         rows, "level int, x long, y long, url string, lon double, lat double, z double"
+    ).select(
+        "*", F.lit(1.0).alias("scale"), F.lit(0.0).alias("yaw"),
+        F.lit(0.0).alias("pitch"), F.lit(0.0).alias("roll"),
+        F.lit("m").alias("model"), F.lit(None).cast("string").alias("tags"),
     )
+
+
+def _tiles(df):
+    """The stage-2 tile table's part the hot keys read: n_instances per
+    content tile."""
+    return df.groupBy(*KEY).agg(F.count(F.lit(1)).alias("n_instances"))
+
+
+def _stage_a(df, opts):
+    return skew.cluster_tiles_salted(
+        df, skew.hot_tile_keys(_tiles(df), None, opts), opts)
+
+
+def _encoded_counts(df, opts):
+    """Instances in each tile's payload, from the per-tile kernel run
+    over stage A's output (what the export's content sink writes)."""
+    got = {}
+    for r in enc.encode_tiles(_stage_a(df, opts), opts).collect():
+        inner = enc.parse_cmpt(bytes(r.payload))
+        got[(r.level, r.x, r.y)] = sum(
+            enc.parse_i3dm(t)[0]["INSTANCES_LENGTH"] for t in inner)
+    return got
+
+
+def _members(stage_a, opts):
+    """(level, x, y, url) the per-tile kernel encodes from stage A's
+    output: ``encode.tile_members`` per tile, as ``encode_tile`` runs it."""
+    pdf = stage_a.toPandas()
+    return {
+        (level, x, y, url)
+        for (level, x, y), g in pdf.groupby(KEY)
+        for url in enc.tile_members(g, opts)["url"]
+    }
 
 
 @pytest.fixture(scope="module")
@@ -43,6 +87,19 @@ class TestSalting:
         hot = skew.hot_cell_keys(counts, int(opts.skew_salt_threshold * opts.max_features_per_tile))
         assert [(r.level, r.x, r.y) for r in hot.collect()] == [(3, 0, 0)]
 
+    def test_hot_tile_keys_from_tile_table(self, spark, opts):
+        """Both sides of the tile table give the same hot keys; a driver
+        table without a hot tile gives None, so stage A is skipped."""
+        tiles = _tiles(_assigned(spark))
+        spark_side = skew.hot_tile_keys(tiles, None, opts)
+        driver_side = skew.hot_tile_keys(tiles, tiles.toPandas(), opts)
+        for hot in (spark_side, driver_side):
+            assert [(r.level, r.x, r.y) for r in hot.collect()] == [(3, 0, 0)]
+        cold = _tiles(_assigned(spark, hot_rows=120))
+        assert skew.hot_tile_keys(cold, cold.toPandas(), opts) is None
+        df = _assigned(spark, hot_rows=120)
+        assert skew.cluster_tiles_salted(df, None, opts) is df
+
     def test_salt_fragments_hot_only_and_deterministic(self, spark, opts):
         df = _assigned(spark)
         counts = df.groupBy("level", "x", "y").agg(F.count(F.lit(1)).alias("_n"))
@@ -50,12 +107,14 @@ class TestSalting:
         salted = skew.add_salt_for_hot(df, hot, 4, id_col="url")
         per_tile = (
             salted.groupBy("level", "x")
-            .agg(F.countDistinct("_salt").alias("ns"))
+            .agg(F.countDistinct("_salt").alias("ns"),
+                 F.count("_salt").alias("n_salted"))
             .collect()
         )
-        by_x = {r.x: r.ns for r in per_tile}
-        assert by_x[0] == 4           # hot tile fragmented into all buckets
-        assert all(v == 1 for x, v in by_x.items() if x != 0)  # cold: salt 0
+        by_x = {r.x: (r.ns, r.n_salted) for r in per_tile}
+        assert by_x[0] == (4, 2000)   # hot tile fragmented into all buckets
+        # cold: no salt, so one group each
+        assert all(v == (0, 0) for x, v in by_x.items() if x != 0)
         # deterministic: same salt on recompute
         s1 = {(r.url, r._salt) for r in salted.collect()}
         s2 = {(r.url, r._salt) for r in skew.add_salt_for_hot(df, hot, 4, id_col="url").collect()}
@@ -63,42 +122,46 @@ class TestSalting:
 
     def test_reduction_count_invariant(self, spark, opts):
         df = _assigned(spark)
-        out = skew.cluster_tiles_salted(df, opts)
-        got = {
-            (r.level, r.x, r.y): r.n
-            for r in out.groupBy("level", "x", "y").agg(F.count(F.lit(1)).alias("n")).collect()
-        }
-        assert got[(3, 0, 0)] == opts.max_features_per_tile  # hot -> exactly k
+        stage_a = _stage_a(df, opts)
+        # stage A: cold rows untouched, the hot tile pre-reduced to at
+        # most k per salt bucket
+        cold = df.filter("x != 0")
+        assert sorted(stage_a.filter("x != 0").collect()) == sorted(cold.collect())
+        n_hot_a = stage_a.filter("x = 0").count()
+        k, m = opts.max_features_per_tile, opts.skew_salt_buckets
+        assert k < n_hot_a <= m * k
+        got = _encoded_counts(df, opts)
+        assert got[(3, 0, 0)] == k  # hot -> exactly k
         for t in range(1, 6):
             assert got[(3, t, t)] == 20  # under k -> untouched
 
     def test_warm_tile_single_stage(self, spark, opts):
-        # 120 rows: k < n <= 8k -> warm path, exactly k out
+        # 120 rows: k < n <= 8k -> warm: stage A passes it through, the
+        # per-tile kernel reduces it to exactly k in one step
         df = _assigned(spark, hot_rows=120, cold_rows=10, n_cold=1)
-        out = skew.cluster_tiles_salted(df, opts)
-        n_hot = out.filter("x = 0").count()
-        assert n_hot == opts.max_features_per_tile
+        assert _stage_a(df, opts).filter("x = 0").count() == 120
+        assert _encoded_counts(df, opts)[(3, 0, 0)] == opts.max_features_per_tile
 
     def test_survivors_come_from_input(self, spark, opts):
         df = _assigned(spark)
-        out = skew.cluster_tiles_salted(df, opts)
+        members = _members(_stage_a(df, opts), opts)
         in_urls = {r.url for r in df.collect()}
-        assert {r.url for r in out.collect()} <= in_urls
+        assert {url for *_key, url in members} <= in_urls
 
     def test_member_sets_partition_invariant(self, spark, opts):
-        """The elected members of every route — hot (salted two-stage),
-        warm (single stage), cold (untouched) — must not depend on how the
-        input is partitioned."""
+        """The elected members of every route — hot (salted stage A, then
+        the per-tile kernel), warm (the kernel alone), cold (untouched) —
+        must not depend on how the input is partitioned."""
         warm = _assigned(spark, hot_rows=120, cold_rows=0, n_cold=0).select(
             "level", F.lit(7).cast("long").alias("x"),
             F.lit(7).cast("long").alias("y"),
             F.concat(F.lit("w"), "url").alias("url"), "lon", "lat", "z",
+            "scale", "yaw", "pitch", "roll", "model", "tags",
         )
         df = _assigned(spark).unionByName(warm)
 
         def members(n_parts):
-            out = skew.cluster_tiles_salted(df.repartition(n_parts), opts)
-            return {(r.level, r.x, r.y, r.url) for r in out.collect()}
+            return _members(_stage_a(df.repartition(n_parts), opts), opts)
 
         one = members(1)
         assert one == members(64)
