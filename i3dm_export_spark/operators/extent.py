@@ -73,6 +73,21 @@ def raw_extent_from_parquet_stats(
 ) -> tuple[float, float, float, float, float, float] | None:
     """Pre-inflation data extent from parquet FOOTER statistics — zero
     data rows read. Returns None when any row group lacks stats."""
+    facts = parquet_footer_facts(path, lon=lon, lat=lat, z=z)
+    return None if facts is None else facts[1]
+
+
+def parquet_footer_facts(
+    path: str | list[str],
+    lon: str = "lon",
+    lat: str = "lat",
+    z: str = "z",
+) -> tuple[int, tuple[float, ...] | None] | None:
+    """(row count, pre-inflation extent) of parquet files from one walk
+    of their FOOTERS — zero data rows read. The extent is None when any
+    non-empty row group lacks a column or its stats (or no row group
+    holds rows); the whole result is None when the files cannot be
+    opened as a parquet dataset."""
     import pyarrow.dataset as pads
 
     from ..plans.checkpoint import footer_columns
@@ -86,14 +101,17 @@ def raw_extent_from_parquet_stats(
     except Exception:
         return None
     want = {lon: [None, None], lat: [None, None], z: [None, None]}
-    n_groups = 0
+    n_rows = n_groups = 0
+    stats_ok = True
     for frag in dataset.get_fragments():
         md = frag.metadata
-        if not md.num_row_groups:
+        n_rows += md.num_rows
+        if not (md.num_row_groups and stats_ok):
             continue
         cols = footer_columns(md)
         if any(c not in cols for c in want):
-            return None
+            stats_ok = False
+            continue
         for rg in range(md.num_row_groups):
             group = md.row_group(rg)
             if group.num_rows == 0:
@@ -102,13 +120,16 @@ def raw_extent_from_parquet_stats(
             for col, (lo, hi) in want.items():
                 stats = group.column(cols[col]).statistics
                 if stats is None or not stats.has_min_max:
-                    return None
+                    stats_ok = False
+                    break
                 want[col][0] = stats.min if lo is None else min(lo, stats.min)
                 want[col][1] = stats.max if hi is None else max(hi, stats.max)
-    if n_groups == 0 or want[lon][0] is None:
-        return None
-    return (want[lon][0], want[lat][0], want[lon][1], want[lat][1],
-            want[z][0], want[z][1])
+            if not stats_ok:
+                break
+    if not stats_ok or n_groups == 0 or want[lon][0] is None:
+        return n_rows, None
+    return n_rows, (want[lon][0], want[lat][0], want[lon][1], want[lat][1],
+                    want[z][0], want[z][1])
 
 
 def bounds_from_parquet_stats(

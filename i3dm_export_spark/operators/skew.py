@@ -13,7 +13,9 @@ the median time. This module is the explicit mechanism:
   ``pmod(xxhash64(id), n_buckets)`` for rows in hot cells, null elsewhere
   (cold groups are not fragmented);
 * :func:`cluster_tiles_salted` — stage A of the hot tiles' two-stage LOD
-  reduction: each (hot tile, salt) sub-group is reduced to <= k rows.
+  reduction: each (hot tile, salt) sub-group is reduced to <= k rows by
+  the pandas kernel :func:`stage_a_reduce`, which the export's one-task
+  plan runs too (:func:`reduce_hot_tile`, over one hot tile's rows).
   Stage B, the reduce of the <= n_buckets*k survivors per tile to exactly
   k, is the encode's per-tile kernel (``encode.tile_members``), which
   also reduces every warm tile in one step.
@@ -29,10 +31,23 @@ bounded by max_features per tile (operators/knn.py).
 
 from __future__ import annotations
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
+from .clustering import reduce_tile
+
 TILE_KEY = ("level", "x", "y")
+
+
+def hot_threshold(opts) -> int:
+    """Stage-3 rows over which a content tile is hot:
+    ``skew_salt_threshold x max_features_per_tile``."""
+    return int(opts.skew_salt_threshold * opts.max_features_per_tile)
+
+
+def _n_buckets(opts) -> int:
+    return max(int(opts.skew_salt_buckets), 1)
 
 
 def hot_cell_keys(
@@ -50,7 +65,7 @@ def hot_tile_keys(tiles: DataFrame, tiles_pdf, opts) -> DataFrame | None:
     content tile's stage-3 rows are exactly the ``n_instances`` under it.
     With the driver's copy (``tiles_pdf``) the keys become a small Spark
     frame, or None when no tile is hot; else a filter of ``tiles``."""
-    threshold = int(opts.skew_salt_threshold * opts.max_features_per_tile)
+    threshold = hot_threshold(opts)
     if tiles_pdf is None:
         return hot_cell_keys(tiles, threshold, count_col="n_instances")
     hot = tiles_pdf.loc[tiles_pdf["n_instances"] > threshold, list(TILE_KEY)]
@@ -87,6 +102,16 @@ def add_salt_for_hot(
     ).drop("_is_hot")
 
 
+def stage_a_reduce(pdf: pd.DataFrame, opts, order_col: str = "url"
+                   ) -> pd.DataFrame:
+    """Stage A kernel: one (hot tile, salt) sub-group's rows reduced to
+    <= k = ``max_features_per_tile`` representatives
+    (:func:`~.clustering.reduce_tile`, seeded, in ``order_col`` order)."""
+    return reduce_tile(pdf, opts.max_features_per_tile,
+                       seed=opts.cluster_seed, order_col=order_col,
+                       use_ecef=not opts.keep_projection)
+
+
 def cluster_tiles_salted(
     assigned: DataFrame, hot: DataFrame | None, opts, order_col: str = "url"
 ) -> DataFrame:
@@ -96,32 +121,25 @@ def cluster_tiles_salted(
 
     A hot tile's rows (n > t*k; k = max_features_per_tile,
     t = skew_salt_threshold, m = skew_salt_buckets) are split into m
-    (tile, salt) sub-groups of ~n/m rows, each reduced to <= k rows; every
-    other row passes through untouched. The encode's per-tile kernel then
-    reduces each tile to exactly min(k, n) rows: a hot tile's <= m*k
-    survivors (stage B) and a warm tile (k < n <= t*k) in one step.
-    Worst-case single-task input drops from n to max(n/m, m*k); per-task
-    k-means cost is superlinear in group size, so wall-clock on a 100:1
-    hot cell drops accordingly."""
+    (tile, salt) sub-groups of ~n/m rows, each reduced to <= k rows by
+    :func:`stage_a_reduce`; every other row passes through untouched. The
+    encode's per-tile kernel then reduces each tile to exactly min(k, n)
+    rows: a hot tile's <= m*k survivors (stage B) and a warm tile
+    (k < n <= t*k) in one step. Worst-case single-task input drops from n
+    to max(n/m, m*k); per-task k-means cost is superlinear in group size,
+    so wall-clock on a 100:1 hot cell drops accordingly."""
     if hot is None:
         return assigned
     from ..packaging import ensure_shipped
 
-    from .clustering import reduce_tile
-
     ensure_shipped(assigned.sparkSession)
-    k = opts.max_features_per_tile
-    seed = opts.cluster_seed
-    m = max(int(opts.skew_salt_buckets), 1)
-    use_ecef = not opts.keep_projection
     key = list(TILE_KEY)
 
     def _reduce(pdf: pd.DataFrame) -> pd.DataFrame:
-        return reduce_tile(pdf.drop(columns=["_salt"]), k, seed=seed,
-                           order_col=order_col, use_ecef=use_ecef)
+        return stage_a_reduce(pdf.drop(columns=["_salt"]), opts, order_col)
 
-    salted = add_salt_for_hot(assigned, hot, m, id_col=order_col,
-                              key_cols=key)
+    salted = add_salt_for_hot(assigned, hot, _n_buckets(opts),
+                              id_col=order_col, key_cols=key)
     cold = salted.filter(F.col("_salt").isNull()).drop("_salt")
     stage_a = (
         salted.filter(F.col("_salt").isNotNull())
@@ -129,3 +147,15 @@ def cluster_tiles_salted(
         .applyInPandas(_reduce, schema=assigned.schema)
     )
     return cold.unionByName(stage_a)
+
+
+def reduce_hot_tile(pdf: pd.DataFrame, hashes, opts,
+                    order_col: str = "url") -> pd.DataFrame:
+    """Stage A over one hot tile's rows held in one process: the rows
+    split by :func:`add_salt_for_hot`'s salt, ``pmod(hashes, m)`` with
+    ``hashes`` Spark's ``xxhash64`` of ``order_col``, and each sub-group
+    reduced by :func:`stage_a_reduce` — the survivors
+    :func:`cluster_tiles_salted` leaves for that tile."""
+    salt = np.mod(np.asarray(hashes, np.int64), _n_buckets(opts))
+    return pd.concat([stage_a_reduce(g, opts, order_col)
+                      for _, g in pdf.groupby(salt, sort=True)])

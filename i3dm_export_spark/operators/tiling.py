@@ -21,17 +21,28 @@ At 10^12 rows nothing here requires a driver-side materialization of
 instances; the per-level tile tables stay DataFrames until `collect_tiles`
 (which the sandbox uses for subtree/tileset emission, bounded by tile count
 not instance count).
+
+The same steps have numpy kernels over Arrow rows held in one process
+(:func:`cell_counts`, :func:`match_keys`, :func:`assign_rows`): the
+append's driver plans and the export's one-task plan call them, bit for
+bit the keys and matches of the Spark expressions above.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
 
+import numpy as np
 from pyspark.sql import DataFrame, functions as F
 
 from ..config import Bounds, ExportOptions
+from ..functions import cells
 
 TILE_SCHEMA_COLS = ("level", "x", "y", "available", "content_available", "n_instances")
+#: the stage-2 tile table's and deep-cell count table's rows
+TILES_DDL = ("level int, x bigint, y bigint, available boolean, "
+             "content_available boolean, n_instances bigint")
+CELL_COUNTS_DDL = "cell_x bigint, cell_y bigint, cnt bigint"
 
 
 def with_cell_keys(
@@ -56,7 +67,6 @@ class TileTree:
     tiles: DataFrame          # (level, x, y, available, content_available, n_instances)
     deep_level: int           # level of the instance cell keys used
     bounds: Bounds
-    max_content_level: int    # deepest level holding content
     #: the MATERIALIZED deep-cell counts (cell_x, cell_y, cnt) the build
     #: consumed — persisting them beside the tile table makes the next
     #: incremental append's tree a counts MERGE (O(cells)) instead of a
@@ -133,23 +143,35 @@ def build_tile_tree(
     resolution while uniform data avoids paying for a needlessly deep
     roll-up chain. :func:`tree_from_counts` picks the descent's side.
     """
-    spark = instances.sparkSession
+    if deep_level is not None:
+        return _build_tile_tree_at(instances, bounds, opts, deep_level)
+    n = n_estimate if n_estimate is not None else instances.count()
+    return adaptive_tree(
+        lambda level: _build_tile_tree_at(instances, bounds, opts, level),
+        n, opts)
 
-    if deep_level is None:
-        import math
 
-        n = n_estimate if n_estimate is not None else instances.count()
-        est = math.ceil(math.log(max(n / max(opts.max_features_per_tile, 1), 1), 4))
-        deep_level = min(max(est + 3, 2), opts.max_level)
-        while True:
-            tree = _build_tile_tree_at(instances, bounds, opts, deep_level)
-            if deep_level >= opts.max_level:
-                return tree
-            if not _has_overfull_leaf(tree, deep_level,
-                                      opts.max_features_per_tile):
-                return tree
-            deep_level = min(deep_level + 4, opts.max_level)
-    return _build_tile_tree_at(instances, bounds, opts, deep_level)
+def adaptive_tree(build_at, n: int, opts: ExportOptions) -> TileTree:
+    """:func:`build_tile_tree`'s deep-level loop over ``build_at(level)``,
+    a function building the tree from deep-cell counts at ``level``, for
+    ``n`` input rows: start at the row estimate, and retry 4 levels deeper
+    while a non-final level holds an over-full forced leaf. The Spark
+    plan and the export's one-task plan (which counts with
+    :func:`cell_counts` and descends with :func:`tree_from_counts_pandas`)
+    share it, so both pick the same deep level. An abandoned tree's Spark
+    tile table is unpersisted."""
+    import math
+
+    est = math.ceil(math.log(max(n / max(opts.max_features_per_tile, 1), 1), 4))
+    deep_level = min(max(est + 3, 2), opts.max_level)
+    while True:
+        tree = build_at(deep_level)
+        if deep_level >= opts.max_level or not _has_overfull_leaf(
+                tree, deep_level, opts.max_features_per_tile):
+            return tree
+        if tree.tiles is not None:
+            tree.tiles.unpersist()
+        deep_level = min(deep_level + 4, opts.max_level)
 
 
 def _has_overfull_leaf(tree: TileTree, level: int, max_features: int) -> bool:
@@ -284,23 +306,12 @@ def tree_from_counts_pandas(
         pdf["cell_x"], pdf["cell_y"], pdf["cnt"], deep_level,
         opts.max_features_per_tile, opts.use_clustering, floor_level,
     )
-    max_content_level = int(
-        tiles_pdf.loc[tiles_pdf.content_available, "level"].max()
-    ) if tiles_pdf.content_available.any() else 0
     if spark is None:
         return TileTree(tiles=None, deep_level=deep_level, bounds=bounds,
-                        max_content_level=max_content_level,
                         tiles_pdf=tiles_pdf)
-    tiles = spark.createDataFrame(
-        tiles_pdf,
-        schema="level int, x bigint, y bigint, available boolean, "
-               "content_available boolean, n_instances bigint",
-    ).persist()
-    counts_df = spark.createDataFrame(
-        pdf, schema="cell_x bigint, cell_y bigint, cnt bigint"
-    )
+    tiles = spark.createDataFrame(tiles_pdf, schema=TILES_DDL)
+    counts_df = spark.createDataFrame(pdf, schema=CELL_COUNTS_DDL)
     return TileTree(tiles=tiles, deep_level=deep_level, bounds=bounds,
-                    max_content_level=max_content_level,
                     deep_counts_df=counts_df, tiles_pdf=tiles_pdf)
 
 
@@ -376,13 +387,11 @@ def _descend_distributed(
     tiles = level_tiles[0]
     for t in level_tiles[1:]:
         tiles = tiles.unionByName(t)
+    # persisted: its consumers re-read it; the caller that is done with the
+    # tree unpersists it
     tiles = tiles.drop("_split").persist()
-
-    max_content_level = (
-        tiles.filter("content_available").agg(F.max("level")).collect()[0][0] or 0
-    )
     return TileTree(tiles=tiles, deep_level=deep_level, bounds=bounds,
-                    max_content_level=max_content_level, deep_counts_df=deep)
+                    deep_counts_df=deep)
 
 
 def assign_to_content_tiles(
@@ -461,6 +470,71 @@ def match_content_tiles(cells: DataFrame, tree: TileTree) -> DataFrame:
         .drop("_cand", "cell_x", "cell_y")
     )
     return exploded.join(content_side, ["level", "x", "y"], "inner")
+
+
+def cell_counts(rows, bounds: Bounds, deep_level: int):
+    """Kernel twin of :func:`deep_counts` over ``rows`` (an Arrow table
+    with lon, lat, already filtered by ``opts.query``): its (cell_x,
+    cell_y, cnt) at ``deep_level`` as pandas, keyed by ``cells.tile_xy``."""
+    import pandas as pd
+
+    cx, cy = cells.tile_xy(rows.column("lon"), rows.column("lat"),
+                           deep_level, bounds.bbox)
+    return (pd.DataFrame({"cell_x": cx, "cell_y": cy})
+            .groupby(["cell_x", "cell_y"], as_index=False).size()
+            .rename(columns={"size": "cnt"}))
+
+
+def packed_by_level(level, x, y) -> dict[int, np.ndarray]:
+    """Tile keys as level -> packed ``(x << 32) | y`` array."""
+    level = np.asarray(level, np.int64)
+    packed = (np.asarray(x, np.int64) << 32) | np.asarray(y, np.int64)
+    return {int(lv): packed[level == lv] for lv in np.unique(level)}
+
+
+def content_keys(tiles_pdf) -> dict[int, np.ndarray]:
+    """The content tiles of a tile table, as :func:`packed_by_level`."""
+    content = tiles_pdf.loc[tiles_pdf["content_available"]]
+    return packed_by_level(content["level"], content["x"], content["y"])
+
+
+def match_keys(cx, cy, cell_level: int, keys: dict[int, np.ndarray]):
+    """The numpy row matcher: rows keyed by their cell ``(cx, cy)`` at
+    ``cell_level`` -> one match per row and per level L of ``keys``
+    (:func:`packed_by_level`) whose ancestor-or-self key at L is in the
+    set: one right shift per level, then a packed-key ``np.isin``.
+    Returns (row, level, x, y) arrays, grouped by level. Over the content
+    tiles it is the twin of :func:`match_content_tiles`; the append also
+    runs it over its flipped tiles."""
+    cx = np.asarray(cx, np.int64)
+    cy = np.asarray(cy, np.int64)
+    parts = []
+    for lv, packed in sorted(keys.items()):
+        kx, ky = cx >> (cell_level - lv), cy >> (cell_level - lv)
+        rows = np.flatnonzero(np.isin((kx << 32) | ky, packed))
+        parts.append((rows, np.full(len(rows), lv), kx[rows], ky[rows]))
+    if not parts:
+        return (np.empty(0, np.int64),) * 4
+    return tuple(np.concatenate(c) for c in zip(*parts))
+
+
+def assign_rows(rows, tree: TileTree):
+    """Kernel twin of :func:`assign_to_content_tiles` over ``rows`` (an
+    Arrow table of instance columns that already passed ``opts.query``)
+    and a tree with ``tiles_pdf``: one row per content tile over each
+    row's deep cell (:func:`match_keys`), with its level (int32), x and y
+    (int64) appended. The caller casts to the stage-3 schema it writes."""
+    import pyarrow as pa
+
+    cx, cy = cells.tile_xy(rows.column("lon"), rows.column("lat"),
+                           tree.deep_level, tree.bounds.bbox)
+    idx, lv, x, y = match_keys(cx, cy, tree.deep_level,
+                               content_keys(tree.tiles_pdf))
+    out = rows.take(pa.array(idx))
+    for name, values, typ in (("level", lv, pa.int32()), ("x", x, pa.int64()),
+                              ("y", y, pa.int64())):
+        out = out.append_column(name, pa.array(values, typ))
+    return out
 
 
 def collect_tiles(tree: TileTree):

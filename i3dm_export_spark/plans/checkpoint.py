@@ -170,8 +170,7 @@ _ASIDE_SUFFIX = ".old"
 
 
 def refresh_dir(final: str, rows, keep=(), prefix: str = "",
-                n_files: int = 1, sort_by=(), schema: str | None = None
-                ) -> str:
+                n_files: int = 1, sort_by=(), schema=None) -> str:
     """Build the refreshed copy of the parquet directory ``final`` at
     ``final + "._incr"`` and return its path (:func:`replace_dir` swaps it
     in). ``final`` stays live meanwhile, so ``rows`` may read it.
@@ -181,16 +180,20 @@ def refresh_dir(final: str, rows, keep=(), prefix: str = "",
     them as new files named ``<prefix>part-NNNNN-...``, like Spark's, so
     the lineage still parses ``part-NNNNN``:
 
-    * a pyarrow table is written from the driver, cast to the schema of
-      ``final``'s first data file (:func:`arrow_schema`; ``schema``, a DDL
-      string, when ``final`` holds none; else its own) with a NOT NULL
+    * a pyarrow table is written by the calling process (the driver, or
+      the Python worker of the export's one-task plan), cast to the
+      schema of ``final``'s first data file (:func:`arrow_schema`;
+      ``schema``, a DDL string or, where no JVM is at hand, an Arrow
+      schema, when ``final`` holds none; else its own) with a NOT NULL
       field relaxed only where the column holds a null (:func:`cast_to`),
-      sorted by ``sort_by`` when given and split into at most ``n_files``
-      contiguous ``...-<uuid>-c000.snappy.parquet`` files. Each carries
-      Spark's schema in its footer, so :func:`read_parquet` launches no
-      inference job, and pyarrow's column statistics, so footer pruning
-      reads it as it reads Spark's. An empty table writes one empty file,
-      as Spark's writer does;
+      and split into at most ``n_files`` contiguous
+      ``...-<uuid>-c000.snappy.parquet`` files: sorted by ``sort_by`` and
+      cut between keys where Spark's range partitioner cuts
+      (:func:`_range_cuts`) when given, else into equal row counts. Each
+      carries Spark's schema in its footer, so :func:`read_parquet`
+      launches no inference job, and pyarrow's column statistics, so
+      footer pruning reads it as it reads Spark's. An empty table writes
+      one empty file, as Spark's writer does;
     * a DataFrame is written by Spark, range-partitioned on ``sort_by``
       into ``n_files`` partitions when given, into a scratch directory
       inside the copy, and its data files are renamed in."""
@@ -220,21 +223,62 @@ def refresh_dir(final: str, rows, keep=(), prefix: str = "",
         return tmp
     target = arrow_schema(final)
     if target is None:
-        target = (to_arrow_schema(StructType.fromDDL(schema)) if schema
-                  else rows.schema)
+        if isinstance(schema, str):
+            schema = to_arrow_schema(StructType.fromDDL(schema))
+        target = schema if schema is not None else rows.schema
     rows = cast_to(rows, target)
+    n = max(min(n_files, rows.num_rows), 1)
     if sort_by:
         rows = rows.sort_by([(c, "ascending") for c in sort_by])
+        cuts = _range_cuts(rows, sort_by, n)
+    else:
+        cuts = np.linspace(0, rows.num_rows, n + 1).astype(np.int64)
     rows = rows.replace_schema_metadata({
         _SPARK_SCHEMA_KEY: from_arrow_schema(rows.schema).json()})
-    n = max(min(n_files, rows.num_rows), 1)
-    cuts = np.linspace(0, rows.num_rows, n + 1).astype(np.int64)
     tag = uuid.uuid4()
-    for i in range(n):
+    for i in range(len(cuts) - 1):
         name = f"{prefix}part-{i:05d}-{tag}-c000.snappy.parquet"
         pq.write_table(rows.slice(cuts[i], cuts[i + 1] - cuts[i]),
                        os.path.join(tmp, name))
     return tmp
+
+
+def _range_cuts(rows, keys, n: int) -> list[int]:
+    """Row offsets splitting ``rows``, sorted by ``keys``, into at most
+    ``n`` files as ``repartitionByRange(n, *keys)`` splits them: the
+    bounds of Spark's ``RangePartitioner.determineBounds`` with every row
+    as a sample of weight 1 — a file ends after the first key whose
+    cumulative count reaches the next multiple of ``num_rows / n``, so a
+    key never spans two files. Empty files are not cut; an empty table
+    is one cut."""
+    total = rows.num_rows
+    if total == 0:
+        return [0, 0]
+    step = total / n
+    cuts, target = [0], step
+    for end in group_ends(rows, keys).tolist():
+        if len(cuts) == n:
+            break
+        if end >= target:
+            cuts.append(end)
+            target += step
+    if cuts[-1] != total:
+        cuts.append(total)
+    return cuts
+
+
+def group_ends(rows, keys) -> np.ndarray:
+    """End offsets of the runs of equal ``keys`` in the Arrow table
+    ``rows`` (sorted by them): row ``ends[i-1]`` (0 for i = 0) up to
+    ``ends[i]`` share one key; empty for an empty table."""
+    total = rows.num_rows
+    if total == 0:
+        return np.empty(0, np.int64)
+    change = np.zeros(total - 1, bool)
+    for k in keys:
+        col = rows.column(k).to_numpy()
+        change |= col[1:] != col[:-1]
+    return np.append(np.flatnonzero(change) + 1, total)
 
 
 def replace_dir(tmp: str, final: str) -> None:
@@ -254,11 +298,11 @@ def replace_dir(tmp: str, final: str) -> None:
     shutil.rmtree(aside, ignore_errors=True)
 
 
-def write_driver_table(path: str, table, schema: str | None = None) -> None:
+def write_driver_table(path: str, table, schema=None) -> None:
     """Replace the parquet directory ``path`` with the pyarrow ``table`` as
-    one file written from the driver (:func:`refresh_dir`, then
-    :func:`replace_dir`); ``schema`` is the DDL of a fresh directory's
-    rows."""
+    one file written by this process (:func:`refresh_dir`, then
+    :func:`replace_dir`); ``schema`` (DDL or Arrow) is a fresh
+    directory's."""
     replace_dir(refresh_dir(path, table, schema=schema), path)
 
 

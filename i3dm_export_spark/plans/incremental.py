@@ -30,7 +30,7 @@ an append works from the base export's checkpoints and the batch:
    footer (level, x, y) box cannot hold such a row and writing the rest
    as delta files, and the stage-2 tiles and cell counts are rewritten
    whole. On the driver plan one numpy row matcher
-   (``_match_keys``) finds the covered rows in the dirty files (read with
+   (``tiling.match_keys``) finds the covered rows in the dirty files (read with
    pyarrow) and reassigns them with the batch, and the driver writes the
    delta sorted by tile key;
 5. dirty tiles in closed form: an instance in deep cell ``c`` matches the
@@ -134,7 +134,9 @@ from ..config import Bounds, ExportOptions
 from ..functions import cells
 from ..operators import encode as enc
 from ..operators import subtree, tiling
-from ..operators.skew import cluster_tiles_salted, hot_tile_keys
+from ..operators.skew import (
+    cluster_tiles_salted, hot_threshold, hot_tile_keys,
+)
 from ..packaging import map_kernel
 from . import checkpoint, sinks
 from .checkpoint import (
@@ -691,8 +693,7 @@ def _reencode_on_driver(
         _keys_by_level(dirty_keys),
     ) & tiles_pdf["content_available"].to_numpy(bool)]
     n_rows = int(n.sum())
-    hot = opts.use_clustering and bool((n > int(
-        opts.skew_salt_threshold * opts.max_features_per_tile)).any())
+    hot = opts.use_clustering and bool((n > hot_threshold(opts)).any())
     return n_rows <= _MAX_DRIVER_MEMBER_ROWS and not hot, n_rows
 
 
@@ -917,66 +918,23 @@ def _covered_expr(flipped: list[tuple[int, int, int]], bounds, deep_level: int):
     return attach, expr
 
 
-def _packed_by_level(level, x, y) -> dict[int, np.ndarray]:
-    """Tile keys as level -> packed ``(x << 32) | y`` array."""
-    level = np.asarray(level, np.int64)
-    packed = (np.asarray(x, np.int64) << 32) | np.asarray(y, np.int64)
-    return {int(lv): packed[level == lv] for lv in np.unique(level)}
-
-
-def _content_keys(tiles_pdf) -> dict[int, np.ndarray]:
-    content = tiles_pdf.loc[tiles_pdf["content_available"]]
-    return _packed_by_level(content["level"], content["x"], content["y"])
-
-
-def _match_keys(cx, cy, cell_level: int, keys: dict[int, np.ndarray]):
-    """The driver plans' row matcher: rows keyed by their cell ``(cx,
-    cy)`` at ``cell_level`` -> one match per row and per level L of
-    ``keys`` (:func:`_packed_by_level`) whose ancestor-or-self key at L is
-    in the set: one right shift per level, then a packed-key ``np.isin``.
-    Returns (row, level, x, y) arrays. Over the content tiles it is the
-    twin of ``tiling.match_content_tiles``; over the flipped tiles, of
-    :func:`_covered_expr`."""
-    cx = np.asarray(cx, np.int64)
-    cy = np.asarray(cy, np.int64)
-    parts = []
-    for lv, packed in sorted(keys.items()):
-        kx, ky = cx >> (cell_level - lv), cy >> (cell_level - lv)
-        rows = np.flatnonzero(np.isin((kx << 32) | ky, packed))
-        parts.append((rows, np.full(len(rows), lv), kx[rows], ky[rows]))
-    if not parts:
-        return (np.empty(0, np.int64),) * 4
-    return tuple(np.concatenate(c) for c in zip(*parts))
-
-
 def _content_keys_over_cells(
     cells_pdf, tiles_pdf, deep_level: int
 ) -> set[tuple[int, int, int]]:
     """Driver twin of ``tiling.match_content_tiles`` for key sets: the
     content tiles of ``tiles_pdf`` that are ancestors-or-self of any deep
     cell in ``cells_pdf`` (columns cell_x, cell_y at ``deep_level``)."""
-    _rows, lv, x, y = _match_keys(cells_pdf["cell_x"], cells_pdf["cell_y"],
-                                  deep_level, _content_keys(tiles_pdf))
+    _rows, lv, x, y = tiling.match_keys(
+        cells_pdf["cell_x"], cells_pdf["cell_y"], deep_level,
+        tiling.content_keys(tiles_pdf))
     return set(zip(lv.tolist(), x.tolist(), y.tolist()))
-
-
-def _cell_counts(batch, bounds: Bounds, deep_level: int):
-    """Driver twin of ``tiling.deep_counts`` over a collected batch: its
-    (cell_x, cell_y, cnt) at ``deep_level``, keyed by ``cells.tile_xy``."""
-    import pandas as pd
-
-    cx, cy = cells.tile_xy(batch.column("lon"), batch.column("lat"),
-                           deep_level, bounds.bbox)
-    return (pd.DataFrame({"cell_x": cx, "cell_y": cy})
-            .groupby(["cell_x", "cell_y"], as_index=False).size()
-            .rename(columns={"size": "cnt"}))
 
 
 def _split_covered(paths: list[str], flipped, bounds: Bounds, schema):
     """Driver twin of the covered scan: the rows of the stage-3 files at
     ``paths``, read with pyarrow and cast to ``schema``, split into the
     rows kept as they are and the covered rows — the instance lies under
-    a flipped tile, found by :func:`_match_keys` on its cell at the
+    a flipped tile, found by ``tiling.match_keys`` on its cell at the
     deepest flipped level, as :func:`_covered_expr` finds it — deduped on
     url (stage 3 holds one row per matched tile). Returns (kept,
     covered) tables."""
@@ -986,7 +944,7 @@ def _split_covered(paths: list[str], flipped, bounds: Bounds, schema):
 
     if not paths:
         return schema.empty_table(), schema.empty_table()
-    keys = _packed_by_level(*zip(*flipped))
+    keys = tiling.packed_by_level(*zip(*flipped))
     lmax = max(keys)
     kept, covered = [], []
     for p in paths:
@@ -994,32 +952,13 @@ def _split_covered(paths: list[str], flipped, bounds: Bounds, schema):
         cx, cy = cells.tile_xy(t.column("lon"), t.column("lat"), lmax,
                                bounds.bbox)
         hit = np.zeros(t.num_rows, bool)
-        hit[_match_keys(cx, cy, lmax, keys)[0]] = True
+        hit[tiling.match_keys(cx, cy, lmax, keys)[0]] = True
         kept.append(t.filter(pa.array(~hit)))
         covered.append(t.filter(pa.array(hit)))
     covered = pa.concat_tables(covered)
     first = ~pd.Series(covered.column("url").to_pylist()).duplicated()
     return (pa.concat_tables(kept),
             covered.filter(pa.array(first.to_numpy(bool))))
-
-
-def _assign_rows(rows, tree: tiling.TileTree, schema):
-    """Driver twin of ``tiling.assign_to_content_tiles`` over ``rows`` (an
-    Arrow table of instance columns, which already passed ``opts.query``:
-    the batch was filtered, stage 3 holds filtered rows only): one row per
-    content tile over each row's deep cell (:func:`_match_keys`), with its
-    level, x, y, cast to ``schema``."""
-    import pyarrow as pa
-
-    cx, cy = cells.tile_xy(rows.column("lon"), rows.column("lat"),
-                           tree.deep_level, tree.bounds.bbox)
-    idx, lv, x, y = _match_keys(cx, cy, tree.deep_level,
-                                _content_keys(tree.tiles_pdf))
-    out = rows.take(pa.array(idx))
-    for name, values, typ in (("level", lv, pa.int32()), ("x", x, pa.int64()),
-                              ("y", y, pa.int64())):
-        out = out.append_column(name, pa.array(values, typ))
-    return checkpoint.cast_to(out, schema)
 
 
 #: a flipped set larger than this means the append is reshaping a large
@@ -1158,7 +1097,7 @@ def _delta_refresh(
     batch's deep-cell counts are numpy, and while the batch plus the
     dirty files' footer rows fit ``_MAX_DRIVER_BATCH_ROWS`` the covered
     rows are read with pyarrow, reassigned with the batch by
-    :func:`_match_keys` and written by the driver as the stage-3 delta.
+    ``tiling.match_keys`` and written by the driver as the stage-3 delta.
     With the batch in Spark the only Spark jobs are its deep-cell counts,
     the covered-row scan when a tile flipped, and the stage-3 delta
     write; at small batch sizes per-job latency, not data, dominates. The
@@ -1226,7 +1165,8 @@ def _delta_refresh(
             deep_level = int(base_pdf["deep_level"].iloc[0])
             batch_pdf = (
                 tiling.deep_counts(new_inst, bounds, deep_level).toPandas()
-                if batch is None else _cell_counts(batch, bounds, deep_level))
+                if batch is None
+                else tiling.cell_counts(batch, bounds, deep_level))
             merged = (
                 pd.concat([base_pdf[["cell_x", "cell_y", "cnt"]], batch_pdf],
                           ignore_index=True)
@@ -1268,7 +1208,7 @@ def _delta_refresh(
         )
         # the batch's counts at the recount's deep level, not the merge's
         batch_pdf = (None if batch is None
-                     else _cell_counts(batch, bounds, tree.deep_level))
+                     else tiling.cell_counts(batch, bounds, tree.deep_level))
         batch_counts = tiling.deep_counts(batch_df(), bounds,
                                           tree.deep_level)
     deep_level = tree.deep_level
@@ -1346,7 +1286,9 @@ def _delta_refresh(
             covered_old.select(inst_columns),
         ])
         delta_rows = pa.concat_tables([
-            keep_rows, _assign_rows(to_reassign, tree, loose)])
+            keep_rows,
+            checkpoint.cast_to(tiling.assign_rows(to_reassign, tree),
+                               loose)])
     else:
         if dirty_files:
             attach, covered = _covered_expr(flipped, bounds, deep_level)
@@ -1412,6 +1354,10 @@ def _delta_refresh(
     tmp3 = checkpoint.refresh_dir(
         stage3_dir, delta_rows, keep=clean_files, prefix="delta-",
         n_files=max(min(n_part, 1 + len(dirty_files)), 1), sort_by=TILE_KEY)
+    # the caller reads the written stage 2 (``tiles``): a distributed
+    # tree's persisted tile table has no further reader
+    if tree.tiles is not None:
+        tree.tiles.unpersist()
 
     _dmark("stage3_link_write")
     return {

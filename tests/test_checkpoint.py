@@ -38,7 +38,15 @@ CLUSTERED_EXPORT_JOBS_PINNED = 20
 #: Spark jobs of a rerun of that complete export: every stage reloads, the
 #: content sink re-encodes (its content-compare fast path leaves the files
 #: untouched) and the text-invariant fingerprints run again
-EXPORT_RERUN_JOBS_PINNED = 11
+EXPORT_RERUN_JOBS_PINNED = 9
+#: Spark jobs of the 500-row export from a bare parquet scan: the one-task
+#: plan's one job (at most 2 allowed), which writes every stage and the
+#: content files; the driver writes the rest
+TASK_EXPORT_JOBS_PINNED = 2
+#: Spark jobs of the same export on the Spark plan
+#: (``pipeline._MAX_TASK_EXPORT_ROWS`` = 0): the source's footers give the
+#: extent, so one job fewer than the in-memory source's
+BARE_SCAN_SPARK_PLAN_JOBS_PINNED = 16
 #: Spark jobs of a small localized append on the driver path (3 new
 #: instances into one content tile of the 500-row export, no flipped
 #: tile): the one collect of the batch. Its guards, deep-cell counts,
@@ -154,6 +162,23 @@ class TestJobCounts:
             f"rerun ran {n_jobs} Spark jobs, pinned at "
             f"{EXPORT_RERUN_JOBS_PINNED}")
 
+
+    @pytest.mark.parametrize("budget, pinned", [
+        (None, TASK_EXPORT_JOBS_PINNED), (0, BARE_SCAN_SPARK_PLAN_JOBS_PINNED)])
+    def test_bare_scan_export_is_pinned(self, spark, tmp_path, monkeypatch,
+                                        budget, pinned):
+        if budget is not None:
+            monkeypatch.setattr(pipeline, "_MAX_TASK_EXPORT_ROWS", budget)
+        src = str(tmp_path / "src")
+        pages_df(spark, 500, scenario="A").write.parquet(src)
+        pages = spark.read.parquet(src)
+        opts = ExportOptions(max_features_per_tile=100, max_level=10)
+        summary, n_jobs = _count_jobs(spark, lambda: pipeline.run_export(
+            pages, opts, str(tmp_path / "exp")))
+        assert summary["one_task"] is (budget is None)
+        assert summary["n_instances"] == 500
+        assert n_jobs <= pinned, (
+            f"bare-scan export ran {n_jobs} Spark jobs, pinned at {pinned}")
 
     def test_small_append_is_pinned(self, spark, tmp_path):
         from i3dm_export_spark.plans.incremental import incremental_append
@@ -371,6 +396,35 @@ class TestRefreshDir:
         files = part_files(tmp)
         assert [f.n_rows for f in files] == [0, 2]
         assert os.path.basename(files[0].path).startswith("batch-part-00000-")
+
+    def test_arrow_cuts_match_spark_range_partitioning(self, spark,
+                                                       tmp_path):
+        """Arrow rows sorted by ``sort_by`` are cut where
+        ``repartitionByRange`` cuts them whenever Spark's range sample
+        holds every row (here: 150 rows in 8 input partitions), so a
+        driver-written directory has Spark's file boxes."""
+        import numpy as np
+        import pyarrow as pa
+
+        from i3dm_export_spark.plans import checkpoint
+
+        rng = np.random.default_rng(3)
+        k = np.repeat(np.arange(40), rng.integers(1, 9, 40))[:150]
+        rows = pa.table({"k": pa.array(rng.permutation(k), pa.int32()),
+                         "v": [str(i) for i in range(len(k))]})
+        boxes = {}
+        for side, frame in (("arrow", rows), ("spark", spark.createDataFrame(
+                rows.to_pandas(), "k int, v string"))):
+            final = str(tmp_path / side)
+            checkpoint.replace_dir(checkpoint.refresh_dir(
+                final, frame, n_files=6, sort_by=["k"], schema="k int, v string"),
+                final)
+            boxes[side] = sorted(
+                (min(t), max(t), len(t)) for t in (
+                    pq.read_table(f.path).column("k").to_pylist()
+                    for f in part_files(final)) if t)
+        assert boxes["arrow"] == boxes["spark"]
+        assert len(boxes["arrow"]) > 1
 
     def test_spark_rows_range_partitioned_and_renamed_in(self, spark,
                                                          tmp_path):

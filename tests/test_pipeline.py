@@ -317,6 +317,35 @@ class TestDistributedSinks:
                              use_clustering=True, skew_salt_threshold=2.0)
         s = pipeline.run_export(pages, opts, str(tmp_path / "exp_gate_c"))
         assert s["n_content_tiles"] > 0
+        # a bare parquet scan takes the one-task plan: its one collect is
+        # the kernel's summary row, and nothing else reaches the driver
+        src = str(tmp_path / "src")
+        pages.write.parquet(src)
+        s = pipeline.run_export(spark.read.parquet(src), opts,
+                                str(tmp_path / "exp_gate_t"))
+        assert s["one_task"] is True and s["n_content_tiles"] > 0
+
+
+class TestCachedRelations:
+    @pytest.mark.parametrize("cells_budget", [None, 0])
+    def test_export_leaves_no_cached_relation(self, spark, tmp_path,
+                                              monkeypatch, cells_budget):
+        """Neither descent leaves a cached tile table behind: the driver
+        descent caches none, the distributed one (cell budget 0) is
+        unpersisted once stage 2 is written, and so is a tree the build
+        abandoned for a deeper level (scenario S retries deeper)."""
+        from i3dm_export_spark.operators import tiling
+
+        if cells_budget is not None:
+            monkeypatch.setattr(tiling, "_MAX_DRIVER_CELLS", cells_budget)
+        spark.catalog.clearCache()
+        cache = spark._jsparkSession.sharedState().cacheManager()
+        opts = ExportOptions(max_features_per_tile=100, max_level=10,
+                             use_clustering=True)
+        s = pipeline.run_export(pages_df(spark, 500, scenario="S"), opts,
+                                str(tmp_path / "exp"))
+        assert s["n_content_tiles"] > 0
+        assert cache.isEmpty()
 
 
 class TestTextInvariantModes:
@@ -333,6 +362,39 @@ class TestTextInvariantModes:
         )
         assert s_full["text_invariant_violations"] == 0
         assert s_agg["text_invariant_violations"] == 0
+
+    @pytest.mark.parametrize("mode", ["agg", "full"])
+    def test_rewritten_stage3_fingerprint_fires(self, spark, tmp_path, mode):
+        """A completed export whose stage-3 checkpoint carries one wrong
+        text fingerprint: the rerun resumes (on the Spark plan) and the
+        invariant reports the url."""
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        from i3dm_export_spark.plans.checkpoint import part_files
+
+        pages = pages_df(spark, 300, scenario="A")
+        opts = ExportOptions(max_features_per_tile=100, max_level=8)
+        out = str(tmp_path / "exp")
+        first = pipeline.run_export(pages, opts, out, text_invariant=mode)
+        assert first["text_invariant_violations"] == 0
+        path = next(f.path for f in part_files(os.path.join(
+            out, "_checkpoints", "stage3_assigned")) if f.n_rows)
+        t = pq.read_table(path)
+        fp = t.column("text_fp").to_numpy().copy()
+        fp[0] ^= 1
+        pq.write_table(t.set_column(t.schema.get_field_index("text_fp"),
+                                    t.schema.field("text_fp"),
+                                    pa.array(fp, t.schema.field(
+                                        "text_fp").type)), path)
+        # Spark's checksum of the old bytes would fail the read
+        crc = os.path.join(os.path.dirname(path),
+                           f".{os.path.basename(path)}.crc")
+        if os.path.exists(crc):
+            os.remove(crc)
+        again = pipeline.run_export(pages, opts, out, text_invariant=mode)
+        assert again["one_task"] is False
+        assert again["text_invariant_violations"] == 1
 
 
 class TestPartialSinkResume:
