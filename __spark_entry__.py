@@ -603,13 +603,21 @@ def q_image_features(spark, sf_dir):
 # ---- non-SQL-expressible ops (rows-only checks) ---------------------------
 
 def q_cluster_kmeans(spark, sf_dir):
-    from i3dm_export_spark.operators.clustering import cluster_tiles
+    """The export's LOD reduce (``encode.tile_members``) per content tile,
+    in ``doc_id`` order: over-full tiles keep exactly k rows."""
+    from i3dm_export_spark.operators.encode import tile_members
 
     inst = _instances(spark, sf_dir)
     opts = ExportOptions(max_features_per_tile=50, max_level=6, use_clustering=True)
     tree_c = tiling.build_tile_tree(inst, _BOUNDS, opts, deep_level=6)
     assigned = tiling.assign_to_content_tiles(inst, tree_c, opts)
-    reduced = cluster_tiles(assigned, opts, order_col="doc_id")
+
+    def _reduce(pdf: pd.DataFrame) -> pd.DataFrame:
+        return tile_members(pdf, opts, order_col="doc_id")
+
+    reduced = assigned.groupBy("level", "x", "y").applyInPandas(
+        _reduce, schema=assigned.schema
+    )
     return reduced.groupBy("level", "x", "y").agg(
         F.count(F.lit(1)).alias("n_reduced")
     )

@@ -13,9 +13,32 @@ are non-reproducible even run-to-run; the contract its own test pins is the
 This implementation pins a seed for self-reproducibility and guarantees the
 count invariant by re-seeding empty clusters from the farthest points.
 
-Spark surface: :func:`cluster_tiles` — ``applyInPandas`` per content tile,
-input pre-sorted by ``url`` (the FIXTURES.md §5 total-order contract
-replacing the reference's unspecified DB order).
+Callers: :func:`reduce_tile` runs the kernel on one tile's rows in
+``order_col`` order (the FIXTURES.md §5 total-order contract replacing the
+reference's unspecified DB order). It is the LOD reduce of
+``encode.tile_members`` (the export's per-tile encode on both plans, the
+one-task export and the append's re-encode) and of stage A of the hot
+tiles (``skew.stage_a_reduce``).
+
+Contract of :func:`minibatch_kmeans_labels`: for a seed, the same labels
+for every input, so the same instances represent a tile and the content
+bytes never move. ``tests/kmeans_oracle.py`` keeps the plain loop whose
+labels (and centers, bit for bit) the vectorized body reproduces; the
+body relies on these float-order rules of numpy 1.26:
+
+* ``np.sum(axis=-1)`` over a contiguous row adds fewer than 8 elements
+  from the left and more in its pairwise order; :func:`_dim_sum` adds
+  per-dimension columns in that same order (the k-means++ distances, the
+  batch distances and the center-shift norms).
+* ``mean(axis=0)`` of a cluster's batch rows adds them in row order from
+  0, as ``np.add.at`` does, except a one-column block of 8 or more rows,
+  which numpy adds pairwise (:func:`_cluster_means`).
+* ``Generator.choice(n, p=p)`` draws ``cdf = p.cumsum(); cdf /= cdf[-1];
+  cdf.searchsorted(random(), side="right")``; the k-means++ step does
+  exactly that (:func:`_choice`; a test guards it against a numpy
+  upgrade).
+* an unmoved center's shift is exactly 0, so the mean shift is the mean
+  of a zero vector with the moved centers' norms scattered in.
 """
 
 from __future__ import annotations
@@ -28,6 +51,65 @@ import pandas as pd
 #: assignment in the driver process, so this bounds driver peak RSS
 #: (one 2,500-row tile at k=300: +5 MB, against +14 MB at 2M elements).
 _ASSIGN_CHUNK_ELEMENTS = 131_072
+
+
+def _sq_dists(a: np.ndarray, b: np.ndarray) -> np.ndarray:
+    """Squared euclidean distances between ``a`` and ``b``, which hold the
+    dimension on their FIRST axis and broadcast over the rest; bit for bit
+    what ``np.sum((a - b) ** 2, axis=-1)`` gives with the dimension last
+    (:func:`_dim_sum`), in one array op per dimension instead of one
+    inner loop per row."""
+    diff = a - b
+    diff *= diff
+    return _dim_sum(diff)
+
+
+def _dim_sum(terms: np.ndarray) -> np.ndarray:
+    """``terms`` summed over its first axis in the order numpy's
+    ``np.sum(axis=-1)`` adds a contiguous row (its ``pairwise_sum``):
+    under 8 elements from the left; up to 128 as 8 running sums combined
+    as a tree, then the tail from the left; longer rows halved at a
+    multiple of 8 first."""
+    n = len(terms)
+    if n > 128:
+        half = n // 2 - (n // 2) % 8
+        return _dim_sum(terms[:half]) + _dim_sum(terms[half:])
+    if n < 8:
+        acc = terms[0]
+        for t in terms[1:]:
+            acc = acc + t
+        return acc
+    r = list(terms[:8])
+    tail = n - n % 8
+    for i in range(8, tail, 8):
+        r = [a + t for a, t in zip(r, terms[i : i + 8])]
+    acc = ((r[0] + r[1]) + (r[2] + r[3])) + ((r[4] + r[5]) + (r[6] + r[7]))
+    for t in terms[tail:]:
+        acc = acc + t
+    return acc
+
+
+def _choice(rng: np.random.Generator, p: np.ndarray) -> int:
+    """The index ``rng.choice(len(p), p=p)`` draws, from the same single
+    ``random()``, without its argument checks (numpy 1.26's code)."""
+    cdf = p.cumsum()
+    cdf /= cdf[-1]
+    return cdf.searchsorted(rng.random(), side="right")
+
+
+def _cluster_means(batch: np.ndarray, labels: np.ndarray, moved: np.ndarray,
+                   sizes: np.ndarray) -> np.ndarray:
+    """Mean of the ``batch`` rows of each label in ``moved`` (``sizes``
+    rows each), bit for bit as ``batch[labels == j].mean(axis=0)``: numpy
+    adds a block's rows from 0 in row order, as ``np.add.at`` does, except
+    8 or more rows of one column, which it adds pairwise; such a cluster
+    (at most one in a batch of 10) is averaged by numpy itself."""
+    sums = np.zeros((moved[-1] + 1, batch.shape[1]))
+    np.add.at(sums, labels, batch)
+    means = sums[moved] / sizes[:, None]
+    for i in np.flatnonzero(sizes >= 8):
+        means[i] = batch[labels == moved[i]].mean(axis=0)
+    return means
 
 
 def minibatch_kmeans_labels(
@@ -43,6 +125,8 @@ def minibatch_kmeans_labels(
     Mini-batch k-means per the published algorithm (Sculley 2010, public):
     k-means++ init on an init batch of 3k points, per-center counts as
     learning rates, early stop when the mean center shift < tolerance.
+    The float-order rules that keep these labels fixed are in the module
+    docstring; ``tests/kmeans_oracle.py`` holds the loop they equal.
     """
     n = points.shape[0]
     if n <= k:
@@ -52,42 +136,48 @@ def minibatch_kmeans_labels(
 
     # --- k-means++ init on an init batch (InitializationBatchSize = 3k) ---
     init_n = min(n, 3 * k)
-    init_idx = rng.choice(n, size=init_n, replace=False)
-    init = pts[init_idx]
+    init = pts[rng.choice(n, size=init_n, replace=False)]
+    init_t = init.T.copy()
     centers = np.empty((k, pts.shape[1]))
     centers[0] = init[rng.integers(init_n)]
-    d2 = np.sum((init - centers[0]) ** 2, axis=1)
+    d2 = _sq_dists(init_t, centers[0][:, None])
     for c in range(1, k):
-        probs = d2 / d2.sum() if d2.sum() > 0 else np.full(init_n, 1.0 / init_n)
-        centers[c] = init[rng.choice(init_n, p=probs)]
-        d2 = np.minimum(d2, np.sum((init - centers[c]) ** 2, axis=1))
+        total = d2.sum()
+        p = d2 / total if total > 0 else np.full(init_n, 1.0 / init_n)
+        centers[c] = init[_choice(rng, p)]
+        d2 = np.minimum(d2, _sq_dists(init_t, centers[c][:, None]))
 
-    # --- mini-batch updates ---
+    # --- mini-batch updates, centers held as (d, k) ---
+    ct = centers.T.copy()
     counts = np.zeros(k)
     for _ in range(max_iterations):
         batch = pts[rng.integers(0, n, size=batch_size)]
         # nearest center per batch point
-        dists = np.sum((batch[:, None, :] - centers[None, :, :]) ** 2, axis=2)
-        labels = np.argmin(dists, axis=1)
-        old = centers.copy()
-        for j in np.unique(labels):
-            members = batch[labels == j]
-            counts[j] += len(members)
-            eta = len(members) / counts[j]
-            centers[j] = (1 - eta) * centers[j] + eta * members.mean(axis=0)
-        if np.mean(np.linalg.norm(centers - old, axis=1)) < tolerance:
+        labels = _sq_dists(batch.T[:, :, None], ct[:, None, :]).argmin(axis=1)
+        sizes = np.bincount(labels, minlength=k)
+        moved = np.flatnonzero(sizes)
+        sizes = sizes[moved]
+        counts[moved] += sizes
+        eta = sizes / counts[moved]
+        old = ct[:, moved]
+        new = (1 - eta) * old + eta * _cluster_means(batch, labels, moved, sizes).T
+        ct[:, moved] = new
+        # an unmoved center's shift is exactly 0: scatter the moved norms
+        shift = np.zeros(k)
+        shift[moved] = np.sqrt(_sq_dists(new, old))
+        if np.mean(shift) < tolerance:
             break
+    # C order, as the loop held them: the assignment's matmul sees the
+    # same memory layout, so BLAS adds its dot products in the same order
+    centers = ct.T.copy()
 
     # --- final assignment (chunked to bound memory on hot tiles) ---
     labels = np.empty(n, dtype=np.int64)
     chunk = max(1, _ASSIGN_CHUNK_ELEMENTS // max(k, 1))
+    center_sq = np.sum(centers**2, axis=1)[None, :]
     for s in range(0, n, chunk):
         block = pts[s : s + chunk]
-        d = (
-            np.sum(block**2, axis=1)[:, None]
-            - 2.0 * block @ centers.T
-            + np.sum(centers**2, axis=1)[None, :]
-        )
+        d = np.sum(block**2, axis=1)[:, None] - 2.0 * block @ centers.T + center_sq
         labels[s : s + chunk] = np.argmin(d, axis=1)
 
     # --- guarantee exactly k non-empty clusters (count invariant) ---
@@ -135,34 +225,3 @@ def reduce_tile(pdf: pd.DataFrame, k: int, seed: int = 42,
     first_per_label = pd.Series(labels, name="_label").to_frame()
     keep_idx = first_per_label.drop_duplicates("_label").index[:k]
     return pdf.loc[keep_idx]
-
-
-def cluster_tiles(assigned, opts, order_col: str = "url"):
-    """Stage-4 LOD pass: reduce every over-full content tile to exactly
-    ``max_features_per_tile`` rows via grouped applyInPandas; tiles at or
-    under the limit pass through untouched (reference routes only over-full
-    tiles through k-means, src/ImplicitTiling.cs:45-47).
-    """
-    from pyspark.sql import functions as F
-
-    from ..packaging import ensure_shipped
-
-    ensure_shipped(assigned.sparkSession)
-    k = opts.max_features_per_tile
-    seed = opts.cluster_seed
-
-    counts = assigned.groupBy("level", "x", "y").agg(F.count(F.lit(1)).alias("_n"))
-    with_n = assigned.join(F.broadcast(counts), ["level", "x", "y"])
-    small = with_n.filter(F.col("_n") <= k).drop("_n")
-    hot = with_n.filter(F.col("_n") > k).drop("_n")
-
-    schema = assigned.schema
-
-    use_ecef = not opts.keep_projection
-
-    def _reduce(pdf: pd.DataFrame) -> pd.DataFrame:
-        return reduce_tile(pdf, k, seed=seed, order_col=order_col,
-                           use_ecef=use_ecef)
-
-    reduced = hot.groupBy("level", "x", "y").applyInPandas(_reduce, schema=schema)
-    return small.unionByName(reduced)

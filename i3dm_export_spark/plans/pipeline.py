@@ -217,9 +217,9 @@ def tileset_levels(stage2_dir: str, subtree_levels: int) -> tuple[int, int]:
 
 #: largest input, in parquet-footer rows, that :func:`run_export` writes
 #: in one Spark task (:func:`_export_one_task`), for a bare-scan source
-#: into a fresh checkpoint root. Set at the lower crossover measured by
-#: scripts/task_export_budget.py on a 4-core host, local[4], export wall
-#: one-task vs Spark plan, median of 3 interleaved pairs:
+#: into a fresh checkpoint root. Set at the lower clustered crossover that
+#: scripts/task_export_budget.py measured on a 4-core host (local[4],
+#: export wall one-task / Spark plan, median of 3 interleaved pairs):
 #:
 #:   rows   uniform i3dm     urban clustered glb
 #:   2.5k   0.24 / 1.11 s    0.49 / 1.66 s
@@ -230,11 +230,24 @@ def tileset_levels(stage2_dir: str, subtree_levels: int) -> tuple[int, int]:
 #:   100k   0.84 / 1.45 s    5.63 / 4.15 s
 #:   300k   2.57 / 2.35 s    11.29 / 6.99 s
 #:
-#: Uniform input crosses over between 100k and 300k rows. Clustered input
-#: crosses between 7.5k and 10k: once a hot tile's salt buckets exceed k,
-#: stage A's k-means runs serially in the one task instead of across the
-#: executors. The largest Python worker peaked at 168 MB at 7.5k rows
-#: (405 MB at 100k, 846 MB at 300k urban). Read at call time.
+#: Uniform input crosses over between 100k and 300k rows; clustered input
+#: crossed between 7.5k and 10k, because stage A's k-means runs serially
+#: in the one task. With the vectorized k-means the same script, on a
+#: slower 4-core host, put urban past 30k rows (the loop k-means on the
+#: same host in brackets):
+#:
+#:   rows   uniform i3dm     urban clustered glb
+#:   2.5k   0.65 / 3.00 s    0.96 / 4.62 s   (1.40 / 4.95 s)
+#:   5k     0.71 / 2.55 s    1.33 / 4.80 s   (2.04 / 5.88 s)
+#:   7.5k   0.70 / 2.35 s    3.08 / 4.95 s   (6.20 / 6.69 s)
+#:   10k    0.74 / 2.37 s    3.23 / 4.32 s   (10.54 / 10.07 s)
+#:   30k    1.03 / 2.73 s    4.73 / 5.17 s   (11.38 / 7.99 s)
+#:
+#: The budget stays at 7,500 rows: a budget of 100k sends perfbench's
+#: 15k-row mix base export to the one-task plan, which then raised the
+#: mix's bbox-query median (cause not isolated). The largest Python
+#: worker peaked at 168 MB at 7.5k rows (405 MB at 100k, 846 MB at 300k
+#: urban). Read at call time.
 _MAX_TASK_EXPORT_ROWS = 7_500
 
 #: the checkpoint stages of an export; a root holding the done marker of
@@ -339,7 +352,7 @@ def run_export(
             content_dir, prepared_models, text_invariant, in_fp)
     if task is not None:
         bounds, data_extent, n_content, n_broken = task
-        tiles, tiles_pdf = ckpt.read("stage2_tiles"), None
+        tiles, tiles_pdf = None, None
         n_instances = footer[0]
     else:
         (bounds, data_extent, tiles, tiles_pdf, n_content, fp0,
@@ -382,7 +395,8 @@ def run_export(
     # T4 subtree files, decided once (sinks.write_subtrees): from the
     # driver-held tile table (the one-task plan's read back from stage 2)
     # while it and its root set fit the budgets, else assembled in
-    # executors (one tile-row shuffle) and piped into the executor sink.
+    # executors (one tile-row shuffle; the one-task plan's Spark frame is
+    # read from stage 2 there) and piped into the executor sink.
     n_subtree_files = sinks.write_subtrees(
         tiles, tiles_pdf, subtree_levels, subtrees_dir,
         os.path.join(ckpt.root, "_sink_manifests", "subtrees"),

@@ -35,7 +35,7 @@ import os
 import uuid
 
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 
 from . import checkpoint
 
@@ -159,7 +159,8 @@ def write_subtrees(tiles, tiles_pdf, subtree_levels: int, root_dir: str,
     root set (``roots``, else every root with content) fits
     ``_MAX_DRIVER_SUBTREE_WRITES``. Otherwise the same assembly core runs
     in executors (``subtree.build_subtrees_spark`` over the Spark frame
-    ``tiles``) and pipes into :func:`write_binary_files`."""
+    ``tiles``, read from ``stage_dir`` on this branch only when None) and
+    pipes into :func:`write_binary_files`."""
     from pyspark.sql import functions as F
 
     from ..operators import subtree
@@ -176,6 +177,8 @@ def write_subtrees(tiles, tiles_pdf, subtree_levels: int, root_dir: str,
              subtree.build_subtrees_pandas_for_roots(tiles_pdf, roots, s)],
             root_dir, manifest_path,
         )
+    if tiles is None:
+        tiles = checkpoint.read_parquet(SparkSession.active(), stage_dir)
     if roots is not None:
         roots = tiles.sparkSession.createDataFrame(
             sorted(roots),

@@ -158,6 +158,30 @@ class TestExportParity:
             assert (n / opts.skew_salt_buckets
                     > opts.max_features_per_tile).any()
 
+    def test_stage2_frame_read_only_for_executor_subtrees(
+            self, spark, tmp_path, monkeypatch, sources):
+        """The one-task plan reads stage 2 as a Spark frame only when its
+        subtrees go to executors (subtree-write budget 0), and both
+        subtree routes write the same files."""
+        from i3dm_export_spark.plans import sinks
+
+        reads, real = [], checkpoint.read_parquet
+
+        def counting(spark_, path, *args, **kwargs):
+            reads.append(os.path.basename(path.rstrip("/")))
+            return real(spark_, path, *args, **kwargs)
+
+        monkeypatch.setattr(checkpoint, "read_parquet", counting)
+        _build, opts, _ = CASES["i3dm"]
+        src = sources("i3dm")
+        drv, ex = str(tmp_path / "driver"), str(tmp_path / "executors")
+        assert _export(spark, src, opts, drv, 10**9, monkeypatch)["one_task"]
+        assert reads.count("stage2_tiles") == 0
+        monkeypatch.setattr(sinks, "_MAX_DRIVER_SUBTREE_WRITES", 0)
+        assert _export(spark, src, opts, ex, 10**9, monkeypatch)["one_task"]
+        assert reads.count("stage2_tiles") == 1
+        assert _tree_files(drv) == _tree_files(ex)
+
 
 BB = Bounds(*DOCS_BBOX)
 APPEND_OPTS = ExportOptions(max_features_per_tile=60, max_level=8,
